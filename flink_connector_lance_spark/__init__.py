@@ -32,6 +32,12 @@ aggregation, join strategy selection, and whole-stage codegen; Python UDFs are
 avoided in hot paths.
 """
 
+from . import _pyworker
+
+# Spark's Python workers import this package when they unpickle engine
+# code; from then on each worker call skips re-reading pyspark.zip
+_pyworker.install()
+
 __version__ = "0.1.0"
 
 TABLE_NAMES = [

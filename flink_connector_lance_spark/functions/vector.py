@@ -44,12 +44,16 @@ def vec_literal(q: Sequence[float]) -> Column:
     in a plan). from_json of the repr list is a single node that
     ConstantFolding collapses to the identical ArrayData literal before
     codegen (same pattern as the PQ ADC LUT; json repr round-trips doubles
-    exactly, allow_nan=False raises on non-finite input instead of letting
-    PERMISSIVE from_json fold the literal to NULL)."""
+    exactly). Non-finite components raise instead of letting PERMISSIVE
+    from_json fold the literal to NULL."""
     import json as _json
 
+    vals = [float(v) for v in q]
+    for i, v in enumerate(vals):
+        if not math.isfinite(v):
+            raise ValueError(f"vector literal component {i} is not finite: {v}")
     return F.expr("from_json('{js}', 'array<double>')".format(
-        js=_json.dumps([float(v) for v in q], allow_nan=False)))
+        js=_json.dumps(vals)))
 
 
 def _as_double(col) -> Column:

@@ -454,13 +454,13 @@ def hnsw_candidates(
 
     if not remote:
         # Local fast path: the index is partitionBy("cell") on disk, so the
-        # per-cell traversal needs no cogroup — one mapInArrow task per
-        # probed cell reads its OWN cell's graph/vector slabs directly via
+        # per-cell traversal needs no cogroup — about one mapInArrow task
+        # per probed cell reads its OWN cell's graph/vector slabs directly via
         # pyarrow (the read_native_files pattern: seed relation of cell
         # ids, each task pulls its partition's slice from storage). This
         # removes both groupBy("cell") Exchanges and the JVM->Python Arrow
         # transfer of the corpus-sized slabs from the search path; per-task
-        # memory stays one cell, parallelism stays one task per cell.
+        # memory stays about one cell, parallelism about one task per cell.
         cand = _local_cell_candidates(spark, idx_dir, chosen, qv, pool, eff,
                                       met, int(meta["dim"]))
         return cand, meta
@@ -498,14 +498,22 @@ def hnsw_candidates(
 def _local_cell_candidates(spark, idx_dir: str, cells: "list[int] | None",
                            qv: list, pool: int, ef: int, metric: str,
                            dim: int) -> DataFrame:
-    """One task per probed cell; the task reads its cell's graph/vector
+    """About one task per probed cell; a task reads its cells' graph/vector
     parquet slabs directly (pyarrow) and runs the traversal — static
     partition pruning by construction (un-probed cells are never opened).
     A probed-but-empty cell (a Lloyd centroid with no assigned rows) has
     no ``cell=N`` directory and contributes nothing, exactly like the
-    cogroup path's empty group."""
+    cogroup path's empty group. Planning and the tasks open the index
+    with os/pyarrow, so it takes a bare POSIX path or ``file://`` and
+    rejects any other scheme."""
     import pandas as pd
 
+    if idx_dir.lower().startswith("file://"):
+        idx_dir = idx_dir[len("file://"):]
+    elif "://" in idx_dir:
+        raise ValueError(
+            f"unsupported scheme in HNSW index path {idx_dir!r}: the local "
+            "search reads a POSIX path or file://; use s3:// for remote storage")
     gdir = os.path.join(idx_dir, "graph.parquet")
     vdir = os.path.join(idx_dir, "vectors.parquet")
     on_disk = sorted(
@@ -552,8 +560,9 @@ def _local_cell_candidates(spark, idx_dir: str, cells: "list[int] | None",
                     names=["id", "_hnsw_d"])
 
     # keyless repartition: len(probe) rows round-robin into len(probe)
-    # partitions = exactly one cell per task (hashing `cell` into so few
-    # partitions would collide, guide §2.5)
+    # partitions = about one cell per task (round-robin over a
+    # multi-partition seed can pair two cells and leave a task empty;
+    # hashing `cell` into so few partitions would collide more, guide §2.5)
     seed = spark.createDataFrame(
         pd.DataFrame({"cell": probe})).repartition(len(probe))
     return seed.mapInArrow(scan, schema="id long, _hnsw_d double")

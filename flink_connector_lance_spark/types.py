@@ -105,6 +105,9 @@ def spark_type_to_arrow(t: st.DataType) -> pa.DataType:
         return pa.date32()
     if isinstance(t, st.TimestampType):
         return pa.timestamp("us")
+    if isinstance(t, st.TimestampNTZType):
+        # tz-naive µs: the Arrow type Spark's bridge reads as TIMESTAMP_NTZ
+        return pa.timestamp("us")
     if isinstance(t, st.ArrayType):
         return pa.list_(spark_type_to_arrow(t.elementType))
     if isinstance(t, st.StructType):

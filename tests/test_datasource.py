@@ -415,3 +415,27 @@ def test_read_verify_integrity_option(registered, tmp_path):
         (f.get("stats") or {}).pop(FR.DIGEST_STATS_KEY, None)
     json.dump(raw, open(mp, "w"))
     assert rd.load(path).count() == 100  # no stamp -> cannot check, skips
+
+
+def test_timestamp_ntz_column_reads_and_filters(registered, tmp_path):
+    """A TIMESTAMP_NTZ column reads and filters through format("lance")
+    exactly as ``read_dataset`` reads it."""
+    import datetime as dt
+
+    from flink_connector_lance_spark.sources.reader import read_dataset
+    from flink_connector_lance_spark.sources.writer import write_dataset
+
+    root = str(tmp_path / "ntz")
+    df = registered.createDataFrame(
+        [(i, dt.datetime(1995, 1, 2) + dt.timedelta(days=37 * i)) for i in range(40)],
+        "id long, shipdate timestamp_ntz")
+    write_dataset(df.repartition(3), root, "append")
+    cutoff = F.lit("1996-06-01").cast("timestamp_ntz")
+
+    got = registered.read.format("lance").load(root)
+    assert dict(got.dtypes)["shipdate"] == "timestamp_ntz"
+    want = read_dataset(registered, root)
+    assert sorted(got.collect()) == sorted(want.collect())
+    got_f = sorted(got.filter(F.col("shipdate") < cutoff).collect())
+    want_f = sorted(want.filter(F.col("shipdate") < cutoff).collect())
+    assert got_f == want_f and 0 < len(got_f) < 40

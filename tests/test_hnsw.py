@@ -237,3 +237,22 @@ def test_node_levels_are_geometric_and_deterministic():
     # P(level 0) = 1 - 1/m = 0.9375 at m=16
     assert 0.90 < frac0 < 0.97
     assert any(x >= 1 for x in lv)
+
+
+def test_local_cell_candidates_path_schemes(spark, hnsw_ds):
+    """The local per-cell path takes a bare path or file:// (same
+    candidates) and rejects any other scheme with a clear error."""
+    from flink_connector_lance_spark.hnsw import _local_cell_candidates
+
+    idx_dir = os.path.join(hnsw_ds, "_indexes", "embedding", "hnsw")
+    with open(os.path.join(idx_dir, "index_meta.json")) as fh:
+        dim = json.load(fh)["dim"]
+    q = [float(v) for v in QVEC]
+
+    def cands(d):
+        return sorted(_local_cell_candidates(spark, d, None, q, 10, 10, "l2", dim).collect())
+
+    plain = cands(idx_dir)
+    assert plain and cands("file://" + idx_dir) == plain
+    with pytest.raises(ValueError, match="unsupported scheme"):
+        _local_cell_candidates(spark, "hdfs://nn" + idx_dir, None, q, 10, 10, "l2", dim)

@@ -155,3 +155,10 @@ class TestTypeBridge:
             TY.spark_type_to_arrow(st.DecimalType(10, 2))
         with pytest.raises(TY.UnsupportedTypeError):
             TY.spark_type_to_arrow(st.MapType(st.StringType(), st.StringType()))
+
+
+def test_vec_literal_names_non_finite_component():
+    from flink_connector_lance_spark.functions.vector import vec_literal
+
+    with pytest.raises(ValueError, match=r"component 2 is not finite: inf"):
+        vec_literal([0.5, 1.0, float("inf")])

@@ -1,12 +1,15 @@
-"""Round-13 optimization measurement harness.
+"""Per-query optimization measurement harness.
 
 Times every registered query (not just the headline set) with the noop
 sink, split into plan-construction time (driver/py4j) vs action time, and
 captures .explain("formatted") into plans/r14/<name>_<tag>.txt.
 
 Usage:
-    python tools/measure_r14.py [--tag before|after] [--queries a,b,c]
-        [--sweeps 3] [--no-plans]
+    python tools/measure_r14.py [--tag before|after]
+        [--queries a,b,c | --headline-only] [--sweeps 3]
+
+Plans are captured only when --tag is given; --headline-only times the
+bench.py headline set instead of every registered query.
 
 Prints one JSON line: {"queries": {name: {"build": s, "noop": s,
 "total": s}}, "total": s} where noop is the MIN across sweeps and build
@@ -38,8 +41,6 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="fcls-measure-r14")
-    spark.sparkContext.setLogLevel("ERROR")
     qs = _registry.queries()
     if args.queries:
         names = [n for n in args.queries.split(",") if n in qs]
@@ -49,6 +50,10 @@ def main() -> None:
         names = [n for n in bench.HEADLINE if n in qs]
     else:
         names = list(qs)
+    if not names:
+        ap.error(f"--queries {args.queries!r} matches no registered query")
+    spark = get_spark(app_name="fcls-measure-r14")
+    spark.sparkContext.setLogLevel("ERROR")
 
     # Warm the JVM + parquet footer caches.
     qs[names[0]](spark, sf_dir).limit(1).collect()
