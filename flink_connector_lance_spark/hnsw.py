@@ -505,15 +505,12 @@ def _local_cell_candidates(spark, idx_dir: str, cells: "list[int] | None",
     no ``cell=N`` directory and contributes nothing, exactly like the
     cogroup path's empty group. Planning and the tasks open the index
     with os/pyarrow, so it takes a bare POSIX path or ``file://`` and
-    rejects any other scheme."""
+    rejects any other scheme (``fs.local_path``)."""
     import pandas as pd
 
-    if idx_dir.lower().startswith("file://"):
-        idx_dir = idx_dir[len("file://"):]
-    elif "://" in idx_dir:
-        raise ValueError(
-            f"unsupported scheme in HNSW index path {idx_dir!r}: the local "
-            "search reads a POSIX path or file://; use s3:// for remote storage")
+    from .sources.fs import local_path
+
+    idx_dir = local_path(idx_dir)
     gdir = os.path.join(idx_dir, "graph.parquet")
     vdir = os.path.join(idx_dir, "vectors.parquet")
     on_disk = sorted(

@@ -82,19 +82,17 @@ def run_maintenance(
     carries its triggering measurement so the skip/run reasoning is
     auditable.
 
-    Works on s3:// datasets too (pass ``s3=S3Options(...)``): the
-    storage-plane passes — compact (incl. tombstone materialization),
-    tail-cluster, vacuum — run through their executor-direct remote
-    twins off the remote describe report, and ANN/FTS indexes and
-    rollups are all datasets under the table's key prefix (the remote
-    describe enumerates them), so their refreshers run remotely too."""
+    Works on s3:// datasets too (pass ``s3=S3Options(...)``): describe
+    and vacuum are the same calls for every location (the storage seam,
+    sources/fs.py), compact (incl. tombstone materialization) and
+    tail-cluster run their executor-direct remote rewrites, and ANN/FTS
+    indexes and rollups are all datasets under the table's key prefix
+    (describe enumerates them), so their refreshers run remotely too."""
     from ..index import refresh_index
     from ..options import DatasetOptions as _DatasetOptions
-    from .fs import is_remote
     from .rollup import refresh_rollup
 
-    remote = is_remote(path)
-    storage = s3.to_storage_options() if (remote and s3 is not None) else None
+    storage = s3.to_storage_options() if s3 is not None else None
 
     p = policy or MaintenancePolicy()
     desc = describe_dataset(path, storage_options=storage)
@@ -114,7 +112,7 @@ def run_maintenance(
     runts = [f for f in manifest.fragments
              if f.row_count < p.target_rows_per_fragment // 2]
     runt_frac = len(runts) / max(1, len(manifest.fragments))
-    tomb_frac = desc.get("tombstoned_rows", 0) / total_rows
+    tomb_frac = desc["tombstoned_rows"] / total_rows
     step(
         "compact",
         (len(runts) >= 2 and runt_frac > p.max_runt_fraction)

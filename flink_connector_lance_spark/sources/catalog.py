@@ -80,13 +80,13 @@ class DatasetCatalog:
                 "the old one instead"
             )
 
-    def _fs(self):
-        """fsspec filesystem for a remote warehouse, or a clear refusal
-        when fsspec/s3fs is absent (the pre-round-5 behavior)."""
-        from .fs import RemoteUnavailableError, get_fs
+    def _store(self):
+        """The warehouse's store (sources/fs.py), or a clear refusal when
+        an S3 warehouse has no fsspec/s3fs (the pre-round-5 behavior)."""
+        from .fs import RemoteUnavailableError, store_for
 
         try:
-            return get_fs(self.warehouse, self.storage_options)
+            return store_for(self.warehouse, self.storage_options)
         except RemoteUnavailableError as e:
             raise Unsupported(str(e)) from e
 
@@ -96,23 +96,12 @@ class DatasetCatalog:
         return os.path.join(self.warehouse, db)
 
     def list_databases(self) -> list[str]:
-        if self.is_remote:
-            from .fs import remote_ls_names
-
-            fs = self._fs()
-            return sorted(
-                d for d in remote_ls_names(fs, self.warehouse)
-                if fs.isdir(self._db_path(d))
-            )
-        return sorted(
-            d for d in os.listdir(self.warehouse)
-            if os.path.isdir(self._db_path(d))
-        )
+        store = self._store()
+        return sorted(d for d in store.ls(self.warehouse)
+                      if store.isdir(self._db_path(d)))
 
     def database_exists(self, db: str) -> bool:
-        if self.is_remote:
-            return bool(self._fs().isdir(self._db_path(db)))
-        return os.path.isdir(self._db_path(db))
+        return self._store().isdir(self._db_path(db))
 
     def create_database(self, db: str, ignore_if_exists: bool = False) -> None:
         if self.database_exists(db):
@@ -123,8 +112,8 @@ class DatasetCatalog:
             # object stores have no directories: the database is a key
             # prefix, pinned into existence (and into isdir/listings) by
             # a zero-byte marker object
-            with self._fs().open(self._db_path(db) + "/.database",
-                                 "wb") as fh:
+            with self._store().open(self._db_path(db) + "/.database",
+                                    "wb") as fh:
                 fh.write(b"")
             return
         os.makedirs(self._db_path(db))
@@ -137,12 +126,9 @@ class DatasetCatalog:
             raise CatalogError(f"database does not exist: {db}")
         if self.list_tables(db) and not cascade:
             raise CatalogError(f"database not empty: {db}")
-        if self.is_remote:
-            # recursive prefix delete (s3fs: one bulk delete of every
-            # key under the prefix)
-            self._fs().rm(self._db_path(db), recursive=True)
-            return
-        shutil.rmtree(self._db_path(db))
+        # recursive delete (on s3fs one bulk delete of every key under
+        # the prefix)
+        self._store().rm(self._db_path(db), recursive=True)
 
     # -- tables (ref LanceCatalog.java:379-593) -----------------------------
 
@@ -153,26 +139,15 @@ class DatasetCatalog:
         db = db or self.default_database
         if not self.database_exists(db):
             raise CatalogError(f"database does not exist: {db}")
-        if self.is_remote:
-            from .fs import remote_ls_names
-
-            # bind once: doubles as the clear refusal when fsspec is
-            # absent, and non-caching fsspec impls pay setup only once
-            fs = self._fs()
-            return sorted(
-                t for t in remote_ls_names(fs, self._db_path(db))
-                if FR.is_dataset(self._table_path(db, t), self.storage_options)
-            )
+        store = self._store()
         return sorted(
-            t for t in os.listdir(self._db_path(db))
-            if FR.is_dataset(self._table_path(db, t))
+            t for t in store.ls(self._db_path(db))
+            if FR.is_dataset(self._table_path(db, t), self.storage_options)
         )
 
     def table_exists(self, db: str, table: str) -> bool:
-        if self.is_remote:
-            self._fs()  # clear refusal when fsspec is absent
-            return FR.is_dataset(self._table_path(db, table), self.storage_options)
-        return FR.is_dataset(self._table_path(db, table))
+        self._store()  # clear refusal when fsspec is absent
+        return FR.is_dataset(self._table_path(db, table), self.storage_options)
 
     def table_location(self, db: str, table: str) -> str:
         return self._table_path(db, table)
@@ -182,10 +157,7 @@ class DatasetCatalog:
             if ignore_if_not_exists:
                 return
             raise CatalogError(f"table does not exist: {db}.{table}")
-        if self.is_remote:
-            self._fs().rm(self._table_path(db, table), recursive=True)
-            return
-        shutil.rmtree(self._table_path(db, table))
+        self._store().rm(self._table_path(db, table), recursive=True)
 
     def rename_table(self, db: str, table: str, new_name: str) -> None:
         """Filesystem move (ref LanceCatalog.java:560-578). Loud refusal

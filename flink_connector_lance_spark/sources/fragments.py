@@ -125,21 +125,15 @@ def sha256_of(path: str, fs=None) -> str:
 
 
 def is_dataset(path: str, storage_options: dict | None = None) -> bool:
-    """Table detection by _versions/ (ref table/LanceCatalog.java:492-493).
-    Works for S3 paths too when fsspec is importable (sources/fs.py)."""
-    from .fs import get_fs, is_remote
+    """Table detection by _versions/ (ref table/LanceCatalog.java:492-493),
+    through the storage seam (sources/fs.py)."""
+    from .fs import store_for
 
-    if is_remote(path):
-        fs = get_fs(path, storage_options)
-        return bool(fs.exists(f"{str(path).rstrip('/')}/{VERSIONS_DIR}"))
-    return os.path.isdir(os.path.join(path, VERSIONS_DIR))
+    return store_for(path, storage_options).isdir(
+        os.path.join(path, VERSIONS_DIR))
 
 
 def _manifest_path(root: str, version: int) -> str:
-    from .fs import is_remote
-
-    if is_remote(root):
-        return f"{str(root).rstrip('/')}/{VERSIONS_DIR}/{version}.manifest.json"
     return os.path.join(root, VERSIONS_DIR, f"{version}.manifest.json")
 
 
@@ -147,18 +141,11 @@ def latest_version(root: str, storage_options: dict | None = None) -> int | None
     """Highest manifest version. Recognizes both the emulated naming
     (``N.manifest.json``) and the native Lance naming (``N.manifest`` —
     the convention of the reference's checked-in fixtures,
-    test-data/lance-db1/_versions/1.manifest). Remote (s3://) roots list
-    through fsspec (metadata-plane reads only — sources/fs.py)."""
-    from .fs import get_fs, is_remote, remote_ls_names
+    test-data/lance-db1/_versions/1.manifest). One listing through the
+    storage seam (local or s3:// — sources/fs.py)."""
+    from .fs import store_for
 
-    if is_remote(root):
-        fs = get_fs(root, storage_options)
-        names = remote_ls_names(fs, f"{str(root).rstrip('/')}/{VERSIONS_DIR}")
-    else:
-        vdir = os.path.join(root, VERSIONS_DIR)
-        if not os.path.isdir(vdir):
-            return None
-        names = os.listdir(vdir)
+    names = store_for(root, storage_options).ls(os.path.join(root, VERSIONS_DIR))
     versions = [
         int(name.split(".")[0])
         for name in names
@@ -169,25 +156,23 @@ def latest_version(root: str, storage_options: dict | None = None) -> int | None
 
 def read_manifest(root: str, version: int | None = None,
                   storage_options: dict | None = None) -> Manifest:
-    from .fs import get_fs, is_remote
+    from .fs import store_for
 
-    remote = is_remote(root)
+    store = store_for(root, storage_options)
     v = latest_version(root, storage_options) if version is None else version
     if v is None:
         raise FileNotFoundError(f"not a dataset (no {VERSIONS_DIR}/): {root}")
     path = _manifest_path(root, v)
-    if remote:
-        fs = get_fs(root, storage_options)
-        if not fs.exists(path) and fs.exists(path.removesuffix(".json")):
-            raise LanceUnavailableError(f"reading native manifest {v}.manifest")
-        with fs.open(path, "r") as fh:
+    try:
+        with store.open(path, "rb") as fh:
             raw = json.load(fh)
-    else:
-        if not os.path.exists(path) and os.path.exists(path.removesuffix(".json")):
-            # native Lance binary manifest: layout-compatible but needs the lib
-            raise LanceUnavailableError(f"reading native manifest {v}.manifest")
-        with open(path) as fh:
-            raw = json.load(fh)
+    except FileNotFoundError:
+        if store.exists(path.removesuffix(".json")):
+            # native Lance binary manifest: layout-compatible, read by
+            # read_manifest_compat through the stdlib codec
+            raise LanceUnavailableError(
+                f"reading native manifest {v}.manifest") from None
+        raise
     return Manifest(
         version=raw["version"],
         fragments=[FragmentInfo(**f) for f in raw["fragments"]],
@@ -212,22 +197,33 @@ def read_manifest_compat(root: str, version: int | None = None,
     except LanceUnavailableError:
         from . import lance_format as LF
 
-        mf = LF.read_native_manifest(root, version, storage_options)
-        stats = LF.read_native_stats(root, mf.version, storage_options)
-        meta = {"native_lance": True, "native_fields": mf.fields}
-        meta.update(native_config_meta(mf))
-        return Manifest(
-            version=mf.version,
-            fragments=[
-                FragmentInfo(fragment_id=fr.fragment_id,
-                             file=f"{LF.DATA_DIR}/{fr.file}",
-                             row_count=fr.live_rows,
-                             stats=stats.get(fr.file),
-                             deletion=fr.deletion)
-                for fr in mf.fragments
-            ],
-            meta=meta,
-        )
+        return native_as_manifest(
+            root, LF.read_native_manifest(root, version, storage_options),
+            storage_options)
+
+
+def native_as_manifest(root: str, mf, storage_options: dict | None = None
+                       ) -> Manifest:
+    """A decoded binary manifest (lance_format.NativeManifest) in the
+    emulated shape: files relative to the root, live row counts, the
+    stats sidecar's zone maps and the engine's config-map meta."""
+    from . import lance_format as LF
+
+    stats = LF.read_native_stats(root, mf.version, storage_options)
+    meta = {"native_lance": True, "native_fields": mf.fields}
+    meta.update(native_config_meta(mf))
+    return Manifest(
+        version=mf.version,
+        fragments=[
+            FragmentInfo(fragment_id=fr.fragment_id,
+                         file=f"{LF.DATA_DIR}/{fr.file}",
+                         row_count=fr.live_rows,
+                         stats=stats.get(fr.file),
+                         deletion=fr.deletion)
+            for fr in mf.fragments
+        ],
+        meta=meta,
+    )
 
 
 def native_config_meta(mf) -> dict:
@@ -293,20 +289,15 @@ def commit(root: str, new_fragments: list[FragmentInfo], mode: str = "append",
     their fragments and meta were computed FROM a snapshot, so landing
     them on a different head double-applies the delta.
 
-    Remote (s3://) roots commit through ``fs.create_exclusive`` — an S3
-    conditional PUT (``If-None-Match: *``) of the manifest key, which
-    gives the same single-winner guarantee as the local O_EXCL create;
-    pass the warehouse credentials via ``storage_options``."""
-    from .fs import create_exclusive, get_fs, is_remote
+    The manifest lands through the storage seam's ``create_exclusive``
+    (sources/fs.py): on s3:// an S3 conditional PUT (``If-None-Match:
+    *``) of the manifest key, which gives the same single-winner
+    guarantee as the local O_EXCL create; pass the warehouse credentials
+    via ``storage_options``."""
+    from .fs import store_for
 
-    remote_fs = None
-    if is_remote(root):
-        remote_fs = get_fs(root, storage_options)
-        mk = getattr(remote_fs, "makedirs", None)
-        if mk is not None:  # object stores have no dirs; local-backed fakes do
-            mk(os.path.join(root, VERSIONS_DIR), exist_ok=True)
-    else:
-        os.makedirs(os.path.join(root, VERSIONS_DIR), exist_ok=True)
+    store = store_for(root, storage_options)
+    store.makedirs(os.path.join(root, VERSIONS_DIR))
     for _ in range(max_retries):
         prev_v = latest_version(root, storage_options)
         if expected_base_version is not None and prev_v != expected_base_version:
@@ -351,19 +342,13 @@ def commit(root: str, new_fragments: list[FragmentInfo], mode: str = "append",
             {"version": next_v, "fragments": [asdict(f) for f in manifest.fragments],
              "meta": manifest.meta}
         )
-        if remote_fs is not None:
-            try:
-                create_exclusive(remote_fs, _manifest_path(root, next_v),
-                                 payload.encode("utf-8"))
-            except FileExistsError:
-                continue  # another writer won this version; re-read and retry
-            return manifest
         try:
-            fd = os.open(_manifest_path(root, next_v), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            # local O_EXCL create, or an S3 conditional PUT
+            # (If-None-Match: *) — exactly one writer wins this version
+            store.create_exclusive(_manifest_path(root, next_v),
+                                   payload.encode("utf-8"))
         except FileExistsError:
             continue  # another writer won this version; re-read and retry
-        with os.fdopen(fd, "w") as fh:
-            fh.write(payload)
         return manifest
     raise RuntimeError(f"commit conflict: gave up after {max_retries} retries at {root}")
 

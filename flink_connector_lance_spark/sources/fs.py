@@ -1,40 +1,46 @@
-"""Remote-filesystem shim for the READ path of S3 warehouses.
+"""The storage seam: one small store interface over a local directory
+or an object store, so the metadata plane is written once.
 
-The reference maps ``s3-*`` catalog options to object-store credentials
-and hands them to the native Lance layer (ref
-table/LanceCatalogFactory.java:148-176, applied at
-table/LanceCatalog.java:743-773). The emulated parquet backend is
-filesystem-based, so S3 support here is gated on ``fsspec``/``s3fs``
-being importable:
+The reference reaches local and S3 tables through one object-store
+layer (ref table/LanceCatalogFactory.java:148-176 maps the ``s3-*``
+options onto Lance's store, applied at table/LanceCatalog.java:743-773,
+and the same table code runs on both). Here ``store_for(path,
+storage_options)`` resolves the location once and returns either
 
-- **metadata plane** (manifest listing/reads, table detection) goes
-  through ``fsspec`` directly — a handful of tiny JSON reads;
-- **data plane** reads go through the Python DataSource
-  (``format("lance")``): its ``read()`` already runs inside Python
-  workers over pyarrow, so each worker opens its fragment through
-  ``fsspec`` with the mapped credentials — no JVM hadoop-aws jars
-  needed, and the per-fragment partitioning / zone-map pruning are
-  unchanged;
-- **writes** are executor-direct: each task PUTs its fragment files
-  straight to ``s3://…/data/`` through fsspec (writer._write_remote —
-  data bytes never touch the driver), then the driver commits the
-  manifest through ``create_exclusive`` — on s3fs an S3 conditional PUT
-  (``If-None-Match: *``), giving the same single-winner semantics as
-  the local ``O_EXCL`` path. Backends without exclusive-create keep
-  the old clear refusal (a lost-update window is worse than an error);
-- **maintenance** (DELETE/MERGE/compact) runs executor-direct too — a
-  file-attributed probe plus a partition-pruned rescan whose tasks PUT
-  rewritten fragments straight to s3 (sources/maintenance.py
-  _delete_remote/_merge_remote/_compact_remote), and **vacuum**
-  garbage-collects dead keys from listings alone (_vacuum_remote).
+- the **local store**, built on ``os`` — it never imports fsspec, takes
+  bare POSIX paths or ``file://``, and commits manifests with
+  ``O_CREAT|O_EXCL``; or
+- the **object store**, over an ``fsspec`` filesystem for ``s3://`` /
+  ``s3a://`` / ``s3n://`` with the caller's mapped ``aws_*`` options —
+  its ``create_exclusive`` is an S3 conditional PUT (``If-None-Match:
+  *``), the same single-winner guarantee as ``O_EXCL``.
 
-Without fsspec installed, every remote call degrades to the same clear
-error the catalog always raised.
+Any other scheme (``hdfs://``, ``gs://``, …) is refused with a
+``ValueError`` naming it, instead of falling through to ``os`` calls.
+
+A store offers only what the metadata plane uses: ``ls`` (entry names),
+``exists``, ``isdir``, ``open``, ``size``, ``age``, ``rm``, ``makedirs``
+and ``create_exclusive``. Manifest listing/reads/commits
+(sources/fragments.py, the binary chain in sources/lance_format.py),
+``vacuum_dataset`` and ``describe_dataset`` (sources/maintenance.py)
+and the catalog/streaming listings all run over it.
+
+The data plane is separate: remote scans go through the Python
+DataSource, whose workers open fragments through ``get_fs`` with the
+same credentials, and remote writes and maintenance rewrites are
+executor-direct PUTs into ``data/`` committed by one
+``create_exclusive`` manifest. Without fsspec installed, every remote
+call degrades to the same clear ``RemoteUnavailableError``.
 """
 
 from __future__ import annotations
 
+import os
+import re
+import time
+
 _REMOTE_SCHEMES = ("s3://", "s3a://", "s3n://")
+_SCHEME = re.compile(r"^([A-Za-z][A-Za-z0-9+.\-]*)://")
 
 
 def is_remote(path: str) -> bool:
@@ -120,11 +126,145 @@ def create_exclusive(fs, url: str, payload: bytes) -> None:
         f.write(payload)
 
 
-def remote_ls_names(fs, path: str) -> list[str]:
-    """Base names of a remote directory's entries (s3fs.ls returns
-    bucket-relative or protocol-full paths depending on version)."""
-    try:
-        entries = fs.ls(path, detail=False)
-    except FileNotFoundError:
-        return []
-    return [str(e).rstrip("/").rsplit("/", 1)[-1] for e in entries]
+def local_path(path: str) -> str:
+    """A bare POSIX path for a local location: ``file://`` is stripped;
+    any other scheme (s3 included — it is not a local path) raises a
+    ``ValueError`` naming it."""
+    p = str(path)
+    m = _SCHEME.match(p)
+    if m is None:
+        return p
+    if m.group(1).lower() == "file":
+        return p[len(m.group(0)):]
+    raise ValueError(
+        f"unsupported scheme {m.group(1)!r} in path {p!r}: this engine "
+        "stores tables on a local path, file:// or s3:// (s3a://, s3n://)")
+
+
+class LocalStore:
+    """A local directory tree, over ``os`` only."""
+
+    is_local = True
+
+    def ls(self, path: str) -> list[str]:
+        try:
+            return os.listdir(local_path(path))
+        except (FileNotFoundError, NotADirectoryError):
+            return []
+
+    def exists(self, path: str) -> bool:
+        return os.path.exists(local_path(path))
+
+    def isdir(self, path: str) -> bool:
+        return os.path.isdir(local_path(path))
+
+    def open(self, path: str, mode: str = "rb"):
+        return open(local_path(path), mode)
+
+    def size(self, path: str) -> "int | None":
+        try:
+            return os.path.getsize(local_path(path))
+        except OSError:
+            return None
+
+    def age(self, path: str) -> "float | None":
+        try:
+            return time.time() - os.path.getmtime(local_path(path))
+        except OSError:
+            return None
+
+    def rm(self, path: str, recursive: bool = False) -> None:
+        p = local_path(path)
+        if recursive and os.path.isdir(p):
+            import shutil
+
+            shutil.rmtree(p)
+        else:
+            os.remove(p)
+
+    def makedirs(self, path: str) -> None:
+        os.makedirs(local_path(path), exist_ok=True)
+
+    def create_exclusive(self, path: str, payload: bytes) -> None:
+        fd = os.open(local_path(path), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        with os.fdopen(fd, "wb") as fh:
+            fh.write(payload)
+
+
+class ObjectStore:
+    """An fsspec filesystem (s3fs in production). Every call takes the
+    full ``s3://`` url."""
+
+    is_local = False
+
+    def __init__(self, fs):
+        self.fs = fs
+
+    def ls(self, path: str) -> list[str]:
+        # s3fs.ls returns bucket-relative or protocol-full paths depending
+        # on version: keep only the base names
+        try:
+            entries = self.fs.ls(path, detail=False)
+        except FileNotFoundError:
+            return []
+        return [str(e).rstrip("/").rsplit("/", 1)[-1] for e in entries]
+
+    def exists(self, path: str) -> bool:
+        return bool(self.fs.exists(path))
+
+    def isdir(self, path: str) -> bool:
+        return bool(self.fs.isdir(path))
+
+    def open(self, path: str, mode: str = "rb"):
+        return self.fs.open(path, mode)
+
+    def _info(self, path: str) -> dict:
+        try:
+            return self.fs.info(path)
+        except (OSError, KeyError, AttributeError):
+            return {}
+
+    def size(self, path: str) -> "int | None":
+        s = self._info(path).get("size")
+        return int(s) if s is not None else None
+
+    def age(self, path: str) -> "float | None":
+        """Seconds since the object was written, or None when the backend
+        reports no timestamp: s3fs reports ``LastModified`` (a datetime),
+        fsspec local/memory backends ``mtime`` (epoch float)."""
+        import datetime
+
+        info = self._info(path)
+        ts = info.get("LastModified") or info.get("mtime") or info.get("created")
+        if ts is None:
+            return None
+        if isinstance(ts, datetime.datetime):
+            return (datetime.datetime.now(ts.tzinfo) - ts).total_seconds()
+        try:
+            return time.time() - float(ts)
+        except (TypeError, ValueError):
+            return None
+
+    def rm(self, path: str, recursive: bool = False) -> None:
+        self.fs.rm(path, recursive=recursive)
+
+    def makedirs(self, path: str) -> None:
+        mk = getattr(self.fs, "makedirs", None)
+        if mk is not None:  # object stores have no dirs; local-backed fakes do
+            mk(path, exist_ok=True)
+
+    def create_exclusive(self, path: str, payload: bytes) -> None:
+        create_exclusive(self.fs, path, payload)
+
+
+_LOCAL = LocalStore()
+
+
+def store_for(path: str, storage_options: dict | None = None):
+    """The store holding ``path``: an ``ObjectStore`` for s3 urls (with
+    ``storage_options`` mapped onto the filesystem), else the local
+    store — after refusing any scheme other than ``file://``."""
+    if is_remote(path):
+        return ObjectStore(get_fs(path, storage_options))
+    local_path(path)
+    return _LOCAL

@@ -236,6 +236,9 @@ class NativeManifest:
     # but does not interpret. Engine metadata (rollup specs, streaming
     # epochs) rides here under spark.flc.* keys.
     config: dict = None  # type: ignore[assignment]
+    # Manifest.transaction_file (field 12): the ``_transactions/`` key
+    # this version committed with
+    transaction_file: str = ""
 
     @property
     def row_count(self) -> int:
@@ -337,31 +340,22 @@ DATA_DIR = "data"
 
 
 def _open_binary(path: str, storage_options: dict | None = None):
-    """One binary stream, local or s3:// — fsspec file objects support
-    the same seek/read surface the decoders use, so the REAL Lance
-    read plane works over object storage with the credentials the
-    caller mapped (the reference's own S3 story is native lance —
-    ref table/LanceCatalogFactory.java:77-111)."""
-    from .fs import get_fs, is_remote
+    """One binary stream, local or s3://, through the storage seam
+    (sources/fs.py) — fsspec file objects support the same seek/read
+    surface the decoders use, so the REAL Lance read plane works over
+    object storage with the credentials the caller mapped (the
+    reference's own S3 story is native lance — ref
+    table/LanceCatalogFactory.java:77-111)."""
+    from .fs import store_for
 
-    if is_remote(path):
-        return get_fs(path, storage_options).open(path, "rb")
-    return open(path, "rb")
+    return store_for(path, storage_options).open(path, "rb")
 
 
 def native_manifest_versions(root: str,
                              storage_options: dict | None = None) -> list[int]:
-    from .fs import get_fs, is_remote
+    from .fs import store_for
 
-    vdir = os.path.join(root, VERSIONS_DIR)
-    if is_remote(root):
-        from .fs import remote_ls_names
-
-        names = remote_ls_names(get_fs(root, storage_options), vdir)
-    else:
-        if not os.path.isdir(vdir):
-            return []
-        names = os.listdir(vdir)
+    names = store_for(root, storage_options).ls(os.path.join(root, VERSIONS_DIR))
     return sorted(int(n.split(".")[0]) for n in names
                   if n.endswith(".manifest"))
 
@@ -431,6 +425,7 @@ def read_native_manifest(root: str, version: int | None = None,
         writer_version=_one(wv, 2, b"").decode("utf-8"),
         data_format=_one(dfm, 2, b"").decode("utf-8"),
         config=config,
+        transaction_file=_one(msg, 12, b"").decode("utf-8"),
     )
 
 
@@ -3376,18 +3371,13 @@ def write_deletion_arrow(root: str, fragment_id: int, read_version: int,
         with pa.ipc.new_file(buf, tbl.schema) as w:
             w.write_table(tbl)
         payload = buf.getvalue()
-    key = f"{DELETIONS_DIR}/{deletion_file_name(fragment_id, d)}"
-    if storage_options is not None or str(root).lower().startswith(
-            ("s3://", "s3a://", "s3n://")):
-        from .fs import get_fs
+    from .fs import store_for
 
-        fs = get_fs(root, storage_options)
-        with fs.open(f"{str(root).rstrip('/')}/{key}", "wb") as fh:
-            fh.write(payload)
-    else:
-        os.makedirs(os.path.join(root, DELETIONS_DIR), exist_ok=True)
-        with open(os.path.join(root, key), "wb") as fh:
-            fh.write(payload)
+    store = store_for(root, storage_options)
+    store.makedirs(os.path.join(root, DELETIONS_DIR))
+    with store.open(os.path.join(root, DELETIONS_DIR,
+                                 deletion_file_name(fragment_id, d)), "wb") as fh:
+        fh.write(payload)
     return d
 
 
@@ -3645,12 +3635,11 @@ def commit_native(root: str, fields: list[NativeField],
     import uuid as _uuid
 
     from .fragments import CommitConflict
-    from .fs import create_exclusive, get_fs, is_remote
+    from .fs import store_for
 
-    remote_fs = get_fs(root, storage_options) if is_remote(root) else None
-    if remote_fs is None:
-        os.makedirs(os.path.join(root, VERSIONS_DIR), exist_ok=True)
-        os.makedirs(os.path.join(root, "_transactions"), exist_ok=True)
+    store = store_for(root, storage_options)
+    store.makedirs(os.path.join(root, VERSIONS_DIR))
+    store.makedirs(os.path.join(root, "_transactions"))
     if timestamp is None:
         now = time.time()
         timestamp = (int(now), int((now % 1) * 1e9))
@@ -3733,35 +3722,24 @@ def commit_native(root: str, fields: list[NativeField],
         tuid = txn_uuid or str(_uuid.uuid4())
         txn_file = f"{read_version}-{tuid}.txn"
         txn_path = os.path.join(root, "_transactions", txn_file)
-        if remote_fs is not None:
-            with remote_fs.open(txn_path, "wb") as fh:
-                fh.write(_txn_bytes(tuid, out_fields, fragments))
-        else:
-            with open(txn_path, "wb") as fh:
-                fh.write(_txn_bytes(tuid, out_fields, fragments))
+        with store.open(txn_path, "wb") as fh:
+            fh.write(_txn_bytes(tuid, out_fields, fragments))
 
         version = (versions[-1] + 1) if versions else 1
         mpath = os.path.join(root, VERSIONS_DIR, f"{version}.manifest")
         mbytes = _manifest_bytes(out_fields, fragments, version,
                                  txn_file, timestamp, config=out_config)
         try:
-            if remote_fs is not None:
-                # S3 conditional PUT (If-None-Match: *) — the same
-                # single-winner semantics as the local O_EXCL create
-                create_exclusive(remote_fs, mpath, mbytes)
-            else:
-                with open(mpath, "xb") as fh:  # single-winner commit
-                    fh.write(mbytes)
+            # single-winner commit: local O_EXCL create, or an S3
+            # conditional PUT (If-None-Match: *)
+            store.create_exclusive(mpath, mbytes)
         except FileExistsError:
             # lost the race: this round's txn file references a manifest
             # that will never exist — collect it NOW rather than leaving
             # an orphan for vacuum (and, with a caller-pinned txn_uuid,
             # rather than accreting one orphan per retried read_version)
             try:
-                if remote_fs is not None:
-                    remote_fs.rm(txn_path)
-                else:
-                    os.remove(txn_path)
+                store.rm(txn_path)
             except OSError:
                 pass
             if mode == "create":
@@ -3770,9 +3748,9 @@ def commit_native(root: str, fields: list[NativeField],
         if stats_map:
             # after the win: a crash here leaves manifest-without-sidecar,
             # which readers treat as stats-absent (no pruning — safe)
-            if remote_fs is not None:
+            if not store.is_local:
                 # a PUT is atomic per key — no tmp+rename dance needed
-                with remote_fs.open(_stats_sidecar(root, version), "wb") as fh:
+                with store.open(_stats_sidecar(root, version), "wb") as fh:
                     fh.write(json.dumps(stats_map).encode())
             else:
                 tmp = _stats_sidecar(root, version) + ".tmp"

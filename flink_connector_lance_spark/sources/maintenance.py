@@ -354,27 +354,40 @@ def verify_integrity(spark, path: str, version: int | None = None,
     return report
 
 
-def _index_pinned_versions(path: str) -> set[int]:
-    """Dataset versions referenced by on-disk ANN index metadata
-    (``_indexes/<col>/{ivf,pq}/index_meta.json``)."""
-    import json
+_TXN_DIR = "_transactions"
 
-    pinned: set[int] = set()
-    idx_root = os.path.join(path, "_indexes")
-    if not os.path.isdir(idx_root):
-        return pinned
-    for col in os.listdir(idx_root):
-        for kind in ("ivf", "pq", "hnsw"):
-            meta_p = os.path.join(idx_root, col, kind, "index_meta.json")
-            if os.path.exists(meta_p):
-                try:
-                    with open(meta_p) as fh:
-                        v = json.load(fh).get("dataset_version")
-                    if isinstance(v, int):
-                        pinned.add(v)
-                except (OSError, ValueError):
-                    continue
-    return pinned
+
+def _manifest_chain(store, path: str) -> "tuple[bool, list[int]]":
+    """``(binary, versions)`` of a dataset's manifest chain from one
+    ``_versions/`` listing: binary (native Lance ``N.manifest``) or the
+    emulated JSON chain (``N.manifest.json``)."""
+    names = store.ls(os.path.join(path, FR.VERSIONS_DIR))
+    binary = any(n.endswith(".manifest") for n in names)
+    suffix = ".manifest" if binary else ".manifest.json"
+    versions = sorted(int(n.split(".")[0]) for n in names if n.endswith(suffix))
+    if not versions:
+        raise FileNotFoundError(f"not a dataset (no {FR.VERSIONS_DIR}/): {path}")
+    return binary, versions
+
+
+def _json_chain_live(path: str, v: int, storage_options) -> set[str]:
+    """Root-relative keys emulated version ``v`` references: its
+    fragment files."""
+    return {f.file for f in FR.read_manifest(path, v, storage_options).fragments}
+
+
+def _binary_chain_live(path: str, v: int, storage_options) -> set[str]:
+    """Root-relative keys binary (native Lance) version ``v``
+    references: its data files, its transaction file and its deletion
+    vectors (superseded vectors from re-deletes become dead keys)."""
+    from . import lance_format as LF
+
+    mf = LF.read_native_manifest(path, v, storage_options)
+    live = {f"{LF.DATA_DIR}/{fr.file}" for fr in mf.fragments}
+    live |= {f"{LF.DELETIONS_DIR}/{LF.deletion_file_name(fr.fragment_id, fr.deletion)}"
+             for fr in mf.fragments if fr.deletion}
+    live.add(f"{_TXN_DIR}/{mf.transaction_file}")
+    return live
 
 
 def vacuum_dataset(
@@ -389,6 +402,14 @@ def vacuum_dataset(
     references. Without this, compaction/appends accrete files forever —
     at 100 TB the dead-file volume quickly exceeds the live table.
 
+    One body for every location and manifest format: it runs over the
+    storage seam (sources/fs.py) on key listings plus one manifest read
+    per retained version — no data IO. The only per-format part is the
+    set of keys a version references (``_json_chain_live`` /
+    ``_binary_chain_live``); the binary chain also sweeps transaction
+    files and deletion vectors, and drops each manifest's stats sidecar
+    with it. Manifests an ANN index was built against stay pinned.
+
     Deletion order is crash-safe: old manifests are removed FIRST, then
     unreferenced data files — a crash mid-vacuum can only leave orphaned
     (invisible) data files, never a manifest pointing at deleted data.
@@ -400,13 +421,19 @@ def vacuum_dataset(
     ``_staging-*`` plus the maintenance rewrites' ``_compact-*`` /
     ``_delete-*`` / ``_merge-*-*`` / ``_cluster-*`` — see
     ``STAGING_PREFIXES``; the finally-cleanup doesn't run if the driver
-    dies). Vacuum removes staging dirs older than ``staging_grace_seconds`` (default 24 h — generous headroom for
-    an in-flight write's staging phase; a LIVE writer's staging dir is
-    always younger than its own write).
+    dies). Vacuum removes staging dirs older than
+    ``staging_grace_seconds`` (default 24 h — generous headroom for an
+    in-flight write's staging phase; a LIVE writer's staging dir is
+    always younger than its own write). On an object store the same
+    grace also gates unreferenced keys: executor-direct writes PUT
+    fragment keys to ``data/`` before their manifest commits, so a young
+    unreferenced key may be an in-flight write; a key whose age is
+    unknown counts as young (keeping an orphan one more pass costs
+    storage, deleting an in-flight fragment loses data).
 
     Returns ``{"kept_versions": [...], "dropped_versions": n,
-    "deleted_files": n, "reclaimed_bytes": n, "staging_dirs_removed": n}``;
-    ``dry_run`` reports without deleting."""
+    "deleted_files": n, "reclaimed_bytes": n, "staging_dirs_removed": n,
+    "skipped_young_keys": n}``; ``dry_run`` reports without deleting."""
     if keep_versions < 1:
         raise ValueError("keep_versions must be >= 1")
     if FR.HAVE_LANCE and not dry_run:  # native path (fake lance in tests)
@@ -421,63 +448,83 @@ def vacuum_dataset(
                 "with older_than directly"
             )
         return _vacuum_lance(path)
+    from ..index import INDEXES_DIR, _kind_metas
     from . import lance_format as LF
-    from .fs import is_remote
+    from .bloom import BLOOM_SUFFIX
+    from .fs import store_for
 
-    if is_remote(path):
-        return _vacuum_remote(path, keep_versions, dry_run, storage_options,
-                              staging_grace_seconds)
-    if LF.is_native_dataset(path):
-        return _vacuum_native(path, keep_versions, dry_run)
-    latest = FR.latest_version(path)
-    if latest is None:
-        raise FileNotFoundError(f"not a dataset (no {FR.VERSIONS_DIR}/): {path}")
-    all_versions = sorted(
-        int(name.split(".")[0])
-        for name in os.listdir(os.path.join(path, FR.VERSIONS_DIR))
-        if name.endswith(".manifest.json")
-    )
-    kept = all_versions[-keep_versions:]
+    store = store_for(path, storage_options)
+    binary, versions = _manifest_chain(store, path)
+    if binary:
+        suffix, live_of, sidecar = ".manifest", _binary_chain_live, ".stats.json"
+        swept = (LF.DATA_DIR, _TXN_DIR, LF.DELETIONS_DIR)
+    else:
+        suffix, live_of, sidecar = ".manifest.json", _json_chain_live, None
+        swept = (FR.DATA_DIR,)
     # pin manifests an ANN index was built against: index staleness
     # handling (index.split_by_index_coverage) diffs the current file set
     # against the build-time manifest — vacuuming it away degrades every
-    # indexed search to brute force
-    kept = sorted(set(kept) | (_index_pinned_versions(path) & set(all_versions)))
-    dropped = [v for v in all_versions if v not in kept]
-    live = {f.file for v in kept for f in FR.read_manifest(path, v).fragments}
+    # indexed search to brute force. _kind_metas reads both index
+    # layouts (index_meta.json locally, commit meta on object storage)
+    kept = set(versions[-keep_versions:])
+    for column in store.ls(os.path.join(path, INDEXES_DIR)):
+        try:
+            metas = _kind_metas(path, column, storage_options)
+        except (OSError, ValueError):
+            continue
+        kept |= {m.get("dataset_version") for m in metas.values()} & set(versions)
+    kept = sorted(kept)
+    dropped = [v for v in versions if v not in kept]
+    live: set[str] = set()
+    for v in kept:
+        live |= live_of(path, v, storage_options)
     # a bloom sidecar (sources/bloom.py) lives exactly as long as its
     # fragment: live fragments keep theirs, dead fragments' sidecars go
-    from .bloom import BLOOM_SUFFIX
-
-    live |= {f + BLOOM_SUFFIX for f in live}
-    data_dir = os.path.join(path, FR.DATA_DIR)
-    dead = [
-        os.path.join(FR.DATA_DIR, name)
-        for name in (os.listdir(data_dir) if os.path.isdir(data_dir) else [])
-        if os.path.join(FR.DATA_DIR, name) not in live
-    ]
-    reclaimed = sum(os.path.getsize(os.path.join(path, f)) for f in dead)
-    import time
-
-    stale_staging = [
-        os.path.join(path, name)
-        for name in os.listdir(path)
-        if name.startswith(STAGING_PREFIXES) and os.path.isdir(os.path.join(path, name))
-        and time.time() - os.path.getmtime(os.path.join(path, name)) > staging_grace_seconds
-    ]
+    live |= {k + BLOOM_SUFFIX for k in live}
+    dead = [f"{d}/{n}" for d in swept
+            for n in store.ls(os.path.join(path, d)) if f"{d}/{n}" not in live]
+    young: list[str] = []
+    if not store.is_local and staging_grace_seconds > 0:
+        # object store only: an unreferenced key inside the grace window
+        # (or of unknown age) may be an in-flight executor-direct write
+        old = []
+        for k in dead:
+            age = store.age(os.path.join(path, k))
+            (old if age is not None and age > staging_grace_seconds
+             else young).append(k)
+        dead = old
+    reclaimed = sum(store.size(os.path.join(path, k)) or 0 for k in dead
+                    if k.startswith(f"{FR.DATA_DIR}/"))
+    stale_staging = []
+    for n in store.ls(path):
+        if n.startswith(STAGING_PREFIXES):
+            age = store.age(os.path.join(path, n))
+            if age is not None and age > staging_grace_seconds:
+                stale_staging.append(os.path.join(path, n))
     if not dry_run:
+        vdir = os.path.join(path, FR.VERSIONS_DIR)
         for v in dropped:  # manifests first: see crash-safety note above
-            os.remove(os.path.join(path, FR.VERSIONS_DIR, f"{v}.manifest.json"))
-        for f in dead:
-            os.remove(os.path.join(path, f))
+            store.rm(os.path.join(vdir, f"{v}{suffix}"))
+            if sidecar is not None:  # zone maps live and die with their manifest
+                try:
+                    store.rm(os.path.join(vdir, f"{v}{sidecar}"))
+                except OSError:
+                    pass
+        for k in dead:
+            store.rm(os.path.join(path, k))
         for d in stale_staging:  # crashed-write leftovers, never referenced
-            shutil.rmtree(d, ignore_errors=True)
+            try:
+                store.rm(d, recursive=True)
+            except OSError:
+                pass
     return {
         "kept_versions": kept,
         "dropped_versions": len(dropped),
-        "deleted_files": len(dead),
+        # data files and deletion vectors (transaction files are metadata)
+        "deleted_files": sum(not k.startswith(f"{_TXN_DIR}/") for k in dead),
         "reclaimed_bytes": reclaimed,
         "staging_dirs_removed": len(stale_staging),
+        "skipped_young_keys": len(young),
     }
 
 
@@ -530,254 +577,6 @@ def _inherit_blooms(spark, path, manifest: FR.Manifest, new_fragments):
     if not cols or not new_fragments:
         return list(new_fragments)
     return attach_blooms(spark, path, new_fragments, cols)
-
-
-def _remote_object_age(fs, url: str) -> "float | None":
-    """Age in seconds of one remote object, or None when the backend
-    reports no creation/modification timestamp. Used by the remote
-    vacuum's grace window: the executor-direct writes PUT fragment keys
-    to ``data/`` for the whole job duration BEFORE the manifest commit,
-    so an unreferenced key younger than the grace window may be an
-    in-flight write, not garbage — deleting it would let the write's
-    conditional-PUT commit land a manifest referencing deleted objects.
-    s3fs reports ``LastModified`` (a datetime); fsspec local/memory
-    backends report ``mtime`` (epoch float) — both are accepted."""
-    import datetime
-    import time
-
-    try:
-        info = fs.info(url)
-    except (OSError, KeyError, AttributeError):
-        return None
-    ts = info.get("LastModified") or info.get("mtime") or info.get("created")
-    if ts is None:
-        return None
-    if isinstance(ts, datetime.datetime):
-        return (datetime.datetime.now(ts.tzinfo) - ts).total_seconds()
-    try:
-        return time.time() - float(ts)
-    except (TypeError, ValueError):
-        return None
-
-
-def _split_young(fs, base: str, dead: list, grace_seconds: int) -> tuple[list, list]:
-    """Partition candidate-dead keys into (deletable, skipped-young).
-    A key whose age is unknown is treated as YOUNG — never delete blind
-    (the cost of keeping an orphan one more vacuum pass is storage; the
-    cost of deleting an in-flight fragment is silent data loss)."""
-    if grace_seconds <= 0:
-        return list(dead), []
-    old, young = [], []
-    for rel in dead:
-        age = _remote_object_age(fs, f"{base}/{rel}")
-        (old if age is not None and age > grace_seconds else young).append(rel)
-    return old, young
-
-
-def _vacuum_remote(path: str, keep_versions: int, dry_run: bool,
-                   storage_options: dict | None,
-                   staging_grace_seconds: int = 24 * 3600) -> dict:
-    """MVCC garbage collection for an s3:// dataset — the fs-plane twin
-    of the local vacuum (same crash-safe order: manifests first, then
-    unreferenced data keys; a crash mid-vacuum leaves only invisible
-    orphan keys, never a manifest pointing at deleted data). At 100 TB
-    the dead-object volume is the dominant storage cost, so this runs
-    driver-side over KEY LISTINGS only — two prefix lists plus one tiny
-    manifest read per retained version, no data IO. ANN index pinning is
-    a local-backend construct (indexes are refused on s3 datasets) and
-    staging dirs do not exist remotely (the executor-direct write stages
-    nothing), so neither applies here."""
-    from . import lance_format as LF
-    from .bloom import BLOOM_SUFFIX
-    from .fs import get_fs, remote_ls_names
-
-    fs = get_fs(path, storage_options)
-    base = str(path).rstrip("/")
-    names = remote_ls_names(fs, f"{base}/{FR.VERSIONS_DIR}")
-    if any(n.endswith(".manifest") for n in names):
-        return _vacuum_remote_native(fs, base, names, keep_versions, dry_run,
-                                     storage_options, staging_grace_seconds)
-    all_versions = sorted(
-        int(n.split(".")[0]) for n in names if n.endswith(".manifest.json"))
-    if not all_versions:
-        raise FileNotFoundError(f"not a dataset (no {FR.VERSIONS_DIR}/): {path}")
-    kept = all_versions[-keep_versions:]
-    dropped = [v for v in all_versions if v not in kept]
-    live = {
-        f.file for v in kept
-        for f in FR.read_manifest(path, v, storage_options).fragments
-    }
-    live |= {f + BLOOM_SUFFIX for f in live}
-    data_names = remote_ls_names(fs, f"{base}/{FR.DATA_DIR}")
-    dead = [os.path.join(FR.DATA_DIR, n) for n in data_names
-            if os.path.join(FR.DATA_DIR, n) not in live]
-    # grace window: an unreferenced key younger than the grace may be an
-    # IN-FLIGHT executor-direct write (fragments land before the commit)
-    # — the remote twin of the local staging-dir grace contract
-    dead, young = _split_young(fs, base, dead, staging_grace_seconds)
-    reclaimed = _remote_sizes(fs, base, dead)
-    if not dry_run:
-        for v in dropped:  # manifests first: crash-safety note above
-            fs.rm(f"{base}/{FR.VERSIONS_DIR}/{v}.manifest.json")
-        for f in dead:
-            fs.rm(f"{base}/{f}")
-    return {
-        "kept_versions": kept,
-        "dropped_versions": len(dropped),
-        "deleted_files": len(dead),
-        "reclaimed_bytes": reclaimed,
-        "staging_dirs_removed": 0,
-        "skipped_young_keys": len(young),
-    }
-
-
-def _remote_sizes(fs, base: str, rel_files: list) -> int:
-    total = 0
-    for f in rel_files:
-        try:
-            total += int(fs.info(f"{base}/{f}").get("size", 0) or 0)
-        except (OSError, KeyError, AttributeError):
-            pass  # size is reporting-only; deletion proceeds regardless
-    return total
-
-
-def _vacuum_remote_native(fs, base: str, names: list, keep_versions: int,
-                          dry_run: bool,
-                          storage_options: dict | None,
-                          staging_grace_seconds: int = 24 * 3600) -> dict:
-    """Remote twin of ``_vacuum_native``: a REAL Lance binary chain on
-    s3 — manifests (and their stats sidecars) drop first, then
-    transaction files and data keys no retained version references. ANN
-    index pinning is a local-backend construct and does not apply.
-    Unreferenced data keys (and txn files) younger than the grace window
-    are SKIPPED — they may belong to an in-flight executor-direct write
-    whose manifest has not committed yet (see ``_split_young``)."""
-    from . import lance_format as LF
-    from .bloom import BLOOM_SUFFIX
-
-    versions = sorted(int(n.split(".")[0]) for n in names
-                      if n.endswith(".manifest"))
-    kept = versions[-keep_versions:]
-    dropped = [v for v in versions if v not in kept]
-    live_files: set[str] = set()
-    live_txns: set[str] = set()
-    live_dels: set[str] = set()
-    for v in kept:
-        mf = LF.read_native_manifest(base, v, storage_options)
-        live_files |= {fr.file for fr in mf.fragments}
-        live_dels |= {LF.deletion_file_name(fr.fragment_id, fr.deletion)
-                      for fr in mf.fragments if fr.deletion}
-        # the txn file name rides in the manifest; re-read it raw
-        import struct as _s
-
-        with fs.open(f"{base}/{LF.VERSIONS_DIR}/{v}.manifest", "rb") as fh:
-            blob = fh.read()
-        msg = LF._pb_fields(blob[4:4 + _s.unpack_from("<I", blob, 0)[0]])
-        live_txns.add(LF._one(msg, 12, b"").decode("utf-8"))
-    live_files |= {f + BLOOM_SUFFIX for f in live_files}
-    from .fs import remote_ls_names
-
-    data_names = remote_ls_names(fs, f"{base}/{LF.DATA_DIR}")
-    dead = [n for n in data_names if n not in live_files]
-    txn_names = remote_ls_names(fs, f"{base}/_transactions")
-    dead_txns = [n for n in txn_names if n not in live_txns]
-    try:
-        del_names = remote_ls_names(fs, f"{base}/{LF.DELETIONS_DIR}")
-    except (FileNotFoundError, OSError):
-        del_names = []
-    dead_dels = [n for n in del_names if n not in live_dels]
-    dead, young = _split_young(fs, f"{base}/{LF.DATA_DIR}", dead,
-                               staging_grace_seconds)
-    dead_txns, young_txns = _split_young(fs, f"{base}/_transactions",
-                                         dead_txns, staging_grace_seconds)
-    dead_dels, young_dels = _split_young(fs, f"{base}/{LF.DELETIONS_DIR}",
-                                         dead_dels, staging_grace_seconds)
-    reclaimed = _remote_sizes(fs, f"{base}/{LF.DATA_DIR}", dead)
-    if not dry_run:
-        for v in dropped:  # manifests first (crash-safe order)
-            fs.rm(f"{base}/{LF.VERSIONS_DIR}/{v}.manifest")
-            try:
-                fs.rm(f"{base}/{LF.VERSIONS_DIR}/{v}.stats.json")
-            except (FileNotFoundError, OSError):
-                pass
-        for n in dead_txns:
-            fs.rm(f"{base}/_transactions/{n}")
-        for n in dead:
-            fs.rm(f"{base}/{LF.DATA_DIR}/{n}")
-        for n in dead_dels:
-            fs.rm(f"{base}/{LF.DELETIONS_DIR}/{n}")
-    return {"kept_versions": kept, "dropped_versions": len(dropped),
-            "deleted_files": len(dead) + len(dead_dels),
-            "reclaimed_bytes": reclaimed,
-            "staging_dirs_removed": 0,
-            "skipped_young_keys": len(young) + len(young_txns) + len(young_dels)}
-
-
-def _vacuum_native(path: str, keep_versions: int, dry_run: bool) -> dict:
-    """MVCC garbage collection for a REAL Lance binary dataset — same
-    crash-safe order as the emulated path: old manifests first (plus
-    their transaction files), then data files no retained version
-    references. A crash mid-vacuum can only orphan invisible data files,
-    never leave a manifest pointing at deleted data."""
-    import struct as _s
-
-    from . import lance_format as LF
-
-    versions = LF.native_manifest_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"not a dataset (no {LF.VERSIONS_DIR}/): {path}")
-    kept = versions[-keep_versions:]
-    # pin manifests an ANN index was built against (same contract as the
-    # emulated vacuum): coverage-splitting diffs the current file set
-    # against the build-time manifest — vacuuming it away degrades every
-    # indexed search over this dataset to brute force, permanently
-    kept = sorted(set(kept) | (_index_pinned_versions(path) & set(versions)))
-    dropped = [v for v in versions if v not in kept]
-    live_files: set[str] = set()
-    live_txns: set[str] = set()
-    live_dels: set[str] = set()
-    for v in kept:
-        mpath = os.path.join(path, LF.VERSIONS_DIR, f"{v}.manifest")
-        blob = open(mpath, "rb").read()
-        msg = LF._pb_fields(blob[4:4 + _s.unpack_from("<I", blob, 0)[0]])
-        live_txns.add(LF._one(msg, 12, b"").decode("utf-8"))
-        vmf = LF.read_native_manifest(path, v)
-        live_files |= {fr.file for fr in vmf.fragments}
-        live_dels |= {LF.deletion_file_name(fr.fragment_id, fr.deletion)
-                      for fr in vmf.fragments if fr.deletion}
-    from .bloom import BLOOM_SUFFIX
-
-    # a bloom sidecar lives exactly as long as its fragment
-    live_files |= {f + BLOOM_SUFFIX for f in live_files}
-    data_dir = os.path.join(path, LF.DATA_DIR)
-    dead = [n for n in (os.listdir(data_dir) if os.path.isdir(data_dir) else [])
-            if n not in live_files]
-    txn_dir = os.path.join(path, "_transactions")
-    dead_txns = [n for n in (os.listdir(txn_dir) if os.path.isdir(txn_dir) else [])
-                 if n not in live_txns]
-    # deletion vectors live as long as any retained manifest references
-    # them (superseded vectors from re-deletes become dead keys)
-    del_dir = os.path.join(path, LF.DELETIONS_DIR)
-    dead_dels = [n for n in (os.listdir(del_dir) if os.path.isdir(del_dir)
-                             else []) if n not in live_dels]
-    reclaimed = sum(os.path.getsize(os.path.join(data_dir, n)) for n in dead)
-    if not dry_run:
-        for v in dropped:
-            os.remove(os.path.join(path, LF.VERSIONS_DIR, f"{v}.manifest"))
-            try:  # our zone-map sidecar lives and dies with its manifest
-                os.remove(LF._stats_sidecar(path, v))
-            except FileNotFoundError:
-                pass
-        for n in dead_txns:
-            os.remove(os.path.join(txn_dir, n))
-        for n in dead:
-            os.remove(os.path.join(data_dir, n))
-        for n in dead_dels:
-            os.remove(os.path.join(del_dir, n))
-    return {"kept_versions": kept, "dropped_versions": len(dropped),
-            "deleted_files": len(dead) + len(dead_dels),
-            "reclaimed_bytes": reclaimed,
-            "staging_dirs_removed": 0}
 
 
 def compact_dataset(
@@ -1580,19 +1379,29 @@ def _zorder_key(df: DataFrame, by: list[str], stats_min_max: dict, bits: int = 8
     return z
 
 
-def _last_clustering_files(path: str) -> set:
-    """File set of the most recent clustering commit, or empty when none
-    survives (never clustered, or the manifests were vacuumed)."""
-    v = FR.latest_version(path)
+def _last_clustering_commit(path: str, storage_options: dict | None = None
+                            ) -> "FR.Manifest | None":
+    """The most recent clustering commit of an emulated chain (its meta
+    carries ``clustering``; meta is per-commit, so walk down from the
+    head), or None when none survives (never clustered, or the manifests
+    were vacuumed)."""
+    v = FR.latest_version(path, storage_options)
     while v is not None and v >= 0:
         try:
-            m = FR.read_manifest(path, v)
+            m = FR.read_manifest(path, v, storage_options)
         except (FileNotFoundError, FR.LanceUnavailableError):
             break
         if "clustering" in m.meta:
-            return {f.file for f in m.fragments}
+            return m
         v -= 1
-    return set()
+    return None
+
+
+def _last_clustering_files(path: str, storage_options: dict | None = None) -> set:
+    """File set of the most recent clustering commit, or empty when none
+    survives (never clustered, or the manifests were vacuumed)."""
+    m = _last_clustering_commit(path, storage_options)
+    return {f.file for f in m.fragments} if m is not None else set()
 
 
 def _last_clustering_files_native(path: str,
@@ -1652,7 +1461,7 @@ def _cluster_remote(spark: SparkSession, path: str, by: list[str],
             prev = {f"{FR.DATA_DIR}/{n}"
                     for n in _last_clustering_files_native(path, storage)}
         else:
-            prev = _last_clustering_files_remote(path, storage)
+            prev = _last_clustering_files(path, storage)
         clustered = prev & {f.file for f in manifest.fragments}
         to_sort = [f for f in manifest.fragments if f.file not in clustered]
         if not to_sort:
@@ -1689,20 +1498,6 @@ def _cluster_remote(spark: SparkSession, path: str, by: list[str],
         meta={"clustering": {**layout, "base_version": manifest.version,
                              "scope": scope}},
         bloom_cols=bloom_cols, max_rows=target_rows)
-
-
-def _last_clustering_files_remote(path: str, storage: dict | None) -> set:
-    """Emulated-chain remote twin of ``_last_clustering_files``."""
-    v = FR.latest_version(path, storage)
-    while v is not None and v >= 0:
-        try:
-            m = FR.read_manifest(path, v, storage_options=storage)
-        except (FileNotFoundError, FR.LanceUnavailableError):
-            break
-        if "clustering" in m.meta:
-            return {f.file for f in m.fragments}
-        v -= 1
-    return set()
 
 
 def _cluster_native(spark: SparkSession, path: str, by: list[str],
@@ -1876,223 +1671,6 @@ def cluster_dataset(
         shutil.rmtree(stage, ignore_errors=True)
 
 
-def _describe_native(path: str) -> dict:
-    """DESCRIBE for a REAL Lance binary dataset (stdlib codec): same key
-    shape as the emulated report so callers need no format branch.
-    Auxiliary structures (ANN/FTS indexes, rollups, blooms, clustering)
-    are parquet-backend constructs — reported empty, not unknown."""
-    from . import lance_format as LF
-
-    mf = LF.read_native_manifest(path)
-    data_dir = os.path.join(path, LF.DATA_DIR)
-    size = sum(
-        os.path.getsize(os.path.join(data_dir, fr.file))
-        for fr in mf.fragments
-        if os.path.exists(os.path.join(data_dir, fr.file))
-    )
-    return {
-        "path": os.path.abspath(path),
-        "version": mf.version,
-        "versions": LF.native_manifest_versions(path),
-        "num_fragments": len(mf.fragments),
-        "num_rows": mf.row_count,
-        # deletion-vector tombstones awaiting materialization: the
-        # compaction-debt signal (num_rows already excludes them)
-        "tombstoned_rows": sum((fr.deletion or {}).get("num_deleted", 0)
-                               for fr in mf.fragments),
-        "size_bytes": size,
-        "schema_columns": sorted(f.name for f in mf.fields if f.parent == -1) or None,
-        "bloom": None,
-        "indexes": [],
-        "fts": [],
-        "rollups": [],
-        "clustering": None,
-        "native_format": {"writer_version": mf.writer_version,
-                          "data_format": mf.data_format},
-    }
-
-
-def _describe_remote(path: str, storage: "dict | None") -> dict:
-    """DESCRIBE for an s3:// dataset (either backend) — manifest +
-    key-listing IO only, same key shape as the local report. Versions,
-    row/byte counts, schema, bloom coverage (it rides the manifest's
-    stats sidecar), clustering staleness, and ROLLUP + FTS + ANN
-    staleness (all three states are themselves datasets under
-    ``_rollups/`` / ``_indexes/<col>/<kind>`` — one listing + manifest
-    reads each) are all fs-plane derivable."""
-    from . import lance_format as LF
-    from .bloom import BLOOM_STATS_KEY
-    from .fs import get_fs, remote_ls_names
-
-    fs = get_fs(path, storage)
-    base = str(path).rstrip("/")
-    names = remote_ls_names(fs, f"{base}/{FR.VERSIONS_DIR}")
-    native = any(n.endswith(".manifest") for n in names)
-    if native:
-        mf = LF.read_native_manifest(base, None, storage)
-        versions = sorted(int(n.split(".")[0]) for n in names
-                          if n.endswith(".manifest"))
-        frag_files = [fr.file for fr in mf.fragments]
-        num_rows = mf.row_count
-        version = mf.version
-        cols = sorted(f.name for f in mf.fields if f.parent == -1)
-        stats_map = LF.read_native_stats(base, mf.version, storage)
-        frag_stats = [stats_map.get(f) for f in frag_files]
-        clustering_meta = FR.native_config_meta(mf).get("clustering")
-    else:
-        manifest = FR.read_manifest(path, storage_options=storage)
-        versions = sorted(int(n.split(".")[0]) for n in names
-                          if n.endswith(".manifest.json"))
-        frag_files = [fr.file for fr in manifest.fragments]
-        num_rows = manifest.row_count
-        version = manifest.version
-        sj = manifest.meta.get("schema")
-        if sj:
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            cols = sorted(StructType.fromJson(_json.loads(sj)).names)
-        else:
-            cols = sorted({c for fr in manifest.fragments
-                           for c in (fr.stats or {})}) or None
-        frag_stats = [fr.stats for fr in manifest.fragments]
-        # emulated meta is per-commit (only schema/rollup/fts inherit):
-        # walk down for the newest clustering commit, like the local path
-        clustering_meta = None
-        v = version
-        while v >= 0 and clustering_meta is None:
-            try:
-                clustering_meta = FR.read_manifest(
-                    path, v, storage_options=storage).meta.get("clustering")
-            except (FileNotFoundError, FR.LanceUnavailableError):
-                break
-            v -= 1
-
-    bloom_cols: set = set()
-    bloom_frags = 0
-    for st in frag_stats:
-        entry = (st or {}).get(BLOOM_STATS_KEY)
-        if entry:
-            bloom_frags += 1
-            bloom_cols |= set(entry.get("cols", {}))
-
-    clustering = None
-    if clustering_meta is not None:
-        if isinstance(clustering_meta, str):
-            import json as _json
-
-            clustering_meta = _json.loads(clustering_meta)
-        if native:
-            cl_files = _last_clustering_files_native(base, storage)
-            rows_by = {fr.file: fr.physical_rows for fr in mf.fragments}
-        else:
-            cl_files = _last_clustering_files_remote(path, storage)
-            rows_by = {fr.file: fr.row_count for fr in manifest.fragments}
-        tail = sum(r for f, r in rows_by.items() if f not in cl_files)
-        clustering = {**clustering_meta, "unclustered_rows": tail}
-
-    data_prefix = f"{base}/{LF.DATA_DIR}" if native else base
-    size = 0
-    for f in frag_files:
-        try:
-            size += int(fs.info(f"{data_prefix}/{f}").get("size", 0) or 0)
-        except (OSError, KeyError, AttributeError):
-            pass
-
-    # rollup state is itself a dataset under the same key prefix, so a
-    # remote describe CAN enumerate it (one listing + manifest reads) —
-    # unlike ANN/FTS indexes, which stay local-checkout structures
-    from .rollup import ROLLUPS_DIR, rollup_status
-
-    rollups = []
-    try:
-        r_names = sorted({n.split("/")[0] for n in
-                          remote_ls_names(fs, f"{base}/{ROLLUPS_DIR}")})
-    except (OSError, FileNotFoundError):
-        r_names = []
-    for rname in r_names:
-        try:
-            rollups.append(rollup_status(base, rname,
-                                         storage_options=storage))
-        except (ValueError, FileNotFoundError):
-            continue  # not a rollup dir (partial write, foreign key)
-
-    # FTS postings AND ANN index relations are datasets under
-    # _indexes/<col>/<kind> — staleness is manifest-derivable remotely,
-    # same covered-file bookkeeping as local (ANN meta rides the kind's
-    # primary relation's commit: graph/codebooks/centroids)
-    from ..index import INDEXES_DIR, _idx_meta_remote
-
-    fts_indexes = []
-    ann_indexes = []
-    try:
-        idx_cols = sorted({n.split("/")[0] for n in
-                           remote_ls_names(fs, f"{base}/{INDEXES_DIR}")})
-    except (OSError, FileNotFoundError):
-        idx_cols = []
-    if idx_cols:
-        cur_m = FR.read_manifest_compat(base, storage_options=storage)
-        cur_files = {f.file for f in cur_m.fragments}
-        rows_by = {f.file: f.row_count for f in cur_m.fragments}
-        for column in idx_cols:
-            try:
-                info = FR.read_manifest(
-                    f"{base}/{INDEXES_DIR}/{column}/fts", None, storage
-                ).meta.get("fts")
-            except (FileNotFoundError, FR.LanceUnavailableError):
-                info = None  # ANN-only column dir, or partial write
-            if info:
-                covered = set(info["covered_files"])
-                fts_indexes.append({
-                    "column": column,
-                    "built_at_version": info["source_version"],
-                    "n_docs": info["n_docs"],
-                    "pending_rows": sum(rows_by[f]
-                                        for f in cur_files - covered),
-                    "needs_full": bool(covered - cur_files),
-                })
-            for kind, rel in (("hnsw", "graph"), ("pq", "codebooks"),
-                              ("ivf", "centroids")):
-                meta = _idx_meta_remote(
-                    f"{base}/{INDEXES_DIR}/{column}/{kind}/{rel}", storage)
-                if meta is None:
-                    continue
-                built_at = meta.get("dataset_version", 0)
-                try:
-                    built_files = {f.file for f in FR.read_manifest_compat(
-                        base, built_at, storage_options=storage).fragments}
-                except (FileNotFoundError, FR.LanceUnavailableError):
-                    built_files = set()
-                stale_rows = sum(rows_by[f]
-                                 for f in cur_files - built_files)
-                ann_indexes.append({
-                    "column": column,
-                    "type": meta.get("index_type", kind),
-                    "metric": meta.get("metric"),
-                    "built_at_version": built_at,
-                    "unindexed_rows": stale_rows,
-                })
-
-    return {
-        "path": base,
-        "version": version,
-        "versions": versions,
-        "num_fragments": len(frag_files),
-        "num_rows": num_rows,
-        "tombstoned_rows": (sum((fr.deletion or {}).get("num_deleted", 0)
-                                for fr in mf.fragments) if native else 0),
-        "size_bytes": size,
-        "schema_columns": cols or None,
-        "bloom": {"columns": sorted(bloom_cols),
-                  "fragments_covered": bloom_frags} if bloom_cols else None,
-        # ANN/FTS/rollup structures are all datasets under the table's
-        # key prefix — a remote describe enumerates them like local
-        "indexes": ann_indexes,
-        "fts": fts_indexes,
-        "rollups": rollups,
-        "clustering": clustering,
-    }
 
 
 def describe_dataset(path: str, storage_options: "dict | None" = None) -> dict:
@@ -2100,138 +1678,138 @@ def describe_dataset(path: str, storage_options: "dict | None" = None) -> dict:
 
     The operational `DESCRIBE EXTENDED` a table owner actually needs at
     100 TB: what versions exist, how much lives in the current one, what
-    auxiliary structures (ANN indexes, rollups, bloom sidecars,
-    clustering layout) are present and how stale each is. Everything
-    comes from manifests, index/rollup metadata files, and directory
-    listings — no Spark session, no file scans. s3:// datasets report
-    the same facts over fsspec (versions, rows, bytes, schema, bloom
-    coverage, clustering staleness, rollup + FTS + ANN staleness — the
-    index states are themselves datasets under the table's key prefix).
-    """
-    from .fs import is_remote
+    auxiliary structures (ANN indexes, FTS postings, rollups, bloom
+    sidecars, clustering layout) are present and how stale each is.
+    Everything comes from manifests, index/rollup metadata and key
+    listings through the storage seam (sources/fs.py) — no Spark
+    session, no file scans — so a local path and an s3:// url of the
+    same table report the same facts. Both manifest formats share the
+    body: a binary (native Lance) head is adapted into the emulated
+    shape (``fragments.native_as_manifest``), its stats sidecar carrying
+    the zone maps and blooms and its config map the clustering meta.
 
-    if is_remote(path):
-        return _describe_remote(path, storage_options)
+    Keys: ``path``, ``version``, ``versions``, ``num_fragments``,
+    ``num_rows`` (live rows), ``tombstoned_rows`` (deletion-vector rows
+    awaiting compaction), ``size_bytes``, ``schema_columns`` (from the
+    recorded schema), ``bloom``, ``indexes``, ``fts``, ``rollups`` (each
+    a full ``rollup_status``), ``clustering`` and ``native_format``
+    (None on the emulated format)."""
     import json
 
-    from ..index import INDEXES_DIR
+    from ..index import INDEXES_DIR, _kind_metas
+    from . import lance_format as LF
     from .bloom import BLOOM_STATS_KEY
+    from .fs import local_path, store_for
     from .rollup import ROLLUPS_DIR, rollup_status
 
-    from . import lance_format as LF
+    store = store_for(path, storage_options)
+    native, versions = _manifest_chain(store, path)
+    native_format = None
+    if native:
+        mf = LF.read_native_manifest(path, versions[-1], storage_options)
+        manifest = FR.native_as_manifest(path, mf, storage_options)
+        cols = [f.name for f in mf.fields if f.parent == -1]
+        native_format = {"writer_version": mf.writer_version,
+                         "data_format": mf.data_format}
+        # the clustering meta rides the config map and carries forward
+        cl_meta = manifest.meta.get("clustering")
+        cl_files = ({f"{FR.DATA_DIR}/{n}"
+                     for n in _last_clustering_files_native(path, storage_options)}
+                    if cl_meta is not None else set())
+    else:
+        manifest = FR.read_manifest(path, versions[-1], storage_options)
+        sj = manifest.meta.get("schema")
+        cols = ([f["name"] for f in json.loads(sj)["fields"]] if sj else
+                # schemaless manifests: the zone-mapped columns, minus the
+                # reserved stats keys (digest, bloom)
+                {c for f in manifest.fragments for c in (f.stats or {})
+                 if not c.startswith("__")})
+        cl = _last_clustering_commit(path, storage_options)
+        cl_meta = cl.meta["clustering"] if cl is not None else None
+        cl_files = {f.file for f in cl.fragments} if cl is not None else set()
 
-    if LF.is_native_dataset(path):
-        return _describe_native(path)
-    latest = FR.latest_version(path)
-    if latest is None:
-        raise FileNotFoundError(f"not a dataset (no {FR.VERSIONS_DIR}/): {path}")
-    manifest = FR.read_manifest(path)
-    versions = sorted(
-        int(name.split(".")[0])
-        for name in os.listdir(os.path.join(path, FR.VERSIONS_DIR))
-        if name.endswith(".manifest.json") or name.endswith(".manifest")
-    )
+    frags = manifest.fragments
+    cur_files = {f.file for f in frags}
+    rows_by = {f.file: f.row_count for f in frags}
 
     bloom_cols: set[str] = set()
     bloom_frags = 0
-    for f in manifest.fragments:
+    for f in frags:
         entry = (f.stats or {}).get(BLOOM_STATS_KEY)
         if entry:
             bloom_frags += 1
             bloom_cols |= set(entry.get("cols", {}))
 
+    clustering = None
+    if cl_meta is not None:
+        if isinstance(cl_meta, str):
+            cl_meta = json.loads(cl_meta)
+        # physical rows: tombstoned rows still sit in the unclustered files
+        tail = sum(f.row_count + (f.deletion or {}).get("num_deleted", 0)
+                   for f in frags if f.file not in cl_files)
+        clustering = {**cl_meta, "unclustered_rows": tail}
+
+    # FTS postings and ANN index relations are datasets (or meta files)
+    # under _indexes/<col>/<kind>; staleness is the current file set
+    # minus the files covered at build time
     indexes = []
     fts_indexes = []
-    idx_root = os.path.join(path, INDEXES_DIR)
-    if os.path.isdir(idx_root):
-        for column in sorted(os.listdir(idx_root)):
-            for kind in sorted(os.listdir(os.path.join(idx_root, column))):
-                if kind == "fts":
-                    # FTS postings live as their own fragment dataset with
-                    # rollup-style covered-file bookkeeping (sources/fts.py)
-                    try:
-                        info = FR.read_manifest(
-                            os.path.join(idx_root, column, "fts")
-                        ).meta.get("fts")
-                    except (FileNotFoundError, FR.LanceUnavailableError):
-                        info = None
-                    if info:
-                        covered = set(info["covered_files"])
-                        cur = {f.file for f in manifest.fragments}
-                        rows_by = {f.file: f.row_count for f in manifest.fragments}
-                        fts_indexes.append({
-                            "column": column,
-                            "built_at_version": info["source_version"],
-                            "n_docs": info["n_docs"],
-                            "pending_rows": sum(rows_by[f] for f in cur - covered),
-                            "needs_full": bool(covered - cur),
-                        })
-                    continue
-                meta_p = os.path.join(idx_root, column, kind, "index_meta.json")
-                if not os.path.exists(meta_p):
-                    continue
-                with open(meta_p) as fh:
-                    meta = json.load(fh)
-                built_at = meta.get("dataset_version", 0)
-                built_files: set[str] = set()
-                try:
-                    built_files = {f.file for f in FR.read_manifest(path, built_at).fragments}
-                except (FileNotFoundError, FR.LanceUnavailableError):
-                    pass
-                cur_files = {f.file for f in manifest.fragments}
-                covered = built_files & cur_files
-                rows_by_file = {f.file: f.row_count for f in manifest.fragments}
-                stale_rows = sum(rows_by_file[f] for f in cur_files - covered)
-                indexes.append({
-                    "column": column,
-                    "type": meta.get("index_type", kind),
-                    "metric": meta.get("metric"),
-                    "built_at_version": built_at,
-                    "unindexed_rows": stale_rows,
-                })
-
-    rollups = []
-    r_root = os.path.join(path, ROLLUPS_DIR)
-    if os.path.isdir(r_root):
-        for name in sorted(os.listdir(r_root)):
+    for column in sorted(store.ls(os.path.join(path, INDEXES_DIR))):
+        try:
+            info = FR.read_manifest(os.path.join(path, INDEXES_DIR, column, "fts"),
+                                    None, storage_options).meta.get("fts")
+        except (FileNotFoundError, FR.LanceUnavailableError):
+            info = None  # ANN-only column dir, or partial write
+        if info:
+            covered = set(info["covered_files"])
+            fts_indexes.append({
+                "column": column,
+                "built_at_version": info["source_version"],
+                "n_docs": info["n_docs"],
+                "pending_rows": sum(rows_by[f] for f in cur_files - covered),
+                "needs_full": bool(covered - cur_files),
+            })
+        for kind, meta in sorted(_kind_metas(path, column, storage_options).items()):
+            built_at = meta.get("dataset_version", 0)
             try:
-                st = rollup_status(path, name)
-            except (FileNotFoundError, ValueError):
-                continue
-            rollups.append({
-                "name": name,
-                "group_cols": st["group_cols"],
-                "pending_rows": st["pending_rows"],
-                "needs_full": st["needs_full"],
+                built_files = {f.file for f in FR.read_manifest_compat(
+                    path, built_at, storage_options=storage_options).fragments}
+            except (FileNotFoundError, FR.LanceUnavailableError):
+                built_files = set()
+            indexes.append({
+                "column": column,
+                "type": meta.get("index_type", kind),
+                "metric": meta.get("metric"),
+                "built_at_version": built_at,
+                "unindexed_rows": sum(rows_by[f] for f in cur_files - built_files),
             })
 
-    clustering = None
-    cl_files = _last_clustering_files(path)
-    v = latest
-    while v is not None and v >= 0 and clustering is None:
+    rollups = []
+    for name in sorted(store.ls(os.path.join(path, ROLLUPS_DIR))):
         try:
-            m = FR.read_manifest(path, v)
-        except (FileNotFoundError, FR.LanceUnavailableError):
-            break
-        if "clustering" in m.meta:
-            tail = [f for f in manifest.fragments if f.file not in cl_files]
-            clustering = {**m.meta["clustering"],
-                          "unclustered_rows": sum(f.row_count for f in tail)}
-        v -= 1
+            rollups.append(rollup_status(path, name, storage_options=storage_options))
+        except (FileNotFoundError, ValueError):
+            continue  # not a rollup dir (partial write, foreign key)
 
-    stats = table_statistics(path)
     return {
-        "path": os.path.abspath(path),
+        "path": (os.path.abspath(local_path(path)) if store.is_local
+                 else str(path).rstrip("/")),
         "version": manifest.version,
         "versions": versions,
-        "num_fragments": stats["num_fragments"],
-        "num_rows": stats["num_rows"],
-        "size_bytes": stats["size_bytes"],
-        "schema_columns": sorted(stats["columns"]) or None,
+        "num_fragments": len(frags),
+        "num_rows": manifest.row_count,
+        # deletion-vector tombstones awaiting materialization: the
+        # compaction-debt signal (num_rows already excludes them)
+        "tombstoned_rows": sum((f.deletion or {}).get("num_deleted", 0)
+                               for f in frags),
+        "size_bytes": sum(store.size(os.path.join(path, f)) or 0
+                          for f in cur_files),
+        "schema_columns": sorted(cols) or None,
         "bloom": {"columns": sorted(bloom_cols),
                   "fragments_covered": bloom_frags} if bloom_cols else None,
         "indexes": indexes,
         "fts": fts_indexes,
         "rollups": rollups,
         "clustering": clustering,
+        "native_format": native_format,
     }

@@ -86,22 +86,15 @@ def commit_epoch(batch_df: DataFrame, epoch_id: int, path: str,
     manifest = write_dataset(batch_df, path, mode=WriteMode.APPEND, options=options,
                              commit_meta={EPOCH_META_KEY: epoch_id})
     _write_epoch_marker(path, epoch_id, manifest.version)
+    if refresh_rollups or refresh_fts:
+        from ..sources.fs import store_for
+
+        store = store_for(path, storage)
+        s3 = options.s3 if options is not None else None
     if refresh_rollups:
-        from ..sources.fs import is_remote
         from ..sources.rollup import ROLLUPS_DIR, refresh_rollup
 
-        s3 = options.s3 if options is not None else None
-        if is_remote(path):
-            from ..sources.fs import get_fs, remote_ls_names
-
-            names = sorted({n.split("/")[0] for n in remote_ls_names(
-                get_fs(path, storage),
-                f"{str(path).rstrip('/')}/{ROLLUPS_DIR}")})
-        else:
-            r_root = os.path.join(path, ROLLUPS_DIR)
-            names = (sorted(os.listdir(r_root))
-                     if os.path.isdir(r_root) else [])
-        for name in names:
+        for name in sorted(store.ls(os.path.join(path, ROLLUPS_DIR))):
             # per-epoch refresher: opt into state vacuum or the
             # rollup's version chain grows one commit per epoch
             refresh_rollup(batch_df.sparkSession, path, name,
@@ -111,30 +104,12 @@ def commit_epoch(batch_df: DataFrame, epoch_id: int, path: str,
         # epoch appends keep every FTS refresh on the incremental path
         # (explode the micro-batch only), and a missed refresh is caught
         # up by the next epoch's covered-file diff
-        from ..sources.fs import is_remote
         from ..sources.fts import refresh_fts_index
 
-        s3 = options.s3 if options is not None else None
-        if is_remote(path):
-            from ..sources import fragments as _FR
-            from ..sources.fs import get_fs, remote_ls_names
-
-            base = str(path).rstrip("/")
-            fs = get_fs(path, storage)
-            for col in sorted({n.split("/")[0] for n in
-                               remote_ls_names(fs, f"{base}/_indexes")}):
-                try:
-                    _FR.read_manifest(f"{base}/_indexes/{col}/fts",
-                                      None, storage)
-                except FileNotFoundError:
-                    continue
+        idx_root = os.path.join(path, "_indexes")
+        for col in sorted(store.ls(idx_root)):
+            if FR.is_dataset(os.path.join(idx_root, col, "fts"), storage):
                 refresh_fts_index(batch_df.sparkSession, path, col, s3=s3)
-        else:
-            idx_root = os.path.join(path, "_indexes")
-            if os.path.isdir(idx_root):
-                for col in sorted(os.listdir(idx_root)):
-                    if os.path.isdir(os.path.join(idx_root, col, "fts")):
-                        refresh_fts_index(batch_df.sparkSession, path, col)
     return manifest
 
 

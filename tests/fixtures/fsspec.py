@@ -76,7 +76,7 @@ class _FakeS3FS:
             raise FileNotFoundError(str(path))
         # "mtime" mirrors what fsspec local/memory filesystems report;
         # real s3fs reports "LastModified" (a datetime) — product code
-        # (maintenance._remote_object_age) accepts either
+        # (fs.ObjectStore.age) accepts either
         return {"name": str(path), "size": os.path.getsize(local),
                 "type": "directory" if os.path.isdir(local) else "file",
                 "mtime": os.path.getmtime(local)}

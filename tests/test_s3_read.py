@@ -1376,8 +1376,9 @@ def test_s3_streaming_format_writer_exactly_once(fake_s3, spark, tmp_path):
 def test_s3_describe_dataset_both_backends(fake_s3, spark):
     """describe_dataset works on s3:// for both backends: versions, row
     and byte counts, schema, bloom coverage and clustering staleness come
-    from the fs plane; ANN/FTS indexes and rollups (local structures)
-    report None (unknown) rather than [] (checked, none present)."""
+    from the fs plane; ANN/FTS indexes and rollups are datasets under the
+    table's key prefix, so a table without any reports [] (checked, none
+    present), not None."""
     from flink_connector_lance_spark.options import DatasetOptions
     from flink_connector_lance_spark.sources.maintenance import (
         cluster_dataset,
