@@ -22,7 +22,7 @@ Architecture (see SURVEY.md for the full blueprint):
                    temporal joins, sampling/splits, sequence packing,
                    multimodal column plumbing.
 - ``index``/``pq`` — ANN index build + search: native lance when present,
-                   else emulated IVF (distributed k-means) and IVF_PQ
+                   else emulated IVF (sampled k-means) and IVF_PQ
                    (per-sub-space codebooks, ADC + refine).
 - ``functions``  — column-expression helpers (vector distances, hashing).
 - ``streaming``  — Structured Streaming sinks (epoch-idempotent commits).

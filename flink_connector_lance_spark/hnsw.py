@@ -61,8 +61,9 @@ from .index import (
     _index_dir as _ivf_dir,
     _remote_subdir,
     has_index as has_ivf_index,
+    load_centroids,
+    probe_cells,
 )
-from .io import read_parquet_memo
 from .sources import fragments as FR
 
 
@@ -439,16 +440,7 @@ def hnsw_candidates(
             raise FileNotFoundError(
                 f"nprobes given but no IVF index on {path}:{column}; build_index first"
             )
-        if remote:
-            cents = _idx_load_remote(
-                spark, _remote_subdir(_ivf_dir(path, column), "centroids"), s3)
-        else:
-            cents = read_parquet_memo(spark, os.path.join(_ivf_dir(path, column), "centroids.parquet"))
-        chosen = [
-            r.cell
-            for r in cents.select("cell", V.l2_distance("centroid", q).alias("cd"))
-            .orderBy("cd", "cell").limit(int(nprobes)).collect()
-        ]
+        chosen = probe_cells(*load_centroids(spark, path, column, s3), q, nprobes)
 
     qv, pool, met = [float(v) for v in q], max(eff, k), meta.get("metric", "l2")
 

@@ -7,14 +7,16 @@ layer's design:
   IVF_PQ / IVF_HNSW_PQ / IVF_FLAT with the reference's parameter set and
   validation (ref :125-179, defaults ref config/LanceOptions.java:123-190).
 - **emulated** (always available): a real IVF index over the
-  parquet-fragment backend — distributed Lloyd k-means builds
-  ``index.num-partitions`` centroids, every row's cell assignment is
-  persisted columnar, and ``ivf_index_knn`` answers queries by probing
-  the ``nprobes`` nearest cells only (centroid select is driver-side on
-  a tiny relation; candidate fetch is a parquet scan with the cell
-  filter pushed down + a broadcast semi-join). This is the same
-  prune-then-exact-score shape Lance's IVF uses, expressed as DataFrame
-  plans.
+  parquet-fragment backend. As lance-core's ``create_index`` does, the
+  build trains in-process on a bounded sample: one TakeOrdered job
+  brings at most ``SAMPLE_RATE`` x ``index.num-partitions`` rows to the
+  driver, numpy Lloyd k-means fits the centroids, and one mapInArrow pass
+  assigns every row to its cell, persisted columnar. ``ivf_index_knn``
+  answers queries by probing the ``nprobes`` nearest cells only
+  (centroid select is driver-side on the tiny centroid table; candidate
+  fetch is a parquet scan with the cell filter pushed down + a semi-join).
+  This is the same prune-then-exact-score shape Lance's IVF uses,
+  expressed as DataFrame plans.
 
 Both return ``IndexBuildResult{success, duration, error}`` (ref :380-435).
 On-disk layout (emulated): ``<dataset>/_indexes/<column>/ivf/`` with
@@ -30,6 +32,7 @@ import shutil
 import time
 from dataclasses import dataclass
 
+import numpy as np
 import pyspark.sql.functions as F
 
 from .options import DatasetOptions, DistanceMetric, IndexType
@@ -175,85 +178,134 @@ def has_index(path: str, column: str, storage: dict | None = None) -> bool:
     return os.path.exists(os.path.join(_index_dir(path, column), "index_meta.json"))
 
 
-def _pair_l2_sql(a: str, b: str, dim: int) -> F.Column:
-    """Codegen L2 between two array columns, one F.expr parse."""
-    return F.sqrt(F.expr(" + ".join(
-        f"(element_at(`{a}`, {i}) - element_at(`{b}`, {i})) * "
-        f"(element_at(`{a}`, {i}) - element_at(`{b}`, {i}))"
-        for i in range(1, dim + 1)
-    )))
+# Training rows per centroid, lance-core's default IVF/PQ ``sample_rate``:
+# a k-centroid model trains on at most SAMPLE_RATE * k rows, so training
+# is bounded by k, not by the table, and a table of at most that many rows
+# trains on every row.
+SAMPLE_RATE = 256
 
 
-def _assign_cells(vecs, cents, dim: int, keep_vd: bool = True):
-    """Nearest-centroid assignment: rows x broadcast(centroids) -> argmin.
+def training_sample(vecs, k: int) -> np.ndarray:
+    """The rows a k-centroid model trains on: (n, dim) float64, ascending id.
 
-    One shuffle-free broadcast join producing n*k scored pairs, then a
-    max_by-style argmin per row — the standard distributed Lloyd step.
-
-    ``keep_vd=False`` drops the vector from the argmin aggregate: min of a
-    struct is not hash-aggregable, so Spark plans a SortAggregate — with
-    ``vd`` in the buffer the map side sorts and the exchange ships every
-    row's full vector (dim doubles) just to emit ``(rid, cell)``. Callers
-    that only need assignments (the final IVF assignment, kmeans_assign)
-    get a skinny sort+shuffle of (rid, d, cell) instead — same argmin,
-    same tie-break, ~20x fewer bytes per row at dim=64 (guide §2.3)."""
-    pairs = vecs.crossJoin(F.broadcast(cents))
-    d = _pair_l2_sql("vd", "centroid", dim)
-    # argmin via min over (d, cell) structs — struct ordering is
-    # lexicographic, so ties break on the lowest cell id, deterministically
-    if not keep_vd:
-        return (
-            pairs.select("rid", "cell", d.alias("d"))
-            .groupBy("rid")
-            .agg(F.min(F.struct("d", "cell")).alias("best"))
-            .select("rid", F.col("best.cell").alias("cell"))
-        )
-    scored = pairs.select("rid", "vd", "cell", d.alias("d"))
-    return (
-        scored.groupBy("rid")
-        .agg(F.min(F.struct("d", "cell")).alias("best"), F.first("vd").alias("vd"))
-        .select("rid", "vd", F.col("best.cell").alias("cell"))
-    )
+    ``vecs`` is a (rid, vd) relation. One TakeOrdered job keeps the
+    SAMPLE_RATE * k rows lowest in (xxhash64(rid), rid), a fixed pseudo-
+    random subset, so two builds over the same rows train on the same
+    sample."""
+    rows = vecs.orderBy(F.xxhash64("rid"), "rid").limit(SAMPLE_RATE * k).toArrow()
+    order = np.argsort(rows.column("rid").to_numpy(), kind="stable")
+    return vector_matrix(rows.column("vd"))[order]
 
 
-def lloyd_kmeans_centroids(vecs, k: int, dim: int, iterations: int):
-    """Distributed Lloyd iteration shared by the IVF index build and
-    operators.semantic: deterministic seeding (the k lowest-id vectors),
-    broadcast-centroid argmin assignment (_assign_cells), posexplode
-    per-dimension partial-mean update. ``vecs`` is a (rid, vd) relation;
-    returns the (cell, centroid) relation, checkpointed."""
-    from pyspark.sql import Window
+def vector_matrix(col) -> np.ndarray:
+    """(n, dim) float64 matrix of an Arrow list<double> column; a NULL
+    vector or vectors of unequal length raise ValueError."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    cents = (
-        vecs.orderBy("rid").limit(k)
-        .select((F.row_number().over(Window.orderBy("rid")) - 1).alias("cell"),
-                F.col("vd").alias("centroid"))
-    ).localCheckpoint(eager=False)  # lazy: truncates lineage without a
-    # blocking driver job at plan time; materializes inside the first action
+    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    if arr.null_count:
+        raise ValueError("NULL vector in the input")
+    lengths = pc.min_max(pc.list_value_length(arr))
+    if lengths["min"].as_py() != lengths["max"].as_py():
+        raise ValueError("vectors differ in length")
+    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+    return flat.reshape(len(arr), lengths["max"].as_py() or 0)
+
+
+def sq_l2(x: np.ndarray, c: np.ndarray) -> np.ndarray:
+    """Squared L2 from each row of ``x`` (n, d) to each row of ``c``
+    (k, d), as an (n, k) matrix. The terms ``(x_i - c_i)**2`` are summed
+    left to right, the order of Spark's unrolled SQL chain and of
+    DuckDB's ``list_sum``, so the doubles are the ones they compute."""
+    acc = np.zeros((x.shape[0], c.shape[0]))
+    for i in range(x.shape[1]):
+        t = x[:, i, None] - c[None, :, i]
+        acc += t * t
+    return acc
+
+
+def nearest(x: np.ndarray, cents: np.ndarray, sqrt: bool) -> np.ndarray:
+    """Position of each row's nearest centroid; a tie goes to the lowest
+    position. ``sqrt`` ranks by L2 rather than squared L2: the square root
+    can round two distances to one double, and the tie then breaks the
+    way a SQL ``ORDER BY sqrt(..), cell`` does."""
+    d = sq_l2(x, cents)
+    return (np.sqrt(d) if sqrt else d).argmin(axis=1)
+
+
+def lloyd(x: np.ndarray, k: int, iterations: int,
+          sqrt: bool) -> tuple[np.ndarray, np.ndarray]:
+    """Lloyd k-means over the training rows ``x`` (ascending id order):
+    returns (cell ids, centroids), ascending by cell. Seeds are the k
+    lowest-id rows (cells 0..k-1); each iteration assigns every row to its
+    nearest centroid and replaces each centroid by its rows' mean. A cell
+    that gets no rows is dropped, so cell ids may have gaps."""
+    cells, cents = np.arange(min(k, len(x))), x[:k]
     for _ in range(iterations):
-        assigned = _assign_cells(vecs, cents, dim)
-        # centroid update: per-(cell, dim) mean via posexplode — fully
-        # map-side-combinable partial aggregation (operators.ann shape)
-        pe = assigned.select("cell", F.posexplode("vd").alias("pos", "val"))
-        per_dim = pe.groupBy("cell", "pos").agg(F.avg("val").alias("c"))
-        cents = per_dim.groupBy("cell").agg(
-            F.transform(F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                        lambda s: s["c"]).alias("centroid")
-        ).localCheckpoint(eager=True)
-    # loud empty-input contract (kmeans_assign docstring): with dim= passed
-    # the _first_dim probe is skipped, so an empty relation would otherwise
-    # silently yield empty assignments. The check is ~free here: after the
-    # loop cents is an eager-checkpointed <=k-row relation (isEmpty is a
-    # take(1) over local blocks); iterations=0 materializes the lazy seed
-    # limit(k) early, which no hot path uses.
-    if cents.isEmpty():
-        raise ValueError("cannot cluster an empty DataFrame / NULL vectors")
-    return cents
+        a = nearest(x, cents, sqrt)
+        order = np.argsort(a, kind="stable")
+        keep, starts = np.unique(a[order], return_index=True)
+        cents = np.stack([g.mean(axis=0) for g in np.split(x[order], starts[1:])])
+        cells = cells[keep]
+    return cells, cents
+
+
+def probe_cells(cells: np.ndarray, cents: np.ndarray, q, nprobes: int) -> list[int]:
+    """The ``nprobes`` cells whose centroids are nearest ``q`` by L2,
+    ordered by (distance, cell)."""
+    d = np.sqrt(sq_l2(np.asarray([q], dtype=np.float64), cents)[0])
+    return [int(cells[j]) for j in np.lexsort((cells, d))[:int(nprobes)]]
+
+
+def load_centroids(spark, path: str, column: str, s3=None):
+    """(cell ids, centroid matrix) of the IVF index on ``column``: a
+    pyarrow read of the local centroid table, a collect of the remote
+    one."""
+    from .sources.fs import is_remote
+
+    if is_remote(path):
+        rows = _idx_load_remote(spark, _remote_subdir(_index_dir(path, column), "centroids"),
+                                s3).select("cell", "centroid").toArrow()
+    else:
+        import pyarrow.parquet as pq
+
+        rows = pq.read_table(os.path.join(_index_dir(path, column), "centroids.parquet"))
+    return rows.column("cell").to_numpy(), vector_matrix(rows.column("centroid"))
+
+
+def assign_cells(vecs, cells: np.ndarray, cents: np.ndarray):
+    """(rid, cell) of every row of a (rid, vd) relation: its nearest
+    centroid by L2, a tie going to the lowest cell. One mapInArrow pass,
+    no join and no shuffle."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    def encode(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            pos = nearest(vector_matrix(b.column("vd")), cents, sqrt=True)
+            yield pa.RecordBatch.from_arrays(
+                [b.column("rid"), pa.array(cells[pos], pa.int32())], ["rid", "cell"])
+
+    schema = StructType([vecs.schema["rid"], StructField("cell", IntegerType())])
+    return vecs.mapInArrow(encode, schema)
+
+
+def write_local_table(table, path: str) -> None:
+    """Write a small driver-side Arrow table as a one-file parquet
+    directory at ``path``, the layout Spark's writer leaves."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
 
 def _emulated_ivf_build(spark, path: str, column: str, id_col: str,
                         opts: DatasetOptions, metric: DistanceMetric,
                         replace: bool, iterations: int = 4) -> None:
+    import pyarrow as pa
+
     from .sources.fs import is_remote
     from .sources.reader import read_dataset
 
@@ -273,26 +325,27 @@ def _emulated_ivf_build(spark, path: str, column: str, id_col: str,
     vecs = df.select(
         F.col(id_col).alias("rid"),
         F.col(column).cast("array<double>").alias("vd"),
-    ).localCheckpoint(eager=True)
-    n = vecs.count()
-    if n == 0:
+    )
+    x = training_sample(vecs, opts.index_num_partitions)
+    if not len(x):
         raise ValueError("cannot index an empty dataset")
-    first = vecs.select("vd").first()
-    dim = len(first.vd)
-    k = min(opts.index_num_partitions, n)
-
-    cents = lloyd_kmeans_centroids(vecs, k, dim, iterations)
-    final = _assign_cells(vecs, cents, dim, keep_vd=False)
+    cells, cents = lloyd(x, opts.index_num_partitions, iterations, sqrt=True)
     meta = {
         "index_type": "ivf_flat_emulated",
         "column": column,
         "id_col": id_col,
         "metric": metric.value,
-        "num_partitions": k,
-        "dim": dim,
+        "num_partitions": min(opts.index_num_partitions, len(x)),
+        "dim": x.shape[1],
+        "training_rows": len(x),
         "dataset_version": FR.latest_version(path, storage),
     }
-    assigns = final.select(F.col("rid").alias(id_col), "cell")
+    assigns = assign_cells(vecs, cells, cents).withColumnRenamed("rid", id_col)
+    if len(x) < SAMPLE_RATE * opts.index_num_partitions:
+        # every row trained, so the rows fit one task: one file per cell
+        assigns = assigns.coalesce(1)
+    cent_table = pa.table({"cell": pa.array(cells, pa.int32()),
+                           "centroid": pa.array(list(cents), pa.list_(pa.float64()))})
     if remote:
         # object-storage plane: both relations are engine datasets under
         # the same _indexes/<col>/ivf prefix; the assignments cluster on
@@ -306,12 +359,11 @@ def _emulated_ivf_build(spark, path: str, column: str, id_col: str,
         _idx_store_remote(assigns, _remote_subdir(idx_dir, "assignments"),
                           opts.s3, cluster_cols=["cell"],
                           bloom_cols=["cell"])
-        _idx_store_remote(cents, _remote_subdir(idx_dir, "centroids"),
-                          opts.s3, meta=meta)
+        _idx_store_remote(spark.createDataFrame(cent_table, "cell int, centroid array<double>"),
+                          _remote_subdir(idx_dir, "centroids"), opts.s3, meta=meta)
         return
     shutil.rmtree(idx_dir, ignore_errors=True)
-    os.makedirs(idx_dir, exist_ok=True)
-    cents.write.mode("overwrite").parquet(os.path.join(idx_dir, "centroids.parquet"))
+    write_local_table(cent_table, os.path.join(idx_dir, "centroids.parquet"))
     # partitionBy(cell): probing nprobes cells reads ONLY those cells'
     # files (static partition pruning) — at scale the un-probed ~99% of
     # the assignment index is never touched, mirroring how Lance's IVF
@@ -482,22 +534,12 @@ def ivf_index_knn(
     nprobes = nprobes if nprobes is not None else opts.vector_nprobes
     q = V.validate_query_vector(query)
 
-    if remote:
-        cents = _idx_load_remote(spark, _remote_subdir(idx_dir, "centroids"),
-                                 opts.s3)
-    else:
-        cents = read_parquet_memo(spark, os.path.join(idx_dir, "centroids.parquet"))
-    # centroid selection is driver-side over a num_partitions-row relation
+    # centroid selection is driver-side over the num_partitions centroids
     # (ref: Lance scans the centroid table in-process too); the chosen
-    # cell ids are a handful of ints, so collecting them turns the probe
-    # into a static partition filter on the cell-partitioned assignments —
-    # only the probed cells' files are ever read
-    chosen = [
-        r.cell
-        for r in cents.select(
-            "cell", V.l2_distance("centroid", [float(v) for v in q]).alias("cd")
-        ).orderBy("cd", "cell").limit(nprobes).collect()
-    ]
+    # cell ids are a handful of ints, so the probe becomes a static
+    # partition filter on the cell-partitioned assignments — only the
+    # probed cells' files are ever read
+    chosen = probe_cells(*load_centroids(spark, path, column, opts.s3), q, nprobes)
     if remote:
         # cell IN (...) is PUSHED into the assignments dataset's scan —
         # fragment zone maps (clustered write) + cell blooms skip every

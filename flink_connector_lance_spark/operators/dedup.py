@@ -105,13 +105,6 @@ def minhash_from_hashes(hash_col: "Column | str", num_hashes: int = 16) -> list[
     ]
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 16) -> list[Column]:
-    """Expression form (single-use): composes shingle_hashes +
-    minhash_from_hashes. Hot paths should materialize the base-hash
-    array in its own projection first (see minhash_lsh_pairs)."""
-    return minhash_from_hashes(shingle_hashes(shingle_col), num_hashes)
-
-
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     """Keep-lowest-id exact dedup by content digest."""
     return (

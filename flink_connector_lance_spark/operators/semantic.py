@@ -12,9 +12,10 @@ pick k ≈ n / target_cell_size; the paper uses ~100 rows/cell at web
 scale).
 
 Scale shape (100 TB):
-- k-means reuses the engine's distributed Lloyd iteration
-  (index._assign_cells): broadcast centroids x rows, map-side argmin,
-  posexplode partial-mean update — no all-pairs anywhere.
+- k-means reuses the engine's IVF trainer (index.training_sample /
+  index.lloyd): a bounded sample of at most SAMPLE_RATE rows per
+  cluster trains on the driver, then one mapInArrow pass assigns every
+  row to its nearest centroid — no join and no all-pairs anywhere.
 - cost model: assignment is n·k distance evaluations per iteration,
   within-cell pairs are ~n·(n/k); total is minimized near k = sqrt(n)
   (O(n^1.5) overall). Holding cell size constant (k = n/cell) makes the
@@ -71,29 +72,26 @@ def kmeans_assign(
     iterations: int = 4,
     dim: "int | None" = None,
 ) -> DataFrame:
-    """Distributed Lloyd k-means over a DataFrame: returns
-    ``(rid, cell)`` assignments. Deterministic: centroids seed from the
-    ``num_clusters`` lowest-id vectors, ties in the argmin break on the
-    lowest cell id — the SAME shared iteration the IVF index build uses
-    (index.lloyd_kmeans_centroids), so the two can never diverge."""
-    from ..index import _assign_cells, lloyd_kmeans_centroids
+    """k-means over a DataFrame: returns ``(rid, cell)`` assignments.
+    Deterministic: one job samples the training rows
+    (index.training_sample), centroids seed from their ``num_clusters``
+    lowest-id vectors (the lowest-id rows overall whenever every row
+    trains), and the argmin's ties break on the lowest cell id — the
+    SAME trainer and assignment kernel the IVF index build uses
+    (index.lloyd, index.assign_cells), so the two can never diverge.
+    The assignment itself is lazy. ``dim``, when given, is checked
+    against the data."""
+    from ..index import assign_cells, lloyd, training_sample
 
     if int(num_clusters) <= 0:
         raise ValueError("num_clusters must be positive")
-    # lazy checkpoint: vecs feeds the seed probe, every Lloyd iteration
-    # and the final assignment — one materialization, shared blocks — but
-    # nothing runs until the caller's first action (eager=True here cost
-    # a blocking driver job per kmeans_assign call; the count()-based
-    # k-clamp it fed is redundant — limit(k) over fewer rows already
-    # yields min(k, n) seeds, and _first_dim raises on empty input).
-    vecs = _as_vecs(df, id_col, vector_col).localCheckpoint(eager=False)
-    # ``dim`` passed by callers that know it skips a first()-probe job
-    if dim is None:
-        dim = _first_dim(vecs)
-    cents = lloyd_kmeans_centroids(vecs, int(num_clusters), dim, int(iterations))
-    # keep_vd=False: only (rid, cell) leaves this function — the skinny
-    # argmin keeps the vectors out of the SortAggregate + exchange
-    return _assign_cells(vecs, cents, dim, keep_vd=False)
+    vecs = _as_vecs(df, id_col, vector_col)
+    x = training_sample(vecs, int(num_clusters))
+    if not len(x):
+        raise ValueError("cannot cluster an empty DataFrame / NULL vectors")
+    if dim is not None and x.shape[1] != dim:
+        raise ValueError(f"vectors have dim {x.shape[1]}, not {dim}")
+    return assign_cells(vecs, *lloyd(x, int(num_clusters), int(iterations), sqrt=True))
 
 
 def _pair_cosine(dim: int) -> Column:
@@ -146,8 +144,8 @@ def semantic_duplicate_pairs(
                                     iterations, dim=dim)
     # checkpoint the skinny (rid, cell) relation unconditionally: BOTH
     # pair-join sides (and the guard's size probe) reuse ONE assignment
-    # computation — without it the broadcast-centroid argmin cross join
-    # would run once per side. Lazy: blocks materialize inside the
+    # computation — without it the mapInArrow assignment pass would run
+    # once per side. Lazy: blocks materialize inside the
     # caller's action (or the guard's collect) instead of a blocking
     # driver job at plan-construction time.
     assignments = assignments.localCheckpoint(eager=False)

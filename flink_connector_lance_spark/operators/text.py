@@ -74,17 +74,9 @@ def type_token_ratio_of(ts: Column) -> Column:
     return F.size(F.array_distinct(ts)).cast("double") / F.size(ts)
 
 
-def type_token_ratio(text_col) -> Column:
-    return type_token_ratio_of(tokens(text_col))
-
-
 def stopword_ratio_of(ts: Column, stopwords: list[str] | None = None) -> Column:
     sw = stopwords or STOPWORDS
     return F.size(F.filter(ts, lambda t: t.isin(*sw))).cast("double") / F.size(ts)
-
-
-def stopword_ratio(text_col, stopwords: list[str] | None = None) -> Column:
-    return stopword_ratio_of(tokens(text_col), stopwords)
 
 
 def quality_score_of(ts: Column) -> Column:
@@ -151,13 +143,6 @@ def repeated_ngram_fraction(text_col, n: int = 2) -> Column:
     codegen, zero shuffle. Expression form: single-use contexts only —
     hot paths materialize the gram array and use repeated_fraction_of."""
     return repeated_fraction_of(word_ngrams(tokens(text_col), n))
-
-
-def repeated_line_fraction(text_col) -> Column:
-    """Fraction of non-empty lines that duplicate an earlier line —
-    the repeated-line/paragraph boilerplate signal. Expression form —
-    see repeated_ngram_fraction."""
-    return repeated_fraction_of(nonempty_lines(text_col))
 
 
 def repetition_signals(df, text_col: str, id_col: str):

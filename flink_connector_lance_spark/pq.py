@@ -7,14 +7,14 @@ re-express both halves as DataFrame plans over the fragment-backed dataset:
 
 - **codebooks** (train): the vector is split into ``num_sub_vectors``
   contiguous sub-vectors; each sub-space gets its own ``2**num_bits``-entry
-  codebook via distributed Lloyd k-means. All sub-spaces train
-  SIMULTANEOUSLY in one DataFrame: rows explode into (row, sub, subvec),
-  the assignment step is an equi-join on ``sub`` against the broadcast
-  codebook relation (m * k rows — tiny at any corpus size), and the update
-  step is one map-side-combinable (sub, code, pos) average. Iteration count
-  is fixed, seeds are the lowest-id rows — deterministic given the data.
-- **codes** (encode): every row stores ``num_sub_vectors`` uint8-sized
-  codes — 16 bytes/vector at the reference defaults vs 256 bytes for a
+  codebook. As in lance-core, training runs in-process on a bounded
+  sample: one TakeOrdered job brings at most ``SAMPLE_RATE * 2**num_bits``
+  rows to the driver and a numpy Lloyd k-means fits each sub-space's
+  codebook (index.lloyd). Iteration count is fixed, seeds are the
+  lowest-id rows and the sample is a fixed hash of the ids —
+  deterministic given the data.
+- **codes** (encode): one mapInArrow pass gives every row
+  ``num_sub_vectors`` uint8-sized codes — 16 bytes/vector at the reference defaults vs 256 bytes for a
   float64[64] — the 16x memory compression that lets a 100 TB embedding
   corpus's index fit in cluster RAM.
 - **ADC search**: the query is split the same way; a lookup table
@@ -42,8 +42,9 @@ import os
 import shutil
 from collections.abc import Sequence
 
+import numpy as np
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from .index import (
     INDEXES_DIR,
@@ -53,6 +54,8 @@ from .index import (
     _index_dir as _ivf_dir,
     _remote_subdir,
     has_index as has_ivf_index,
+    load_centroids,
+    probe_cells,
 )
 from .functions import vector as V
 from .io import read_parquet_memo
@@ -92,54 +95,6 @@ def read_pq_meta(path: str, column: str,
         return json.load(fh)
 
 
-def _subvectors(vecs: DataFrame, m: int, subdim: int) -> DataFrame:
-    """(rid, vd) -> (rid, sub, sv): explode into m contiguous sub-vectors.
-
-    One projection + explode — no shuffle; sub-space parallelism comes for
-    free because downstream joins/aggregates key on (sub, ...)."""
-    slices = F.array(*[
-        F.struct(F.lit(s).alias("sub"),
-                 F.slice("vd", s * subdim + 1, subdim).alias("sv"))
-        for s in range(m)
-    ])
-    return vecs.select("rid", F.explode(slices).alias("x")).select(
-        "rid", F.col("x.sub").alias("sub"), F.col("x.sv").alias("sv")
-    )
-
-
-def _sub_l2sq(a: str, b: str, subdim: int | None = None) -> F.Column:
-    """Squared L2 between two small array columns. With ``subdim`` known
-    the chain unrolls for whole-stage codegen (the join multiplies rows
-    m*k-fold, so the per-row distance is THE hot expression — measured
-    ~10x over the interpreted zip_with/aggregate fallback); one small
-    chain per row keeps janino far from its method limit."""
-    if subdim is not None:
-        sql = " + ".join(
-            f"(element_at(`{a}`, {i}) - element_at(`{b}`, {i})) * "
-            f"(element_at(`{a}`, {i}) - element_at(`{b}`, {i}))"
-            for i in range(1, subdim + 1)
-        )
-        return F.expr(sql)
-    d = F.zip_with(F.col(a), F.col(b), lambda x, y: (x - y) * (x - y))
-    return F.aggregate(d, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def _assign_codes(subs: DataFrame, books: DataFrame, subdim: int | None = None) -> DataFrame:
-    """Nearest-codebook-entry per (row, sub): equi-join on sub against the
-    broadcast codebooks (m*k rows), argmin via min-over-structs (ties break
-    to the lowest code, deterministically). The m*k-fold scored relation
-    never shuffles at full size — the min-of-struct groupBy partially
-    aggregates map-side, so only (rows x m) survivors cross the wire."""
-    scored = subs.join(F.broadcast(books), on="sub").select(
-        "rid", "sub", "sv", _sub_l2sq("sv", "centroid", subdim).alias("d"), "code"
-    )
-    return (
-        scored.groupBy("rid", "sub")
-        .agg(F.min(F.struct("d", "code")).alias("best"), F.first("sv").alias("sv"))
-        .select("rid", "sub", "sv", F.col("best.code").alias("code"))
-    )
-
-
 def build_pq_index(
     spark: SparkSession,
     path: str,
@@ -155,9 +110,22 @@ def build_pq_index(
     """Train per-sub-space codebooks and encode every row; returns the
     index metadata dict. Reference parameter surface:
     ``index.num-sub-vectors`` / ``index.num-bits``
-    (ref config/LanceOptions.java:150-163). s3:// datasets train over
-    the remote reader and persist codebooks/codes as engine datasets
-    under the same ``_indexes/<col>/pq`` prefix."""
+    (ref config/LanceOptions.java:150-163).
+
+    Training follows lance-core: one TakeOrdered job samples at most
+    ``SAMPLE_RATE`` x 2**num_bits rows to the driver (index.training_sample)
+    and each sub-space's codebook is a numpy Lloyd k-means over the
+    sample's slice (index.lloyd: seeds are the lowest-id rows, ties go to
+    the lowest code, empty codes are dropped). One mapInArrow pass then
+    encodes every row. s3:// datasets train over the remote reader and
+    persist codebooks/codes as engine datasets under the same
+    ``_indexes/<col>/pq`` prefix."""
+    import pyarrow as pa
+    from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
+
+    from .index import (
+        SAMPLE_RATE, lloyd, nearest, training_sample, vector_matrix, write_local_table,
+    )
     from .sources import fragments as FR
     from .sources.fs import is_remote
     from .sources.reader import read_dataset
@@ -176,46 +144,45 @@ def build_pq_index(
         df = read_dataset(spark, path)
     if column not in df.columns:
         raise ValueError(f"index column {column!r} not in dataset schema {df.columns}")
-    # repartition up front: codebook training is CPU-dense and a small
-    # local dataset arrives as one file partition; at scale the scan
-    # already has many splits and this is a cheap id-hash exchange
     vecs = df.select(
         F.col(id_col).alias("rid"), F.col(column).cast("array<double>").alias("vd")
-    ).repartition(spark.sparkContext.defaultParallelism, "rid").localCheckpoint(eager=True)
-    n = vecs.count()
-    if n == 0:
+    )
+    x = training_sample(vecs, 1 << num_bits)
+    if not len(x):
         raise ValueError("cannot index an empty dataset")
-    dim = len(vecs.select("vd").first().vd)
+    dim = x.shape[1]
     if dim % num_sub_vectors != 0:
         raise ValueError(
             f"dim {dim} not divisible by num_sub_vectors {num_sub_vectors}"
         )
     subdim = dim // num_sub_vectors
-    k = min(1 << num_bits, n)
+    subs = [slice(s * subdim, (s + 1) * subdim) for s in range(num_sub_vectors)]
+    books = [lloyd(x[:, sl], 1 << num_bits, iterations, sqrt=False) for sl in subs]
 
-    subs = _subvectors(vecs, num_sub_vectors, subdim).localCheckpoint(eager=True)
-    # deterministic init: each sub-space seeds from its k lowest-rid rows
-    w = Window.partitionBy("sub").orderBy("rid")
-    books = (
-        subs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("sub", (F.col("__rn") - 1).alias("code"), F.col("sv").alias("centroid"))
-    ).localCheckpoint(eager=True)
-    for _ in range(iterations):
-        assigned = _assign_codes(subs, books, subdim)
-        pe = assigned.select("sub", "code", F.posexplode("sv").alias("pos", "val"))
-        per_dim = pe.groupBy("sub", "code", "pos").agg(F.avg("val").alias("c"))
-        books = per_dim.groupBy("sub", "code").agg(
-            F.transform(F.array_sort(F.collect_list(F.struct("pos", "c"))),
-                        lambda s: s["c"]).alias("centroid")
-        ).localCheckpoint(eager=True)
+    def encode(batches):
+        for b in batches:
+            mat = vector_matrix(b.column("vd"))
+            codes = np.empty((len(mat), num_sub_vectors), dtype=np.int32)
+            for s, (sl, (code_ids, cents)) in enumerate(zip(subs, books)):
+                codes[:, s] = code_ids[nearest(mat[:, sl], cents, sqrt=False)]
+            offsets = np.arange(0, codes.size + 1, num_sub_vectors, dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [b.column("rid"), pa.ListArray.from_arrays(offsets, pa.array(codes.ravel()))],
+                [id_col, "codes"])
 
-    final = _assign_codes(subs, books, subdim)
-    # codes array ordered by sub: array_sort on (sub, code) structs
-    codes = final.groupBy("rid").agg(
-        F.transform(F.array_sort(F.collect_list(F.struct("sub", "code"))),
-                    lambda s: s["code"].cast("int")).alias("codes")
-    )
+    codes_rel = vecs.mapInArrow(encode, StructType([
+        StructField(id_col, vecs.schema["rid"].dataType),
+        StructField("codes", ArrayType(IntegerType())),
+    ]))
+    if len(x) < SAMPLE_RATE << num_bits:
+        # every row trained, so the rows fit one task: one codes file
+        codes_rel = codes_rel.coalesce(1)
+    books_table = pa.table({
+        "sub": pa.array([s for s, (ids, _) in enumerate(books) for _ in ids], pa.int32()),
+        "code": pa.array(np.concatenate([ids for ids, _ in books]), pa.int32()),
+        "centroid": pa.array([c for _, cents in books for c in cents],
+                             pa.list_(pa.float64())),
+    })
     idx_dir = _pq_dir(path, column)
     meta = {
         "index_type": "ivf_pq_emulated",
@@ -225,9 +192,9 @@ def build_pq_index(
         "num_sub_vectors": num_sub_vectors,
         "num_bits": num_bits,
         "dim": dim,
+        "training_rows": len(x),
         "dataset_version": FR.latest_version(path, storage),
     }
-    codes_rel = codes.select(F.col("rid").alias(id_col), "codes")
     if remote:
         # codebooks (m*k rows, collected at search time) carry the meta;
         # codes are the skinny full-scan ADC relation — no clustering
@@ -235,12 +202,12 @@ def build_pq_index(
         # Codes commit FIRST so the meta-bearing codebooks commit is the
         # atomic "index exists" flip (local index_meta.json semantics).
         _idx_store_remote(codes_rel, _remote_subdir(idx_dir, "codes"), s3)
-        _idx_store_remote(books, _remote_subdir(idx_dir, "codebooks"),
-                          s3, meta=meta)
+        _idx_store_remote(
+            spark.createDataFrame(books_table, "sub int, code int, centroid array<double>"),
+            _remote_subdir(idx_dir, "codebooks"), s3, meta=meta)
         return meta
     shutil.rmtree(idx_dir, ignore_errors=True)
-    os.makedirs(idx_dir, exist_ok=True)
-    books.write.mode("overwrite").parquet(os.path.join(idx_dir, "codebooks.parquet"))
+    write_local_table(books_table, os.path.join(idx_dir, "codebooks.parquet"))
     codes_rel.write.mode("overwrite").parquet(
         os.path.join(idx_dir, "codes.parquet")
     )
@@ -352,22 +319,14 @@ def pq_search(
                 f"nprobes given but no IVF index on {path}:{column}; build_index first"
             )
         if remote:
-            cents = _idx_load_remote(
-                spark, _remote_subdir(_ivf_dir(path, column), "centroids"), s3)
             assigns = _idx_load_remote(
                 spark, _remote_subdir(_ivf_dir(path, column), "assignments"),
                 s3)
         else:
-            cents = read_parquet_memo(spark, os.path.join(_ivf_dir(path, column), "centroids.parquet"))
             assigns = read_parquet_memo(
                 spark, os.path.join(_ivf_dir(path, column), "assignments.parquet")
             )
-        chosen = [
-            r.cell
-            for r in cents.select(
-                "cell", V.l2_distance("centroid", q).alias("cd")
-            ).orderBy("cd", "cell").limit(nprobes).collect()
-        ]
+        chosen = probe_cells(*load_centroids(spark, path, column, s3), q, nprobes)
         probe_ids = assigns.filter(F.col("cell").isin(chosen)).select(id_col)
         codes = codes.join(probe_ids, on=id_col, how="left_semi")
 

@@ -44,10 +44,6 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
     return deco
 
 
-def register_spec(name: str, fn: QueryFn, oracle: str | None, doc: str = "") -> None:
-    REGISTRY[name] = QuerySpec(name=name, fn=fn, oracle=oracle, doc=doc)
-
-
 def queries() -> dict[str, QueryFn]:
     _ensure_loaded()
     return {name: spec.fn for name, spec in REGISTRY.items()}

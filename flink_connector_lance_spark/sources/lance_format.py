@@ -501,16 +501,6 @@ def read_file_descriptor(path: str, storage_options: dict | None = None
     return fields, _one(fd, 2, 0)
 
 
-def _file_fields(blob: bytes) -> list[NativeField]:
-    _, _, gbos, num_global, _, _, _ = _read_footer(blob)
-    if num_global < 1:
-        raise NotImplementedError("lance file without a FileDescriptor buffer")
-    pos, size = struct.unpack_from("<QQ", blob, gbos)
-    fd = _pb_fields(blob[pos:pos + size])
-    schema_msg = _pb_fields(_one(fd, 1, b""))
-    return _parse_fields(schema_msg)
-
-
 def _pages_from_cm(raw: bytes) -> list[_Page]:
     """Pages of one ColumnMetadata message."""
     cm = _pb_fields(raw)

@@ -60,6 +60,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.functions import udtf
 from pyspark.sql.types import DoubleType, StructType
 
+from .index import vector_matrix
 from .operators.ann import make_planes
 
 # LRU over per-(path, column, kind) searcher state. 4 keeps the common
@@ -164,18 +165,6 @@ def _read_schema(path: str):
     return pq.read_schema(files[0])
 
 
-def _vector_matrix(table, column: str) -> np.ndarray:
-    """(n, dim) float64 matrix from a list<float> column without a Python
-    round-trip: flatten the Arrow list buffer and reshape."""
-    arr = table.column(column).combine_chunks()
-    flat = arr.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    n = len(arr)
-    if n == 0:
-        return flat.reshape(0, 0)
-    dim = len(flat) // n
-    return flat.reshape(n, dim)
-
-
 def _read_filtered(files: list[str], columns: list[str] | None, id_col: str,
                    ids: np.ndarray | None, schema=None):
     """Read ``columns`` of the rows whose ``id_col`` is in ``ids`` (or all
@@ -241,7 +230,7 @@ def _load_flat(path: str, column: str):
             files = _dataset_files(path)
             schema = _read_schema(path) if _is_fragment_dataset(path) else None
             table = pads.dataset(files, format="parquet", schema=schema).to_table()
-        mat = _vector_matrix(table, column)
+        mat = vector_matrix(table.column(column))
         planes = make_planes(num_planes=8, dim=mat.shape[1] if mat.size else 0)
         sigs = _row_signatures(mat, planes)
         hit = (table, mat, planes, sigs)
@@ -290,16 +279,14 @@ def _load_ivf(path: str, column: str, id_col: str):
     assignment cells) — cached with the same LRU/mtime contract as the PQ
     state. Without this, every eval() call (one per UDTF input row)
     re-reads the O(rows) assignments table from disk."""
-    from .index import _index_dir
+    from .index import _index_dir, load_centroids
 
-    idx = os.path.join(_index_dir(path, column))
+    idx = _index_dir(path, column)
     meta_path = os.path.join(idx, "index_meta.json")
     key = (path, column, "ivf", os.stat(meta_path).st_mtime_ns)
     hit = _cache_get(key)
     if hit is None:
-        it = pq.read_table(os.path.join(idx, "centroids.parquet"))
-        cmat = np.asarray(it.column("centroid").to_pylist(), dtype=np.float64)
-        cells = it.column("cell").to_numpy(zero_copy_only=False)
+        cells, cmat = load_centroids(None, path, column)
         at = pq.read_table(os.path.join(idx, "assignments.parquet"))
         a_ids = at.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64)
         a_cell = at.column("cell").to_numpy(zero_copy_only=False)
@@ -445,7 +432,7 @@ def _load_hnsw_cell(path: str, column: str, cell: int, mtime: int):
         vt = pq.read_table(os.path.join(idx, "vectors.parquet", f"cell={cell}"))
         gt = pq.read_table(os.path.join(idx, "graph.parquet", f"cell={cell}")).to_pylist()
         ids = vt.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
-        mat = _vector_matrix(vt, "vec")
+        mat = vector_matrix(vt.column("vec"))
         adj = {(int(r["id"]), int(r["layer"])): list(r["neighbors"]) for r in gt}
         lvl = {int(r["id"]): int(r["node_level"]) for r in gt}
         levels = np.array([lvl.get(int(i), 0) for i in ids], dtype=np.int64)
@@ -468,7 +455,7 @@ def _load_hnsw_cell_means(path: str, column: str, mtime: int):
         vt = pq.read_table(os.path.join(_hnsw_dir(path, column), "vectors.parquet"),
                            columns=["cell", "vec"])
         v_cell = vt.column("cell").to_numpy(zero_copy_only=False).astype(np.int64)
-        v_mat = _vector_matrix(vt, "vec")
+        v_mat = vector_matrix(vt.column("vec"))
         cells = np.unique(v_cell)
         means = np.stack([v_mat[v_cell == c].mean(axis=0) for c in cells])
         hit = (cells, means)
@@ -496,19 +483,14 @@ def _eval_hnsw(path: str, column: str, q: np.ndarray, k: int, metric: str,
     if nprobes is not None and len(chosen) > int(nprobes):
         # probe the nprobes nearest cells by IVF centroid when the coarse
         # index exists (metadata-sized read); else by cached per-cell mean
-        from .index import _index_dir, has_index
+        from .index import has_index, load_centroids, probe_cells
 
         if has_index(path, column):
-            it = pq.read_table(os.path.join(_index_dir(path, column),
-                                            "centroids.parquet"))
-            cmat = np.asarray(it.column("centroid").to_pylist(), dtype=np.float64)
-            cc = it.column("cell").to_numpy(zero_copy_only=False)
+            cc, cmat = load_centroids(None, path, column)
         else:
             cc, cmat = _load_hnsw_cell_means(path, column, mtime)
-        cd = ((cmat - q) ** 2).sum(axis=1)
-        order = np.lexsort((cc, cd))[: int(nprobes)]
         avail_set = set(avail)
-        chosen = sorted(int(cc[j]) for j in order if int(cc[j]) in avail_set)
+        chosen = sorted(c for c in probe_cells(cc, cmat, q, nprobes) if c in avail_set)
 
     dschema = _read_schema(path) if _is_fragment_dataset(path) else None
     merged: list[tuple[int, float]] = []
@@ -530,7 +512,7 @@ def _eval_hnsw(path: str, column: str, q: np.ndarray, k: int, metric: str,
     import pyarrow as pa
 
     rows_tbl = pa.concat_tables(parts)
-    row_d = _round_half_up6(_distances(_vector_matrix(rows_tbl, column), q, metric))
+    row_d = _round_half_up6(_distances(vector_matrix(rows_tbl.column(column)), q, metric))
     rows = rows_tbl.to_pylist()
     row_ids = rows_tbl.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64)
     final = np.lexsort((row_ids, row_d))[:k]
@@ -589,12 +571,11 @@ def _eval_indexed(path: str, column: str, q: np.ndarray, k: int, metric: str,
         # pq_search's left-semi join — a soft inf-mask would let unprobed
         # rows backfill the candidate pool when the probed cells hold
         # fewer than r rows, so nprobes would no longer bound the set.
-        from .index import has_index
+        from .index import has_index, probe_cells
 
         if has_index(path, column):
             cmat, cells, a_ids, a_cell = _load_ivf(path, column, id_col)
-            order = np.lexsort((cells, ((cmat - q) ** 2).sum(axis=1)))
-            chosen = cells[order[: int(nprobes)]]
+            chosen = probe_cells(cells, cmat, q, nprobes)
             probe_ids = a_ids[np.isin(a_cell, chosen)]
             sel = np.isin(ids, probe_ids)
             cand_pool_ids, cand_pool_adc = ids[sel], adc[sel]
@@ -612,21 +593,21 @@ def _eval_indexed(path: str, column: str, q: np.ndarray, k: int, metric: str,
         cand_tbl = _read_filtered(covered, [id_col, column], id_col, cand_ids,
                                   schema=dschema)
         parts_ids.append(cand_tbl.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64))
-        parts_d.append(_distances(_vector_matrix(cand_tbl, column), q, metric))
+        parts_d.append(_distances(vector_matrix(cand_tbl.column(column)), q, metric))
         if uncovered:
             # unindexed tail: exact-scored in full (appends are searchable
             # immediately; the index just covers less until refreshed)
             tail = _read_filtered(uncovered, [id_col, column], id_col, None,
                                   schema=dschema)
             parts_ids.append(tail.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64))
-            parts_d.append(_distances(_vector_matrix(tail, column), q, metric))
+            parts_d.append(_distances(vector_matrix(tail.column(column)), q, metric))
     else:
         # stale beyond recognition (no build-time file survives): exact
         # brute force over the whole dataset, same contract as pq_search
         full = _read_filtered(_dataset_files(path), [id_col, column], id_col, None,
                               schema=dschema)
         parts_ids.append(full.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64))
-        parts_d.append(_distances(_vector_matrix(full, column), q, metric))
+        parts_d.append(_distances(vector_matrix(full.column(column)), q, metric))
     all_ids = np.concatenate(parts_ids)
     all_d = _round_half_up6(np.concatenate(parts_d))
     top = np.lexsort((all_ids, all_d))[:k]
@@ -638,7 +619,7 @@ def _eval_indexed(path: str, column: str, q: np.ndarray, k: int, metric: str,
     # row (id uniqueness is never enforced for plain datasets)
     rows_tbl = _read_filtered(_dataset_files(path), None, id_col, win_ids,
                               schema=dschema)
-    row_d = _round_half_up6(_distances(_vector_matrix(rows_tbl, column), q, metric))
+    row_d = _round_half_up6(_distances(vector_matrix(rows_tbl.column(column)), q, metric))
     rows = rows_tbl.to_pylist()
     row_ids = rows_tbl.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64)
     final = np.lexsort((row_ids, row_d))[:k]

@@ -1119,6 +1119,29 @@ def test_s3_ann_ivf_index_end_to_end(fake_s3, spark):
         f"1-cell probe opened all {n_frag} assignment fragments"
 
 
+def test_s3_index_meta_records_training_rows(fake_s3, spark):
+    """The s3 commit meta of both IVF_PQ halves records the training
+    sample size: the IVF half (1 partition, cap 256) trains on a capped
+    sample of the 300 rows, the PQ half (4 codes, cap 1024) on all."""
+    from flink_connector_lance_spark.index import SAMPLE_RATE, _kind_metas, build_index
+    from flink_connector_lance_spark.options import DatasetOptions
+
+    rows = [(i, [float(i % 13), float((i * 7) % 11), float(i % 5), float(i % 3)])
+            for i in range(300)]
+    local = os.path.join(fake_s3, "bucket", "wh", "db1", "trainrows")
+    write_dataset(spark.createDataFrame(rows, "id long, vec array<double>").repartition(2),
+                  local, mode="overwrite")
+    url = "s3://bucket/wh/db1/trainrows"
+    s3 = S3Options(endpoint=f"fake://{fake_s3}")
+    res = build_index(url, "vec", "ivf_pq", spark=spark, id_col="id",
+                      options=DatasetOptions(path=url, s3=s3, index_num_partitions=1,
+                                             index_num_sub_vectors=2, index_num_bits=2))
+    assert res.success, res.error
+    metas = _kind_metas(url, "vec", s3.to_storage_options())
+    assert metas["ivf"]["training_rows"] == SAMPLE_RATE
+    assert metas["pq"]["training_rows"] == 300
+
+
 def test_s3_index_meta_commits_last(fake_s3, spark):
     """Crash-safe remote build ordering (round-12 ADVICE): the
     meta-bearing relation (centroids) commits LAST, so a build that died
