@@ -12,8 +12,9 @@ bloom filter per (fragment, column), built executor-side at write time,
 consulted on the driver before any task is scheduled.
 
 Scale shape (100 TB):
-- Build is fragment-parallel (one task per fragment, column-pruned
-  parquet read) — no shuffle, no driver data.
+- Build rides the write: the task that encodes a fragment builds its
+  blooms from the rows it holds and writes the sidecar beside it
+  (``write_bloom_sidecar``) — no extra job, no re-read, no driver data.
 - Sidecars (``<fragment>.bloom.json``) live next to the fragment file;
   the manifest records only ``{file, per-column m/k}`` (bytes, not the
   bit array), so the driver-side manifest stays metadata-sized at 10^5
@@ -23,9 +24,10 @@ Scale shape (100 TB):
   fragment; reads are LRU-cached (fragment files are immutable —
   copy-on-write rewrites get new names, so a cached bloom can never go
   stale).
-- A fragment without a bloom (old versions, rewritten by
-  compaction/DELETE/MERGE) simply doesn't prune — conservative, never
-  wrong. The pushed filter still runs inside the scan.
+- Maintenance rewrites (compaction/DELETE/MERGE/clustering) rebuild the
+  blooms of the columns the rewritten fragments carried. A fragment
+  without a bloom (old versions) simply doesn't prune — conservative,
+  never wrong. The pushed filter still runs inside the scan.
 
 Default sizing: 10 bits/row (~1% false-positive rate at k=7), capped at
 128 KiB per column per fragment — a 1M-row fragment's bloom saturates
@@ -168,15 +170,12 @@ def _bloomable_arrow_type(t) -> "str | None":
     return None
 
 
-def build_bloom_sidecar(
-    fragment_abs_path: str,
-    columns: "list[str]",
-    bits_per_row: int = DEFAULT_BITS_PER_ROW,
-    max_bits: int = MAX_BITS,
-) -> "dict | None":
-    """Build blooms for ``columns`` of one fragment file and write the
-    ``<fragment>.bloom.json`` sidecar next to it (executor-side; the
-    parquet read is column-pruned to exactly ``columns``).
+def build_bloom_sidecar(fragment_abs_path: str,
+                        columns: "list[str]") -> "dict | None":
+    """Build blooms for ``columns`` of one local fragment file and write
+    the ``<fragment>.bloom.json`` sidecar next to it
+    (``write_bloom_sidecar``; the parquet read is column-pruned to
+    exactly ``columns``).
 
     Returns the manifest stats entry ``{"file": <sidecar basename>,
     "cols": {col: {"m": m, "k": k}}}`` or None if no requested column is
@@ -185,14 +184,16 @@ def build_bloom_sidecar(
     """
     import pyarrow.parquet as pq
 
+    from .fs import store_for
+
     schema = pq.read_schema(fragment_abs_path)
     present = [c for c in columns if c in schema.names
                and _bloomable_arrow_type(schema.field(c).type) is not None]
     if not present:
         return None
     table = pq.read_table(fragment_abs_path, columns=present)
-    return build_bloom_sidecar_from_table(table, fragment_abs_path, present,
-                                          bits_per_row, max_bits)
+    return write_bloom_sidecar(store_for(fragment_abs_path), fragment_abs_path,
+                               table, present)
 
 
 def build_bloom_payload(
@@ -204,8 +205,8 @@ def build_bloom_payload(
     """Pure core shared by every sidecar writer: ``(payload, cols)``
     where ``payload`` is the JSON-serializable filter map and ``cols``
     the tiny per-column parameter entry recorded in fragment stats.
-    Storage-agnostic, so the s3 write path can PUT the payload straight
-    from the executor task that encoded the fragment."""
+    Storage-agnostic: ``write_bloom_sidecar`` writes it from the task
+    that encoded the fragment, through the storage seam."""
     present = [c for c in columns if c in table.column_names
                and _bloomable_arrow_type(table.schema.field(c).type) is not None]
     if not present:
@@ -238,61 +239,21 @@ def build_bloom_payload(
     return payload, out_cols
 
 
-def build_bloom_sidecar_from_table(
-    table,
-    fragment_abs_path: str,
-    columns: "list[str]",
-    bits_per_row: int = DEFAULT_BITS_PER_ROW,
-    max_bits: int = MAX_BITS,
-) -> "dict | None":
-    """Table-based core of ``build_bloom_sidecar`` — used directly by the
-    native v2 write path, which already holds the fragment's rows as an
-    Arrow table at encode time (no re-read)."""
-    built = build_bloom_payload(table, columns, bits_per_row, max_bits)
+def write_bloom_sidecar(store, fragment_key: str, table,
+                        columns: "list[str]") -> "dict | None":
+    """Build blooms for ``columns`` of ``table`` (the rows of the fragment
+    at ``fragment_key``) and write the ``<fragment>.bloom.json`` sidecar
+    beside it through the storage seam (sources/fs.py) — executor-side,
+    before any manifest names the fragment. Returns the manifest stats
+    entry, or None when no requested column is bloomable."""
+    built = build_bloom_payload(table, columns)
     if built is None:
         return None
     payload, out_cols = built
-    sidecar = fragment_abs_path + BLOOM_SUFFIX
-    tmp = sidecar + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, sidecar)
-    return {"file": os.path.basename(sidecar), "cols": out_cols}
-
-
-def attach_blooms(spark, path: str, fragments, columns: "list[str]",
-                  bits_per_row: int = DEFAULT_BITS_PER_ROW):
-    """Distributed bloom build for freshly promoted fragments: one task
-    per fragment (no shuffle; the driver collects only the tiny stats
-    entries, never the bit arrays). Returns a NEW fragment list with ``stats['__bloom__']``
-    recorded; input order (and fragment ids) preserved."""
-    from . import fragments as FR
-
-    if not columns or not fragments:
-        return list(fragments)
-    abs_path = os.path.abspath(path)
-    files = [(i, os.path.join(abs_path, f.file)) for i, f in enumerate(fragments)]
-    bpr = int(bits_per_row)
-    cols = list(columns)
-
-    def build(item):
-        idx, fp = item
-        from flink_connector_lance_spark.sources.bloom import build_bloom_sidecar
-
-        return idx, build_bloom_sidecar(fp, cols, bits_per_row=bpr)
-
-    sc = spark.sparkContext
-    results = dict(sc.parallelize(files, max(1, len(files))).map(build).collect())
-    out = []
-    for i, f in enumerate(fragments):
-        entry = results.get(i)
-        if entry is None:
-            out.append(f)
-            continue
-        stats = dict(f.stats or {})
-        stats[BLOOM_STATS_KEY] = entry
-        out.append(FR.FragmentInfo(f.fragment_id, f.file, f.row_count, stats))
-    return out
+    with store.open(fragment_key + BLOOM_SUFFIX, "wb") as fh:
+        fh.write(json.dumps(payload).encode())
+    return {"file": os.path.basename(fragment_key) + BLOOM_SUFFIX,
+            "cols": out_cols}
 
 
 @lru_cache(maxsize=4096)

@@ -842,107 +842,25 @@ class LanceDataSourceReader(DataSourceReader):
                     yield batch
 
 
-def _put_remote_bloom(fs, tbl, path: str, frag_name: str,
-                      bloom_columns) -> "dict | None":
-    """Build a bloom payload from the in-memory table and PUT the sidecar
-    next to its fragment — executor-side, before the commit ever names
-    the fragment (same contract as the local build_bloom_sidecar)."""
-    import json
-
-    from .bloom import BLOOM_SUFFIX, build_bloom_payload
-
-    built = build_bloom_payload(tbl, bloom_columns)
-    if built is None:
-        return None
-    payload, cols_meta = built
-    side = frag_name + BLOOM_SUFFIX
-    with fs.open(f"{str(path).rstrip('/')}/{FR.DATA_DIR}/{side}", "wb") as fh:
-        fh.write(json.dumps(payload).encode())
-    return {"file": side, "cols": cols_meta}
-
-
 def _write_fragment(path: str, iterator: Iterator["pa.RecordBatch"],
                     bloom_columns: "List[str] | None" = None,
                     storage: "dict | None" = None) -> FragmentCommitMessage:
     """Executor side: stream one task's Arrow batches into one fragment
-    file. Fragments are invisible until a manifest names them. On an
-    s3:// path the task encodes to worker-local scratch and PUTs the
-    fragment (and bloom sidecar) straight to the object store — the data
-    bytes never touch the driver (same shape as writer._write_remote)."""
-    import pyarrow.parquet as pq
+    file through the storage seam (writer.write_parquet_fragment — in
+    place locally, PUT from the task on s3). Fragments are invisible
+    until a manifest names them; an empty task writes nothing."""
+    from .fs import absolute, store_for
+    from .writer import write_parquet_fragment
 
-    from .fs import is_remote
-
-    frag_name = FR.new_fragment_name()
-    if is_remote(path):
-        import tempfile
-
-        from .fs import get_fs
-
-        with tempfile.NamedTemporaryFile(suffix=".parquet") as tmp:
-            writer = None
-            rows = 0
-            for batch in iterator:
-                if writer is None:
-                    writer = pq.ParquetWriter(tmp.name, batch.schema)
-                writer.write_batch(batch)
-                rows += batch.num_rows
-            if writer is not None:
-                writer.close()
-            if rows == 0:
-                return FragmentCommitMessage(file=None, row_count=0)
-            stats = FR.parquet_fragment_stats(tmp.name) or {}
-            stats[FR.DIGEST_STATS_KEY] = FR.sha256_of(tmp.name)
-            fs = get_fs(path, storage)
-            fs.put(tmp.name,
-                   f"{str(path).rstrip('/')}/{FR.DATA_DIR}/{frag_name}")
-            if bloom_columns:
-                from .bloom import BLOOM_STATS_KEY
-
-                names = pq.read_schema(tmp.name).names
-                cols = [c for c in bloom_columns if c in names]
-                entry = _put_remote_bloom(
-                    fs, pq.read_table(tmp.name, columns=cols), path,
-                    frag_name, bloom_columns) if cols else None
-                if entry is not None:
-                    stats[BLOOM_STATS_KEY] = entry
-        return FragmentCommitMessage(
-            file=f"{FR.DATA_DIR}/{frag_name}", row_count=rows,
-            stats=stats or None)
-    data_dir = os.path.join(path, FR.DATA_DIR)
-    os.makedirs(data_dir, exist_ok=True)
-    out = os.path.join(data_dir, frag_name)
-    writer = None
-    rows = 0
-    try:
-        for batch in iterator:
-            if writer is None:
-                writer = pq.ParquetWriter(out, batch.schema)
-            writer.write_batch(batch)
-            rows += batch.num_rows
-    finally:
-        if writer is not None:
-            writer.close()
-    if rows == 0:
-        if os.path.exists(out):
-            os.remove(out)
+    name = FR.new_fragment_name()
+    got = write_parquet_fragment(store_for(path, storage),
+                                 f"{absolute(path)}/{FR.DATA_DIR}/{name}",
+                                 iterator, bloom_columns)
+    if got is None:
         return FragmentCommitMessage(file=None, row_count=0)
-    stats = FR.parquet_fragment_stats(out) or {}
-    stats[FR.DIGEST_STATS_KEY] = FR.sha256_of(out)
-    if bloom_columns:
-        # point-lookup blooms, built here on the executor while the fresh
-        # file is still page-cached (one column-pruned re-read); sidecar
-        # exists before the fragment is ever named by a manifest
-        from .bloom import BLOOM_STATS_KEY, build_bloom_sidecar
-
-        entry = build_bloom_sidecar(out, bloom_columns)
-        if entry is not None:
-            stats[BLOOM_STATS_KEY] = entry
-    return FragmentCommitMessage(
-        file=os.path.join(FR.DATA_DIR, frag_name),
-        row_count=rows,
-        stats=stats or None,
-    )
+    rows, stats = got
+    return FragmentCommitMessage(file=f"{FR.DATA_DIR}/{name}",
+                                 row_count=rows, stats=stats)
 
 
 def _write_native_fragment(path: str, iterator: Iterator["pa.RecordBatch"],
@@ -956,14 +874,15 @@ def _write_native_fragment(path: str, iterator: Iterator["pa.RecordBatch"],
     driver) aligns appends — column order + arrow-safe casts — before
     any byte lands; with ``evolve`` the alignment permits new columns
     after the live schema (every task shares one Spark plan, so all
-    fragments of a commit agree on the evolved shape). s3:// paths PUT
-    from the task, like the parquet twin."""
+    fragments of a commit agree on the evolved shape). The file goes
+    through the storage seam like the parquet twin."""
     import uuid as _uuid
 
     import pyarrow as pa
 
     from . import lance_format as LF
-    from .fs import is_remote
+    from .bloom import BLOOM_STATS_KEY, write_bloom_sidecar
+    from .fs import absolute, store_for
 
     batches = list(iterator)
     rows = sum(b.num_rows for b in batches)
@@ -975,67 +894,34 @@ def _write_native_fragment(path: str, iterator: Iterator["pa.RecordBatch"],
                else LF.align_to_fields(tbl, fields))
     fname = f"{_uuid.uuid4()}.lance"
     stats = LF.arrow_fragment_stats(tbl) or {}
-    if is_remote(path):
-        import tempfile
-
-        from .bloom import BLOOM_STATS_KEY
-        from .fs import get_fs
-
-        fs = get_fs(path, storage)
-        with tempfile.NamedTemporaryFile(suffix=".lance") as tmp:
-            LF.write_native_file(tbl, tmp.name)
-            fs.put(tmp.name,
-                   f"{str(path).rstrip('/')}/{LF.DATA_DIR}/{fname}")
-        if bloom_columns:
-            entry = _put_remote_bloom(fs, tbl, path, fname, bloom_columns)
-            if entry is not None:
-                stats[BLOOM_STATS_KEY] = entry
-        return FragmentCommitMessage(
-            file=f"{LF.DATA_DIR}/{fname}", row_count=rows,
-            stats=stats or None)
-    data_dir = os.path.join(path, LF.DATA_DIR)
-    os.makedirs(data_dir, exist_ok=True)
-    LF.write_native_file(tbl, os.path.join(data_dir, fname))
+    store = store_for(path, storage)
+    key = f"{absolute(path)}/{LF.DATA_DIR}/{fname}"
+    with store.writing(key) as local:
+        LF.write_native_file(tbl, local)
     if bloom_columns:
-        from .bloom import BLOOM_STATS_KEY, build_bloom_sidecar_from_table
-
-        entry = build_bloom_sidecar_from_table(
-            tbl, os.path.join(data_dir, fname), bloom_columns)
+        entry = write_bloom_sidecar(store, key, tbl, bloom_columns)
         if entry is not None:
             stats[BLOOM_STATS_KEY] = entry
-    return FragmentCommitMessage(
-        file=os.path.join(LF.DATA_DIR, fname), row_count=rows,
-        stats=stats or None)
+    return FragmentCommitMessage(file=f"{LF.DATA_DIR}/{fname}",
+                                 row_count=rows, stats=stats or None)
 
 
 def _drop_fragments(path: str, messages, storage: "dict | None" = None) -> None:
     from .bloom import BLOOM_SUFFIX
-    from .fs import is_remote
+    from .fs import store_for
 
-    if is_remote(path):
-        from .fs import get_fs
-
-        fs = get_fs(path, storage)
-        for m in messages:
-            if m is not None and m.file:
-                for victim in (m.file, m.file + BLOOM_SUFFIX):
-                    try:
-                        fs.rm(f"{str(path).rstrip('/')}/{victim}")
-                    except (OSError, FileNotFoundError):
-                        pass
-        return
+    store = store_for(path, storage)
     for m in messages:
         if m is not None and m.file:
             for victim in (m.file, m.file + BLOOM_SUFFIX):
                 try:
-                    os.remove(os.path.join(path, victim))
+                    store.rm(os.path.join(path, victim))
                 except OSError:
                     pass
 
 
-def _widen_native_for_commit(path: str, remote: bool,
-                             storage: "dict | None", live_fields,
-                             first_file: str):
+def _widen_native_for_commit(path: str, storage: "dict | None",
+                             live_fields, first_file: str):
     """(fields, allow_widen) for an EVOLVING native format-writer commit:
     the tasks aligned live-schema-prefix + new columns (align_evolving),
     so the first fragment's FileDescriptor is the evolved shape — widen
@@ -1046,9 +932,8 @@ def _widen_native_for_commit(path: str, remote: bool,
     from . import lance_format as LF
     from .schema_evolution import native_dropped_columns
 
-    first = (f"{str(path).rstrip('/')}/{LF.DATA_DIR}/{first_file}"
-             if remote else os.path.join(path, LF.DATA_DIR, first_file))
-    incoming = LF.read_file_descriptor(first, storage)[0]
+    incoming = LF.read_file_descriptor(
+        os.path.join(path, LF.DATA_DIR, first_file), storage)[0]
     live_names = {f.name for f in live_fields if f.parent == -1}
     extra = [f.name for f in incoming
              if f.parent == -1 and f.name not in live_names]
@@ -1088,20 +973,14 @@ def _schema_meta_for_commit(path: str, frags: List[FR.FragmentInfo],
     import pyarrow.parquet as pq
 
     from ..types import arrow_schema_to_spark
-    from .fs import is_remote
+    from .fs import store_for
     from .schema_evolution import align_check_for_commit
 
     if not frags:
         return None
-    if is_remote(path):
-        from .fs import get_fs
-
-        with get_fs(path, storage).open(
-                f"{str(path).rstrip('/')}/{frags[0].file}", "rb") as fh:
-            incoming = arrow_schema_to_spark(pq.read_schema(fh))
-    else:
-        incoming = arrow_schema_to_spark(
-            pq.read_schema(os.path.join(path, frags[0].file)))
+    with store_for(path, storage).open(os.path.join(path, frags[0].file),
+                                       "rb") as fh:
+        incoming = arrow_schema_to_spark(pq.read_schema(fh))
     if mode == "overwrite" or FR.latest_version(path, storage) is None:
         return {"schema": incoming.json(), "dropped_columns": []}
     return align_check_for_commit(path, incoming, evolve, storage)
@@ -1124,14 +1003,13 @@ class LanceDataSourceWriter(DataSourceArrowWriter):
         self._path = _norm_path(options.get("path"))
         if not self._path:
             raise ValueError("lance datasource requires a 'path' option")
-        # s3:// writes are executor-direct: each task PUTs its fragment
-        # through fsspec with these (picklable) credentials and the
-        # driver's only write is the conditional-PUT manifest commit —
-        # the spark-idiomatic spelling of the reference's S3 story
-        # (ref table/LanceCatalogFactory.java:77-111) without its
+        # writes are executor-direct for every location: each task writes
+        # its fragment through the storage seam (on s3 with these
+        # picklable credentials) and the driver's only write is the
+        # manifest commit — the spark-idiomatic spelling of the
+        # reference's sink (ref LanceSink.java:133-199) without its
         # single-writer serialization
-        self._remote = is_remote(self._path)
-        self._storage = _storage_opts(options) if self._remote else None
+        self._storage = _storage_opts(options) if is_remote(self._path) else None
         self._mode = "overwrite" if overwrite else "append"
         self._evolve = _parse_evolve_option(options)
         if _layout_options_requested(options):
@@ -1229,17 +1107,15 @@ class LanceDataSourceWriter(DataSourceArrowWriter):
             else:
                 # v2 files are self-describing; the first fragment's
                 # FileDescriptor is the (single-plan) schema of them all
-                first = (f"{str(self._path).rstrip('/')}/{LF.DATA_DIR}/"
-                         f"{new_files[0][0]}" if self._remote else
-                         os.path.join(self._path, LF.DATA_DIR,
-                                      new_files[0][0]))
-                fields = LF.read_file_descriptor(first, self._storage)[0]
+                fields = LF.read_file_descriptor(
+                    os.path.join(self._path, LF.DATA_DIR, new_files[0][0]),
+                    self._storage)[0]
         allow_widen = False
         if (self._evolve and self._native_fields is not None and new_files):
             try:
                 fields, allow_widen = _widen_native_for_commit(
-                    self._path, self._remote, self._storage,
-                    self._native_fields, new_files[0][0])
+                    self._path, self._storage, self._native_fields,
+                    new_files[0][0])
             except ValueError:
                 _drop_fragments(self._path, messages, self._storage)
                 raise
@@ -1277,12 +1153,11 @@ class LanceDataSourceStreamWriter(DataSourceStreamArrowWriter):
         self._path = _norm_path(options.get("path"))
         if not self._path:
             raise ValueError("lance datasource requires a 'path' option")
-        # s3:// micro-batches are executor-direct like the batch writer:
-        # tasks PUT fragments through fsspec, the driver's epoch-tagged
-        # commit is one conditional PUT — redelivery dedup unchanged
-        # (the epoch rides inside the atomic manifest write)
-        self._remote = is_remote(self._path)
-        self._storage = _storage_opts(options) if self._remote else None
+        # micro-batches are executor-direct like the batch writer: tasks
+        # write fragments through the storage seam, the driver's
+        # epoch-tagged commit is one manifest create — redelivery dedup
+        # unchanged (the epoch rides inside the atomic manifest write)
+        self._storage = _storage_opts(options) if is_remote(self._path) else None
         self._evolve = _parse_evolve_option(options)
         if _layout_options_requested(options):
             raise ValueError(
@@ -1333,8 +1208,8 @@ class LanceDataSourceStreamWriter(DataSourceStreamArrowWriter):
             if self._evolve and new_files:
                 try:
                     fields, allow_widen = _widen_native_for_commit(
-                        self._path, self._remote, self._storage,
-                        self._native_fields, new_files[0][0])
+                        self._path, self._storage, self._native_fields,
+                        new_files[0][0])
                 except ValueError:
                     _drop_fragments(self._path, messages, self._storage)
                     raise
@@ -1588,13 +1463,11 @@ class LanceDataSource(DataSource):
         if not manifest.fragments:
             raise FileNotFoundError(f"dataset {path} (v{manifest.version}) has no fragments")
         # schema from the first fragment's footer: metadata-only read
-        from .fs import get_fs, is_remote
+        from .fs import store_for
 
         first = os.path.join(path, manifest.fragments[0].file)
-        if is_remote(path):
-            with get_fs(path, storage).open(first, "rb") as fobj:
-                return arrow_schema_to_spark(pq.read_schema(fobj))
-        return arrow_schema_to_spark(pq.read_schema(first))
+        with store_for(path, storage).open(first, "rb") as fobj:
+            return arrow_schema_to_spark(pq.read_schema(fobj))
 
     def reader(self, schema: StructType) -> LanceDataSourceReader:
         return LanceDataSourceReader(dict(self.options), schema)

@@ -93,13 +93,13 @@ DATA_DIR = "data"
 
 # FragmentInfo.stats reserved key (like bloom.BLOOM_STATS_KEY): the
 # sha256 of the fragment file's bytes, stamped at write time by every
-# fragment producer (local promote, executor-direct remote PUT, native
-# codec, streaming epoch sink). Neither parquet page CRCs nor the lance
-# format's framing detect a flipped VALUE byte on their own (round-12
-# verdict Wrong #2), so for engine-written data this upgrades the
-# corruption posture from "loud or same-shape" to "loud" — via
-# maintenance.verify_integrity, one hash task per fragment. Foreign or
-# pre-digest datasets simply lack the key: zero cost, checks skip.
+# fragment producer (the executor-direct parquet writer, the native
+# codec, the format("lance") and streaming sinks). Neither parquet page
+# CRCs nor the lance format's framing detect a flipped VALUE byte on
+# their own (round-12 verdict Wrong #2), so for engine-written data this
+# upgrades the corruption posture from "loud or same-shape" to "loud" —
+# via maintenance.verify_integrity, one hash task per fragment. Foreign
+# or pre-digest datasets simply lack the key: zero cost, checks skip.
 DIGEST_STATS_KEY = "__sha256__"
 
 

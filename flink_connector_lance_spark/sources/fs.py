@@ -18,19 +18,22 @@ storage_options)`` resolves the location once and returns either
 Any other scheme (``hdfs://``, ``gs://``, …) is refused with a
 ``ValueError`` naming it, instead of falling through to ``os`` calls.
 
-A store offers only what the metadata plane uses: ``ls`` (entry names),
-``exists``, ``isdir``, ``open``, ``size``, ``age``, ``rm``, ``makedirs``
-and ``create_exclusive``. Manifest listing/reads/commits
-(sources/fragments.py, the binary chain in sources/lance_format.py),
-``vacuum_dataset`` and ``describe_dataset`` (sources/maintenance.py)
-and the catalog/streaming listings all run over it.
+A store offers ``ls`` (entry names), ``exists``, ``isdir``, ``open``,
+``size``, ``age``, ``rm``, ``makedirs``, ``create_exclusive`` and
+``writing``. Manifest listing/reads/commits (sources/fragments.py, the
+binary chain in sources/lance_format.py), ``vacuum_dataset`` and
+``describe_dataset`` (sources/maintenance.py) and the catalog/streaming
+listings all run over it.
 
-The data plane is separate: remote scans go through the Python
-DataSource, whose workers open fragments through ``get_fs`` with the
-same credentials, and remote writes and maintenance rewrites are
-executor-direct PUTs into ``data/`` committed by one
-``create_exclusive`` manifest. Without fsspec installed, every remote
-call degrades to the same clear ``RemoteUnavailableError``.
+The write half of the data plane runs over it too: every fragment
+producer (sources/writer.py, the ``format("lance")`` writer) is a task
+that writes ``data/<uuid>.<ext>`` through ``store.writing(key)`` —
+in place on a local store, a worker-local scratch file PUT to the key
+on an object store — and the driver commits one ``create_exclusive``
+manifest. Remote scans go through the Python DataSource, whose workers
+open fragments through ``get_fs`` with the same credentials. Without
+fsspec installed, every remote call degrades to the same clear
+``RemoteUnavailableError``.
 """
 
 from __future__ import annotations
@@ -38,6 +41,7 @@ from __future__ import annotations
 import os
 import re
 import time
+from contextlib import contextmanager
 
 _REMOTE_SCHEMES = ("s3://", "s3a://", "s3n://")
 _SCHEME = re.compile(r"^([A-Za-z][A-Za-z0-9+.\-]*)://")
@@ -141,6 +145,15 @@ def local_path(path: str) -> str:
         "stores tables on a local path, file:// or s3:// (s3a://, s3n://)")
 
 
+def absolute(path: str) -> str:
+    """``path`` as a task must see it: an s3 url without its trailing
+    slash, or an absolute local path (``file://`` stripped) — a Python
+    worker need not share the driver's working directory."""
+    if is_remote(path):
+        return str(path).rstrip("/")
+    return os.path.abspath(local_path(path))
+
+
 class LocalStore:
     """A local directory tree, over ``os`` only."""
 
@@ -189,6 +202,19 @@ class LocalStore:
         fd = os.open(local_path(path), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
         with os.fdopen(fd, "wb") as fh:
             fh.write(payload)
+
+    @contextmanager
+    def writing(self, path: str):
+        """Yield the local file to write ``path`` through: the key itself
+        (its directory created); a failed write removes the partial file."""
+        p = local_path(path)
+        os.makedirs(os.path.dirname(p) or ".", exist_ok=True)
+        try:
+            yield p
+        except BaseException:
+            if os.path.exists(p):
+                os.remove(p)
+            raise
 
 
 class ObjectStore:
@@ -255,6 +281,16 @@ class ObjectStore:
 
     def create_exclusive(self, path: str, payload: bytes) -> None:
         create_exclusive(self.fs, path, payload)
+
+    @contextmanager
+    def writing(self, path: str):
+        """Yield a worker-local scratch file; PUT it to ``path`` once the
+        caller's block finishes without error."""
+        import tempfile
+
+        with tempfile.NamedTemporaryFile(suffix=os.path.splitext(path)[1]) as tmp:
+            yield tmp.name
+            self.fs.put(tmp.name, path)
 
 
 _LOCAL = LocalStore()

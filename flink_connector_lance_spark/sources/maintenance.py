@@ -28,20 +28,18 @@ to the native one.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from . import fragments as FR
 
-# every operation that stages executor output before an atomic promote:
-# write_dataset (writer.py) plus the copy-on-write maintenance rewrites
-# below. A crash between staging and promotion leaves the dir behind —
-# vacuum_dataset collects any of these once they outlive the grace window.
+# staging directories of releases that wrote through Spark's file
+# committer into ``<root>/_staging-*`` (and one dir per rewrite) before
+# promoting the files into data/. Writes are executor-direct now and
+# create none, but a crashed old write may have left one behind —
+# vacuum_dataset collects them once they outlive the grace window.
 STAGING_PREFIXES = ("_staging-", "_compact-", "_delete-", "_merge-sur-",
-                    "_merge-upd-", "_cluster-")
+                    "_merge-upd-", "_cluster-", "_addcol-")
 
 
 def read_version_delta(
@@ -404,11 +402,12 @@ def vacuum_dataset(
 
     One body for every location and manifest format: it runs over the
     storage seam (sources/fs.py) on key listings plus one manifest read
-    per retained version — no data IO. The only per-format part is the
-    set of keys a version references (``_json_chain_live`` /
-    ``_binary_chain_live``); the binary chain also sweeps transaction
-    files and deletion vectors, and drops each manifest's stats sidecar
-    with it. Manifests an ANN index was built against stay pinned.
+    per version (the retained ones; locally the dropped ones too) — no
+    data IO. The only per-format part is the set of keys a version
+    references (``_json_chain_live`` / ``_binary_chain_live``); the
+    binary chain also sweeps transaction files and deletion vectors, and
+    drops each manifest's stats sidecar with it. Manifests an ANN index
+    was built against stay pinned.
 
     Deletion order is crash-safe: old manifests are removed FIRST, then
     unreferenced data files — a crash mid-vacuum can only leave orphaned
@@ -417,19 +416,18 @@ def vacuum_dataset(
     untouched); readers pinned to a vacuumed version fail fast on the
     missing manifest, the same contract as Lance's own cleanup.
 
-    Crashed operations leave staging directories behind (write_dataset's
-    ``_staging-*`` plus the maintenance rewrites' ``_compact-*`` /
-    ``_delete-*`` / ``_merge-*-*`` / ``_cluster-*`` — see
-    ``STAGING_PREFIXES``; the finally-cleanup doesn't run if the driver
-    dies). Vacuum removes staging dirs older than
+    Every write is executor-direct: tasks write fragment keys into
+    ``data/`` BEFORE their manifest commits, so an unreferenced key may
+    be an in-flight write. Keys a manifest of the chain references —
+    keys of the versions this call drops, with their bloom sidecars — go
+    at once; any other unreferenced key is kept while it is younger than
     ``staging_grace_seconds`` (default 24 h — generous headroom for an
-    in-flight write's staging phase; a LIVE writer's staging dir is
-    always younger than its own write). On an object store the same
-    grace also gates unreferenced keys: executor-direct writes PUT
-    fragment keys to ``data/`` before their manifest commits, so a young
-    unreferenced key may be an in-flight write; a key whose age is
-    unknown counts as young (keeping an orphan one more pass costs
-    storage, deleting an in-flight fragment loses data).
+    in-flight write; ``0`` disables the gate). On an object store every
+    unreferenced key is age-gated, and a key whose age is unknown counts
+    as young (keeping an orphan one more pass costs storage, deleting an
+    in-flight fragment loses data). Staging directories an older release
+    left behind (``STAGING_PREFIXES``) go once they outlive the same
+    grace.
 
     Returns ``{"kept_versions": [...], "dropped_versions": n,
     "deleted_files": n, "reclaimed_bytes": n, "staging_dirs_removed": n,
@@ -484,13 +482,21 @@ def vacuum_dataset(
     dead = [f"{d}/{n}" for d in swept
             for n in store.ls(os.path.join(path, d)) if f"{d}/{n}" not in live]
     young: list[str] = []
-    if not store.is_local and staging_grace_seconds > 0:
-        # object store only: an unreferenced key inside the grace window
-        # (or of unknown age) may be an in-flight executor-direct write
+    if staging_grace_seconds > 0:
+        # an unreferenced key inside the grace window (or of unknown age)
+        # may be an in-flight executor-direct write; locally the keys of
+        # the versions dropped here are known dead and skip the gate
+        released: set[str] = set()
+        if store.is_local:
+            for v in dropped:
+                released |= live_of(path, v, storage_options)
+            released |= {k + BLOOM_SUFFIX for k in released}
         old = []
         for k in dead:
-            age = store.age(os.path.join(path, k))
-            (old if age is not None and age > staging_grace_seconds
+            age = (None if k in released
+                   else store.age(os.path.join(path, k)))
+            (old if k in released or (age is not None
+                                       and age > staging_grace_seconds)
              else young).append(k)
         dead = old
     reclaimed = sum(store.size(os.path.join(path, k)) or 0 for k in dead
@@ -528,55 +534,15 @@ def vacuum_dataset(
     }
 
 
-def _promote_one(stage: str, data_dir: str, name: str) -> tuple[str, int, dict]:
-    frag_name = FR.new_fragment_name()
-    src = os.path.join(stage, name)
-    rows = pq.read_metadata(src).num_rows  # footer only
-    stats = FR.parquet_fragment_stats(src) or {}
-    stats[FR.DIGEST_STATS_KEY] = FR.sha256_of(src)
-    shutil.move(src, os.path.join(data_dir, frag_name))
-    return frag_name, rows, stats
+def _bloom_columns(fragments) -> "list[str]":
+    """Columns any of ``fragments`` carries a point-lookup bloom for — the
+    set a rewrite rebuilds for its output, so compaction/DELETE/MERGE/
+    clustering never silently strip data skipping from the rows they
+    touch."""
+    from .bloom import BLOOM_STATS_KEY
 
-
-def _promote_staged(path: str, stage: str) -> list[FR.FragmentInfo]:
-    """Move executor-written staging files into the data dir as fragments
-    (zone maps recomputed from each file's footer — metadata-only read).
-
-    Promotion is thread-pooled: each file costs a footer read + rename,
-    which is driver-side O(files) — serial, ~10^5 micro-batch fragments
-    would stall the commit on round-trip latency (worst on object
-    stores). Fragment ids stay deterministic (sorted staging-file name
-    order) regardless of completion order."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    data_dir = os.path.join(path, FR.DATA_DIR)
-    names = [n for n in sorted(os.listdir(stage)) if n.endswith(".parquet")]
-    if not names:
-        return []
-    with ThreadPoolExecutor(max_workers=min(16, len(names))) as ex:
-        results = list(ex.map(lambda n: _promote_one(stage, data_dir, n), names))
-    return [
-        FR.FragmentInfo(i, os.path.join(FR.DATA_DIR, fn), rows, stats)
-        for i, (fn, rows, stats) in enumerate(results)
-    ]
-
-
-def _inherit_blooms(spark, path, manifest: FR.Manifest, new_fragments):
-    """Maintenance rewrites inherit the table's point-lookup blooms: if
-    any current fragment carries bloom sidecars, rebuild them
-    (fragment-parallel, sources/bloom.py) for the rewritten/inserted
-    output — otherwise every compaction/DELETE/MERGE/clustering pass
-    silently disables data skipping for the files it touches."""
-    from .bloom import BLOOM_STATS_KEY, attach_blooms
-
-    cols = sorted({
-        c
-        for f in manifest.fragments
-        for c in ((f.stats or {}).get(BLOOM_STATS_KEY) or {}).get("cols", {})
-    })
-    if not cols or not new_fragments:
-        return list(new_fragments)
-    return attach_blooms(spark, path, new_fragments, cols)
+    return sorted({c for f in fragments
+                   for c in ((f.stats or {}).get(BLOOM_STATS_KEY) or {}).get("cols", {})})
 
 
 def compact_dataset(
@@ -589,57 +555,50 @@ def compact_dataset(
     """Merge fragments smaller than ``small_threshold`` (default: half the
     target) into ~``target_rows_per_fragment``-row fragments; commit as a
     new version. No-op (returns the current manifest) when fewer than two
-    runt fragments exist."""
-    threshold = small_threshold if small_threshold is not None else target_rows_per_fragment // 2
-    from . import lance_format as LF
-    from .fs import is_remote
+    runt fragments exist.
 
-    if is_remote(path):
-        return _compact_remote(spark, path, target_rows_per_fragment,
-                               threshold, s3)
-    if LF.is_native_dataset(path):
+    One body for every location: the fragment-subset scan reads ONLY the
+    runts, funnelled into ceil(total/target) tasks that each write one
+    ~target-sized fragment in place (``writer.write_fragments``); big
+    fragments carry over by name and the driver commits one version under
+    CAS (``_rewrite_commit``). 10^5 micro-batch appends stop costing 10^5
+    input splits per query after one pass of this."""
+    threshold = small_threshold if small_threshold is not None else target_rows_per_fragment // 2
+    storage = s3.to_storage_options() if s3 is not None else None
+    if _local_native(path):
         return _compact_native(spark, path, target_rows_per_fragment, threshold)
-    manifest = FR.read_manifest(path)
+    manifest = FR.read_manifest_compat(path, storage_options=storage)
     small = [f for f in manifest.fragments if f.row_count < threshold]
     if len(small) < 2:
         return manifest
-    keep = [f for f in manifest.fragments if f.row_count >= threshold]
+    small_files = {f.file for f in small}
+    # runts merge INTO shared files, not 1:1: coalesce (no shuffle, so
+    # adjacent key ranges stay together) into ceil(total/target) tasks.
+    # The scan resolves against the manifest schema, so mixed
+    # pre/post-evolution runts merge into the TABLE shape
+    total = sum(f.row_count for f in small)
+    df = (_file_scan(spark, path, manifest, s3, files=small_files)
+          .coalesce(max(1, -(-total // target_rows_per_fragment))))
+    return _rewrite_commit(
+        path, storage, manifest, small_files, df,
+        meta={"compaction": {"merged": len(small),
+                             "base_version": manifest.version}},
+        bloom_cols=_bloom_columns(small), max_rows=target_rows_per_fragment)
 
-    # executors rewrite the runt rows into target-sized files in a staging
-    # dir; the driver promotes them and commits one new version. The scan
-    # resolves against the manifest schema: mixed pre/post-evolution runts
-    # must merge into the TABLE shape, not one sampled file's shape
-    from .reader import read_fragment_files
 
-    stage = os.path.join(path, f"_compact-{uuid.uuid4().hex}")
-    try:
-        (
-            read_fragment_files(spark, manifest,
-                                [os.path.join(path, f.file) for f in small])
-            .write.option("maxRecordsPerFile", target_rows_per_fragment)
-            .mode("overwrite")
-            .parquet(stage)
-        )
-        merged = _inherit_blooms(spark, path, manifest, _promote_staged(path, stage))
-        fragments = [
-            FR.FragmentInfo(i, f.file, f.row_count, f.stats)
-            for i, f in enumerate(keep + merged)
-        ]
-        return FR.commit(
-            path,
-            fragments,
-            mode="overwrite",
-            meta={"compaction": {"merged": len(small), "into": len(merged),
-                                 "base_version": manifest.version}},
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+def _local_native(path: str) -> bool:
+    """A REAL Lance binary dataset on a local path: its rewrites still run
+    through the ``_*_native`` codec twins."""
+    from . import lance_format as LF
+    from .fs import is_remote
+
+    return not is_remote(path) and LF.is_native_dataset(path)
 
 
 def _native_bloom_columns(path: str, mf) -> "list[str]":
     """Columns any live native fragment carries a bloom for — the
     re-attach set for copy-on-write rewrites (the native twin of the
-    emulated path's _inherit_blooms contract: a rewrite must not
+    emulated rewrites' _bloom_columns contract: a rewrite must not
     silently strip point-lookup pruning from the rewritten rows)."""
     from . import lance_format as LF
     from .bloom import BLOOM_STATS_KEY
@@ -729,10 +688,9 @@ def delete_rows(
         return _delete_lance(path, predicate)
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     from . import lance_format as LF
-    from .fs import is_remote
 
+    storage = s3.to_storage_options() if s3 is not None else None
     if use_deletion_vectors:
-        storage = s3.to_storage_options() if s3 is not None else None
         if not LF.is_native_dataset(path, storage):
             raise NotImplementedError(
                 "use_deletion_vectors requires a native binary dataset "
@@ -740,62 +698,31 @@ def delete_rows(
                 "format's); the copy-on-write rewrite serves the "
                 "emulated backend")
         return _delete_native_vectors(spark, path, pred, storage)
-    if is_remote(path):
-        return _delete_remote(spark, path, pred, s3)
-    if LF.is_native_dataset(path):
+    if _local_native(path):
         return _delete_native(spark, path, pred)
-    # abspath: input_file_name() yields absolute URIs, so a relative
-    # dataset path would never intersect and the DELETE would no-op
-    # (and executor-side stage writes would resolve against the JVM cwd)
-    path = os.path.abspath(path)
-    manifest = FR.read_manifest(path)
+    manifest = FR.read_manifest_compat(path, storage_options=storage)
     if not manifest.fragments:
         raise FileNotFoundError(f"dataset {path} has no fragments")
-    by_abs = {os.path.join(path, f.file): f for f in manifest.fragments}
-    from .reader import read_fragment_files
-
     # one scan, predicate pushed: which files hold matching rows?
     # (manifest-schema-resolved: the predicate may reference a column old
     # fragments predate — they null-fill instead of breaking the scan)
-    df = read_fragment_files(spark, manifest, list(by_abs))
-    affected_files = {
-        r.f for r in df.filter(pred)
-        .select(F.input_file_name().alias("f")).distinct().collect()
-    }
-    # input_file_name returns URIs (file:///...); normalize to local paths
-    from urllib.parse import unquote, urlparse
-
-    affected = {
-        unquote(urlparse(f).path) if "://" in f or f.startswith("file:") else f
-        for f in affected_files
-    }
+    affected = {r.f for r in _file_scan(spark, path, manifest, s3,
+                                        file_col="f", where=pred)
+                .select("f").distinct().collect()}
     if not affected:
         return manifest  # nothing matched: no new version
-
-    keep = [f for abs_p, f in by_abs.items() if abs_p not in affected]
-    stage = os.path.join(path, f"_delete-{uuid.uuid4().hex}")
-    try:
-        rewritten: list[FR.FragmentInfo] = []
-        # SQL DELETE three-valued logic: delete rows where pred is TRUE;
-        # rows where it evaluates NULL survive (~pred alone would drop them)
-        survivors = read_fragment_files(spark, manifest, sorted(affected)).filter(
-            ~F.coalesce(pred, F.lit(False))
-        )
-        if survivors.limit(1).count() > 0:
-            survivors.write.mode("overwrite").parquet(stage)
-            rewritten = _inherit_blooms(spark, path, manifest,
-                                        _promote_staged(path, stage))
-        fragments = [
-            FR.FragmentInfo(i, f.file, f.row_count, f.stats)
-            for i, f in enumerate(keep + rewritten)
-        ]
-        return FR.commit(
-            path, fragments, mode="overwrite",
-            meta={"delete": {"rewrote": len(affected),
-                             "base_version": manifest.version}},
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    # SQL DELETE three-valued logic: delete rows where pred is TRUE;
+    # rows where it evaluates NULL survive (~pred alone would drop them).
+    # A fragment whose every row matched leaves a task with no rows,
+    # which writes no file.
+    survivors = _file_scan(spark, path, manifest, s3, files=affected,
+                           where=~F.coalesce(pred, F.lit(False)))
+    return _rewrite_commit(
+        path, storage, manifest, affected, survivors,
+        meta={"delete": {"rewrote": len(affected),
+                         "base_version": manifest.version}},
+        bloom_cols=_bloom_columns(
+            [f for f in manifest.fragments if f.file in affected]))
 
 
 def _delete_native(spark: SparkSession, path: str, pred):
@@ -867,10 +794,10 @@ def _delete_native_vectors(spark: SparkSession, path: str, pred,
     import pyspark.sql.functions as F
 
     from . import lance_format as LF
-    from .fs import is_remote
+    from .fs import absolute
     from .reader import read_native_files
 
-    base = str(path).rstrip("/") if is_remote(path) else os.path.abspath(path)
+    base = absolute(path)
     mf = LF.read_native_manifest(base, storage_options=storage)
     if not mf.fragments:
         raise FileNotFoundError(f"dataset {path} has no fragments")
@@ -952,19 +879,63 @@ def _remote_reader(spark, path: str, s3, file_col: "str | None" = None):
     return r.load(path)
 
 
-def _rewrite_commit_remote(spark, path: str, storage, manifest, affected,
-                           new_src, meta: dict, bloom_cols,
-                           max_rows: int = 1_000_000):
-    """Shared tail of the remote copy-on-write rewrites (DELETE / MERGE /
-    compaction): produce fresh fragments from ``new_src`` executor-direct
-    (tasks PUT straight to s3), carry unaffected fragments by key, commit
-    ONE conditional-PUT version under CAS — for BOTH remote backends
-    (emulated parquet chain via FR.commit, native binary chain via
+def _file_scan(spark, path: str, manifest: FR.Manifest, s3=None,
+               files=None, file_col: "str | None" = None, where=None):
+    """The rows of ``files`` (root-relative; default every fragment of
+    ``manifest``), filtered by ``where``, with ``file_col`` naming each
+    row's root-relative fragment file when asked — the one location
+    branch of the rewrites.
+
+    Locally a native parquet scan resolved against the manifest schema
+    (``reader.read_fragment_files``) with ``where`` pushed into it, the
+    file taken from ``input_file_name()`` at the scan — cheaper than the
+    datasource's per-row file column. On an object store the datasource
+    with ``read.file-column``: its EqualTo/In on the file column prunes
+    partitions, so a fragment subset is a partition-pruned rescan."""
+    import pyspark.sql.functions as F
+
+    from .fs import absolute, is_remote
+    from .reader import read_fragment_files
+
+    if is_remote(path):
+        df = _remote_reader(spark, path, s3, file_col="__frag")
+        if files is not None:
+            df = df.filter(F.col("__frag").isin(*sorted(files)))
+        if where is not None:
+            df = df.filter(where)
+        return (df.withColumnRenamed("__frag", file_col) if file_col
+                else df.drop("__frag"))
+    rel = ([f.file for f in manifest.fragments] if files is None
+           else sorted(files))
+    # absolute: the JVM resolves a relative path against its own cwd
+    root = absolute(path)
+    df = read_fragment_files(spark, manifest,
+                             [os.path.join(root, f) for f in rel])
+    if where is not None:
+        df = df.filter(where)
+    if file_col:
+        # fragment files are data/<name>: the URI's last two segments.
+        # Taken at the scan — input_file_name() is '' once a shuffle has
+        # moved the row off its input split
+        df = df.withColumn(file_col,
+                           F.substring_index(F.input_file_name(), "/", -2))
+    return df
+
+
+def _rewrite_commit(path: str, storage, manifest, affected, new_src,
+                    meta: dict, bloom_cols, max_rows: int = 1_000_000):
+    """Shared tail of the copy-on-write rewrites (DELETE / MERGE /
+    compaction / clustering / add_column): tasks write fresh fragments
+    from ``new_src`` in place (``writer.write_fragments``; a task with no
+    rows writes nothing), unaffected fragments carry over by name, and
+    the driver commits ONE version under CAS on ``manifest.version`` — a
+    writer that committed since the rewrite read its manifest makes this
+    raise ``CommitConflict`` instead of being silently dropped. Serves
+    both manifest formats on an object store (the binary chain via
     commit_native with the engine meta in the table-config slot and
     per-fragment field mappings preserved)."""
     from . import lance_format as LF
-    from .writer import (_meta_to_config, _put_fragments_from_tasks,
-                         produce_native_fragments)
+    from .writer import _meta_to_config, produce_native_fragments, write_fragments
 
     if manifest.meta.get("native_lance"):
         nmf = LF.read_native_manifest(path, storage_options=storage)
@@ -981,153 +952,12 @@ def _rewrite_commit_remote(spark, path: str, storage, manifest, affected,
                                 config=_meta_to_config(meta),
                                 storage_options=storage)
     keep = [f for f in manifest.fragments if f.file not in affected]
-    results = _put_fragments_from_tasks(
-        new_src, str(path).rstrip("/"), storage,
-        max_rows=max_rows, bloom_columns=bloom_cols)
-    new = [FR.FragmentInfo(0, f"{FR.DATA_DIR}/{fn}", rows, stats)
-           for fn, rows, stats in results]
-    fragments = [
-        FR.FragmentInfo(i, f.file, f.row_count, f.stats)
-        for i, f in enumerate(keep + new)
-    ]
+    new = write_fragments(new_src, path, storage, max_rows, bloom_cols)
+    fragments = [FR.FragmentInfo(i, f.file, f.row_count, f.stats)
+                 for i, f in enumerate(keep + new)]
     return FR.commit(path, fragments, mode="overwrite", meta=meta,
                      expected_base_version=manifest.version,
                      storage_options=storage)
-
-
-def _delete_remote(spark: SparkSession, path: str, pred, s3) -> FR.Manifest:
-    """Row-level DELETE for an s3:// dataset — the executor-direct twin
-    of the local copy-on-write: one file-attributed probe finds the
-    fragments holding matching rows (planning-time zone maps still
-    prune), a fragment-subset rescan (EqualTo/In on the file column
-    prunes PARTITIONS) rewrites each affected fragment's survivors
-    straight to fresh s3 keys from inside the tasks, untouched fragments
-    carry over by key, and the driver commits one conditional-PUT
-    manifest under CAS. Data bytes flow executor<->S3 only — the
-    driver's share is the probe's (file) rows and the manifest.
-
-    The takedown shape at 100 TB: deleting 0.01% of rows costs the
-    affected fragments' rewrite, not a table rewrite, and no
-    single-machine funnel."""
-    import pyspark.sql.functions as F
-
-    from .bloom import BLOOM_STATS_KEY
-    from .writer import _put_fragments_from_tasks
-
-    storage = s3.to_storage_options() if s3 is not None else None
-    manifest = FR.read_manifest_compat(path, storage_options=storage)
-    if not manifest.fragments:
-        raise FileNotFoundError(f"dataset {path} has no fragments")
-    probe = _remote_reader(spark, path, s3, file_col="__frag")
-    affected = {
-        r.f for r in probe.filter(pred)
-        .select(F.col("__frag").alias("f")).distinct().collect()
-    }
-    if not affected:
-        return manifest  # nothing matched: no new version
-    survivors = (
-        _remote_reader(spark, path, s3, file_col="__frag")
-        .filter(F.col("__frag").isin(*affected))  # partition-pruned rescan
-        .filter(~F.coalesce(pred, F.lit(False)))
-        .drop("__frag")
-    )
-    # rewritten fragments keep the dataset's bloom contract: rebuild
-    # sidecars for the columns the affected fragments carried them on
-    bloom_cols = sorted({
-        c for f in manifest.fragments if f.file in affected
-        for c in ((f.stats or {}).get(BLOOM_STATS_KEY, {}).get("cols", {}))
-    })
-    return _rewrite_commit_remote(
-        spark, path, storage, manifest, affected, survivors,
-        meta={"delete": {"rewrote": len(affected),
-                         "base_version": manifest.version}},
-        bloom_cols=bloom_cols)
-
-
-def _compact_remote(spark: SparkSession, path: str, target_rows: int,
-                    threshold: int, s3) -> FR.Manifest:
-    """Runt-merge compaction for an s3:// dataset: the fragment-subset
-    rescan reads ONLY the runts (file-column partition pruning), tasks
-    re-encode them into ~target-sized fragments PUT straight to s3, big
-    fragments carry over by key, one conditional-PUT commit under CAS.
-    10^5 micro-batch appends on an object store stop costing 10^5 GETs
-    per query after one pass of this."""
-    import pyspark.sql.functions as F
-
-    from .bloom import BLOOM_STATS_KEY
-    from .writer import _put_fragments_from_tasks
-
-    storage = s3.to_storage_options() if s3 is not None else None
-    manifest = FR.read_manifest_compat(path, storage_options=storage)
-    small = [f for f in manifest.fragments if f.row_count < threshold]
-    if len(small) < 2:
-        return manifest
-    small_files = {f.file for f in small}
-    df = (_remote_reader(spark, path, s3, file_col="__frag")
-          .filter(F.col("__frag").isin(*small_files))
-          .drop("__frag"))
-    total = sum(f.row_count for f in small)
-    df = df.coalesce(max(1, -(-total // target_rows)))
-    bloom_cols = sorted({
-        c for f in small
-        for c in ((f.stats or {}).get(BLOOM_STATS_KEY, {}).get("cols", {}))
-    })
-    return _rewrite_commit_remote(
-        spark, path, storage, manifest, small_files, df,
-        meta={"compaction": {"merged": len(small),
-                             "base_version": manifest.version}},
-        bloom_cols=bloom_cols, max_rows=target_rows)
-
-
-def _merge_remote(spark: SparkSession, path: str, updates: DataFrame,
-                  key: str, commit_meta: dict | None, s3) -> FR.Manifest:
-    """MERGE (upsert) for an s3:// dataset — same atomic copy-on-write
-    shape as the local path, executor-direct: a semi-join probe over the
-    file-attributed read finds the fragments holding updated keys, the
-    partition-pruned rescan anti-joins out the replaced rows, survivors
-    and the (schema-aligned) update rows re-encode together in one job
-    whose tasks PUT fragments straight to s3, and the driver commits ONE
-    conditional-PUT manifest under CAS — a reader sees pre- or
-    post-merge, never a delete-without-insert intermediate."""
-    import pyspark.sql.functions as F
-
-    from .bloom import BLOOM_STATS_KEY
-    from .writer import _put_fragments_from_tasks
-
-    storage = s3.to_storage_options() if s3 is not None else None
-    manifest = FR.read_manifest_compat(path, storage_options=storage)
-    if not manifest.fragments:
-        raise FileNotFoundError(f"dataset {path} has no fragments")
-    keys = updates.select(key).distinct()
-    probe = _remote_reader(spark, path, s3, file_col="__frag")
-    affected = {
-        r.f for r in probe.join(keys, on=key, how="left_semi")
-        .select(F.col("__frag").alias("f")).distinct().collect()
-    }
-    data_cols = [c for c in probe.columns if c != "__frag"]
-    sschema = {f.name: f.dataType
-               for f in probe.drop("__frag").schema.fields}
-    new_src = updates.select(
-        *[F.col(c).cast(sschema[c]) for c in data_cols])
-    if affected:
-        survivors = (
-            _remote_reader(spark, path, s3, file_col="__frag")
-            .filter(F.col("__frag").isin(*affected))
-            .drop("__frag")
-            .join(keys, on=key, how="left_anti")
-            .select(*data_cols)
-        )
-        new_src = survivors.unionByName(new_src)
-    bloom_cols = sorted({
-        c for f in manifest.fragments
-        for c in ((f.stats or {}).get(BLOOM_STATS_KEY, {}).get("cols", {}))
-    })
-    return _rewrite_commit_remote(
-        spark, path, storage, manifest, affected, new_src,
-        meta={**(commit_meta or {}),
-              "merge": {"rewrote": len(affected), "key": key,
-                        "base_version": manifest.version}},
-        bloom_cols=bloom_cols)
 
 
 def _merge_native(spark: SparkSession, path: str, updates: DataFrame, key: str,
@@ -1209,7 +1039,6 @@ def merge_rows(
     (AQE broadcasts when the update set is small) and the rewrite volume
     is bounded by the affected fragments, not the table."""
     import pyspark.sql.functions as F
-    from urllib.parse import unquote, urlparse
 
     # upsert contract: one row per key — duplicate keys in the update set
     # would all be inserted, silently violating the post-merge invariant.
@@ -1224,71 +1053,33 @@ def merge_rows(
         )
     if FR.HAVE_LANCE:  # native path (exercised via the fake lance in tests)
         return _merge_lance(path, updates, key)
-    from . import lance_format as LF
-    from .fs import is_remote
-
-    if is_remote(path):
-        return _merge_remote(spark, path, updates, key, commit_meta, s3)
-    if LF.is_native_dataset(path):
+    if _local_native(path):
         return _merge_native(spark, path, updates, key, commit_meta)
-    path = os.path.abspath(path)  # same relative-path contract as delete_rows
-    manifest = FR.read_manifest(path)
+    storage = s3.to_storage_options() if s3 is not None else None
+    manifest = FR.read_manifest_compat(path, storage_options=storage)
     if not manifest.fragments:
         raise FileNotFoundError(f"dataset {path} has no fragments")
-    by_abs = {os.path.join(path, f.file): f for f in manifest.fragments}
     keys = updates.select(key).distinct()
-
-    from .reader import read_fragment_files
-
-    df = read_fragment_files(spark, manifest, list(by_abs))
-    # capture the file name AT the scan: input_file_name() evaluates to ''
-    # once a shuffle (the semi-join) has moved the row off its input split
-    with_file = df.withColumn("__f", F.input_file_name())
-    affected_files = {
-        r.f for r in with_file.join(keys, on=key, how="left_semi")
-        .select(F.col("__f").alias("f")).distinct().collect()
-    }
-    affected = {
-        unquote(urlparse(f).path) if "://" in f or f.startswith("file:") else f
-        for f in affected_files
-    }
-
-    keep = [f for abs_p, f in by_abs.items() if abs_p not in affected]
-    stage_sur = os.path.join(path, f"_merge-sur-{uuid.uuid4().hex}")
-    stage_upd = os.path.join(path, f"_merge-upd-{uuid.uuid4().hex}")
-    try:
-        rewritten: list[FR.FragmentInfo] = []
-        if affected:
-            survivors = (
-                read_fragment_files(spark, manifest, sorted(affected))
-                .join(keys, on=key, how="left_anti")
-            )
-            if survivors.limit(1).count() > 0:
-                survivors.write.mode("overwrite").parquet(stage_sur)
-                rewritten = _inherit_blooms(spark, path, manifest,
-                                            _promote_staged(path, stage_sur))
-        # schema enforcement: align column ORDER and TYPES with the dataset
-        # (mixed physical parquet types across fragments would break later
-        # reads — the dataset schema is the contract, like any MERGE)
-        aligned = updates.select(
-            *[F.col(c).cast(df.schema[c].dataType) for c in df.columns]
-        )
-        aligned.write.mode("overwrite").parquet(stage_upd)
-        inserted = _inherit_blooms(spark, path, manifest,
-                                   _promote_staged(path, stage_upd))
-        fragments = [
-            FR.FragmentInfo(i, f.file, f.row_count, f.stats)
-            for i, f in enumerate(keep + rewritten + inserted)
-        ]
-        return FR.commit(
-            path, fragments, mode="overwrite",
-            meta={**(commit_meta or {}),
-                  "merge": {"rewrote": len(affected), "key": key,
-                            "base_version": manifest.version}},
-        )
-    finally:
-        shutil.rmtree(stage_sur, ignore_errors=True)
-        shutil.rmtree(stage_upd, ignore_errors=True)
+    probe = _file_scan(spark, path, manifest, s3, file_col="__frag")
+    affected = {r.f for r in probe.join(keys, on=key, how="left_semi")
+                .select(F.col("__frag").alias("f")).distinct().collect()}
+    # schema enforcement: align column ORDER and TYPES with the dataset
+    # (mixed physical parquet types across fragments would break later
+    # reads — the dataset schema is the contract, like any MERGE)
+    data = probe.drop("__frag")
+    new_src = updates.select(
+        *[F.col(c).cast(data.schema[c].dataType) for c in data.columns])
+    if affected:
+        survivors = (_file_scan(spark, path, manifest, s3, files=affected)
+                     .join(keys, on=key, how="left_anti")
+                     .select(*data.columns))
+        new_src = survivors.unionByName(new_src)
+    return _rewrite_commit(
+        path, storage, manifest, affected, new_src,
+        meta={**(commit_meta or {}),
+              "merge": {"rewrote": len(affected), "key": key,
+                        "base_version": manifest.version}},
+        bloom_cols=_bloom_columns(manifest.fragments))
 
 
 def _native_manifest(path: str) -> FR.Manifest:
@@ -1434,72 +1225,6 @@ def _last_clustering_files_native(path: str,
     return {fr.file for fr in commit_m.fragments}
 
 
-def _cluster_remote(spark: SparkSession, path: str, by: list[str],
-                    target_rows: int, scope: str, zorder: bool,
-                    s3) -> FR.Manifest:
-    """OPTIMIZE for an s3:// dataset (either backend): the rescan flows
-    through the file-attributed remote reader, ONE range exchange +
-    within-task sorts, tasks PUT the re-encoded fragments straight to
-    s3, and the shared rewrite tail commits under CAS with the
-    clustering meta recorded (manifest meta or the binary chain's
-    table-config slot). scope='tail' re-sorts only fragments appended
-    since the last clustering pass."""
-    import pyspark.sql.functions as F
-
-    from .bloom import BLOOM_STATS_KEY
-
-    storage = s3.to_storage_options() if s3 is not None else None
-    manifest = FR.read_manifest_compat(path, storage_options=storage)
-    if not manifest.fragments:
-        raise FileNotFoundError(f"dataset {path} has no fragments to cluster")
-    if not by:
-        raise ValueError("cluster_dataset requires at least one column")
-    native = bool(manifest.meta.get("native_lance"))
-    to_sort = list(manifest.fragments)
-    if scope == "tail":
-        if native:
-            prev = {f"{FR.DATA_DIR}/{n}"
-                    for n in _last_clustering_files_native(path, storage)}
-        else:
-            prev = _last_clustering_files(path, storage)
-        clustered = prev & {f.file for f in manifest.fragments}
-        to_sort = [f for f in manifest.fragments if f.file not in clustered]
-        if not to_sort:
-            return manifest  # nothing new since the last clustering pass
-    sort_files = {f.file for f in to_sort}
-    df = (_remote_reader(spark, path, s3, file_col="__frag")
-          .filter(F.col("__frag").isin(*sort_files))
-          .drop("__frag"))
-    total = sum(f.row_count for f in to_sort)
-    n_frags = max(1, -(-total // target_rows))
-    if zorder and len(by) >= 2:
-        mm: dict[str, tuple] = {}
-        for c in by:
-            mins = [f.stats[c]["min"] for f in to_sort
-                    if f.stats and f.stats.get(c, {}).get("min") is not None]
-            maxs = [f.stats[c]["max"] for f in to_sort
-                    if f.stats and f.stats.get(c, {}).get("max") is not None]
-            if not mins or not maxs:
-                raise ValueError(f"no zone-map stats for z-order column {c!r}")
-            mm[c] = (min(mins), max(maxs))
-        keyed = df.withColumn("__z", _zorder_key(df, by, mm))
-        out = (keyed.repartitionByRange(n_frags, "__z")
-               .sortWithinPartitions("__z").drop("__z"))
-        layout = {"zorder": by}
-    else:
-        out = df.repartitionByRange(n_frags, *by).sortWithinPartitions(*by)
-        layout = {"cluster_by": by}
-    bloom_cols = sorted({
-        c for f in to_sort
-        for c in ((f.stats or {}).get(BLOOM_STATS_KEY, {}).get("cols", {}))
-    })
-    return _rewrite_commit_remote(
-        spark, path, storage, manifest, sort_files, out,
-        meta={"clustering": {**layout, "base_version": manifest.version,
-                             "scope": scope}},
-        bloom_cols=bloom_cols, max_rows=target_rows)
-
-
 def _cluster_native(spark: SparkSession, path: str, by: list[str],
                     target_rows: int, scope: str = "full",
                     zorder: bool = False):
@@ -1606,35 +1331,29 @@ def cluster_dataset(
     """
     if scope not in ("full", "tail"):
         raise ValueError("scope must be 'full' or 'tail'")
-    from . import lance_format as LF
-    from .fs import is_remote
-
-    if is_remote(path):
-        return _cluster_remote(spark, path, by, target_rows_per_fragment,
-                               scope, zorder, s3)
-    if LF.is_native_dataset(path):
+    if _local_native(path):
         return _cluster_native(spark, path, by, target_rows_per_fragment,
                                scope=scope, zorder=zorder)
-    manifest = FR.read_manifest(path)
+    storage = s3.to_storage_options() if s3 is not None else None
+    manifest = FR.read_manifest_compat(path, storage_options=storage)
     if not manifest.fragments:
         raise FileNotFoundError(f"dataset {path} has no fragments to cluster")
     if not by:
         raise ValueError("cluster_dataset requires at least one column")
-    carried: list[FR.FragmentInfo] = []
-    to_sort = manifest.fragments
+    to_sort = list(manifest.fragments)
     if scope == "tail":
-        clustered = _last_clustering_files(path) & {f.file for f in manifest.fragments}
-        carried = [f for f in manifest.fragments if f.file in clustered]
-        to_sort = [f for f in manifest.fragments if f.file not in clustered]
+        if manifest.meta.get("native_lance"):
+            prev = {f"{FR.DATA_DIR}/{n}"
+                    for n in _last_clustering_files_native(path, storage)}
+        else:
+            prev = _last_clustering_files(path, storage)
+        to_sort = [f for f in manifest.fragments if f.file not in prev]
         if not to_sort:
             return manifest  # nothing new since the last clustering pass
+    sort_files = {f.file for f in to_sort}
+    df = _file_scan(spark, path, manifest, s3, files=sort_files)
     total = sum(f.row_count for f in to_sort)
     n_frags = max(1, -(-total // target_rows_per_fragment))
-    from .reader import read_fragment_files
-
-    df = read_fragment_files(spark, manifest,
-                             [os.path.join(path, f.file) for f in to_sort])
-
     if zorder and len(by) >= 2:
         mm: dict[str, tuple] = {}
         for c in by:
@@ -1652,25 +1371,11 @@ def cluster_dataset(
     else:
         out = df.repartitionByRange(n_frags, *by).sortWithinPartitions(*by)
         layout = {"cluster_by": by}
-
-    stage = os.path.join(path, f"_cluster-{uuid.uuid4().hex}")
-    try:
-        (out.write.option("maxRecordsPerFile", target_rows_per_fragment)
-            .mode("overwrite").parquet(stage))
-        new_frags = _inherit_blooms(spark, path, manifest, _promote_staged(path, stage))
-        fragments = [
-            FR.FragmentInfo(i, f.file, f.row_count, f.stats)
-            for i, f in enumerate(carried + list(new_frags))
-        ]
-        return FR.commit(
-            path, fragments, mode="overwrite",
-            meta={"clustering": {**layout, "base_version": manifest.version,
-                                "scope": scope}},
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
+    return _rewrite_commit(
+        path, storage, manifest, sort_files, out,
+        meta={"clustering": {**layout, "base_version": manifest.version,
+                             "scope": scope}},
+        bloom_cols=_bloom_columns(to_sort), max_rows=target_rows_per_fragment)
 
 
 def describe_dataset(path: str, storage_options: "dict | None" = None) -> dict:

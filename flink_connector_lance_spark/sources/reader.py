@@ -103,6 +103,8 @@ def read_fragment_files(spark, manifest: "FR.Manifest", files: list[str],
         from pyspark.sql.types import StructType
 
         st = StructType.fromJson(json.loads(schema_json))
+        if not files:  # an empty table (a write or DELETE left no rows)
+            return spark.createDataFrame([], st)
         return spark.read.schema(st).parquet(*files)
     return spark.read.parquet(*files)
 
@@ -116,7 +118,7 @@ def _read_local(spark, path, columns, filter, limit, version, opts) -> DataFrame
         # decoder (sources/lance_format.py) serves the read instead
         return _read_native_pure(spark, path, columns, filter, limit, version, opts)
     files = FR.fragment_paths(path, manifest)
-    if not files:
+    if not files and "schema" not in manifest.meta:
         raise FileNotFoundError(f"dataset {path} (v{manifest.version}) has no fragments")
     df = read_fragment_files(spark, manifest, files)
     return _apply_pushdowns(df, columns, filter, limit, opts)

@@ -40,11 +40,14 @@ from . import fragments as FR
 
 
 def dataset_schema(path: str, version: int | None = None,
-                   storage_options: dict | None = None) -> StructType:
-    """The table schema at ``version`` (default latest): the manifest's
-    recorded schema when present, else derived from the first fragment's
-    parquet footer (pre-evolution datasets) — metadata-only either way."""
-    manifest = FR.read_manifest(path, version, storage_options)
+                   storage_options: dict | None = None,
+                   manifest: "FR.Manifest | None" = None) -> StructType:
+    """The table schema at ``version`` (default latest, or of an already
+    read ``manifest``): the manifest's recorded schema when present, else
+    derived from the first fragment's parquet footer (pre-evolution
+    datasets) — metadata-only either way."""
+    if manifest is None:
+        manifest = FR.read_manifest(path, version, storage_options)
     sj = manifest.meta.get("schema")
     if sj:
         return StructType.fromJson(json.loads(sj))
@@ -55,17 +58,11 @@ def dataset_schema(path: str, version: int | None = None,
     import pyarrow.parquet as pq
 
     from ..types import arrow_schema_to_spark
-    from .fs import is_remote
+    from .fs import store_for
 
-    if is_remote(path):
-        from .fs import get_fs
-
-        with get_fs(path, storage_options).open(
-                f"{str(path).rstrip('/')}/{manifest.fragments[0].file}",
-                "rb") as fh:
-            return arrow_schema_to_spark(pq.read_schema(fh))
-    first = os.path.join(path, manifest.fragments[0].file)
-    return arrow_schema_to_spark(pq.read_schema(first))
+    with store_for(path, storage_options).open(
+            os.path.join(path, manifest.fragments[0].file), "rb") as fh:
+        return arrow_schema_to_spark(pq.read_schema(fh))
 
 
 def dropped_columns(path: str, version: int | None = None,
@@ -182,34 +179,9 @@ def drop_columns(path: str, cols: list[str],
 
     if not cols:
         raise ValueError("drop_columns requires at least one column")
-    if is_remote(path):
-        if not LF.is_native_dataset(path, storage_options):
-            # remote EMULATED chain: the same metadata-only commit as the
-            # local branch, through fsspec (one manifest read + one
-            # conditional-PUT JSON manifest)
-            current = dataset_schema(path, storage_options=storage_options)
-            manifest = FR.read_manifest(path, None, storage_options)
-            missing = [c for c in cols if c not in current.names]
-            if missing:
-                raise ValueError(
-                    f"cannot drop non-existent column(s) {missing}; "
-                    f"table schema is {current.names}")
-            if set(cols) >= set(current.names):
-                raise ValueError("cannot drop every column of the table")
-            new_st = StructType(
-                [f for f in current.fields if f.name not in set(cols)])
-            dropped = sorted(set(manifest.meta.get("dropped_columns", []))
-                             | set(cols))
-            return FR.commit(
-                path, [], mode="append",
-                meta={"schema": new_st.json(), "dropped_columns": dropped,
-                      "drop": {"columns": list(cols),
-                               "base_version": manifest.version}},
-                storage_options=storage_options)
+    if LF.is_native_dataset(path, storage_options):
         return _drop_columns_native(path, cols, storage_options)
-    if LF.is_native_dataset(path):
-        return _drop_columns_native(path, cols)
-    if FR.HAVE_LANCE:  # native path (exercised via the fake lance in tests)
+    if FR.HAVE_LANCE and not is_remote(path):  # fake lance in tests
         import lance
 
         # same guards as the emulated backend (against the native schema)
@@ -224,8 +196,10 @@ def drop_columns(path: str, cols: list[str],
         from .maintenance import _native_manifest
 
         return _native_manifest(path)
-    current = dataset_schema(path)
-    manifest = FR.read_manifest(path)
+    # one manifest read + one manifest commit (a conditional PUT on s3)
+    manifest = FR.read_manifest(path, None, storage_options)
+    current = dataset_schema(path, manifest=manifest,
+                             storage_options=storage_options)
     missing = [c for c in cols if c not in current.names]
     if missing:
         raise ValueError(f"cannot drop non-existent column(s) {missing}; "
@@ -238,7 +212,7 @@ def drop_columns(path: str, cols: list[str],
         path, [], mode="append",
         meta={"schema": new_st.json(), "dropped_columns": dropped,
               "drop": {"columns": list(cols), "base_version": manifest.version}},
-    )
+        storage_options=storage_options)
 
 
 def add_column(spark, path: str, name: str, expr, s3=None) -> FR.Manifest:
@@ -253,15 +227,23 @@ def add_column(spark, path: str, name: str, expr, s3=None) -> FR.Manifest:
     Re-introducing a previously dropped name is allowed HERE (unlike an
     evolving append): the rewrite leaves no old fragment to resurrect
     stale values from, and the name is cleared from the dropped set.
-    s3:// datasets (pass ``s3=S3Options(...)``) rewrite executor-direct:
-    the remote reader scans, tasks PUT the widened fragments straight to
-    s3, the driver commits one conditional-PUT version under CAS."""
+
+    One body for a local path and an s3:// url (pass
+    ``s3=S3Options(...)``): the fragment scan reads the current version,
+    every task writes its widened fragments in place
+    (``writer.write_fragments`` / ``produce_native_fragments`` — the
+    executor-direct shape of the DELETE/MERGE rewrites), and the driver
+    commits ONE overwrite under CAS; the full rewrite clears the
+    dropped-name resurrection guard. A local binary (native Lance)
+    dataset goes through its codec twin."""
+    import pyarrow as pa
+
+    from ..types import spark_schema_to_arrow
     from . import lance_format as LF
     from .fs import is_remote
+    from .maintenance import _file_scan, _rewrite_commit
 
-    if is_remote(path):
-        return _add_column_remote(spark, path, name, expr, s3)
-    if FR.HAVE_LANCE:  # native path (exercised via the fake lance in tests)
+    if FR.HAVE_LANCE and not is_remote(path):  # fake lance in tests
         import lance
 
         if not isinstance(expr, str):
@@ -270,57 +252,14 @@ def add_column(spark, path: str, name: str, expr, s3=None) -> FR.Manifest:
         from .maintenance import _native_manifest
 
         return _native_manifest(path)
-    if LF.is_native_dataset(path):
-        return _add_column_native(spark, path, name, expr)
-    import shutil
-    import uuid
-
-    current = dataset_schema(path)
-    if name in current.names:
-        raise ValueError(f"column {name!r} already exists; table schema is {current.names}")
-    manifest = FR.read_manifest(path)
-    from .reader import read_dataset
-
-    col = F.expr(expr) if isinstance(expr, str) else expr
-    out = read_dataset(spark, path).withColumn(name, col)
-    stage = os.path.join(path, f"_addcol-{uuid.uuid4().hex}")
-    try:
-        out.write.mode("overwrite").parquet(stage)
-        from .maintenance import _promote_staged
-
-        new_frags = _promote_staged(path, stage)
-        fragments = [FR.FragmentInfo(i, f.file, f.row_count, f.stats)
-                     for i, f in enumerate(new_frags)]
-        # the rewrite replaces EVERY fragment, so no stale bytes survive
-        # for ANY previously dropped column — clear the whole guard, not
-        # just the re-added name
-        return FR.commit(
-            path, fragments, mode="overwrite",
-            meta={"schema": out.schema.json(), "dropped_columns": [],
-                  "add_column": {"name": name, "base_version": manifest.version}},
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-def _add_column_remote(spark, path: str, name: str, expr, s3) -> FR.Manifest:
-    """Computed-column backfill for an s3:// dataset (either backend):
-    the file-attributed remote reader scans the current version, every
-    task PUTs its widened fragment straight to s3 (no driver funnel —
-    the same executor-direct shape as the remote DELETE/MERGE rewrites),
-    and the driver commits ONE conditional-PUT overwrite under CAS. The
-    full rewrite clears the dropped-name resurrection guard, same
-    contract as the local twins."""
-    import pyarrow as pa
-
-    from ..types import spark_schema_to_arrow
-    from . import lance_format as LF
-    from .maintenance import _remote_reader
-    from .writer import _put_fragments_from_tasks, produce_native_fragments
-
     storage = s3.to_storage_options() if s3 is not None else None
     col = F.expr(expr) if isinstance(expr, str) else expr
     if LF.is_native_dataset(path, storage):
+        if not is_remote(path):
+            return _add_column_native(spark, path, name, expr)
+        from .maintenance import _remote_reader
+        from .writer import produce_native_fragments
+
         mf = LF.read_native_manifest(path, storage_options=storage)
         if not mf.fragments:
             raise FileNotFoundError(f"dataset {path} has no fragments")
@@ -340,21 +279,19 @@ def _add_column_remote(spark, path: str, name: str, expr, s3) -> FR.Manifest:
                          storage_options=storage)
         return FR.read_manifest_compat(path, storage_options=storage)
     manifest = FR.read_manifest(path, None, storage)
-    current = dataset_schema(path, storage_options=storage)
+    current = dataset_schema(path, manifest=manifest, storage_options=storage)
     if name in current.names:
         raise ValueError(f"column {name!r} already exists; "
                          f"table schema is {current.names}")
-    out = _remote_reader(spark, path, s3).withColumn(name, col)
-    results = _put_fragments_from_tasks(out, str(path).rstrip("/"), storage,
-                                        max_rows=1_000_000,
-                                        bloom_columns=[])
-    fragments = [FR.FragmentInfo(i, f"{FR.DATA_DIR}/{fn}", rows, stats)
-                 for i, (fn, rows, stats) in enumerate(results)]
-    return FR.commit(
-        path, fragments, mode="overwrite",
+    out = _file_scan(spark, path, manifest, s3).withColumn(name, col)
+    # the rewrite replaces EVERY fragment, so no stale bytes survive for
+    # ANY previously dropped column — clear the whole guard, not just the
+    # re-added name
+    return _rewrite_commit(
+        path, storage, manifest, {f.file for f in manifest.fragments}, out,
         meta={"schema": out.schema.json(), "dropped_columns": [],
               "add_column": {"name": name, "base_version": manifest.version}},
-        expected_base_version=manifest.version, storage_options=storage)
+        bloom_cols=[])
 
 
 # --- native (stdlib codec) twins --------------------------------------------

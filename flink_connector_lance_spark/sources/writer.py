@@ -1,24 +1,27 @@
 """Dataset writer — executor-side fragment production + driver-side
 single-winner commit.
 
-The reference buffers rows per subtask and commits a version per flush
-(ref LanceSink.java:133-199), which serializes writers on the manifest.
-Here the write is two-phase, the shape a 100 TB cluster needs
-(SURVEY.md §3.2 Spark equivalent):
+The reference writes fragments inside its sink tasks and commits one
+version per flush (ref LanceSink.java:133-199). Here every write and
+every copy-on-write rewrite has that shape, for a local directory and an
+s3:// warehouse alike (SURVEY.md §3.2 Spark equivalent):
 
-1. executors write fragment files in parallel into a staging area
-   (plain ``df.write.parquet`` — Spark's committer gives atomic task
-   output), honoring ``write.max-rows-per-file``
-   (ref config/LanceOptions.java:112-116) via
-   ``spark.sql.files.maxRecordsPerFile``;
-2. the driver promotes staged files to ``data/`` and commits ONE new
-   manifest version (``append`` | ``overwrite`` —
-   ref LanceSink.java:163-190) with O_EXCL conflict retry.
+1. ``write_fragments``: one ``mapInArrow`` stage whose tasks stream their
+   partition into ``data/<uuid>.parquet`` through the storage seam
+   (sources/fs.py ``store.writing`` — in place on a local store, a
+   worker-local scratch file PUT to the key on an object store), rolling
+   to a new file at ``write.max-rows-per-file``
+   (ref config/LanceOptions.java:112-116), so worker memory stays bounded
+   by one row group. Each task returns only the file, its rows, its zone
+   map with the sha256 digest and its bloom entry — the data bytes never
+   touch the driver;
+2. the driver commits ONE new manifest version (``append`` |
+   ``overwrite`` — ref LanceSink.java:163-190) through the seam's
+   ``create_exclusive`` (O_EXCL locally, a conditional PUT on s3).
 
-On s3:// targets phase 1 is executor-direct (no staging dir at all):
-each task PUTs its fragments straight to the object store and ships
-back only (file, rows, stats); the driver's share of a 100 TB write is
-one conditional-PUT manifest, not one byte of data.
+A fragment lands before any manifest names it, so a crashed or retried
+task leaves only unreferenced files — never a torn version; vacuum
+age-gates such keys so an in-flight write is not collected.
 
 Overwrite replaces the fragment list in the new version instead of
 pre-deleting the directory (the reference deletes the dataset dir first —
@@ -26,10 +29,6 @@ ref LanceSink.java:123-127 — losing MVCC history; we keep old versions
 readable)."""
 
 from __future__ import annotations
-
-import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 
@@ -84,20 +83,9 @@ def write_dataset(
             )
         return _write_lance(df, path, mode, opts)
     from . import lance_format as LF
-    from .fs import is_remote
 
-    if is_remote(path):
-        storage = opts.s3.to_storage_options() if opts.s3 else None
-        if LF.is_native_dataset(path, storage):
-            # REAL Lance dataset on s3: route through the codec (a JSON
-            # manifest beside the binary chain would fork the dataset)
-            return write_native_pure(df, path, mode, opts,
-                                     commit_meta=commit_meta,
-                                     expected_base_version=expected_base_version)
-        return _write_remote(df, path, mode, opts, commit_meta,
-                             expected_base_version)
-
-    if LF.is_native_dataset(path):
+    storage = opts.s3.to_storage_options() if opts.s3 else None
+    if LF.is_native_dataset(path, storage):
         # REAL Lance dataset (binary manifests) and no lance package:
         # committing .manifest.json beside the binary chain would fork
         # the dataset, so route through the stdlib v2 codec. commit_meta
@@ -106,221 +94,158 @@ def write_dataset(
         return write_native_pure(df, path, mode, opts,
                                  commit_meta=commit_meta,
                                  expected_base_version=expected_base_version)
-    return _write_local(df, path, mode, opts, commit_meta,
-                        expected_base_version)
-
-
-def _write_local(df: DataFrame, path: str, mode: WriteMode, opts: DatasetOptions,
-                 commit_meta: dict | None = None,
-                 expected_base_version: "int | None" = None) -> FR.Manifest:
     # append-time schema contract: align the batch to the table schema
     # (reorder / refuse / evolve per write.schema-evolution) BEFORE any
     # fragment is produced, so fragment files never carry a surprise shape
-    if mode is WriteMode.APPEND and FR.latest_version(path) is not None:
-        from .schema_evolution import align_for_append, dataset_schema, dropped_columns
-
-        df = align_for_append(df, dataset_schema(path), opts.schema_evolution,
-                              dropped=dropped_columns(path))
-    data_dir = os.path.join(path, FR.DATA_DIR)
-    os.makedirs(data_dir, exist_ok=True)
-    stage = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
-    try:
-        (
-            df.write.option("maxRecordsPerFile", opts.write_max_rows_per_file)
-            .mode("overwrite")
-            .parquet(stage)
-        )
-        # thread-pooled footer-read + rename per staged file (driver-side
-        # O(files) otherwise — see maintenance._promote_staged)
-        from .maintenance import _promote_staged
-
-        new_fragments = _promote_staged(path, stage)
-        if opts.bloom_columns:
-            # fragment-parallel point-lookup blooms (sources/bloom.py);
-            # sidecars land BEFORE the commit so a reader never sees a
-            # manifest referencing a not-yet-written bloom
-            from .bloom import attach_blooms
-
-            new_fragments = attach_blooms(
-                df.sparkSession, path, new_fragments, opts.bloom_columns
-            )
-        # the (possibly evolved) schema rides in the same atomic commit;
-        # maintenance commits inherit it (FR.commit), so it is the
-        # authoritative table schema until the next evolving write
-        meta = dict(commit_meta or {})
-        meta.setdefault("schema", df.schema.json())
-        if mode is WriteMode.OVERWRITE:
-            # a full overwrite replaces EVERY fragment, so no stale bytes
-            # survive: clear the column-resurrection guard (maintenance
-            # overwrites keep old fragment files and must inherit it,
-            # which FR.commit does when the key is absent)
-            meta.setdefault("dropped_columns", [])
-        return FR.commit(path, new_fragments, mode=mode.value, meta=meta,
-                         expected_base_version=expected_base_version)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-def _write_remote(df: DataFrame, path: str, mode: WriteMode,
-                  opts: DatasetOptions, commit_meta: dict | None = None,
-                  expected_base_version: "int | None" = None) -> FR.Manifest:
-    """Executor-direct write path for s3:// datasets: each task encodes
-    its partition into ≤ ``write.max-rows-per-file`` parquet fragments
-    and PUTs them **from inside the task** straight to
-    ``s3://…/data/<uuid>.parquet`` via fsspec — no driver staging. Only
-    the tiny ``(file, rows, stats)`` triples travel back; the driver
-    does the one step that must be centralized, the conditional-put
-    manifest commit (``fs.create_exclusive`` — ``If-None-Match: *``,
-    the remote twin of the local O_EXCL single-winner commit).
-    Credentials ride in ``opts.s3`` (the reference's s3-* option
-    surface — ref table/LanceCatalogFactory.java:77-111) and are
-    serialized into the task closure, so every Python worker opens the
-    object store with the same mapped options the driver planned with.
-
-    At 100 TB this is the only shape that works: data bytes flow
-    executor→S3 in parallel across the cluster (a driver-staged upload
-    would serialize the whole write through one machine's disk and NIC,
-    and on a multi-node cluster ``df.write.parquet(<driver-local dir>)``
-    lands task output on executor disks the driver can't even see).
-
-    Uploading data files BEFORE the manifest keeps the reader contract:
-    a committed manifest never references a not-yet-written fragment; a
-    crash (or a retried task) leaves only unreferenced garbage keys,
-    never a torn version. Bloom sidecars are built from the in-memory
-    Arrow table and PUT next to their fragment in the same task, before
-    the commit — same lifecycle contract as local sidecars."""
-    from .fs import get_fs
-
-    storage = opts.s3.to_storage_options() if opts.s3 else None
-    fs = get_fs(path, storage)  # fail fast on a missing fsspec/s3fs
     if mode is WriteMode.APPEND and FR.latest_version(path, storage) is not None:
-        import json
-
-        from pyspark.sql.types import StructType
-
-        from .schema_evolution import align_for_append
+        from .schema_evolution import align_for_append, dataset_schema
 
         m = FR.read_manifest(path, storage_options=storage)
-        sj = m.meta.get("schema")
-        if sj:
-            current = StructType.fromJson(json.loads(sj))
-        else:
-            # pre-evolution layout (no recorded schema): derive it from
-            # the first fragment's parquet footer over fsspec — the same
-            # fallback the local path uses
-            from .schema_evolution import dataset_schema
-
-            current = dataset_schema(path, storage_options=storage)
-        df = align_for_append(df, current, opts.schema_evolution,
+        df = align_for_append(df, dataset_schema(path, manifest=m,
+                                                 storage_options=storage),
+                              opts.schema_evolution,
                               dropped=list(m.meta.get("dropped_columns", [])))
-    results = _put_fragments_from_tasks(
-        df, str(path).rstrip("/"), storage,
-        max_rows=opts.write_max_rows_per_file,
-        bloom_columns=list(opts.bloom_columns or []))
-    new_fragments = [
-        FR.FragmentInfo(i, f"{FR.DATA_DIR}/{fn}", rows, stats)
-        for i, (fn, rows, stats) in enumerate(results)
-    ]
+    new_fragments = write_fragments(df, path, storage,
+                                    opts.write_max_rows_per_file,
+                                    opts.bloom_columns)
+    # the (possibly evolved) schema rides in the same atomic commit;
+    # maintenance commits inherit it (FR.commit), so it is the
+    # authoritative table schema until the next evolving write
     meta = dict(commit_meta or {})
     meta.setdefault("schema", df.schema.json())
     if mode is WriteMode.OVERWRITE:
+        # a full overwrite replaces EVERY fragment, so no stale bytes
+        # survive: clear the column-resurrection guard (maintenance
+        # overwrites keep old fragment files and must inherit it, which
+        # FR.commit does when the key is absent)
         meta.setdefault("dropped_columns", [])
     return FR.commit(path, new_fragments, mode=mode.value, meta=meta,
                      expected_base_version=expected_base_version,
                      storage_options=storage)
 
 
-def _put_fragments_from_tasks(df: DataFrame, root: str,
-                              storage: dict | None, max_rows: int,
-                              bloom_columns: list[str]) -> list[tuple]:
-    """``mapInArrow`` stage of the remote write: every task slices its
-    partition into ≤``max_rows`` chunks, parquet-encodes each chunk to a
-    worker-local scratch file (footer stats come from the real encoded
-    bytes), PUTs it to ``<root>/data/<uuid>.parquet`` through fsspec,
-    and emits one ``(file, rows, stats-json)`` row per fragment.
-    Returns the collected triples ordered by (partition, chunk) so
-    fragment ids stay deterministic regardless of task completion
-    order. Arrow-native end to end — no pandas round trip, full type
-    fidelity for timestamps/arrays/binary."""
-    import json as _json
+# a task flushes its buffered batches as one parquet row group at this
+# size (Spark's own parquet.block.size default), or at the file's row cap
+ROW_GROUP_BYTES = 128 << 20
 
-    from pyspark.sql.types import (LongType, IntegerType, StringType,
+
+def write_parquet_fragment(store, key: str, batches,
+                           bloom_columns: "list[str] | None" = None
+                           ) -> "tuple[int, dict] | None":
+    """Task side: stream ``batches`` into one parquet fragment at ``key``
+    through the storage seam, buffering at most one row group. Returns
+    ``(rows, stats)`` — the footer's zone map, the file's sha256 and, for
+    ``bloom_columns``, the entry of the bloom sidecar written beside it —
+    or None, writing nothing, when ``batches`` holds no rows."""
+    import itertools
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .bloom import BLOOM_STATS_KEY, write_bloom_sidecar
+
+    it = (b for b in batches if b.num_rows)
+    first = next(it, None)
+    if first is None:
+        return None
+    rows = 0
+    kept: list = []  # the bloom columns of every row written
+    with store.writing(key) as local:
+        with pq.ParquetWriter(local, first.schema) as pw:
+            buf, size = [], 0
+            for b in itertools.chain((first,), it):
+                buf.append(b)
+                size += b.nbytes
+                rows += b.num_rows
+                if bloom_columns:
+                    kept.append(b.select([c for c in bloom_columns
+                                          if c in b.schema.names]))
+                if size >= ROW_GROUP_BYTES:
+                    tbl = pa.Table.from_batches(buf)
+                    pw.write_table(tbl, row_group_size=tbl.num_rows)
+                    buf, size = [], 0
+            if buf:
+                tbl = pa.Table.from_batches(buf)
+                pw.write_table(tbl, row_group_size=tbl.num_rows)
+        stats = FR.parquet_fragment_stats(local) or {}
+        stats[FR.DIGEST_STATS_KEY] = FR.sha256_of(local)
+    if bloom_columns:
+        entry = write_bloom_sidecar(store, key, pa.Table.from_batches(kept),
+                                    bloom_columns)
+        if entry is not None:
+            stats[BLOOM_STATS_KEY] = entry
+    return rows, stats
+
+
+def write_fragments(df: DataFrame, path: str, storage: "dict | None",
+                    max_rows: int,
+                    bloom_columns: "list[str] | None" = None
+                    ) -> "list[FR.FragmentInfo]":
+    """The one fragment producer of the emulated format: a ``mapInArrow``
+    stage whose every task writes its partition into ``data/<uuid>.parquet``
+    files of at most ``max_rows`` rows (``write_parquet_fragment``), and
+    emits one ``(file, rows, stats)`` row per file. NOTHING is committed —
+    the caller owns the manifest. A task with no rows writes no file.
+    Returns the fragments ordered by (partition, file) so fragment ids
+    stay deterministic regardless of task completion order. Arrow-native
+    end to end — no pandas round trip, full type fidelity for
+    timestamps/arrays/binary."""
+    import json
+
+    from pyspark.sql.types import (IntegerType, LongType, StringType,
                                    StructField, StructType)
 
+    from .fs import absolute
+
+    root = absolute(path)
     max_rows = max(1, int(max_rows))
-    bloom_cols = list(bloom_columns)
+    bloom_cols = list(bloom_columns or [])
 
     def produce(batches):
-        import json
-        import tempfile
-        import uuid as _uuid
+        import json as _json
 
         import pyarrow as pa
-        import pyarrow.parquet as pq
         from pyspark import TaskContext
 
         from flink_connector_lance_spark.sources import fragments as _FR
-        from flink_connector_lance_spark.sources.bloom import (
-            BLOOM_STATS_KEY, BLOOM_SUFFIX, build_bloom_payload,
-        )
-        from flink_connector_lance_spark.sources.fs import get_fs as _get_fs
+        from flink_connector_lance_spark.sources.fs import store_for
+        from flink_connector_lance_spark.sources.writer import (
+            write_parquet_fragment)
 
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        fs = None
-        out_schema = pa.schema([
-            pa.field("pid", pa.int64()), pa.field("seq", pa.int32()),
-            pa.field("file", pa.string()), pa.field("rows", pa.int64()),
-            pa.field("stats", pa.string()),
-        ])
-        acc: list = []
-        acc_rows = 0
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx else 0
+        store = store_for(root, storage)
+        pending = None
+
+        def take():
+            # the next ≤ max_rows rows of the partition, batch by batch
+            nonlocal pending
+            left = max_rows
+            while left:
+                b = pending if pending is not None else next(batches, None)
+                pending = None
+                if b is None:
+                    return
+                if b.num_rows > left:
+                    b, pending = b.slice(0, left), b.slice(left)
+                left -= b.num_rows
+                yield b
+
         seq = 0
-
-        def flush():
-            nonlocal acc, acc_rows, seq, fs
-            if not acc_rows:
-                return None
-            tbl = pa.Table.from_batches(acc)
-            acc, acc_rows = [], 0
-            if fs is None:
-                fs = _get_fs(root, storage)
-            fname = f"{_uuid.uuid4().hex}.parquet"
-            url = f"{root}/{_FR.DATA_DIR}/{fname}"
-            with tempfile.NamedTemporaryFile(suffix=".parquet") as tmp:
-                pq.write_table(tbl, tmp.name)
-                stats = _FR.parquet_fragment_stats(tmp.name) or {}
-                stats[_FR.DIGEST_STATS_KEY] = _FR.sha256_of(tmp.name)
-                fs.put(tmp.name, url)
-            if bloom_cols:
-                built = build_bloom_payload(tbl, bloom_cols)
-                if built is not None:
-                    payload, cols_meta = built
-                    side = fname + BLOOM_SUFFIX
-                    with fs.open(f"{root}/{_FR.DATA_DIR}/{side}", "wb") as fh:
-                        fh.write(json.dumps(payload).encode())
-                    stats[BLOOM_STATS_KEY] = {"file": side, "cols": cols_meta}
-            row = pa.record_batch(
-                [pa.array([pid], pa.int64()), pa.array([seq], pa.int32()),
-                 pa.array([fname], pa.string()),
-                 pa.array([tbl.num_rows], pa.int64()),
-                 pa.array([json.dumps(stats)], pa.string())],
-                schema=out_schema)
+        while True:
+            name = _FR.new_fragment_name()
+            got = write_parquet_fragment(
+                store, f"{root}/{_FR.DATA_DIR}/{name}", take(), bloom_cols)
+            if got is None:
+                return
+            rows, stats = got
+            yield pa.RecordBatch.from_pydict(
+                {"pid": [pid], "seq": [seq], "file": [name], "rows": [rows],
+                 "stats": [_json.dumps(stats)]},
+                schema=pa.schema([("pid", pa.int64()), ("seq", pa.int32()),
+                                  ("file", pa.string()), ("rows", pa.int64()),
+                                  ("stats", pa.string())]))
             seq += 1
-            return row
-
-        for batch in batches:
-            while batch.num_rows:
-                take = min(batch.num_rows, max_rows - acc_rows)
-                acc.append(batch.slice(0, take))
-                acc_rows += take
-                batch = batch.slice(take)
-                if acc_rows >= max_rows:
-                    got = flush()
-                    if got is not None:
-                        yield got
-        got = flush()
-        if got is not None:
-            yield got
 
     out_type = StructType([
         StructField("pid", LongType()), StructField("seq", IntegerType()),
@@ -329,7 +254,9 @@ def _put_fragments_from_tasks(df: DataFrame, root: str,
     ])
     rows = df.mapInArrow(produce, out_type).collect()
     rows.sort(key=lambda r: (r.pid, r.seq))
-    return [(r.file, r.rows, _json.loads(r.stats) or None) for r in rows]
+    return [FR.FragmentInfo(i, f"{FR.DATA_DIR}/{r.file}", r.rows,
+                            json.loads(r.stats) or None)
+            for i, r in enumerate(rows)]
 
 
 def _write_lance(df: DataFrame, path: str, mode: WriteMode, opts: DatasetOptions) -> FR.Manifest:
@@ -499,62 +426,41 @@ def produce_native_fragments(df: DataFrame, path: str, schema,
     """Executor fan-out of the native write: every task encodes its
     partition into ``data/<uuid>.lance`` v2 files (sliced at ``max_rows``
     — each file stays one single-page-per-column encode, the shape the
-    decoder and lance 0.24 expect) and reports ``(file_name, rows)``
-    back. NOTHING is committed — callers (write_native_pure, native
-    compaction) decide the fragment list; uncommitted files are
-    invisible garbage. On an s3:// ``path`` each task encodes to a
-    worker-local scratch file and PUTs it (and its bloom sidecar)
-    straight to the object store — executor-direct, like the parquet
-    remote write."""
-    from . import lance_format as LF
-    from .fs import is_remote
+    decoder and lance 0.24 expect) through the storage seam (in place
+    locally, PUT from the task on s3) and reports ``(file_name, rows,
+    stats)`` back. NOTHING is committed — callers (write_native_pure,
+    native compaction) decide the fragment list; uncommitted files are
+    invisible garbage."""
+    from .fs import absolute
 
-    remote = is_remote(path)
-    data_dir = (f"{str(path).rstrip('/')}/{LF.DATA_DIR}" if remote
-                else os.path.join(path, LF.DATA_DIR))
-    if not remote:
-        os.makedirs(data_dir, exist_ok=True)
+    root = absolute(path)
 
     def produce(iterator):
+        import json as _json
         import uuid as _uuid
 
         import pyarrow as _pa
 
         from flink_connector_lance_spark.sources import fragments as _FR
         from flink_connector_lance_spark.sources import lance_format as _LF
-
-        import json as _json
+        from flink_connector_lance_spark.sources.bloom import (
+            BLOOM_STATS_KEY, write_bloom_sidecar)
+        from flink_connector_lance_spark.sources.fs import store_for
 
         batches = list(iterator)
         if not batches:
             return
         tbl = _pa.Table.from_batches(batches).cast(schema)
-        fs = None  # lazy-init ONCE per task, like _put_fragments_from_tasks
-        if remote:
-            from flink_connector_lance_spark.sources.fs import get_fs as _get_fs
-
-            fs = _get_fs(path, storage_options)
+        store = store_for(root, storage_options)
         out_files, out_rows, out_stats = [], [], []
-        for start in range(0, max(tbl.num_rows, 1), max_rows):
+        for start in range(0, tbl.num_rows, max_rows):
             piece = tbl.slice(start, max_rows)
-            if piece.num_rows == 0:
-                continue
             fname = f"{_uuid.uuid4()}.lance"
-            if remote:
-                import tempfile as _tempfile
-
-                with _tempfile.NamedTemporaryFile(suffix=".lance") as tmp:
-                    _LF.write_native_file(piece, tmp.name,
-                                          structural=structural,
-                                          compression=compression)
-                    digest = _FR.sha256_of(tmp.name)
-                    fs.put(tmp.name, f"{data_dir}/{fname}")
-            else:
-                local_out = os.path.join(data_dir, fname)
-                _LF.write_native_file(piece, local_out,
-                                      structural=structural,
+            key = f"{root}/{_LF.DATA_DIR}/{fname}"
+            with store.writing(key) as local:
+                _LF.write_native_file(piece, local, structural=structural,
                                       compression=compression)
-                digest = _FR.sha256_of(local_out)
+                digest = _FR.sha256_of(local)
             out_files.append(fname)
             out_rows.append(piece.num_rows)
             # zone map for the commit's stats sidecar: planning-time
@@ -566,28 +472,10 @@ def produce_native_fragments(df: DataFrame, path: str, schema,
                 # point-lookup bloom, built from the rows already in
                 # memory (no re-read); the manifest entry rides in the
                 # same stats sidecar the zone maps use
-                from flink_connector_lance_spark.sources.bloom import (
-                    BLOOM_STATS_KEY,
-                    BLOOM_SUFFIX,
-                    build_bloom_payload,
-                    build_bloom_sidecar_from_table,
-                )
-
-                if remote:
-                    built = build_bloom_payload(piece, bloom_columns)
-                    entry = None
-                    if built is not None:
-                        payload, cols_meta = built
-                        side = fname + BLOOM_SUFFIX
-                        with fs.open(f"{data_dir}/{side}", "wb") as fh:
-                            fh.write(_json.dumps(payload).encode())
-                        entry = {"file": side, "cols": cols_meta}
-                else:
-                    entry = build_bloom_sidecar_from_table(
-                        piece, os.path.join(data_dir, fname), bloom_columns)
+                entry = write_bloom_sidecar(store, key, piece, bloom_columns)
                 if entry is not None:
                     st[BLOOM_STATS_KEY] = entry
-            out_stats.append(_json.dumps(st) if st else None)
+            out_stats.append(_json.dumps(st))
         yield _pa.RecordBatch.from_pydict(
             {"file": out_files, "rows": out_rows, "stats": out_stats},
             schema=_pa.schema([("file", _pa.string()), ("rows", _pa.int64()),

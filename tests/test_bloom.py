@@ -15,7 +15,6 @@ from flink_connector_lance_spark.sources.bloom import (
     BLOOM_STATS_KEY,
     BLOOM_SUFFIX,
     BloomFilter,
-    attach_blooms,
     build_bloom_sidecar,
     estimated_fpp,
     parse_bloom_columns,
@@ -270,21 +269,6 @@ def test_write_dataset_attach_blooms_distributed(spark, tmp_path):
     r = LanceDataSourceReader({"path": path})
     r.pushFilters([EqualTo(("id",), 123)])
     assert len(r.partitions()) < len(m.fragments)
-
-
-def test_attach_blooms_preserves_fragment_ids_and_stats(spark, tmp_path):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    root = tmp_path / "ds" / "data"
-    root.mkdir(parents=True)
-    fp = str(root / "frag-a.parquet")
-    pq.write_table(pa.table({"id": [1, 2, 3]}), fp)
-    frags = [FR.FragmentInfo(0, "data/frag-a.parquet", 3, {"id": {"min": 1, "max": 3, "null_count": 0}})]
-    out = attach_blooms(spark, str(tmp_path / "ds"), frags, ["id"])
-    assert out[0].fragment_id == 0
-    assert out[0].stats["id"]["min"] == 1  # zone map untouched
-    assert "id" in out[0].stats[BLOOM_STATS_KEY]["cols"]
 
 
 # ------------------------------------------------------------- vacuum
