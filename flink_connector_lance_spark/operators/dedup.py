@@ -1,6 +1,6 @@
 """Deduplication operators for training-data pipelines.
 
-Four families, each shuffle-aware for 100 TB scale:
+Five families, each shuffle-aware for 100 TB scale:
 
 - exact:        hash-groupBy on a content digest (one shuffle on the
                 digest; partial aggregation map-side).
@@ -16,31 +16,50 @@ Four families, each shuffle-aware for 100 TB scale:
 - embedding:    cosine near-dup; all-pairs locally, LSH-bucketed at scale
                 (see operators/ann.py for the bucketing primitive).
 
+Clustering (connected_components) labels every document with the
+smallest id reachable over the pairs. It has two routes, chosen by one
+fetch of at most ``CAP + 1`` edges: at or under ``CAP`` edges, union-find
+on the driver with the labels joined back as a broadcast Arrow-built
+local relation; above it, distributed min-label propagation.
+resolve_duplicates then keeps one survivor per cluster.
+
 Hashing is md5-hex based so the DuckDB oracle can reproduce every
 signature bit-for-bit (Spark murmur3 `hash()` has no DuckDB equivalent).
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
+from pyspark.sql.types import StructField, StructType
 
+from ..types import UnsupportedTypeError, spark_type_to_arrow
 from . import text as T
 
+# Largest edge list connected_components clusters on the driver: 2^20
+# edges are ~16 MiB of int64 id pairs in Arrow and about a second of
+# union-find. Above it the edges stay distributed.
+CAP = 1 << 20
 
-def shingles_of(ws: Column, k: int = 3) -> Column:
-    """Distinct word k-grams over an already-materialized token array.
 
-    Pass an *attribute* (a real column), not the split expression —
-    otherwise codegen re-splits the text for every element access and the
-    operator degrades to O(tokens^2) per row."""
-    n = F.size(ws)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    gram = F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(ws, (i + j + 1).cast("int")) for j in range(k)]),
-    )
-    return F.array_distinct(gram)
+def _q(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def shingles_sql(ws: str, k: int = 3) -> str:
+    """SQL text of the distinct word k-grams over the already-materialized
+    token-array column named ``ws``.
+
+    Pass a materialized *attribute*, not the split expression — otherwise
+    codegen re-splits the text for every element access and the operator
+    degrades to O(tokens^2) per row. One SQL string parses once, where the
+    same tree built from Column calls costs one py4j round trip per node."""
+    ws = _q(ws)
+    grams = ", ".join(f"element_at({ws}, CAST(i + {j} + 1 AS INT))" for j in range(k))
+    return (f"array_distinct(transform(sequence(0, greatest(size({ws}) - {k}, 0)), "
+            f"i -> concat_ws(' ', {grams})))")
 
 
 def with_shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3,
@@ -49,13 +68,8 @@ def with_shingles(df: DataFrame, text_col: str, id_col: str, k: int = 3,
     first, shingles in the second. Catalyst's CollapseProject keeps
     multiply-referenced non-cheap expressions un-inlined, so each is
     computed exactly once per row."""
-    toks = df.select(F.col(id_col), T.tokens(text_col).alias("__ws"))
-    return toks.select(F.col(id_col), shingles_of(F.col("__ws"), k).alias(out_col))
-
-
-def shingles(text_col, k: int = 3) -> Column:
-    """Expression form (single use only — see with_shingles for hot paths)."""
-    return shingles_of(T.tokens(text_col), k)
+    toks = df.selectExpr(_q(id_col), f"split({_q(text_col)}, ' ') AS __ws")
+    return toks.selectExpr(_q(id_col), f"{shingles_sql('__ws', k)} AS {_q(out_col)}")
 
 
 MINHASH_P = (1 << 31) - 1  # Mersenne prime modulus of the affine family
@@ -69,38 +83,22 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     return [(2 * h + 1, 1000003 * h + 12345) for h in range(num_hashes)]
 
 
-def shingle_hashes(shingle_col: Column) -> Column:
-    """ONE md5 pass per shingle: first 8 hex chars as a 31-bit base hash
-    (mod p). Materialize this array once (stacked projection) — it is the
-    only cryptographic-hash cost of the whole signature stage."""
-    return F.transform(
-        shingle_col,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long") % MINHASH_P,
-    )
+def shingle_hashes_sql(shingles: str) -> str:
+    """SQL text of ONE md5 pass per shingle of the array column named
+    ``shingles``: first 8 hex chars as a 31-bit base hash (mod p). Materialize this array once (stacked projection) —
+    it is the only cryptographic-hash cost of the whole signature stage."""
+    return (f"transform({_q(shingles)}, "
+            f"s -> CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT) % {MINHASH_P})")
 
 
-def minhash_from_hashes(hash_col: "Column | str", num_hashes: int = 16) -> list[Column]:
-    """H min-hashes from an already-materialized base-hash array via the
-    universal affine family h_i(v) = (a_i*v + b_i) mod p — integer
-    arithmetic only, so the md5 cost is paid once per shingle instead of
-    once per (hash, shingle) (measured ~40% off the signature stage).
-
-    A string column name builds each hash as ONE SQL parse (identical
-    integer lambda, ~5x fewer py4j round trips per signature)."""
-    if isinstance(hash_col, str):
-        return [
-            F.expr(f"array_min(transform(`{hash_col}`, "
-                   f"v -> (v * {a} + {b}) % {MINHASH_P}))").alias(f"mh{h}")
-            for h, (a, b) in enumerate(minhash_coeffs(num_hashes))
-        ]
-
-    def _affine(a: int, b: int):
-        # closure, not default args: pyspark infers lambda arity and
-        # extra parameters would bind to the array index
-        return lambda v: (v * a + b) % MINHASH_P
-
+def minhash_from_hashes(hash_col: str, num_hashes: int = 16) -> list[str]:
+    """SQL text of H min-hashes ``mh0..`` from an already-materialized
+    base-hash array column via the universal affine family
+    h_i(v) = (a_i*v + b_i) mod p — integer arithmetic only, so the md5
+    cost is paid once per shingle instead of once per (hash, shingle)
+    (measured ~40% off the signature stage)."""
     return [
-        F.array_min(F.transform(hash_col, _affine(a, b))).alias(f"mh{h}")
+        f"array_min(transform({_q(hash_col)}, v -> (v * {a} + {b}) % {MINHASH_P})) AS mh{h}"
         for h, (a, b) in enumerate(minhash_coeffs(num_hashes))
     ]
 
@@ -128,20 +126,22 @@ def minhash_lsh_pairs(
     are the join on band keys and the final distinct — both on candidate
     volume, not corpus volume."""
     rows_per_band = num_hashes // bands
+    qid = _q(id_col)
     sh = with_shingles(df, text_col, id_col, shingle_k)
     # three stacked projections: shingles -> base hashes (the single md5
-    # pass) -> signatures; each array materializes exactly once per row
-    hv = sh.select(F.col(id_col), shingle_hashes(F.col("shingles")).alias("__hv"))
-    sig = hv.select(F.col(id_col), *minhash_from_hashes("__hv", num_hashes))
-    band_structs = []
-    for b in range(bands):
-        parts = [F.col(f"mh{h}") for h in range(b * rows_per_band, (b + 1) * rows_per_band)]
-        band_structs.append(
-            F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("~", *parts)).alias("key"))
-        )
-    bands_df = sig.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    # pass) -> signatures; each array materializes exactly once per row.
+    # Every projection is SQL text: one parse per select instead of one
+    # py4j round trip per expression node.
+    hv = sh.selectExpr(qid, f"{shingle_hashes_sql('shingles')} AS __hv")
+    sig = hv.selectExpr(qid, *minhash_from_hashes("__hv", num_hashes))
+    band_keys = ", ".join(
+        f"struct({b} AS band, md5(concat_ws('~', "
+        + ", ".join(f"mh{h}" for h in range(b * rows_per_band, (b + 1) * rows_per_band))
+        + ")) AS key)"
+        for b in range(bands)
+    )
+    bands_df = sig.selectExpr(qid, f"explode(array({band_keys})) AS bk") \
+        .selectExpr(qid, "bk.band AS band", "bk.key AS key")
     # materialize the band keys ONCE: a self-join has no common-subtree
     # reuse in Catalyst, so without this the md5-heavy signature pipeline
     # (the query's dominant CPU) executes twice — once per join side. The
@@ -151,12 +151,11 @@ def minhash_lsh_pairs(
     # still lazy (plan-shape tests run zero jobs); blocks are freed with
     # the DataFrame (no session-cache leak).
     bands_df = bands_df.localCheckpoint(eager=False)
-    a = bands_df.alias("a")
-    b_ = bands_df.alias("b")
     return (
-        a.join(b_, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        bands_df.alias("a")
+        .join(bands_df.alias("b"),
+              F.expr(f"a.band = b.band AND a.key = b.key AND a.{qid} < b.{qid}"))
+        .selectExpr(f"a.{qid} AS id_a", f"b.{qid} AS id_b")
         .distinct()
     )
 
@@ -472,17 +471,89 @@ def connected_components(
     relation, labeling every vertex with the SMALLEST id reachable from
     it (the canonical keep-id of its duplicate cluster).
 
-    Algorithm: iterative min-label propagation — each round every vertex
-    takes min(own label, neighbors' labels) via an equi-join on the edge
-    list, stopping when a round changes nothing. This is the standard
-    shuffle-based CC for data too big for one machine (GraphX/GraphFrames
-    run the same plan); rounds needed = component diameter, and near-dup
-    clusters are shallow (dozens of docs), so it converges in a handful
-    of rounds. Each round is one shuffle join + one aggregate; the
-    convergence check is a driver-side count on the CHANGED set only.
-
     ``vertices``: one row per ``id_col``; ``pairs``: (id_a, id_b)
-    undirected near-dup edges (e.g. minhash_lsh_pairs output)."""
+    undirected near-dup edges (e.g. minhash_lsh_pairs output). Every
+    pair endpoint must be a row of ``vertices`` — true whenever the pairs
+    derive from the same frame. Output: (``id_col``, component).
+
+    One ``limit(CAP + 1)`` Arrow fetch of the edges is one Spark job; it
+    both picks the route and brings the edges to the driver:
+
+    - at most ``CAP`` edges: union-find on the driver, the smaller root
+      always winning — the same min-label fixpoint as propagation, with
+      no per-round jobs. The labels of non-root vertices come back as a
+      local relation built from a ``pyarrow.Table`` (a LocalTableScan,
+      no Python-worker pass to materialize it) typed like the vertex id,
+      and join as ``vertices`` (lazily checkpointed) LEFT JOIN
+      broadcast(labels), so a vertex with no edge keeps its own id;
+    - more than ``CAP`` edges (or an id type ``spark_type_to_arrow``
+      does not map): distributed min-label propagation, see
+      ``_propagate_components``. ``max_iterations`` bounds its rounds
+      only; it raises if the labels have not converged by then."""
+    id_type = vertices.schema[id_col].dataType
+    try:
+        arrow_id = spark_type_to_arrow(id_type)
+    except UnsupportedTypeError:
+        return _propagate_components(vertices, pairs, id_col, max_iterations)
+    edges = pairs.select("id_a", "id_b").limit(CAP + 1).toArrow()
+    if edges.num_rows > CAP:
+        return _propagate_components(vertices, pairs, id_col, max_iterations)
+    labels = _min_labels(edges.column("id_a").to_pylist(), edges.column("id_b").to_pylist())
+    label_rel = vertices.sparkSession.createDataFrame(
+        pa.table({"__vid": pa.array(list(labels), arrow_id),
+                  "__comp": pa.array(list(labels.values()), arrow_id)}),
+        StructType([StructField("__vid", id_type), StructField("__comp", id_type)]),
+    )
+    # the vertex ids are checkpointed (lazily, like the propagation
+    # route's rounds) so the result does not carry the vertices' whole
+    # lineage into every plan built on it: a deep upstream pipeline would
+    # otherwise be re-planned and re-run by each downstream consumer
+    return (
+        vertices.select(id_col).localCheckpoint(eager=False)
+        .join(F.broadcast(label_rel), F.col(id_col) == F.col("__vid"), "left")
+        .select(F.col(id_col), F.coalesce("__comp", F.col(id_col)).alias("component"))
+    )
+
+
+def _min_labels(src: list, dst: list) -> dict:
+    """Union-find over the edges ``zip(src, dst)``: every endpoint that is
+    not the smallest id of its component -> that smallest id. Each union
+    hangs the larger root under the smaller one, so every root is its
+    component's minimum. Edges with a null endpoint join nothing in the
+    propagation route and are skipped here too."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for a, b in zip(src, dst):
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if rb < ra:
+            ra, rb = rb, ra
+        parent[rb] = ra
+    return {v: r for v in list(parent) if (r := find(v)) != v}
+
+
+def _propagate_components(
+    vertices: DataFrame, pairs: DataFrame, id_col: str, max_iterations: int,
+) -> DataFrame:
+    """connected_components above ``CAP`` edges: iterative min-label
+    propagation — each round every vertex takes min(own label, neighbors'
+    labels) via an equi-join on the edge list, stopping when a round
+    changes nothing. This is the standard shuffle-based CC for data too
+    big for one machine (GraphX/GraphFrames run the same plan). Rounds
+    needed = the most hops from a component's smallest id to one of its
+    vertices, plus one that confirms nothing changed; each is one
+    shuffle join + one aggregate, an eager checkpoint, and a driver-side
+    count on the CHANGED set only. Raises RuntimeError if round
+    ``max_iterations`` still changed a label: unconverged labels would
+    silently split a cluster."""
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionAll(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
@@ -513,8 +584,10 @@ def connected_components(
         changed = updated.filter(F.col("new_comp") != F.col("comp")).limit(1).count()
         labels = updated.select("vid", F.col("new_comp").alias("comp"))
         if changed == 0:
-            break
-    return labels.select(F.col("vid").alias(id_col), F.col("comp").alias("component"))
+            return labels.select(F.col("vid").alias(id_col), F.col("comp").alias("component"))
+    raise RuntimeError(
+        f"connected_components did not converge within max_iterations={max_iterations} "
+        "propagation rounds: a component is deeper than that; raise max_iterations")
 
 
 def resolve_duplicates(

@@ -134,6 +134,8 @@ def semantic_duplicate_pairs(
     import logging
     import math
 
+    import pyarrow as pa
+
     from .dedup import _dot_chain
 
     vecs = _as_vecs(df, id_col, vector_col)
@@ -164,11 +166,12 @@ def semantic_duplicate_pairs(
                 "cross-sub-cell pairs inside them are not scored",
                 len(hot), int(max_cell_size), max(r["n"] for r in hot),
             )
-            splits = assignments.sparkSession.createDataFrame(
-                [(int(r["cell"]), int(math.ceil(r["n"] / int(max_cell_size))))
-                 for r in hot],
-                "cell int, __nsplit int",
-            )
+            # Arrow-built: a LocalTableScan, no Python-worker pass to unpickle it
+            splits = assignments.sparkSession.createDataFrame(pa.table({
+                "cell": pa.array([int(r["cell"]) for r in hot], pa.int32()),
+                "__nsplit": pa.array(
+                    [int(math.ceil(r["n"] / int(max_cell_size))) for r in hot], pa.int32()),
+            }))
             assignments = assignments.join(F.broadcast(splits), on="cell",
                                            how="left")
             sub = F.when(

@@ -460,8 +460,10 @@ def dedup_embedding_cosine(spark, sf_dir):
     doc="Duplicate clustering: connected components over the MinHash-LSH "
         "candidate pairs, labeling every document with the smallest "
         "doc_id reachable from it (its cluster's canonical keep-id). "
-        "Spark runs iterative min-label propagation (one equi-join + "
-        "aggregate per round, rounds = component diameter — "
+        "Spark fetches the pairs once and, at or under "
+        "operators.dedup.CAP edges, runs union-find on the driver and "
+        "broadcast-joins the labels back (above the cap: distributed "
+        "min-label propagation, one equi-join + aggregate per round — "
         "operators.dedup.connected_components); the oracle computes the "
         "same fixpoint with a recursive CTE.",
 )

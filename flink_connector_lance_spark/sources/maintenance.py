@@ -322,7 +322,13 @@ def verify_integrity(spark, path: str, version: int | None = None,
                                     "expected": pdf["expected"],
                                     "actual": actual})
 
-        df = spark.createDataFrame(entries, "file string, expected string")
+        import pyarrow as pa
+
+        # Arrow-built: a LocalTableScan, no Python-worker pass to unpickle it
+        df = spark.createDataFrame(pa.table({
+            "file": pa.array([u for u, _ in entries], pa.string()),
+            "expected": pa.array([d for _, d in entries], pa.string()),
+        }))
         df = df.repartition(min(len(entries),
                                 spark.sparkContext.defaultParallelism))
         rows = df.mapInPandas(
@@ -791,6 +797,7 @@ def _delete_native_vectors(spark: SparkSession, path: str, pred,
     tombstones."""
     import json as _json
 
+    import pyarrow as pa
     import pyspark.sql.functions as F
 
     from . import lance_format as LF
@@ -814,11 +821,14 @@ def _delete_native_vectors(spark: SparkSession, path: str, pred,
     # each group carries only ITS OWN (fragment_id, deletion path) — at
     # 100 TB / ~10^5 fragments nothing manifest-sized rides the UDF
     # pickle (round-12 fix for the round-11 verdict's "What's wrong #1")
-    frag_map = spark.createDataFrame(
-        [(abs_p, fr.fragment_id,
-          LF._deletion_path(base, fr) if fr.deletion else None)
-         for abs_p, fr in by_abs.items()],
-        "__frag string, __fragment_id long, __deletion_path string")
+    # (Arrow-built: a LocalTableScan, no Python-worker pass to unpickle it)
+    frag_map = spark.createDataFrame(pa.table({
+        "__frag": pa.array(list(by_abs), pa.string()),
+        "__fragment_id": pa.array([fr.fragment_id for fr in by_abs.values()], pa.int64()),
+        "__deletion_path": pa.array(
+            [LF._deletion_path(base, fr) if fr.deletion else None for fr in by_abs.values()],
+            pa.string()),
+    }))
     read_version = mf.version
 
     def _build_tombstone(pdf):

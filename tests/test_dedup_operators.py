@@ -1,9 +1,10 @@
-"""Unit tests for dedup operator internals: pigeonhole-banding losslessness
-and the hot-shingle skew guard."""
+"""Unit tests for dedup operator internals: pigeonhole-banding losslessness,
+the hot-shingle skew guard and the two connected-components routes."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from flink_connector_lance_spark.operators import dedup as D
 
@@ -101,6 +102,122 @@ def test_connected_components_deep_chain_converges(spark):
     out = {r.id: r.component for r in
            D.connected_components(vertices, pairs, id_col="id", max_iterations=30).collect()}
     assert all(c == 0 for c in out.values())
+
+
+def test_minhash_pairs_quote_column_names(spark):
+    """The SQL-text builders quote the id and text names: a backtick or a
+    dot inside a name is part of the name, and the pairs equal those of
+    the same corpus under plain names."""
+    rows = [(i, f"alpha beta gamma delta epsilon zeta token{i % 5} end") for i in range(30)]
+    plain = spark.createDataFrame(rows, ["doc_id", "text"])
+    odd = plain.toDF("doc`id", "the.text")
+    want = {tuple(r) for r in D.minhash_lsh_pairs(plain, "text", "doc_id").collect()}
+    got = {tuple(r) for r in D.minhash_lsh_pairs(odd, "the.text", "doc`id").collect()}
+    assert got == want and len(want) > 0
+
+
+def _reference_components(vertices, edges):
+    """Pure-Python connected components: vertex -> smallest id reachable."""
+    adj = {v: set() for v in vertices}
+    for a, b in edges:
+        adj[a].add(b)
+        adj[b].add(a)
+    label = {}
+    for v in vertices:
+        if v in label:
+            continue
+        seen, todo = {v}, [v]
+        while todo:
+            for w in adj[todo.pop()] - seen:
+                seen.add(w)
+                todo.append(w)
+        root = min(seen)
+        label.update({w: root for w in seen})
+    return label
+
+
+def _cc_graph(kind):
+    """A 24-vertex chain whose min id sits at one end (23 hops, deeper
+    than the default max_iterations), walked in shuffled id order; a
+    diamond whose two paths tie on the min id; a star; duplicate and
+    reversed edges; isolated vertices. String ids are unpadded, so their
+    order is not the numeric one ("10" < "9")."""
+    chain = [40 + 7 * i % 24 for i in range(24)]
+    edges = list(zip(chain, chain[1:]))
+    edges += [(1, 2), (1, 3), (2, 4), (3, 4)]            # diamond, tie on 1
+    edges += [(30, 5), (30, 6), (30, 7), (7, 30)]        # star + reversed dup
+    edges += [(90, 91), (90, 91)]                        # duplicate edge
+    vertices = sorted({v for e in edges for v in e} | {0, 8, 9, 99})
+    conv = str if kind == "string" else int
+    vertices = [conv(v) for v in vertices]
+    edges = [(conv(a), conv(b)) for a, b in edges]
+    return vertices, edges
+
+
+@pytest.mark.parametrize("kind", ["long", "int", "string"])
+def test_connected_components_routes_equal_reference(spark, monkeypatch, kind):
+    """The driver route (union-find) and the above-cap route (min-label
+    propagation, CAP forced below the edge count) both label every vertex
+    with the smallest reachable id, for long, int and string ids, and
+    keep the vertex id's type."""
+    vertices, edges = _cc_graph(kind)
+    want = _reference_components(vertices, edges)
+    # the star's min is 5 as a number but "30" as a string
+    assert want["5"] == "30" if kind == "string" else want[5] == 5
+    vdf = spark.createDataFrame([(v,) for v in vertices], f"id {kind}")
+    pdf = spark.createDataFrame(edges, f"id_a {kind}, id_b {kind}")
+    driver = D.connected_components(vdf, pdf, id_col="id")
+    assert driver.schema["component"].dataType == vdf.schema["id"].dataType
+    assert {r.id: r.component for r in driver.collect()} == want
+    monkeypatch.setattr(D, "CAP", 3)
+    spread = D.connected_components(vdf, pdf, id_col="id", max_iterations=30)
+    assert spread.schema == driver.schema
+    assert {r.id: r.component for r in spread.collect()} == want
+
+
+def test_connected_components_deep_chain_at_default_iterations(spark):
+    """A 25-vertex chain at the default max_iterations=20: the driver
+    route needs no rounds, so every vertex reaches 0 (propagation capped
+    at 20 rounds used to label vertices 21-24 as 1-4)."""
+    n = 25
+    vertices = spark.range(n).select("id")
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"])
+    out = {r.id: r.component for r in D.connected_components(vertices, pairs).collect()}
+    assert out == {i: 0 for i in range(n)}
+
+
+def test_connected_components_above_cap_raises_when_unconverged(spark, monkeypatch):
+    """The above-cap route fails loudly instead of returning labels that
+    split a cluster when max_iterations runs out."""
+    monkeypatch.setattr(D, "CAP", 0)
+    vertices = spark.range(6).select("id")
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(5)], ["id_a", "id_b"])
+    with pytest.raises(RuntimeError, match="max_iterations=3"):
+        D.connected_components(vertices, pairs, max_iterations=3)
+    out = D.connected_components(vertices, pairs, max_iterations=6)
+    assert {r.component for r in out.collect()} == {0}
+
+
+def test_connected_components_driver_route_one_job_local_relation(spark):
+    """Under the cap, building the labels runs exactly one Spark job (the
+    edge fetch), and the returned plan's label side is a broadcast
+    LocalTableScan: no ExistingRDD, so no Python-worker pass to
+    materialize the labels."""
+    vertices = spark.range(50).select("id")
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(0, 40, 2)], ["id_a", "id_b"])
+    sc = spark.sparkContext
+    sc.setJobGroup("cc-driver-route", "cc-driver-route")
+    try:
+        out = D.connected_components(vertices, pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cc-driver-route")) == 1
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    label_side = plan[plan.index("BroadcastExchange"):]
+    assert "LocalTableScan" in label_side and "ExistingRDD" not in label_side
+    got = {r.id: r.component for r in out.collect()}
+    assert got == {i: (i - i % 2 if i < 40 else i) for i in range(50)}
 
 
 def test_auto_num_planes_pins_oracle_width_and_scales():
