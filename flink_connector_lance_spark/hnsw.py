@@ -15,20 +15,25 @@ that decomposition, mapped onto Spark's execution model:
   graph. Layer assignment is a deterministic hash of the row id (no RNG
   state), insertion order is ascending id — the same corpus always builds
   the same graph, which is what lets a DuckDB oracle gate the search.
-- **layout**: ``_indexes/<col>/hnsw/graph.parquet`` (one row per
-  (node, layer): neighbor id list) and ``vectors.parquet`` (the per-cell
-  vector slab the traversal scores against), both partitioned by ``cell``
-  so probing reads ONLY the chosen cells' files (static partition
-  pruning — the un-probed ~99% of the index is never opened).
+  Each build task writes its cell's two files through the store and
+  returns (cell, rows); the built cell ids go into the meta.
+- **layout** (one for local and s3://, index.py): under
+  ``_indexes/<col>/hnsw/``, per built cell, ``graph.parquet/cell=<c>/
+  part-00000.parquet`` (one row per (node, layer): neighbor id list) and
+  ``vectors.parquet/cell=<c>/part-00000.parquet`` (the cell's vector slab
+  the traversal scores against), then ``index_meta.json`` last. Probing
+  opens ONLY the chosen cells' files — the un-probed ~99% of the index is
+  never read.
 - **search**: driver picks the ``nprobes`` nearest centroids (tiny
-  relation), the probed cells' graph+vector slabs cogroup into one
-  ``applyInPandas`` task per cell, each runs the standard best-first
-  descent (greedy on layers > 0, ``ef``-bounded dynamic candidate list
-  on layer 0 — ``vector.ef`` with its REAL HNSW meaning, not a pool cap)
-  and emits its local top candidates; a TakeOrdered merge + exact re-rank
-  on the fetched rows finishes, with the unindexed tail (files added
-  since the build) exact-scored and unioned — the same staleness
-  contract as pq_search/ivf_index_knn.
+  table, read through the store), then one ``mapInArrow`` task per
+  probed cell opens that cell's two files through the store and runs the
+  standard best-first descent (greedy on layers > 0, ``ef``-bounded
+  dynamic candidate list on layer 0 — ``vector.ef`` with its REAL HNSW
+  meaning, not a pool cap) and emits its local top candidates; a
+  TakeOrdered merge + exact re-rank on the fetched rows finishes
+  (index.candidate_rows), with the unindexed tail (files added since the
+  build) exact-scored and unioned — the same staleness contract as
+  pq_search/ivf_index_knn.
 
 Scale notes: per-task memory is one cell's vectors + adjacency (the IVF
 partition count controls cell size, ref guidance sqrt(n)); traversal cost
@@ -43,10 +48,8 @@ per-cell traversal → merge → fetch) is the part that must survive 100 TB.
 from __future__ import annotations
 
 import hashlib
-import json
 import math
 import os
-import shutil
 from collections.abc import Sequence
 
 import numpy as np
@@ -54,52 +57,53 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .index import (
-    INDEXES_DIR,
-    _idx_load_remote,
-    _idx_meta_remote,
-    _idx_store_remote,
-    _index_dir as _ivf_dir,
-    _remote_subdir,
-    has_index as has_ivf_index,
+    _index_dir,
+    _storage,
+    begin_build,
+    candidate_rows,
+    has_index,
     load_centroids,
+    load_relation,
     probe_cells,
+    read_meta,
+    read_table,
+    write_meta,
 )
 from .sources import fragments as FR
 
 
 def _hnsw_dir(path: str, column: str) -> str:
-    from .sources.fs import is_remote
-
-    if is_remote(path):
-        return _remote_subdir(path, INDEXES_DIR, column, "hnsw")
-    return os.path.join(path, INDEXES_DIR, column, "hnsw")
+    return _index_dir(path, column, "hnsw")
 
 
 def has_hnsw_index(path: str, column: str,
                    storage: dict | None = None) -> bool:
-    from .sources.fs import is_remote
-
-    if is_remote(path):
-        return _idx_meta_remote(
-            _remote_subdir(_hnsw_dir(path, column), "graph"),
-            storage) is not None
-    return os.path.exists(os.path.join(_hnsw_dir(path, column), "index_meta.json"))
+    return has_index(path, column, storage, "hnsw")
 
 
-def read_hnsw_meta(path: str, column: str,
-                   storage: dict | None = None) -> dict:
-    """HNSW index metadata: local JSON or (s3://) the graph dataset's
-    commit meta."""
-    from .sources.fs import is_remote
+def _cell_dir(idx_dir: str, part: str, cell: int) -> str:
+    return os.path.join(idx_dir, f"{part}.parquet", f"cell={int(cell)}")
 
-    if is_remote(path):
-        meta = _idx_meta_remote(
-            _remote_subdir(_hnsw_dir(path, column), "graph"), storage)
-        if meta is None:
-            raise FileNotFoundError(f"no HNSW index on {path}:{column}")
-        return meta
-    with open(os.path.join(_hnsw_dir(path, column), "index_meta.json")) as fh:
-        return json.load(fh)
+
+def load_cell(idx_dir: str, cell: int, storage: dict | None = None):
+    """ONE cell's searcher state ``(ids (n,), mat (n, dim), levels (n,),
+    adj {(id, layer): [ids]})`` from that cell's two files, opened through
+    the store — the per-cell loader of both the distributed search and
+    the UDTF."""
+    from .index import vector_matrix
+
+    vt = read_table(_cell_dir(idx_dir, "vectors", cell), storage)
+    gt = read_table(_cell_dir(idx_dir, "graph", cell), storage)
+    ids = vt.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
+    gid = gt.column("id").to_pylist()
+    lvl_by_id = dict(zip(gid, gt.column("node_level").to_pylist()))
+    levels = np.array([lvl_by_id.get(int(i), 0) for i in ids], dtype=np.int64)
+    adj = {
+        (int(i), int(layer)): neigh
+        for i, layer, neigh in zip(gid, gt.column("layer").to_pylist(),
+                                   gt.column("neighbors").to_pylist())
+    }
+    return ids, vector_matrix(vt.column("vec")), levels, adj
 
 
 def _node_level(node_id: int, m: int, max_level: int) -> int:
@@ -260,28 +264,19 @@ def build_hnsw_index(
     """Build per-cell HNSW graphs over the dataset (requires the emulated
     IVF index for the cell assignment — build_index(IVF_*) first; a
     dataset without one gets a single cell). Returns the index metadata.
-    s3:// datasets build over the remote reader and persist graph/vector
-    slabs as cell-clustered engine datasets under ``_indexes/<col>/hnsw``.
 
     Reference parameter surface: ``index.m`` / ``index.ef-construction`` /
     ``index.max-level`` (ref config/LanceOptions.java:166-190)."""
-    from .sources.fs import is_remote
-    from .sources.reader import read_dataset
+    from .sources.maintenance import _file_scan
 
-    remote = is_remote(path)
-    storage = s3.to_storage_options() if (remote and s3) else None
+    storage = _storage(s3)
     if has_hnsw_index(path, column, storage) and not replace:
         raise ValueError(f"HNSW index on {column!r} already exists; pass replace=True")
     if m < 2:
         raise ValueError("index.m must be >= 2")
     if ef_construction < 1 or max_level < 0:
         raise ValueError("index.ef-construction must be >= 1 and index.max-level >= 0")
-    if remote:
-        from .sources.maintenance import _remote_reader
-
-        df = _remote_reader(spark, path, s3)
-    else:
-        df = read_dataset(spark, path)
+    df = _file_scan(spark, path, FR.read_manifest_compat(path, storage_options=storage), s3)
     if column not in df.columns:
         raise ValueError(f"index column {column!r} not in dataset schema {df.columns}")
     vecs = df.select(F.col(id_col).alias("__hid"),
@@ -291,15 +286,8 @@ def build_hnsw_index(
         raise ValueError("cannot index an empty dataset")
     dim = len(first[0])
 
-    if has_ivf_index(path, column, storage):
-        if remote:
-            assigns = _idx_load_remote(
-                spark, _remote_subdir(_ivf_dir(path, column), "assignments"),
-                s3)
-        else:
-            assigns = spark.read.parquet(
-                os.path.join(_ivf_dir(path, column), "assignments.parquet")
-            )
+    if has_index(path, column, storage):
+        assigns = load_relation(spark, _index_dir(path, column), "assignments", s3)
         ivf_id = [c for c in assigns.columns if c != "cell"][0]
         cells = vecs.join(
             assigns.select(F.col(ivf_id).alias("__hid"), "cell"), on="__hid"
@@ -307,28 +295,35 @@ def build_hnsw_index(
     else:
         cells = vecs.withColumn("cell", F.lit(0))
 
+    idx_dir = _hnsw_dir(path, column)
     mm, efc, ml, met = int(m), int(ef_construction), int(max_level), metric.lower()
 
-    def build_group(pdf):
+    def build_cell(pdf):
         import pandas as pd
+        import pyarrow as pa
+
+        from flink_connector_lance_spark.hnsw import _build_cell_graph, _cell_dir
+        from flink_connector_lance_spark.index import write_table
 
         cell = int(pdf["cell"].iloc[0])
         ids = pdf["__hid"].to_numpy(dtype=np.int64)
         mat = np.asarray(pdf["__hvd"].tolist(), dtype=np.float64)
         rows = list(_build_cell_graph(ids, mat, mm, efc, ml, met))
-        return pd.DataFrame({
-            "cell": [cell] * len(rows),
-            "id": [r[0] for r in rows],
-            "node_level": [r[1] for r in rows],
-            "layer": [r[2] for r in rows],
-            "neighbors": [r[3] for r in rows],
-        })
+        write_table(pa.table({
+            "id": pa.array([r[0] for r in rows], pa.int64()),
+            "node_level": pa.array([r[1] for r in rows], pa.int32()),
+            "layer": pa.array([r[2] for r in rows], pa.int32()),
+            "neighbors": pa.array([r[3] for r in rows], pa.list_(pa.int64())),
+        }), _cell_dir(idx_dir, "graph", cell), storage)
+        write_table(pa.table({
+            "id": pa.array(ids, pa.int64()),
+            "vec": pa.array(list(mat), pa.list_(pa.float64())),
+        }), _cell_dir(idx_dir, "vectors", cell), storage)
+        return pd.DataFrame({"cell": [cell], "rows": [len(ids)]})
 
-    graph = cells.groupBy("cell").applyInPandas(
-        build_group,
-        schema="cell int, id long, node_level int, layer int, neighbors array<long>",
-    )
-    idx_dir = _hnsw_dir(path, column)
+    begin_build(idx_dir, storage)
+    built = cells.groupBy("cell").applyInPandas(
+        build_cell, schema="cell int, rows long").collect()
     meta = {
         "index_type": "ivf_hnsw_emulated",
         "column": column,
@@ -339,32 +334,9 @@ def build_hnsw_index(
         "max_level": ml,
         "dim": dim,
         "dataset_version": FR.latest_version(path, storage),
+        "cells": sorted(r.cell for r in built),
     }
-    vec_slab = cells.select("cell", F.col("__hid").alias("id"),
-                            F.col("__hvd").alias("vec"))
-    if remote:
-        # cell-clustered engine datasets: a probe's `cell IN (...)` prunes
-        # whole graph/vector fragments via zone maps — the remote twin of
-        # the local partitionBy static pruning. Meta rides the graph, which
-        # commits LAST: has_hnsw_index() only flips true once the vector
-        # slab it points at is already durable (local meta-rename twin).
-        _idx_store_remote(vec_slab, _remote_subdir(idx_dir, "vectors"), s3,
-                          cluster_cols=["cell"], bloom_cols=["cell"])
-        _idx_store_remote(graph, _remote_subdir(idx_dir, "graph"), s3,
-                          meta=meta, cluster_cols=["cell"],
-                          bloom_cols=["cell"])
-        return meta
-    shutil.rmtree(idx_dir, ignore_errors=True)
-    os.makedirs(idx_dir, exist_ok=True)
-    graph.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(idx_dir, "graph.parquet")
-    )
-    (vec_slab.write.mode("overwrite").partitionBy("cell")
-             .parquet(os.path.join(idx_dir, "vectors.parquet")))
-    tmp = os.path.join(idx_dir, "index_meta.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(idx_dir, "index_meta.json"))
+    write_meta(idx_dir, meta, storage)
     return meta
 
 
@@ -411,18 +383,14 @@ def hnsw_candidates(
     rows per probed cell. Exposed separately so the ef/nprobes knobs
     have a directly observable effect; ``hnsw_search`` consumes it."""
     from .functions import vector as V
-    from .sources.fs import is_remote
 
-    remote = is_remote(path)
-    storage = s3.to_storage_options() if (remote and s3) else None
+    storage = _storage(s3)
     # _metas: search_dataset's pre-fetched per-kind metadata — skips the
-    # has_hnsw_index/read_hnsw_meta re-fetch pair (and the IVF presence GET)
-    meta = _metas.get("hnsw") if _metas is not None else (
-        read_hnsw_meta(path, column, storage)
-        if has_hnsw_index(path, column, storage) else None)
+    # meta re-fetch (and the IVF presence check)
+    meta = _metas.get("hnsw") if _metas is not None else read_meta(
+        path, column, "hnsw", storage)
     if meta is None:
         raise FileNotFoundError(f"no HNSW index on {path}:{column}; build_hnsw_index first")
-    idx_dir = _hnsw_dir(path, column)
     q = V.validate_query_vector(query)
     if len(q) != meta["dim"]:
         raise ValueError(f"query dim {len(q)} != indexed dim {meta['dim']}")
@@ -430,130 +398,65 @@ def hnsw_candidates(
     if eff <= 0:
         raise ValueError("ef must be positive")
 
-    chosen = None
+    cells = meta["cells"]
     if nprobes is not None:
         if nprobes <= 0:
             raise ValueError("nprobes must be positive")
         have_ivf = ("ivf" in _metas) if _metas is not None \
-            else has_ivf_index(path, column, storage)
+            else has_index(path, column, storage)
         if not have_ivf:
             raise FileNotFoundError(
                 f"nprobes given but no IVF index on {path}:{column}; build_index first"
             )
-        chosen = probe_cells(*load_centroids(spark, path, column, s3), q, nprobes)
-
-    qv, pool, met = [float(v) for v in q], max(eff, k), meta.get("metric", "l2")
-
-    if not remote:
-        # Local fast path: the index is partitionBy("cell") on disk, so the
-        # per-cell traversal needs no cogroup — about one mapInArrow task
-        # per probed cell reads its OWN cell's graph/vector slabs directly via
-        # pyarrow (the read_native_files pattern: seed relation of cell
-        # ids, each task pulls its partition's slice from storage). This
-        # removes both groupBy("cell") Exchanges and the JVM->Python Arrow
-        # transfer of the corpus-sized slabs from the search path; per-task
-        # memory stays about one cell, parallelism about one task per cell.
-        cand = _local_cell_candidates(spark, idx_dir, chosen, qv, pool, eff,
-                                      met, int(meta["dim"]))
-        return cand, meta
-
-    graph = _idx_load_remote(spark, _remote_subdir(idx_dir, "graph"), s3)
-    vecs = _idx_load_remote(spark, _remote_subdir(idx_dir, "vectors"), s3)
-    if chosen is not None:
-        # fragment pruning: only the probed cells' zone-mapped files read
-        graph = graph.filter(F.col("cell").isin(chosen))
-        vecs = vecs.filter(F.col("cell").isin(chosen))
-
-    def search_group(key, gpdf, vpdf):
-        import pandas as pd
-
-        ids = vpdf["id"].to_numpy(dtype=np.int64)
-        mat = np.asarray(vpdf["vec"].tolist(), dtype=np.float64)
-        lvl_by_id = dict(zip(gpdf["id"].tolist(), gpdf["node_level"].tolist()))
-        levels = np.array([lvl_by_id.get(int(i), 0) for i in ids], dtype=np.int64)
-        adj_by_id = {
-            (int(r.id), int(r.layer)): list(r.neighbors)
-            for r in gpdf.itertuples()
-        }
-        out = _traverse_cell(ids, levels, adj_by_id, mat,
-                             np.asarray(qv, dtype=np.float64), pool, eff, met)
-        return pd.DataFrame({"id": [i for i, _ in out], "_hnsw_d": [d for _, d in out]})
-
-    cand = (
-        graph.groupBy("cell")
-        .cogroup(vecs.groupBy("cell"))
-        .applyInPandas(search_group, schema="id long, _hnsw_d double")
-    )
+        # a probed cell the build never saw (a Lloyd centroid with no
+        # rows) contributes nothing
+        chosen = set(probe_cells(*load_centroids(path, column, storage), q, nprobes))
+        cells = [c for c in cells if c in chosen]
+    cand = cell_candidates(spark, _hnsw_dir(path, column), cells,
+                           [float(v) for v in q], max(eff, k), eff,
+                           meta.get("metric", "l2"), storage)
     return cand, meta
 
 
-def _local_cell_candidates(spark, idx_dir: str, cells: "list[int] | None",
-                           qv: list, pool: int, ef: int, metric: str,
-                           dim: int) -> DataFrame:
-    """About one task per probed cell; a task reads its cells' graph/vector
-    parquet slabs directly (pyarrow) and runs the traversal — static
-    partition pruning by construction (un-probed cells are never opened).
-    A probed-but-empty cell (a Lloyd centroid with no assigned rows) has
-    no ``cell=N`` directory and contributes nothing, exactly like the
-    cogroup path's empty group. Planning and the tasks open the index
-    with os/pyarrow, so it takes a bare POSIX path or ``file://`` and
-    rejects any other scheme (``fs.local_path``)."""
+def cell_candidates(spark, idx_dir: str, cells: "list[int]", qv: list,
+                    pool: int, ef: int, metric: str,
+                    storage: dict | None = None) -> DataFrame:
+    """About one ``mapInArrow`` task per cell of ``cells``: a task opens
+    its cell's graph and vector files through the store (``load_cell``)
+    and runs the traversal, so an un-probed cell is never opened, and
+    neither a cogroup nor a ``groupBy("cell")`` exchange moves the
+    corpus-sized slabs through the JVM. ``idx_dir`` is a local path,
+    ``file://`` or s3 url; any other scheme is refused here, at planning
+    time (``fs.store_for``)."""
     import pandas as pd
 
-    from .sources.fs import local_path
+    from .sources.fs import store_for
 
-    idx_dir = local_path(idx_dir)
-    gdir = os.path.join(idx_dir, "graph.parquet")
-    vdir = os.path.join(idx_dir, "vectors.parquet")
-    on_disk = sorted(
-        int(d.split("=", 1)[1]) for d in os.listdir(vdir)
-        if d.startswith("cell=") and d.split("=", 1)[1].lstrip("-").isdigit()
-    )
-    probe = on_disk if cells is None else sorted(set(cells) & set(on_disk))
-    if not probe:
+    store_for(idx_dir, storage)
+    if not cells:
         return spark.createDataFrame([], "id long, _hnsw_d double")
 
     def scan(iterator):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        from flink_connector_lance_spark.hnsw import _traverse_cell
+        from flink_connector_lance_spark.hnsw import _traverse_cell, load_cell
 
         q = np.asarray(qv, dtype=np.float64)
         for batch in iterator:
             for cell in batch.column("cell").to_pylist():
-                vt = pq.read_table(os.path.join(vdir, f"cell={cell}"),
-                                   columns=["id", "vec"])
-                gt = pq.read_table(os.path.join(gdir, f"cell={cell}"),
-                                   columns=["id", "node_level", "layer",
-                                            "neighbors"])
-                ids = vt.column("id").to_numpy()
-                mat = np.asarray(
-                    vt.column("vec").combine_chunks().flatten().to_numpy()
-                ).reshape(-1, dim)
-                gid = gt.column("id").to_pylist()
-                lvl_by_id = dict(zip(gid, gt.column("node_level").to_pylist()))
-                levels = np.array([lvl_by_id.get(int(i), 0) for i in ids],
-                                  dtype=np.int64)
-                adj_by_id = {
-                    (int(i), int(layer)): neigh
-                    for i, layer, neigh in zip(
-                        gid, gt.column("layer").to_pylist(),
-                        gt.column("neighbors").to_pylist())
-                }
-                out = _traverse_cell(ids.astype(np.int64), levels, adj_by_id,
-                                     mat, q, pool, ef, metric)
+                ids, mat, levels, adj = load_cell(idx_dir, cell, storage)
+                out = _traverse_cell(ids, levels, adj, mat, q, pool, ef, metric)
                 yield pa.RecordBatch.from_arrays(
                     [pa.array([i for i, _ in out], pa.int64()),
                      pa.array([d for _, d in out], pa.float64())],
                     names=["id", "_hnsw_d"])
 
-    # keyless repartition: len(probe) rows round-robin into len(probe)
+    # keyless repartition: len(cells) rows round-robin into len(cells)
     # partitions = about one cell per task (round-robin over a
     # multi-partition seed can pair two cells and leave a task empty;
     # hashing `cell` into so few partitions would collide more, guide §2.5)
     seed = spark.createDataFrame(
-        pd.DataFrame({"cell": probe})).repartition(len(probe))
+        pd.DataFrame({"cell": cells})).repartition(len(cells))
     return seed.mapInArrow(scan, schema="id long, _hnsw_d double")
 
 
@@ -576,61 +479,22 @@ def hnsw_search(
     config/LanceOptions.java:224-228 — here ef drives REAL traversal
     dynamics), merge, fetch + exact re-rank, union the unindexed tail.
 
-    Plan shape: centroid probe is driver-side on a tiny relation; the
-    graph/vector reads are partition-pruned to the probed cells; one
-    cogrouped ``applyInPandas`` task per probed cell; candidates are
-    skinny (id, distance) rows; only the winning ids' rows are fetched
-    (semi-join) for the final k."""
+    Plan shape, local and s3:// alike: the centroid probe is driver-side
+    on a tiny table; one ``mapInArrow`` task per probed cell reads that
+    cell's files only; candidates are skinny (id, distance) rows; only
+    the winning ids' rows are fetched (semi-join) for the final k."""
     from .functions import vector as V
     from .operators.knn import knn
-    from .sources.fs import is_remote
-    from .sources.reader import read_dataset, read_fragment_files
 
-    remote = is_remote(path)
-    storage = s3.to_storage_options() if (remote and s3) else None
     cand, meta = hnsw_candidates(spark, path, column, query, k=k,
                                  nprobes=nprobes, ef=ef, s3=s3,
                                  _metas=_metas)
     q = V.validate_query_vector(query)
-    metric = meta.get("metric", "l2")
     id_col = meta["id_col"]
     pool = max(int(ef) if ef is not None else 100, k)
     # global merge: TakeOrdered over the skinny candidate rows
     winners = cand.orderBy(F.asc("_hnsw_d"), F.asc("id")).limit(pool) \
                   .select(F.col("id").alias(id_col))
-
-    from .index import split_by_index_coverage
-
-    covered, uncovered = split_by_index_coverage(
-        path, meta.get("dataset_version", 0), storage=storage,
-        relative=remote)
-    if remote:
-        from .sources.maintenance import _remote_reader
-
-        df = _remote_reader(spark, path, s3)
-    else:
-        df = read_dataset(spark, path)
-    if not covered:
-        survivors = df  # stale beyond recognition: exact brute force
-    else:
-        if remote:
-            from .sources.maintenance import _remote_reader as _rr
-
-            def _files_scan(files):
-                return (_rr(spark, path, s3, file_col="__frag")
-                        .filter(F.col("__frag").isin(*files))
-                        .drop("__frag"))
-        else:
-            m_now = FR.read_manifest_compat(path)
-
-            def _files_scan(files):
-                return read_fragment_files(spark, m_now, files)
-        survivors = _files_scan(covered).select(*df.columns).join(
-            winners, on=id_col, how="left_semi"
-        )
-        if uncovered:
-            survivors = survivors.unionByName(
-                _files_scan(uncovered).select(*df.columns)
-            )
-    return knn(survivors, column, q, k=k, metric=metric, filter=filter,
-               tiebreak_cols=tiebreak_cols, round_digits=round_digits)
+    survivors = candidate_rows(spark, path, meta, winners, s3)
+    return knn(survivors, column, q, k=k, metric=meta.get("metric", "l2"),
+               filter=filter, tiebreak_cols=tiebreak_cols, round_digits=round_digits)

@@ -14,13 +14,32 @@ layer's design:
   assigns every row to its cell, persisted columnar. ``ivf_index_knn``
   answers queries by probing the ``nprobes`` nearest cells only
   (centroid select is driver-side on the tiny centroid table; candidate
-  fetch is a parquet scan with the cell filter pushed down + a semi-join).
+  fetch is a scan with the cell filter pushed down + a semi-join).
   This is the same prune-then-exact-score shape Lance's IVF uses,
   expressed as DataFrame plans.
 
 Both return ``IndexBuildResult{success, duration, error}`` (ref :380-435).
-On-disk layout (emulated): ``<dataset>/_indexes/<column>/ivf/`` with
-``centroids.parquet``, ``assignments.parquet``, ``index_meta.json``.
+
+Index layout (emulated), one for local and s3:// datasets:
+``<dataset>/_indexes/<column>/<kind>/`` holds ``index_meta.json``, written
+last — its presence means the index exists — beside the kind's files.
+Every file but the two relations Spark scans is written and read through
+``sources/fs.store_for``:
+
+- ``ivf/``: ``centroids.parquet/part-00000.parquet`` and the
+  ``assignments`` relation (id, cell);
+- ``pq/``: ``codebooks.parquet/part-00000.parquet`` and the ``codes``
+  relation (id, codes) (pq.py);
+- ``hnsw/``: ``graph.parquet/cell=<c>/part-00000.parquet`` and
+  ``vectors.parquet/cell=<c>/part-00000.parquet`` per built cell, the
+  built cell ids in the meta (hnsw.py).
+
+Centroids and codebooks are driver-built and pyarrow-read on the driver,
+no Spark job. The two relations Spark scans are the one location branch
+(``store_relation``): locally ``<name>.parquet`` directories, on s3
+engine datasets ``<name>`` read through the ``format("lance")`` reader.
+The exact re-rank of every indexed search reads its rows through
+``candidate_rows``.
 """
 
 from __future__ import annotations
@@ -28,7 +47,6 @@ from __future__ import annotations
 import dataclasses
 import json
 import os
-import shutil
 import time
 from dataclasses import dataclass
 
@@ -38,108 +56,117 @@ import pyspark.sql.functions as F
 from .options import DatasetOptions, DistanceMetric, IndexType
 from .io import read_parquet_memo
 from .sources import fragments as FR
+from .sources import fs
 
 INDEXES_DIR = "_indexes"
-
-# Commit-meta key carrying an ANN index's metadata when the index lives
-# on object storage (the same pattern sources/fts.py uses for BM25
-# postings: the index IS a versioned engine dataset under
-# ``<dataset>/_indexes/<column>/<kind>/...``, its meta rides the
-# manifest, and reads flow through the pushdown format('lance') reader —
-# no driver-side file IO, no hadoop-aws dependency).
-_ANN_META_KEY = "ann"
+META_FILE = "index_meta.json"
+PART_FILE = "part-00000.parquet"
+# the index kinds, in the order search_dataset routes and refresh_index
+# takes the primary meta
+KINDS = ("hnsw", "pq", "ivf")
 
 
-def _remote_subdir(path: str, *parts: str) -> str:
-    return "/".join([str(path).rstrip("/"), *parts])
+def _storage(s3) -> "dict | None":
+    return s3.to_storage_options() if s3 is not None else None
 
 
-def _idx_store_remote(df, idx_path: str, s3, meta: dict | None = None,
-                      cluster_cols=None, bloom_cols=None) -> None:
-    """Persist one index relation as an engine dataset on object storage
-    — executor-direct fragment PUTs + one conditional-PUT commit (the
-    write_dataset s3 plane). ``cluster_cols`` range-clusters fragments so
-    a pushed equality/IN filter on them prunes whole fragments via zone
-    maps; ``meta`` rides the commit (storage-agnostic index_meta)."""
-    from .sources.writer import write_dataset
-
-    opts = DatasetOptions(
-        path=idx_path, s3=s3,
-        sort_columns=list(cluster_cols or []),
-        cluster_on_write=bool(cluster_cols),
-        bloom_columns=list(bloom_cols or []),
-    )
-    write_dataset(df, idx_path, mode="overwrite", options=opts,
-                  commit_meta={_ANN_META_KEY: meta} if meta is not None
-                  else None)
+def _index_dir(path: str, column: str, kind: str = "ivf") -> str:
+    """``<dataset>/_indexes/<column>/<kind>``, absolute: tasks open it."""
+    return os.path.join(fs.absolute(path), INDEXES_DIR, column, kind)
 
 
-def _idx_load_remote(spark, idx_path: str, s3):
-    """The pushdown reader over one remote index relation — filters on
-    clustered columns prune fragments at planning time (zone maps), then
-    blooms, then parquet row groups."""
-    from .sources.datasource import register_lance_datasource
-
-    register_lance_datasource(spark)
-    rd = spark.read.format("lance")
-    if s3 is not None:
-        rd = rd.options(**s3.to_option_map())
-    return rd.load(idx_path)
-
-
-def _idx_meta_remote(idx_path: str, storage: dict | None) -> dict | None:
-    """The index metadata from the index dataset's commit meta, or None
-    when no index exists at that key prefix. A foreign/native-binary
-    manifest chain at the prefix (LanceUnavailableError) also reports
-    "no index" rather than crashing has_*/describe — the FTS describe
-    loop's contract — but, unlike a genuinely absent index, it warns
-    loudly first: "corrupt/unreadable" silently collapsing into "absent"
-    would let searches quietly fall back to brute force and let
-    ``build_index(replace=False)`` build over a real-but-unreadable
-    index (round-12 advice)."""
+def read_meta(path: str, column: str, kind: str,
+              storage: dict | None = None) -> dict | None:
+    """The ``index_meta.json`` of one index kind on ``column``, or None
+    when there is none. The meta is written last, so its presence means
+    the index is whole."""
+    key = os.path.join(_index_dir(path, column, kind), META_FILE)
     try:
-        return FR.read_manifest(idx_path, None, storage).meta.get(_ANN_META_KEY)
+        with fs.store_for(path, storage).open(key) as fh:
+            return json.load(fh)
     except FileNotFoundError:
         return None
-    except FR.LanceUnavailableError as e:
-        import warnings
-
-        warnings.warn(
-            f"index prefix {idx_path!r} holds a manifest chain this "
-            f"reader cannot read ({e}); treating it as 'no index' — "
-            "searches will fall back to brute force and a rebuild will "
-            "overwrite whatever lives there", RuntimeWarning,
-            stacklevel=2)
-        return None
-
-
-_KIND_PRIMARY = (("hnsw", "graph"), ("pq", "codebooks"), ("ivf", "centroids"))
 
 
 def _kind_metas(path: str, column: str,
                 storage: dict | None = None) -> dict[str, dict]:
-    """Presence AND content of every index kind's meta in one pass —
-    on s3:// this is exactly one manifest fetch per kind (the meta rides
-    the kind's primary relation), replacing the separate has_* /
-    read_*_meta pairs that each re-listed ``_versions/`` and re-fetched
-    the manifest. Locally it reads up to three small JSON files."""
-    from .sources.fs import is_remote
+    """The meta of every index kind present on ``column``, by kind."""
+    metas = {kind: read_meta(path, column, kind, storage) for kind in KINDS}
+    return {kind: m for kind, m in metas.items() if m is not None}
 
-    out: dict[str, dict] = {}
-    if is_remote(path):
-        for kind, rel in _KIND_PRIMARY:
-            m = _idx_meta_remote(
-                _remote_subdir(path, INDEXES_DIR, column, kind, rel), storage)
-            if m is not None:
-                out[kind] = m
+
+def has_index(path: str, column: str, storage: dict | None = None,
+              kind: str = "ivf") -> bool:
+    return fs.store_for(path, storage).exists(
+        os.path.join(_index_dir(path, column, kind), META_FILE))
+
+
+def begin_build(idx_dir: str, storage: dict | None) -> None:
+    """Remove whatever a previous build left under ``idx_dir``: its meta
+    goes first with it, so a build that dies midway leaves no index."""
+    store = fs.store_for(idx_dir, storage)
+    if store.exists(idx_dir):
+        store.rm(idx_dir, recursive=True)
+
+
+def write_meta(idx_dir: str, meta: dict, storage: dict | None) -> None:
+    """Write an index's meta, the last file of its build, in one
+    all-or-nothing store write."""
+    with fs.store_for(idx_dir, storage).writing(os.path.join(idx_dir, META_FILE)) as tmp:
+        with open(tmp, "w") as fh:
+            json.dump(meta, fh)
+
+
+def write_table(table, dir_key: str, storage: dict | None = None) -> None:
+    """Write a small Arrow table as ``<dir_key>/part-00000.parquet``
+    through the store."""
+    import pyarrow.parquet as pq
+
+    with fs.store_for(dir_key, storage).writing(os.path.join(dir_key, PART_FILE)) as tmp:
+        pq.write_table(table, tmp)
+
+
+def read_table(dir_key: str, storage: dict | None = None):
+    """The Arrow table ``write_table`` wrote at ``dir_key``: one store
+    ``open``, no Spark job."""
+    import pyarrow.parquet as pq
+
+    with fs.store_for(dir_key, storage).open(os.path.join(dir_key, PART_FILE)) as fh:
+        return pq.read_table(fh)
+
+
+def store_relation(df, idx_dir: str, name: str, s3=None,
+                   partition_by: str | None = None) -> None:
+    """Persist one index relation Spark scans at search time (the IVF
+    ``assignments``, the PQ ``codes``) — the one location branch of the
+    index plane. Locally a parquet directory ``<name>.parquet``,
+    ``partition_by`` a hive partition column, so a probe's filter on it
+    reads only the probed partitions. On an object store an engine
+    dataset ``<name>``, clustered and bloomed on ``partition_by``, so the
+    same filter prunes whole fragments by zone map; Spark has no s3
+    parquet filesystem here, the ``format("lance")`` reader reads it."""
+    cols = [partition_by] if partition_by else []
+    if fs.is_remote(idx_dir):
+        from .sources.writer import write_dataset
+
+        key = os.path.join(idx_dir, name)
+        write_dataset(df, key, mode="overwrite", options=DatasetOptions(
+            path=key, s3=s3, sort_columns=cols, cluster_on_write=bool(cols),
+            bloom_columns=cols))
     else:
-        for kind, _rel in _KIND_PRIMARY:
-            p = os.path.join(path, INDEXES_DIR, column, kind,
-                             "index_meta.json")
-            if os.path.exists(p):
-                with open(p) as fh:
-                    out[kind] = json.load(fh)
-    return out
+        w = df.write.mode("overwrite")
+        if cols:
+            w = w.partitionBy(*cols)
+        w.parquet(os.path.join(idx_dir, name + ".parquet"))
+
+
+def load_relation(spark, idx_dir: str, name: str, s3=None):
+    """The relation ``store_relation`` persisted."""
+    if fs.is_remote(idx_dir):
+        from .sources.maintenance import _remote_reader
+
+        return _remote_reader(spark, os.path.join(idx_dir, name), s3)
+    return read_parquet_memo(spark, os.path.join(idx_dir, name + ".parquet"))
 
 
 @dataclass
@@ -158,24 +185,6 @@ def validate_index_params(opts: DatasetOptions, column: str, schema_names: list[
     option-range validation done by DatasetOptions."""
     if column not in schema_names:
         raise ValueError(f"index column {column!r} not in dataset schema {schema_names}")
-
-
-def _index_dir(path: str, column: str) -> str:
-    from .sources.fs import is_remote
-
-    if is_remote(path):
-        return _remote_subdir(path, INDEXES_DIR, column, "ivf")
-    return os.path.join(path, INDEXES_DIR, column, "ivf")
-
-
-def has_index(path: str, column: str, storage: dict | None = None) -> bool:
-    from .sources.fs import is_remote
-
-    if is_remote(path):
-        return _idx_meta_remote(
-            _remote_subdir(_index_dir(path, column), "centroids"),
-            storage) is not None
-    return os.path.exists(os.path.join(_index_dir(path, column), "index_meta.json"))
 
 
 # Training rows per centroid, lance-core's default IVF/PQ ``sample_rate``:
@@ -258,19 +267,10 @@ def probe_cells(cells: np.ndarray, cents: np.ndarray, q, nprobes: int) -> list[i
     return [int(cells[j]) for j in np.lexsort((cells, d))[:int(nprobes)]]
 
 
-def load_centroids(spark, path: str, column: str, s3=None):
-    """(cell ids, centroid matrix) of the IVF index on ``column``: a
-    pyarrow read of the local centroid table, a collect of the remote
-    one."""
-    from .sources.fs import is_remote
-
-    if is_remote(path):
-        rows = _idx_load_remote(spark, _remote_subdir(_index_dir(path, column), "centroids"),
-                                s3).select("cell", "centroid").toArrow()
-    else:
-        import pyarrow.parquet as pq
-
-        rows = pq.read_table(os.path.join(_index_dir(path, column), "centroids.parquet"))
+def load_centroids(path: str, column: str, storage: dict | None = None):
+    """(cell ids, centroid matrix) of the IVF index on ``column``, read
+    on the driver through the store."""
+    rows = read_table(os.path.join(_index_dir(path, column), "centroids.parquet"), storage)
     return rows.column("cell").to_numpy(), vector_matrix(rows.column("centroid"))
 
 
@@ -292,35 +292,20 @@ def assign_cells(vecs, cells: np.ndarray, cents: np.ndarray):
     return vecs.mapInArrow(encode, schema)
 
 
-def write_local_table(table, path: str) -> None:
-    """Write a small driver-side Arrow table as a one-file parquet
-    directory at ``path``, the layout Spark's writer leaves."""
-    import pyarrow.parquet as pq
-
-    os.makedirs(path, exist_ok=True)
-    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
-
-
 def _emulated_ivf_build(spark, path: str, column: str, id_col: str,
                         opts: DatasetOptions, metric: DistanceMetric,
                         replace: bool, iterations: int = 4) -> None:
     import pyarrow as pa
 
-    from .sources.fs import is_remote
-    from .sources.reader import read_dataset
+    from .sources.maintenance import _file_scan
 
-    remote = is_remote(path)
-    storage = opts.s3.to_storage_options() if (remote and opts.s3) else None
+    storage = _storage(opts.s3)
     idx_dir = _index_dir(path, column)
     if has_index(path, column, storage) and not replace:
         # ref LanceIndexBuilder.java:173-179 replace flag semantics
         raise ValueError(f"index on {column!r} already exists; pass replace=True")
-    if remote:
-        from .sources.maintenance import _remote_reader
-
-        df = _remote_reader(spark, path, opts.s3)
-    else:
-        df = read_dataset(spark, path)
+    df = _file_scan(spark, path, FR.read_manifest_compat(path, storage_options=storage),
+                    opts.s3)
     validate_index_params(opts, column, df.columns)
     vecs = df.select(
         F.col(id_col).alias("rid"),
@@ -346,35 +331,14 @@ def _emulated_ivf_build(spark, path: str, column: str, id_col: str,
         assigns = assigns.coalesce(1)
     cent_table = pa.table({"cell": pa.array(cells, pa.int32()),
                            "centroid": pa.array(list(cents), pa.list_(pa.float64()))})
-    if remote:
-        # object-storage plane: both relations are engine datasets under
-        # the same _indexes/<col>/ivf prefix; the assignments cluster on
-        # `cell` so a probe's `cell IN (...)` prunes whole fragments via
-        # zone maps (the remote twin of partitionBy static pruning), with
-        # cell blooms as the second skip level. Meta rides the centroids
-        # dataset's commit — no driver-side JSON file on s3. The
-        # meta-bearing relation commits LAST (the remote twin of the local
-        # atomic index_meta.json rename): a crash mid-build leaves
-        # has_index() False, never a half-index that searches would open.
-        _idx_store_remote(assigns, _remote_subdir(idx_dir, "assignments"),
-                          opts.s3, cluster_cols=["cell"],
-                          bloom_cols=["cell"])
-        _idx_store_remote(spark.createDataFrame(cent_table, "cell int, centroid array<double>"),
-                          _remote_subdir(idx_dir, "centroids"), opts.s3, meta=meta)
-        return
-    shutil.rmtree(idx_dir, ignore_errors=True)
-    write_local_table(cent_table, os.path.join(idx_dir, "centroids.parquet"))
-    # partitionBy(cell): probing nprobes cells reads ONLY those cells'
-    # files (static partition pruning) — at scale the un-probed ~99% of
-    # the assignment index is never touched, mirroring how Lance's IVF
-    # only opens the probed partitions' row-id lists
-    assigns.write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(os.path.join(idx_dir, "assignments.parquet"))
-    tmp = os.path.join(idx_dir, "index_meta.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(idx_dir, "index_meta.json"))
+    begin_build(idx_dir, storage)
+    write_table(cent_table, os.path.join(idx_dir, "centroids.parquet"), storage)
+    # partitioned by cell: probing nprobes cells reads ONLY those cells'
+    # assignments — at scale the un-probed ~99% of the assignment index is
+    # never touched, mirroring how Lance's IVF only opens the probed
+    # partitions' row-id lists
+    store_relation(assigns, idx_dir, "assignments", opts.s3, partition_by="cell")
+    write_meta(idx_dir, meta, storage)
 
 
 def build_index(
@@ -447,10 +411,10 @@ def build_index(
 
 
 def split_by_index_coverage(path: str, indexed_version: int,
-                            storage: dict | None = None,
-                            relative: bool = False) -> tuple[list[str], list[str]]:
-    """Partition the CURRENT manifest's fragment files into (covered,
-    uncovered) by an index built at ``indexed_version``.
+                            storage: dict | None = None) -> tuple[list[str], list[str]]:
+    """Partition the CURRENT manifest's fragment files (root-relative
+    names) into (covered, uncovered) by an index built at
+    ``indexed_version``.
 
     A fragment file present in both manifests is fully covered (fragments
     are immutable); a file added since — appends, compaction output,
@@ -462,25 +426,40 @@ def split_by_index_coverage(path: str, indexed_version: int,
 
     If the indexed version's manifest was vacuumed, every current file is
     conservatively uncovered — the search degrades to exact brute force,
-    trading speed for correctness.
-
-    ``relative=True`` returns manifest-relative file names (what the
-    remote reader's ``read.file-column`` yields) instead of local joins
-    — the s3:// twin of this split."""
+    trading speed for correctness."""
     current = FR.read_manifest_compat(path, storage_options=storage)
     try:
         at_build = {f.file for f in FR.read_manifest_compat(
             path, indexed_version, storage_options=storage).fragments}
     except FileNotFoundError:
         at_build = set()
-    if relative:
-        covered = [f.file for f in current.fragments if f.file in at_build]
-        uncovered = [f.file for f in current.fragments
-                     if f.file not in at_build]
-        return covered, uncovered
-    covered = [os.path.join(path, f.file) for f in current.fragments if f.file in at_build]
-    uncovered = [os.path.join(path, f.file) for f in current.fragments if f.file not in at_build]
+    covered = [f.file for f in current.fragments if f.file in at_build]
+    uncovered = [f.file for f in current.fragments if f.file not in at_build]
     return covered, uncovered
+
+
+def candidate_rows(spark, path: str, meta: dict, ids, s3=None):
+    """The rows an indexed search re-ranks exactly: those of the files the
+    index covers whose id is in ``ids`` (a one-column relation of the
+    index's id column), plus every row of the files added since the build
+    (``split_by_index_coverage``); every row when no build-time file
+    survives. ``ids`` is joined without a broadcast hint: probed ids can
+    be a few % of the dataset, and AQE broadcasts them when they are
+    small."""
+    from .sources.maintenance import _file_scan
+
+    storage = _storage(s3)
+    covered, uncovered = split_by_index_coverage(
+        path, meta.get("dataset_version", 0), storage)
+    manifest = FR.read_manifest_compat(path, storage_options=storage)
+    if not covered:
+        return _file_scan(spark, path, manifest, s3)
+    # files=None: every fragment is covered, scanned in manifest order
+    rows = _file_scan(spark, path, manifest, s3, files=covered if uncovered else None)
+    rows = rows.join(ids, on=meta["id_col"], how="left_semi")
+    if uncovered:
+        rows = rows.unionByName(_file_scan(spark, path, manifest, s3, files=uncovered))
+    return rows
 
 
 def ivf_index_knn(
@@ -505,30 +484,16 @@ def ivf_index_knn(
     (ref LanceVectorSearch.java:146-201) without the native library.
     ``ef`` bounds the scored candidate pool to the max(ef, k)
     coarse-nearest probed rows (``vector.ef``, the same contract as
-    lsh_candidate_pool / pq_search). s3:// datasets serve the same plan
-    against the ``_indexes/`` object-storage plane: centroids/assignments
-    are engine datasets, the probe's cell filter prunes assignment
-    fragments via zone maps + blooms (nprobes-bounded GETs), and the
-    candidate fetch rides the remote pushdown reader."""
+    lsh_candidate_pool / pq_search). s3:// datasets run the same plan
+    over the same index layout."""
     from .functions import vector as V
     from .operators.knn import knn
-    from .sources.fs import is_remote
-    from .sources.reader import read_dataset
 
     opts = options or DatasetOptions(path=path)
-    remote = is_remote(path)
-    storage = opts.s3.to_storage_options() if (remote and opts.s3) else None
+    storage = _storage(opts.s3)
     # _meta: pre-fetched index metadata (search_dataset's single
-    # _kind_metas pass) — skips the has_index listing + meta re-fetch
-    idx_dir = _index_dir(path, column)
-    meta = _meta
-    if meta is None:
-        if remote:
-            meta = _idx_meta_remote(_remote_subdir(idx_dir, "centroids"),
-                                    storage)
-        elif os.path.exists(os.path.join(idx_dir, "index_meta.json")):
-            with open(os.path.join(idx_dir, "index_meta.json")) as fh:
-                meta = json.load(fh)
+    # _kind_metas pass) — skips the meta re-fetch
+    meta = _meta if _meta is not None else read_meta(path, column, "ivf", storage)
     if meta is None:
         raise FileNotFoundError(f"no IVF index on {path}:{column}; build_index first")
     nprobes = nprobes if nprobes is not None else opts.vector_nprobes
@@ -536,57 +501,13 @@ def ivf_index_knn(
 
     # centroid selection is driver-side over the num_partitions centroids
     # (ref: Lance scans the centroid table in-process too); the chosen
-    # cell ids are a handful of ints, so the probe becomes a static
-    # partition filter on the cell-partitioned assignments — only the
-    # probed cells' files are ever read
-    chosen = probe_cells(*load_centroids(spark, path, column, opts.s3), q, nprobes)
-    if remote:
-        # cell IN (...) is PUSHED into the assignments dataset's scan —
-        # fragment zone maps (clustered write) + cell blooms skip every
-        # un-probed fragment's GET
-        assigns = _idx_load_remote(spark,
-                                   _remote_subdir(idx_dir, "assignments"),
-                                   opts.s3)
-    else:
-        assigns = read_parquet_memo(spark, os.path.join(idx_dir, "assignments.parquet"))
-    probe_ids = assigns.filter(F.col("cell").isin(chosen))
-    id_col = meta["id_col"]
-    covered, uncovered = split_by_index_coverage(
-        path, meta.get("dataset_version", 0), storage=storage,
-        relative=remote)
-    if remote:
-        from .sources.maintenance import _remote_reader
-
-        df = _remote_reader(spark, path, opts.s3)
-    else:
-        df = read_dataset(spark, path)
-    if not covered:
-        candidates = df  # index covers nothing current: exact brute force
-    else:
-        # no broadcast hint: probed ids can be a few % of the dataset — far
-        # too big to broadcast at 100 TB. AQE broadcasts when it IS small.
-        if remote:
-            def _files_scan(files):
-                return (_remote_reader(spark, path, opts.s3,
-                                       file_col="__frag")
-                        .filter(F.col("__frag").isin(*files))
-                        .drop("__frag"))
-        else:
-            from .sources.reader import read_fragment_files
-
-            m_now = FR.read_manifest_compat(path)
-
-            def _files_scan(files):
-                return read_fragment_files(spark, m_now, files)
-        candidates = _files_scan(covered).select(*df.columns).join(
-            probe_ids.select(id_col), on=id_col, how="left_semi"
-        )
-        if uncovered:
-            # unindexed tail (rows appended/rewritten since the build):
-            # exact-scored in full and unioned with the probed candidates
-            candidates = candidates.unionByName(
-                _files_scan(uncovered).select(*df.columns)
-            )
+    # cell ids are a handful of ints, so the probe becomes a partition
+    # filter on the cell-partitioned assignments — only the probed cells'
+    # files are ever read
+    chosen = probe_cells(*load_centroids(path, column, storage), q, nprobes)
+    probe_ids = load_relation(spark, _index_dir(path, column), "assignments", opts.s3) \
+        .filter(F.col("cell").isin(chosen))
+    candidates = candidate_rows(spark, path, meta, probe_ids.select(meta["id_col"]), opts.s3)
     eff = ef if ef is not None else (options.vector_ef if options is not None else None)
     if eff is not None:
         if eff <= 0:
@@ -617,32 +538,23 @@ def refresh_index(
     counterpart of the staleness-aware search: the tail is always
     CORRECT (exact-scanned), this bounds how much of every query pays
     the brute-force price. Returns None when the index is fresh enough.
-    Works against the s3:// index plane too (meta rides the index
-    datasets' manifests; the rebuild needs ``options.s3``).
+    An s3:// index rebuilds with ``options.s3``.
 
     The rebuild rehydrates the index geometry (num_partitions / m /
     ef_construction / num_sub_vectors / num_bits) from the STORED metas —
     a maintenance-triggered refresh must reproduce what was built, not
     silently reshape the index to whatever the caller's option defaults
     happen to be."""
-    from .sources.fs import is_remote
-
-    remote = is_remote(path)
-    storage = (options.s3.to_storage_options()
-               if (remote and options is not None and options.s3) else None)
+    storage = _storage(options.s3 if options is not None else None)
     # gather EVERY kind's meta — a compound IVF_HNSW_PQ index spreads its
-    # params across the hnsw/pq/ivf sidecars; the first found is primary
+    # params across the hnsw/pq/ivf metas; the first found is primary
     metas = _kind_metas(path, column, storage)
     if not metas:
         raise FileNotFoundError(f"no index on {path}:{column}")
-    meta = next(metas[k] for k in ("hnsw", "pq", "ivf") if k in metas)
-    covered, uncovered = split_by_index_coverage(
-        path, meta.get("dataset_version", 0), storage=storage,
-        relative=remote)
-    manifest = FR.read_manifest_compat(path, storage_options=storage)
-    rows_by_file = {
-        (f.file if remote else os.path.join(path, f.file)): f.row_count
-        for f in manifest.fragments}
+    meta = next(metas[k] for k in KINDS if k in metas)
+    _, uncovered = split_by_index_coverage(path, meta.get("dataset_version", 0), storage)
+    rows_by_file = {f.file: f.row_count for f in
+                    FR.read_manifest_compat(path, storage_options=storage).fragments}
     total = sum(rows_by_file.values()) or 1
     stale = sum(rows_by_file[f] for f in uncovered)
     if stale / total <= max_uncovered_fraction:
@@ -708,25 +620,17 @@ def search_dataset(
     the probed cells (hnsw.hnsw_search); else PQ codes present → ADC +
     refine (pq.pq_search, composing IVF cell pruning when the coarse
     index coexists); IVF only → exact search in probed cells; no index →
-    brute force. s3:// datasets route IDENTICALLY through the
-    object-storage index plane (``_indexes/<col>/<kind>`` engine
-    datasets, ``options.s3`` credentials); an index-less remote dataset
-    serves the exact distributed scan through the remote pushdown
-    reader."""
+    brute force. s3:// datasets route identically (``options.s3``
+    credentials); an index-less remote dataset serves the exact
+    distributed scan through the remote pushdown reader."""
     from .hnsw import hnsw_search
     from .operators.knn import knn
     from .pq import pq_search
-    from .sources.fs import is_remote
     from .sources.reader import read_dataset
 
-    remote = is_remote(path)
     s3 = options.s3 if options is not None else None
-    storage = s3.to_storage_options() if (remote and s3) else None
-
-    # ONE metadata pass over the three kinds (presence + content per
-    # _idx_meta_remote call) — on s3:// this is 3 manifest fetches total
-    # instead of the ~5-8 separate has_*/read_*_meta round-trips
-    metas = _kind_metas(path, column, storage)
+    # ONE metadata pass: at most three meta reads, reused by the route
+    metas = _kind_metas(path, column, _storage(s3))
     use = bool(metas) if use_index is None else use_index
     if use and "hnsw" in metas:
         h_meta = metas["hnsw"]
@@ -772,7 +676,7 @@ def search_dataset(
                              ef=ef, options=options, tiebreak_cols=tiebreak_cols,
                              round_digits=round_digits, filter=filter,
                              _meta=meta)
-    if remote:
+    if fs.is_remote(path):
         from .sources.maintenance import _remote_reader
 
         base = _remote_reader(spark, path, s3)

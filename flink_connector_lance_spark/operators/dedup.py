@@ -204,9 +204,10 @@ def ngram_jaccard_pairs(
     pairs are true near-dups by construction."""
     from pyspark.sql import Window
 
+    qid = _q(id_col)
     arrays = with_shingles(df, text_col, id_col, shingle_k)  # (id, shingles)
     posts = arrays.select(
-        F.col(id_col),
+        F.col(qid),
         F.explode("shingles").alias("sh"),
         F.size("shingles").alias("n_sh"),
     )
@@ -244,10 +245,10 @@ def ngram_jaccard_pairs(
         a = posts.alias("a")
         b = posts.alias("b")
         inter = (
-            a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
+            a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col(f"a.{qid}") < F.col(f"b.{qid}")))
             .groupBy(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
+                F.col(f"a.{qid}").alias("id_a"),
+                F.col(f"b.{qid}").alias("id_b"),
                 F.col("a.n_sh").alias("na"),
                 F.col("b.n_sh").alias("nb"),
             )
@@ -261,40 +262,40 @@ def ngram_jaccard_pairs(
     # document frequency per surviving shingle (count window = one shuffle
     # on sh, the same key layout the naive join would shuffle on anyway)
     w_sh = Window.partitionBy("sh")
-    w_id = Window.partitionBy(id_col)
+    w_id = Window.partitionBy(F.col(qid))
     ranked = (
         posts.withColumn("df_", F.count(F.lit(1)).over(w_sh))
         .withColumn("psz", F.count(F.lit(1)).over(w_id))  # pruned set size
         .withColumn("rn", F.row_number().over(
-            Window.partitionBy(id_col).orderBy(F.asc("df_"), F.asc("sh"))))
+            Window.partitionBy(F.col(qid)).orderBy(F.asc("df_"), F.asc("sh"))))
     )
     # prefix length: overlap >= ceil(t * n_full) is necessary for J >= t,
     # so partners must hit the first (psz - ceil(t*n) + 1) rarest shingles;
     # docs where the pruned set is smaller than the required overlap can
     # never qualify and drop out entirely (prefix length <= 0)
     need = F.ceil(F.col("n_sh") * F.lit(threshold))
-    prefix = ranked.filter(F.col("rn") <= F.col("psz") - need + 1).select(id_col, "sh")
+    prefix = ranked.filter(F.col("rn") <= F.col("psz") - need + 1).select(F.col(qid), "sh")
     a = prefix.alias("a")
     b = prefix.alias("b")
     cand = (
-        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        a.join(b, (F.col("a.sh") == F.col("b.sh")) & (F.col(f"a.{qid}") < F.col(f"b.{qid}")))
+        .select(F.col(f"a.{qid}").alias("id_a"), F.col(f"b.{qid}").alias("id_b"))
         .distinct()
     )
     # exact verification on candidates only: pruned shingle sets re-attached
     # by id (skinny candidates carried until here), full sizes as the
     # Jaccard denominator — identical semantics to the naive path
-    pruned_sets = posts.groupBy(id_col).agg(
+    pruned_sets = posts.groupBy(F.col(qid)).agg(
         F.collect_list("sh").alias("pset"), F.first("n_sh").alias("n_full")
     )
     pairs = (
         cand.join(
-            pruned_sets.select(F.col(id_col).alias("id_a"),
+            pruned_sets.select(F.col(qid).alias("id_a"),
                                F.col("pset").alias("sa"), F.col("n_full").alias("na")),
             on="id_a",
         )
         .join(
-            pruned_sets.select(F.col(id_col).alias("id_b"),
+            pruned_sets.select(F.col(qid).alias("id_b"),
                                F.col("pset").alias("sb"), F.col("n_full").alias("nb")),
             on="id_b",
         )
@@ -334,7 +335,7 @@ def cross_corpus_overlap(
     shingle count, so pruning only ever under-reports overlap — it never
     creates a false positive)."""
     t_posts = with_shingles(train_df, text_col, id_col, shingle_k).select(
-        F.col(id_col).alias("train_id"), F.explode("shingles").alias("sh")
+        F.col(_q(id_col)).alias("train_id"), F.explode("shingles").alias("sh")
     )
     if max_doc_freq is not None:
         hot = (
@@ -344,7 +345,7 @@ def cross_corpus_overlap(
         )
         t_posts = t_posts.join(F.broadcast(hot), on="sh", how="left_anti")
     e_posts = with_shingles(eval_df, text_col, id_col, shingle_k).select(
-        F.col(id_col).alias("eval_id"),
+        F.col(_q(id_col)).alias("eval_id"),
         F.explode("shingles").alias("sh"),
         F.size("shingles").alias("n_eval"),
     )
@@ -422,16 +423,17 @@ def simhash_pairs(
     product — and the exact hamming filter runs on candidates only.
     Results are identical to the all-pairs formulation (banding is
     lossless for this radius), so the oracle stays the exact definition."""
+    qid = _q(id_col)
     hs = df.select(
-        F.col(id_col),
-        F.transform(T.tokens(text_col), lambda t: T.token_hash64(t)).alias("__hs"),
+        F.col(qid),
+        F.transform(T.tokens(F.col(_q(text_col))), lambda t: T.token_hash64(t)).alias("__hs"),
     )
-    sig = hs.select(F.col(id_col), T.simhash_of("__hs", bits).alias("sig"))
+    sig = hs.select(F.col(qid), T.simhash_of("__hs", bits).alias("sig"))
     banded = sig.select(
-        F.col(id_col),
+        F.col(qid),
         F.col("sig"),
         F.explode(F.array(*simhash_chunks(F.col("sig"), bits, max_hamming))).alias("c"),
-    ).select(id_col, "sig", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
+    ).select(F.col(qid), "sig", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv"))
     # materialize once before the self-join: the tokenize+hash64+simhash
     # pipeline would otherwise run twice (no cross-side subtree reuse);
     # the banded relation is a few small ints per doc — far smaller than
@@ -444,11 +446,11 @@ def simhash_pairs(
             b,
             (F.col("a.ci") == F.col("b.ci"))
             & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col(f"a.{qid}") < F.col(f"b.{qid}")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col(f"a.{qid}").alias("id_a"),
+            F.col(f"b.{qid}").alias("id_b"),
             F.bit_count(F.col("a.sig").bitwiseXOR(F.col("b.sig"))).alias("hamming"),
         )
         # exact hamming filter BEFORE the dedupe: the filter is a cheap

@@ -30,16 +30,14 @@ re-express both halves as DataFrame plans over the fragment-backed dataset:
   probed cells' codes before scoring (static partition pruning on the
   cell-partitioned assignments).
 
-On-disk layout: ``<dataset>/_indexes/<column>/pq/`` with
-``codebooks.parquet`` (sub, code, centroid), ``codes.parquet``
-(id, codes array), ``index_meta.json``.
+Layout (index.py, one for local and s3://): ``<dataset>/_indexes/<column>/
+pq/`` with ``codebooks.parquet/part-00000.parquet`` (sub, code, centroid),
+the ``codes`` relation (id, codes array) and ``index_meta.json``.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 from collections.abc import Sequence
 
 import numpy as np
@@ -47,52 +45,29 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .index import (
-    INDEXES_DIR,
-    _idx_load_remote,
-    _idx_meta_remote,
-    _idx_store_remote,
-    _index_dir as _ivf_dir,
-    _remote_subdir,
-    has_index as has_ivf_index,
+    _index_dir,
+    _storage,
+    begin_build,
+    candidate_rows,
+    has_index,
     load_centroids,
+    load_relation,
     probe_cells,
+    read_meta,
+    read_table,
+    store_relation,
+    write_meta,
+    write_table,
 )
 from .functions import vector as V
-from .io import read_parquet_memo
 
 
 def _pq_dir(path: str, column: str) -> str:
-    from .sources.fs import is_remote
-
-    if is_remote(path):
-        return _remote_subdir(path, INDEXES_DIR, column, "pq")
-    return os.path.join(path, INDEXES_DIR, column, "pq")
+    return _index_dir(path, column, "pq")
 
 
 def has_pq_index(path: str, column: str, storage: dict | None = None) -> bool:
-    from .sources.fs import is_remote
-
-    if is_remote(path):
-        return _idx_meta_remote(
-            _remote_subdir(_pq_dir(path, column), "codebooks"),
-            storage) is not None
-    return os.path.exists(os.path.join(_pq_dir(path, column), "index_meta.json"))
-
-
-def read_pq_meta(path: str, column: str,
-                 storage: dict | None = None) -> dict:
-    """PQ index metadata: local JSON or (s3://) the codebooks dataset's
-    commit meta."""
-    from .sources.fs import is_remote
-
-    if is_remote(path):
-        meta = _idx_meta_remote(
-            _remote_subdir(_pq_dir(path, column), "codebooks"), storage)
-        if meta is None:
-            raise FileNotFoundError(f"no PQ index on {path}:{column}")
-        return meta
-    with open(os.path.join(_pq_dir(path, column), "index_meta.json")) as fh:
-        return json.load(fh)
+    return has_index(path, column, storage, "pq")
 
 
 def build_pq_index(
@@ -117,31 +92,20 @@ def build_pq_index(
     and each sub-space's codebook is a numpy Lloyd k-means over the
     sample's slice (index.lloyd: seeds are the lowest-id rows, ties go to
     the lowest code, empty codes are dropped). One mapInArrow pass then
-    encodes every row. s3:// datasets train over the remote reader and
-    persist codebooks/codes as engine datasets under the same
-    ``_indexes/<col>/pq`` prefix."""
+    encodes every row."""
     import pyarrow as pa
     from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
 
-    from .index import (
-        SAMPLE_RATE, lloyd, nearest, training_sample, vector_matrix, write_local_table,
-    )
+    from .index import SAMPLE_RATE, lloyd, nearest, training_sample, vector_matrix
     from .sources import fragments as FR
-    from .sources.fs import is_remote
-    from .sources.reader import read_dataset
+    from .sources.maintenance import _file_scan
 
-    remote = is_remote(path)
-    storage = s3.to_storage_options() if (remote and s3) else None
+    storage = _storage(s3)
     if has_pq_index(path, column, storage) and not replace:
         raise ValueError(f"PQ index on {column!r} already exists; pass replace=True")
     if num_bits < 1 or num_bits > 8:
         raise ValueError("num_bits must be in [1, 8]")
-    if remote:
-        from .sources.maintenance import _remote_reader
-
-        df = _remote_reader(spark, path, s3)
-    else:
-        df = read_dataset(spark, path)
+    df = _file_scan(spark, path, FR.read_manifest_compat(path, storage_options=storage), s3)
     if column not in df.columns:
         raise ValueError(f"index column {column!r} not in dataset schema {df.columns}")
     vecs = df.select(
@@ -195,26 +159,12 @@ def build_pq_index(
         "training_rows": len(x),
         "dataset_version": FR.latest_version(path, storage),
     }
-    if remote:
-        # codebooks (m*k rows, collected at search time) carry the meta;
-        # codes are the skinny full-scan ADC relation — no clustering
-        # needed, the whole point is scanning every row's m small ints.
-        # Codes commit FIRST so the meta-bearing codebooks commit is the
-        # atomic "index exists" flip (local index_meta.json semantics).
-        _idx_store_remote(codes_rel, _remote_subdir(idx_dir, "codes"), s3)
-        _idx_store_remote(
-            spark.createDataFrame(books_table, "sub int, code int, centroid array<double>"),
-            _remote_subdir(idx_dir, "codebooks"), s3, meta=meta)
-        return meta
-    shutil.rmtree(idx_dir, ignore_errors=True)
-    write_local_table(books_table, os.path.join(idx_dir, "codebooks.parquet"))
-    codes_rel.write.mode("overwrite").parquet(
-        os.path.join(idx_dir, "codes.parquet")
-    )
-    tmp = os.path.join(idx_dir, "index_meta.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(idx_dir, "index_meta.json"))
+    begin_build(idx_dir, storage)
+    write_table(books_table, os.path.join(idx_dir, "codebooks.parquet"), storage)
+    # codes are the skinny full-scan ADC relation — no partitioning, the
+    # whole point is scanning every row's m small ints
+    store_relation(codes_rel, idx_dir, "codes", s3)
+    write_meta(idx_dir, meta, storage)
     return meta
 
 
@@ -275,16 +225,11 @@ def pq_search(
     IVF index, the ADC scan first prunes to the probed cells (IVF_PQ
     composition)."""
     from .operators.knn import knn
-    from .sources.fs import is_remote
-    from .sources.reader import read_dataset
 
-    remote = is_remote(path)
-    storage = s3.to_storage_options() if (remote and s3) else None
+    storage = _storage(s3)
     # _metas: search_dataset's pre-fetched per-kind metadata — skips the
-    # has_pq_index/read_pq_meta re-fetch pair (and the IVF presence GET)
-    meta = _metas.get("pq") if _metas is not None else (
-        read_pq_meta(path, column, storage)
-        if has_pq_index(path, column, storage) else None)
+    # meta re-fetch (and the IVF presence check)
+    meta = _metas.get("pq") if _metas is not None else read_meta(path, column, "pq", storage)
     if meta is None:
         raise FileNotFoundError(f"no PQ index on {path}:{column}; build_pq_index first")
     idx_dir = _pq_dir(path, column)
@@ -295,38 +240,24 @@ def pq_search(
     subdim = meta["dim"] // m
     id_col = meta["id_col"]
 
-    if remote:
-        books = [r.asDict() for r in _idx_load_remote(
-            spark, _remote_subdir(idx_dir, "codebooks"), s3).collect()]
-        codes = _idx_load_remote(spark, _remote_subdir(idx_dir, "codes"), s3)
-    else:
-        # codebooks are m*k rows of index metadata: a direct pyarrow read
-        # is ~5ms where spark.read+collect is ~150ms AND a driver-blocking
-        # Spark job per search (guide §5 — keep jobs off the metadata path)
-        import pyarrow.parquet as _pq
-
-        books = _pq.read_table(
-            os.path.join(idx_dir, "codebooks.parquet")).to_pylist()
-        codes = read_parquet_memo(spark, os.path.join(idx_dir, "codes.parquet"))
+    # codebooks are m*k rows of index metadata: a pyarrow read through
+    # the store is ~5ms where spark.read+collect is ~150ms AND a
+    # driver-blocking Spark job per search (guide §5 — keep jobs off the
+    # metadata path)
+    books = read_table(os.path.join(idx_dir, "codebooks.parquet"), storage).to_pylist()
+    codes = load_relation(spark, idx_dir, "codes", s3)
     lut = _adc_lut(books, q, m, subdim)
 
     if nprobes is not None:
         # IVF_PQ composition: restrict the ADC scan to probed cells
         have_ivf = ("ivf" in _metas) if _metas is not None \
-            else has_ivf_index(path, column, storage)
+            else has_index(path, column, storage)
         if not have_ivf:
             raise FileNotFoundError(
                 f"nprobes given but no IVF index on {path}:{column}; build_index first"
             )
-        if remote:
-            assigns = _idx_load_remote(
-                spark, _remote_subdir(_ivf_dir(path, column), "assignments"),
-                s3)
-        else:
-            assigns = read_parquet_memo(
-                spark, os.path.join(_ivf_dir(path, column), "assignments.parquet")
-            )
-        chosen = probe_cells(*load_centroids(spark, path, column, s3), q, nprobes)
+        assigns = load_relation(spark, _index_dir(path, column), "assignments", s3)
+        chosen = probe_cells(*load_centroids(path, column, storage), q, nprobes)
         probe_ids = assigns.filter(F.col("cell").isin(chosen)).select(id_col)
         codes = codes.join(probe_ids, on=id_col, how="left_semi")
 
@@ -361,46 +292,8 @@ def pq_search(
         r = max(min(r, int(ef)), k)
     cand = approx.orderBy(F.asc("_adc"), F.asc(id_col)).limit(r)
 
-    from .index import split_by_index_coverage
-
-    covered, uncovered = split_by_index_coverage(
-        path, meta.get("dataset_version", 0), storage=storage,
-        relative=remote)
-    if remote:
-        from .sources.maintenance import _remote_reader
-
-        df = _remote_reader(spark, path, s3)
-    else:
-        df = read_dataset(spark, path)
-    if not covered:
-        survivors = df  # stale beyond recognition: exact brute force
-    else:
-        # candidate fetch ONLY from index-covered files (an id rewritten
-        # into an uncovered file would otherwise be fetched twice)
-        if remote:
-            from .sources.maintenance import _remote_reader as _rr
-
-            def _files_scan(files):
-                return (_rr(spark, path, s3, file_col="__frag")
-                        .filter(F.col("__frag").isin(*files))
-                        .drop("__frag"))
-        else:
-            from .sources import fragments as FR
-            from .sources.reader import read_fragment_files
-
-            m_now = FR.read_manifest_compat(path)
-
-            def _files_scan(files):
-                return read_fragment_files(spark, m_now, files)
-        survivors = _files_scan(covered).select(*df.columns).join(
-            cand.select(id_col), on=id_col, how="left_semi"
-        )
-        if uncovered:
-            # unindexed tail: exact-scored in full (Lance's
-            # unindexed-fraction contract — appends are searchable
-            # immediately, the index just covers less until rebuilt)
-            survivors = survivors.unionByName(
-                _files_scan(uncovered).select(*df.columns)
-            )
+    # the exact re-rank reads only the R candidate rows (an id rewritten
+    # into a file added since the build is read once, from that file)
+    survivors = candidate_rows(spark, path, meta, cand.select(id_col), s3)
     return knn(survivors, column, q, k=k, metric=meta.get("metric", "l2"),
                filter=filter, tiebreak_cols=tiebreak_cols, round_digits=round_digits)

@@ -257,26 +257,15 @@ def write_bloom_sidecar(store, fragment_key: str, table,
 
 
 @lru_cache(maxsize=4096)
-def _load_sidecar(sidecar_abs_path: str) -> "dict | None":
-    """Sidecar JSON, LRU-cached by absolute path (fragment files — and
-    therefore their sidecars — are immutable: rewrites get new names)."""
+def _load_sidecar(key: str, storage_items: "tuple | None") -> "dict | None":
+    """Sidecar JSON at ``key`` (an absolute path or s3 url), one store
+    ``open`` per sidecar, LRU-cached (fragment files — and therefore their
+    sidecars — are immutable: rewrites get new names)."""
+    from .fs import store_for
+
     try:
-        with open(sidecar_abs_path) as fh:
+        with store_for(key, dict(storage_items) if storage_items else None).open(key) as fh:
             return json.load(fh)
-    except (OSError, ValueError):
-        return None  # missing/corrupt sidecar -> no pruning
-
-
-@lru_cache(maxsize=1024)
-def _load_remote_sidecar(url: str, storage_items: "tuple | None") -> "dict | None":
-    """Remote twin of ``_load_sidecar``: one fsspec GET per sidecar URL,
-    LRU-cached (sidecars are immutable — rewrites get new names)."""
-    from .fs import get_fs
-
-    try:
-        fs = get_fs(url, dict(storage_items) if storage_items else None)
-        with fs.open(url, "rb") as fh:
-            return json.loads(fh.read().decode())
     except Exception:
         return None  # missing/corrupt/unreachable sidecar -> no pruning
 
@@ -285,25 +274,19 @@ def fragment_bloom_may_contain(root: str, fragment_file: str, stats: "dict | Non
                                column: str, values,
                                storage_options: "dict | None" = None) -> bool:
     """Driver-side planning test: can ANY of ``values`` be present in
-    this fragment's ``column``?  True whenever no bloom applies. Remote
-    (s3://) roots fetch the sidecar through fsspec with the caller's
-    storage options; local roots read the file directly."""
-    from .fs import is_remote
+    this fragment's ``column``?  True whenever no bloom applies. The
+    sidecar is read through the storage seam with the caller's storage
+    options."""
+    from .fs import absolute
 
     if not stats:
         return True
     entry = stats.get(BLOOM_STATS_KEY)
     if not entry or column not in entry.get("cols", {}):
         return True
-    if is_remote(root):
-        rel = os.path.dirname(fragment_file)
-        url = "/".join(p for p in (str(root).rstrip("/"), rel, entry["file"]) if p)
-        payload = _load_remote_sidecar(
-            url, tuple(sorted(storage_options.items())) if storage_options else None)
-    else:
-        sidecar = os.path.join(root, os.path.dirname(fragment_file),
-                               entry["file"])
-        payload = _load_sidecar(os.path.abspath(sidecar))
+    key = os.path.join(absolute(root), os.path.dirname(fragment_file), entry["file"])
+    payload = _load_sidecar(
+        key, tuple(sorted(storage_options.items())) if storage_options else None)
     if not payload or column not in payload:
         return True
     bf = BloomFilter.from_json(payload[column])

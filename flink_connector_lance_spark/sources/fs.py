@@ -25,15 +25,21 @@ binary chain in sources/lance_format.py), ``vacuum_dataset`` and
 ``describe_dataset`` (sources/maintenance.py) and the catalog/streaming
 listings all run over it.
 
-The write half of the data plane runs over it too: every fragment
-producer (sources/writer.py, the ``format("lance")`` writer) is a task
-that writes ``data/<uuid>.<ext>`` through ``store.writing(key)`` —
-in place on a local store, a worker-local scratch file PUT to the key
-on an object store — and the driver commits one ``create_exclusive``
-manifest. Remote scans go through the Python DataSource, whose workers
-open fragments through ``get_fs`` with the same credentials. Without
-fsspec installed, every remote call degrades to the same clear
-``RemoteUnavailableError``.
+``writing`` is all-or-nothing on both stores: a dot-prefixed sibling
+temp file ``os.replace``d onto the key locally, a worker-local scratch
+file PUT to the key on an object store. The write half of the data plane
+runs over it: every fragment producer (sources/writer.py, the
+``format("lance")`` writer) is a task that writes ``data/<uuid>.<ext>``
+through ``store.writing(key)``, and the driver commits one
+``create_exclusive`` manifest. Bloom sidecars are read through ``open``.
+
+The index plane (index.py, pq.py, hnsw.py) keeps one layout under
+``_indexes/<column>/<kind>/`` on both stores: its metas, centroid and
+codebook tables and per-cell HNSW files are written through ``writing``
+and read through ``open``, by the driver or by the search tasks. Remote
+scans go through the Python DataSource, whose workers open fragments
+through ``get_fs`` with the same credentials. Without fsspec installed,
+every remote call degrades to the same clear ``RemoteUnavailableError``.
 """
 
 from __future__ import annotations
@@ -205,15 +211,23 @@ class LocalStore:
 
     @contextmanager
     def writing(self, path: str):
-        """Yield the local file to write ``path`` through: the key itself
-        (its directory created); a failed write removes the partial file."""
+        """Yield a dot-prefixed sibling temp file to write ``path``
+        through, ``os.replace``d onto the key once the caller's block
+        finishes without error: all-or-nothing like an object store's
+        single PUT. A failed write removes the temp file and leaves the
+        key as it was."""
+        import uuid
+
         p = local_path(path)
-        os.makedirs(os.path.dirname(p) or ".", exist_ok=True)
+        d, name = os.path.split(p)
+        os.makedirs(d or ".", exist_ok=True)
+        tmp = os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
         try:
-            yield p
+            yield tmp
+            os.replace(tmp, p)
         except BaseException:
-            if os.path.exists(p):
-                os.remove(p)
+            if os.path.exists(tmp):
+                os.remove(tmp)
             raise
 
 

@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 from ..options import DatasetOptions
 from ..operators.text import BM25_B, BM25_K1, tokens
 from . import fragments as FR
-from .reader import read_fragment_files
+from .maintenance import _file_scan
 from .writer import write_dataset
 
 _META_KEY = "fts"
@@ -161,27 +161,6 @@ def _commit_postings(post: DataFrame, idx_path: str, meta: dict,
                   expected_base_version=expected_base_version)
 
 
-def _fts_source_scan(spark: SparkSession, path: str, manifest,
-                     files: "list[str] | None", s3) -> DataFrame:
-    """The index build/refresh corpus scan: local datasets resolve
-    explicit fragment files against the manifest schema; s3:// corpora
-    flow through the file-attributed remote reader (``files`` prune
-    PARTITIONS at planning time — a delta refresh explodes only the
-    added fragments remotely too)."""
-    from .fs import is_remote
-
-    if not is_remote(path):
-        paths = (FR.fragment_paths(path, manifest) if files is None
-                 else [os.path.join(path, f) for f in files])
-        return read_fragment_files(spark, manifest, paths)
-    from .maintenance import _remote_reader
-
-    if files is None:
-        return _remote_reader(spark, path, s3)
-    return (_remote_reader(spark, path, s3, file_col="__frag")
-            .filter(F.col("__frag").isin(*files)).drop("__frag"))
-
-
 def _prune_postings_files(m, idx_path: str, terms: list) -> list:
     """Fragment files that may hold postings of ``terms`` — the SAME
     conservative planning predicates the datasource reader applies
@@ -258,7 +237,7 @@ def create_fts_index(spark: SparkSession, path: str, text_col: str = "text",
         raise ValueError(f"unknown analyzer {analyzer!r}; one of {_ANALYZERS}")
     storage = s3.to_storage_options() if s3 is not None else None
     m = FR.read_manifest_compat(path, storage_options=storage)
-    base = _fts_source_scan(spark, path, m, None, s3)
+    base = _file_scan(spark, path, m, s3)
     n_docs, sum_dl = _delta_stats(base, text_col, id_col, analyzer)
     meta = {
         "text_col": text_col,
@@ -326,7 +305,7 @@ def _refresh_fts_once(spark: SparkSession, path: str, text_col: str,
     added = [f for f in cur.fragments if f.file not in covered]
     if not added:
         return {"mode": "noop", "source_version": info["source_version"]}
-    delta = _fts_source_scan(spark, path, cur, [f.file for f in added], s3)
+    delta = _file_scan(spark, path, cur, s3, files=[f.file for f in added])
     dn, ds = _delta_stats(delta, text_col, id_col,
                           info.get("analyzer", "whitespace"))
     meta = dict(info)

@@ -3737,16 +3737,11 @@ def commit_native(root: str, fields: list[NativeField],
             continue  # re-read the new tip and retry
         if stats_map:
             # after the win: a crash here leaves manifest-without-sidecar,
-            # which readers treat as stats-absent (no pruning — safe)
-            if not store.is_local:
-                # a PUT is atomic per key — no tmp+rename dance needed
-                with store.open(_stats_sidecar(root, version), "wb") as fh:
-                    fh.write(json.dumps(stats_map).encode())
-            else:
-                tmp = _stats_sidecar(root, version) + ".tmp"
+            # which readers treat as stats-absent (no pruning — safe);
+            # the write itself is all-or-nothing on both stores
+            with store.writing(_stats_sidecar(root, version)) as tmp:
                 with open(tmp, "w") as fh:
                     json.dump(stats_map, fh)
-                os.rename(tmp, _stats_sidecar(root, version))
         return read_native_manifest(root, version,
                                     storage_options=storage_options)
 

@@ -899,16 +899,18 @@ def _file_scan(spark, path: str, manifest: FR.Manifest, s3=None,
     Locally a native parquet scan resolved against the manifest schema
     (``reader.read_fragment_files``) with ``where`` pushed into it, the
     file taken from ``input_file_name()`` at the scan — cheaper than the
-    datasource's per-row file column. On an object store the datasource
-    with ``read.file-column``: its EqualTo/In on the file column prunes
-    partitions, so a fragment subset is a partition-pruned rescan."""
+    datasource's per-row file column. On an object store the datasource,
+    with ``read.file-column`` when a file subset or ``file_col`` asks for
+    it: its EqualTo/In on the file column prunes partitions, so a
+    fragment subset is a partition-pruned rescan."""
     import pyspark.sql.functions as F
 
     from .fs import absolute, is_remote
     from .reader import read_fragment_files
 
     if is_remote(path):
-        df = _remote_reader(spark, path, s3, file_col="__frag")
+        attributed = files is not None or file_col is not None
+        df = _remote_reader(spark, path, s3, file_col="__frag" if attributed else None)
         if files is not None:
             df = df.filter(F.col("__frag").isin(*sorted(files)))
         if where is not None:

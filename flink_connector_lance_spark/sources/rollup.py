@@ -61,7 +61,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fragments as FR
-from .reader import read_dataset, read_fragment_files
+from .maintenance import _file_scan
+from .reader import read_dataset
 from .writer import write_dataset
 
 ROLLUPS_DIR = "_rollups"
@@ -214,27 +215,6 @@ def _partial_state(df: DataFrame, group_cols: "list[str]", spec) -> DataFrame:
     return df.groupBy(*group_cols).agg(*_partial_exprs(spec))
 
 
-def _source_scan(spark: SparkSession, path: str, manifest: FR.Manifest,
-                 files: "list[str] | None", s3) -> DataFrame:
-    """The rollup's source scan: local datasets resolve explicit fragment
-    files against the manifest schema; s3:// datasets flow through the
-    file-attributed remote reader (``files`` — manifest-relative names —
-    prune PARTITIONS at planning time, so a delta refresh scans only the
-    added fragments remotely too)."""
-    from .fs import is_remote
-
-    if not is_remote(path):
-        paths = (FR.fragment_paths(path, manifest) if files is None
-                 else [os.path.join(path, f) for f in files])
-        return read_fragment_files(spark, manifest, paths)
-    from .maintenance import _remote_reader
-
-    if files is None:
-        return _remote_reader(spark, path, s3)
-    return (_remote_reader(spark, path, s3, file_col="__frag")
-            .filter(F.col("__frag").isin(*files)).drop("__frag"))
-
-
 def _read_state(spark: SparkSession, rp: str, s3) -> DataFrame:
     from .fs import is_remote
 
@@ -291,7 +271,7 @@ def create_rollup(
     spec = _normalize_aggs(aggs)
     storage = s3.to_storage_options() if s3 is not None else None
     m = FR.read_manifest_compat(path, storage_options=storage)
-    df = _apply_transform(_source_scan(spark, path, m, None, s3),
+    df = _apply_transform(_file_scan(spark, path, m, s3),
                           pre_transform)
     _missing_transform_cols(df, group_cols, spec)
     _commit_state(_partial_state(df, group_cols, spec), rollup_path(path, name),
@@ -349,7 +329,7 @@ def refresh_rollup(spark: SparkSession, path: str, name: str,
     if covered - cur_files:
         # DELETE/MERGE/compaction/overwrite rewrote covered data: partials
         # for the vanished files can't be subtracted out — recompute
-        df = _apply_transform(_source_scan(spark, path, cur, None, s3),
+        df = _apply_transform(_file_scan(spark, path, cur, s3),
                               pre_transform)
         _commit_state(_partial_state(df, group_cols, spec), rp, group_cols,
                       spec, cur, pre_transform, s3=s3)
@@ -360,7 +340,7 @@ def refresh_rollup(spark: SparkSession, path: str, name: str,
     if not added:
         return {"mode": "noop", "source_version": info["source_version"]}
     delta = _apply_transform(
-        _source_scan(spark, path, cur, [f.file for f in added], s3),
+        _file_scan(spark, path, cur, s3, files=[f.file for f in added]),
         pre_transform)
     merged = (
         _read_state(spark, rp, s3)

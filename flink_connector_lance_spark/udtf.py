@@ -19,6 +19,9 @@ Improvements over the reference (SURVEY.md §7.0.4):
 Scale posture — two routes, chosen per (path, column) exactly like the
 reference picks indexed vs flat search:
 
+All three routes read local datasets; the index files are those of the
+one index layout (index.py).
+
 - **indexed** (fragment dataset with an on-disk PQ index, matching
   metric): the worker holds ONLY the PQ state — codes (num_sub_vectors
   bytes/row), ids, codebook LUT slabs — never the vectors. Search is
@@ -33,10 +36,10 @@ reference picks indexed vs flat search:
 - **hnsw** (graph index present, no PQ codes): in-process twin of
   hnsw.hnsw_search — probe cells, ef-bounded best-first traversal per
   cell, exact re-rank of the winners, unindexed tail exact-scored. The
-  graph/vector files are hive-partitioned by cell, and the worker reads
-  ONLY the probed cells' partition directories (per-cell LRU,
-  ``_load_hnsw_cell``) — worker memory is O(probed cells), never the
-  whole index. PQ still outranks it here because codes are ~16 B/row
+  worker reads ONLY the probed cells' graph/vector files, through the
+  same per-cell loader as the distributed search (hnsw.load_cell, under
+  a per-cell LRU, ``_load_hnsw_cell``) — worker memory is O(probed
+  cells), never the whole index. PQ still outranks it here because codes are ~16 B/row
   while traversal holds the probed cells' raw vectors; the distributed
   search_dataset makes the opposite call (graph first) since executors
   share the slabs.
@@ -286,7 +289,7 @@ def _load_ivf(path: str, column: str, id_col: str):
     key = (path, column, "ivf", os.stat(meta_path).st_mtime_ns)
     hit = _cache_get(key)
     if hit is None:
-        cells, cmat = load_centroids(None, path, column)
+        cells, cmat = load_centroids(path, column)
         at = pq.read_table(os.path.join(idx, "assignments.parquet"))
         a_ids = at.column(id_col).to_numpy(zero_copy_only=False).astype(np.int64)
         a_cell = at.column("cell").to_numpy(zero_copy_only=False)
@@ -394,51 +397,40 @@ def _cell_cache_get_or(key: tuple, load):
 
 
 def _load_hnsw_meta(path: str, column: str):
-    """(meta dict, available cell ids, index mtime). The cell list comes
-    from the partition DIRECTORY names (``vectors.parquet/cell=N``) — a
-    metadata-only listing, no data file is opened."""
+    """(meta dict, built cell ids, index mtime): the build records its
+    cell ids in the meta, so no directory is listed."""
     from .hnsw import _hnsw_dir
 
-    idx = _hnsw_dir(path, column)
-    meta_path = os.path.join(idx, "index_meta.json")
+    meta_path = os.path.join(_hnsw_dir(path, column), "index_meta.json")
     mtime = os.stat(meta_path).st_mtime_ns
     key = (path, column, "hnsw-meta", mtime)
     hit = _cache_get(key)
     if hit is None:
         with open(meta_path) as fh:
             meta = json.load(fh)
-        vdir = os.path.join(idx, "vectors.parquet")
-        cells = sorted(
-            int(n.split("=", 1)[1]) for n in os.listdir(vdir)
-            if n.startswith("cell=")
-        )
-        hit = (meta, cells, mtime)
+        hit = (meta, meta["cells"], mtime)
         _cache_put(key, hit)
     return hit
 
 
 def _load_hnsw_cell(path: str, column: str, cell: int, mtime: int):
-    """ONE cell's searcher state ``(ids (n,), mat (n, dim), levels (n,),
-    adj {(id, layer): [ids]})``, read from that cell's partition
-    directories ONLY — an un-probed cell's graph/vector files are never
-    opened (pinned by tests/test_udtf_indexed.py), so worker memory and
-    IO are O(probed cells), not O(index): the fix for the round-4
-    full-index load, which held every cell's raw vectors even when one
-    was probed."""
-    from .hnsw import _hnsw_dir
+    """ONE cell's searcher state (hnsw.load_cell), read from that cell's
+    files ONLY — an un-probed cell's graph/vector files are never opened
+    (pinned by tests/test_udtf_indexed.py), so worker memory and IO are
+    O(probed cells), not O(index)."""
+    from .hnsw import _hnsw_dir, load_cell
 
-    def load():
-        idx = _hnsw_dir(path, column)
-        vt = pq.read_table(os.path.join(idx, "vectors.parquet", f"cell={cell}"))
-        gt = pq.read_table(os.path.join(idx, "graph.parquet", f"cell={cell}")).to_pylist()
-        ids = vt.column("id").to_numpy(zero_copy_only=False).astype(np.int64)
-        mat = vector_matrix(vt.column("vec"))
-        adj = {(int(r["id"]), int(r["layer"])): list(r["neighbors"]) for r in gt}
-        lvl = {int(r["id"]): int(r["node_level"]) for r in gt}
-        levels = np.array([lvl.get(int(i), 0) for i in ids], dtype=np.int64)
-        return (ids, mat, levels, adj)
+    return _cell_cache_get_or((path, column, "hnsw-cell", cell, mtime),
+                              lambda: load_cell(_hnsw_dir(path, column), cell))
 
-    return _cell_cache_get_or((path, column, "hnsw-cell", cell, mtime), load)
+
+def _coverage(path: str, meta: dict) -> tuple[list[str], list[str]]:
+    """index.split_by_index_coverage, as local file paths."""
+    from .index import split_by_index_coverage
+
+    covered, uncovered = split_by_index_coverage(path, meta.get("dataset_version", 0))
+    return ([os.path.join(path, f) for f in covered],
+            [os.path.join(path, f) for f in uncovered])
 
 
 def _load_hnsw_cell_means(path: str, column: str, mtime: int):
@@ -470,7 +462,6 @@ def _eval_hnsw(path: str, column: str, q: np.ndarray, k: int, metric: str,
     fetch ONLY the winner rows (pushed id filter), exact-score the
     unindexed tail."""
     from .hnsw import _traverse_cell
-    from .index import split_by_index_coverage
 
     meta, avail, mtime = _load_hnsw_meta(path, column)
     if q.shape[0] != meta["dim"]:
@@ -486,7 +477,7 @@ def _eval_hnsw(path: str, column: str, q: np.ndarray, k: int, metric: str,
         from .index import has_index, load_centroids, probe_cells
 
         if has_index(path, column):
-            cc, cmat = load_centroids(None, path, column)
+            cc, cmat = load_centroids(path, column)
         else:
             cc, cmat = _load_hnsw_cell_means(path, column, mtime)
         avail_set = set(avail)
@@ -500,7 +491,7 @@ def _eval_hnsw(path: str, column: str, q: np.ndarray, k: int, metric: str,
     merged.sort(key=lambda t: (t[1], t[0]))
     win_ids = np.array([i for i, _ in merged[:pool]], dtype=np.int64)
 
-    covered, uncovered = split_by_index_coverage(path, meta.get("dataset_version", 0))
+    covered, uncovered = _coverage(path, meta)
     parts = []
     if covered:
         parts.append(_read_filtered(covered, None, id_col, win_ids, schema=dschema))
@@ -546,12 +537,10 @@ def _eval_indexed(path: str, column: str, q: np.ndarray, k: int, metric: str,
     """ADC over the PQ codes + exact refine reading ONLY candidate rows.
     Mirrors pq.pq_search's plan in-process (ref refine-factor,
     config/LanceOptions.java:232-237)."""
-    from .index import split_by_index_coverage
-
     meta, ids, codes, cents = _load_pq(path, column)
     # coverage re-derived per search (metadata-only): appends since the
     # index build land in `uncovered` and are exact-scored below
-    covered, uncovered = split_by_index_coverage(path, meta.get("dataset_version", 0))
+    covered, uncovered = _coverage(path, meta)
     m = meta["num_sub_vectors"]
     subdim = meta["dim"] // m
     id_col = meta["id_col"]

@@ -104,16 +104,20 @@ def test_connected_components_deep_chain_converges(spark):
     assert all(c == 0 for c in out.values())
 
 
-def test_minhash_pairs_quote_column_names(spark):
-    """The SQL-text builders quote the id and text names: a backtick or a
+@pytest.mark.parametrize("builder", ["minhash_lsh_pairs", "ngram_jaccard_pairs",
+                                     "simhash_pairs"])
+def test_minhash_pairs_quote_column_names(spark, builder):
+    """The pair builders quote the id and text names: a backtick or a
     dot inside a name is part of the name, and the pairs equal those of
     the same corpus under plain names."""
+    pairs = getattr(D, builder)
     rows = [(i, f"alpha beta gamma delta epsilon zeta token{i % 5} end") for i in range(30)]
     plain = spark.createDataFrame(rows, ["doc_id", "text"])
-    odd = plain.toDF("doc`id", "the.text")
-    want = {tuple(r) for r in D.minhash_lsh_pairs(plain, "text", "doc_id").collect()}
-    got = {tuple(r) for r in D.minhash_lsh_pairs(odd, "the.text", "doc`id").collect()}
-    assert got == want and len(want) > 0
+    want = {tuple(r) for r in pairs(plain, "text", "doc_id").collect()}
+    assert len(want) > 0
+    for odd_id in ("doc`id", "doc.id"):
+        odd = plain.toDF(odd_id, "the.text")
+        assert {tuple(r) for r in pairs(odd, "the.text", odd_id).collect()} == want
 
 
 def _reference_components(vertices, edges):

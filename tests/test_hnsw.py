@@ -240,19 +240,19 @@ def test_node_levels_are_geometric_and_deterministic():
 
 
 def test_local_cell_candidates_path_schemes(spark, hnsw_ds):
-    """The local per-cell path takes a bare path or file:// (same
-    candidates) and rejects any other scheme with a clear error."""
-    from flink_connector_lance_spark.hnsw import _local_cell_candidates
+    """The per-cell path takes a bare path or file:// (same candidates)
+    and rejects any other scheme with a clear error."""
+    from flink_connector_lance_spark.hnsw import cell_candidates
 
     idx_dir = os.path.join(hnsw_ds, "_indexes", "embedding", "hnsw")
     with open(os.path.join(idx_dir, "index_meta.json")) as fh:
-        dim = json.load(fh)["dim"]
+        cells = json.load(fh)["cells"]
     q = [float(v) for v in QVEC]
 
     def cands(d):
-        return sorted(_local_cell_candidates(spark, d, None, q, 10, 10, "l2", dim).collect())
+        return sorted(cell_candidates(spark, d, cells, q, 10, 10, "l2").collect())
 
     plain = cands(idx_dir)
     assert plain and cands("file://" + idx_dir) == plain
     with pytest.raises(ValueError, match="unsupported scheme"):
-        _local_cell_candidates(spark, "hdfs://nn" + idx_dir, None, q, 10, 10, "l2", dim)
+        cell_candidates(spark, "hdfs://nn" + idx_dir, cells, q, 10, 10, "l2")

@@ -155,13 +155,14 @@ def test_refresh_reads_only_delta_fragments(spark, tmp_path, monkeypatch):
     write_dataset(_base(spark, n=10, offset=5000), path, mode="append")
 
     scanned: list[list[str]] = []
-    real = R.read_fragment_files
+    real = R._file_scan
 
-    def spy(spark_, manifest, files):
-        scanned.append(list(files))
-        return real(spark_, manifest, files)
+    def spy(spark_, path_, manifest, s3=None, files=None, **kw):
+        names = files if files is not None else [f.file for f in manifest.fragments]
+        scanned.append([f"{path_}/{f}" for f in names])
+        return real(spark_, path_, manifest, s3, files=files, **kw)
 
-    monkeypatch.setattr(R, "read_fragment_files", spy)
+    monkeypatch.setattr(R, "_file_scan", spy)
     res = refresh_rollup(spark, path, "by_grp")
     assert res["mode"] == "incremental" and res["delta_rows"] == 10
     # exactly one source-table scan, and it names ONLY the delta files

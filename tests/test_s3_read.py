@@ -1066,9 +1066,11 @@ def test_s3_ann_ivf_index_end_to_end(fake_s3, spark):
                       options=opts)
     assert res.success, res.error
     assert has_index(url, "vec", s3.to_storage_options())
-    # layout: both relations are engine datasets under the index prefix
+    # layout: the driver-built centroid table and the meta are files of
+    # the local layout; the assignments are an engine dataset
     ivf_root = os.path.join(local, "_indexes", "vec", "ivf")
-    assert os.path.isdir(os.path.join(ivf_root, "centroids", "_versions"))
+    assert os.path.isfile(os.path.join(ivf_root, "centroids.parquet", "part-00000.parquet"))
+    assert os.path.isfile(os.path.join(ivf_root, "index_meta.json"))
     assert os.path.isdir(os.path.join(ivf_root, "assignments", "_versions"))
     # replace-flag semantics hold remotely
     res2 = build_index(url, "vec", "ivf_flat", spark=spark, id_col="id",
@@ -1143,14 +1145,12 @@ def test_s3_index_meta_records_training_rows(fake_s3, spark):
 
 
 def test_s3_index_meta_commits_last(fake_s3, spark):
-    """Crash-safe remote build ordering (round-12 ADVICE): the
-    meta-bearing relation (centroids) commits LAST, so a build that died
-    after the companion commit — simulated by deleting the centroids
-    prefix — leaves has_index() False, searches falling back to exact
-    brute force (not FileNotFoundError), and a re-build with
-    replace=False SUCCEEDING instead of refusing against a half-index."""
-    import shutil as _shutil
-
+    """Crash-safe remote build ordering (round-12 ADVICE): the meta
+    (index_meta.json) is written LAST, so a build that died after writing
+    the index files — simulated by deleting the meta — leaves has_index()
+    False, searches falling back to exact brute force (not
+    FileNotFoundError), and a re-build with replace=False SUCCEEDING
+    instead of refusing against a half-index."""
     from flink_connector_lance_spark.index import (
         build_index,
         has_index,
@@ -1167,10 +1167,10 @@ def test_s3_index_meta_commits_last(fake_s3, spark):
     opts = DatasetOptions(path=url, s3=s3, index_num_partitions=4)
     assert build_index(url, "vec", "ivf_flat", spark=spark, id_col="id",
                        options=opts).success
-    # simulate the crash window: companion (assignments) present,
-    # meta-bearing relation (centroids) never committed
-    _shutil.rmtree(os.path.join(local, "_indexes", "vec", "ivf",
-                                "centroids"))
+    # simulate the crash window: centroids and assignments present,
+    # the meta never written
+    os.remove(os.path.join(local, "_indexes", "vec", "ivf",
+                           "index_meta.json"))
     storage = s3.to_storage_options()
     assert not has_index(url, "vec", storage)
     got = search_dataset(spark, url, "vec", [1.0, 2.0], k=5, options=opts,
@@ -1580,6 +1580,57 @@ def test_s3_ann_pq_hnsw_and_refresh(fake_s3, spark):
                            nprobes=4, ef=200, options=opts,
                            tiebreak_cols=["id"], round_digits=6).collect()
     assert all(r.id >= 1000 for r in after)
+
+
+def test_s3_hnsw_search_takes_the_per_cell_route(fake_s3, spark):
+    """HNSW search on s3:// runs the local plan: one MapInArrow task per
+    probed cell, no cogroup; with nprobes=1 only the probed cell's graph
+    and vector files are opened through the store; and the top-k equals
+    that of the local build over the same rows."""
+    from flink_connector_lance_spark.hnsw import build_hnsw_index, hnsw_search
+    from flink_connector_lance_spark.index import (
+        build_index,
+        load_centroids,
+        probe_cells,
+    )
+    from flink_connector_lance_spark.options import DatasetOptions
+
+    rows = [(i, [float(i % 13), float((i * 7) % 11), float(i % 5)])
+            for i in range(160)]
+    df = spark.createDataFrame(rows, "id long, vec array<double>")
+    twin = os.path.join(fake_s3, "_hnsw_twin")
+    local = os.path.join(fake_s3, "bucket", "wh", "db1", "hnswroute")
+    url = "s3://bucket/wh/db1/hnswroute"
+    s3 = S3Options(endpoint=f"fake://{fake_s3}")
+    storage = s3.to_storage_options()
+    for path, opts in ((twin, DatasetOptions(path=twin, index_num_partitions=4)),
+                       (url, DatasetOptions(path=url, s3=s3, index_num_partitions=4))):
+        write_dataset(df.repartition(2), local if path == url else twin,
+                      mode="overwrite")
+        assert build_index(path, "vec", "ivf_flat", spark=spark, id_col="id",
+                           options=opts).success
+        build_hnsw_index(spark, path, "vec", m=4, ef_construction=16,
+                         s3=opts.s3)
+
+    q = [1.0, 2.0, 3.0]
+    got = hnsw_search(spark, url, "vec", q, k=6, nprobes=2, ef=20,
+                      tiebreak_cols=["id"], round_digits=6, s3=s3)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "FlatMapCoGroupsInPandas" not in plan, plan
+    want = hnsw_search(spark, twin, "vec", q, k=6, nprobes=2, ef=20,
+                       tiebreak_cols=["id"], round_digits=6)
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+
+    cell = probe_cells(*load_centroids(url, "vec", storage), q, 1)[0]
+    log = os.path.join(fake_s3, "_get_keys.log")
+    open(log, "w").close()
+    hnsw_search(spark, url, "vec", q, k=3, nprobes=1, s3=s3).collect()
+    opened = {ln.split()[1] for ln in open(log).read().splitlines() if ln}
+    cell_keys = {k for k in opened if ".parquet/cell=" in k}
+    base = f"{url}/_indexes/vec/hnsw"
+    assert cell_keys == {
+        f"{base}/graph.parquet/cell={cell}/part-00000.parquet",
+        f"{base}/vectors.parquet/cell={cell}/part-00000.parquet"}, cell_keys
 
 
 def test_s3_run_maintenance_refreshes_remote_ann_index(fake_s3, spark):

@@ -191,3 +191,40 @@ def test_local_metadata_plane_without_fsspec(tmp_path, monkeypatch, native):
     assert rep["kept_versions"] == [head] and rep["dropped_versions"] == 2
     assert rep["deleted_files"] == 2 and rep["skipped_young_keys"] == 0
     assert FR.read_manifest_compat(root).row_count == 2
+
+
+def test_local_writing_is_all_or_nothing(tmp_path):
+    """``LocalStore.writing`` writes a dot-prefixed sibling temp file and
+    replaces the key with it only when the block succeeds: a failed block
+    leaves neither the key nor a temp file, and an existing key keeps its
+    old bytes until the block that rewrites it has finished."""
+    from flink_connector_lance_spark.sources.fs import store_for
+
+    store = store_for(str(tmp_path))
+    key = str(tmp_path / "sub" / "k.json")
+    with pytest.raises(RuntimeError, match="boom"):
+        with store.writing(key) as tmp:
+            assert os.path.basename(tmp).startswith(".")
+            with open(tmp, "w") as fh:
+                fh.write("partial")
+            raise RuntimeError("boom")
+    assert os.listdir(tmp_path / "sub") == []
+
+    with store.writing(key) as tmp:
+        with open(tmp, "w") as fh:
+            fh.write("old")
+    with store.writing(key) as tmp:
+        with open(tmp, "w") as fh:
+            fh.write("new")
+        with open(key) as fh:
+            assert fh.read() == "old"
+    with open(key) as fh:
+        assert fh.read() == "new"
+    with pytest.raises(RuntimeError):
+        with store.writing(key) as tmp:
+            with open(tmp, "w") as fh:
+                fh.write("torn")
+            raise RuntimeError
+    with open(key) as fh:
+        assert fh.read() == "new"
+    assert os.listdir(tmp_path / "sub") == ["k.json"]
