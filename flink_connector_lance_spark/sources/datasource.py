@@ -844,66 +844,28 @@ class LanceDataSourceReader(DataSourceReader):
 
 def _write_fragment(path: str, iterator: Iterator["pa.RecordBatch"],
                     bloom_columns: "List[str] | None" = None,
-                    storage: "dict | None" = None) -> FragmentCommitMessage:
-    """Executor side: stream one task's Arrow batches into one fragment
-    file through the storage seam (writer.write_parquet_fragment — in
-    place locally, PUT from the task on s3). Fragments are invisible
-    until a manifest names them; an empty task writes nothing."""
+                    storage: "dict | None" = None,
+                    native_fields=None, native: bool = False,
+                    evolve: bool = False) -> FragmentCommitMessage:
+    """Executor side: one task's Arrow batches become one fragment file
+    through the storage seam (``writer.write_fragment`` — in place
+    locally, PUT from the task on s3): parquet, or with ``native`` a Lance
+    v2 file aligned to ``native_fields`` (the live manifest schema,
+    shipped from the driver — column order + arrow-safe casts; with
+    ``evolve`` new columns may follow it, and every task shares one Spark
+    plan, so all fragments of a commit agree on the evolved shape).
+    Fragments are invisible until a manifest names them; an empty task
+    writes nothing."""
     from .fs import absolute, store_for
-    from .writer import write_parquet_fragment
+    from .writer import LanceEncoder, write_fragment
 
-    name = FR.new_fragment_name()
-    got = write_parquet_fragment(store_for(path, storage),
-                                 f"{absolute(path)}/{FR.DATA_DIR}/{name}",
-                                 iterator, bloom_columns)
+    got = write_fragment(store_for(path, storage), absolute(path), iterator,
+                         bloom_columns,
+                         LanceEncoder(native_fields, evolve) if native else None)
     if got is None:
         return FragmentCommitMessage(file=None, row_count=0)
-    rows, stats = got
-    return FragmentCommitMessage(file=f"{FR.DATA_DIR}/{name}",
-                                 row_count=rows, stats=stats)
-
-
-def _write_native_fragment(path: str, iterator: Iterator["pa.RecordBatch"],
-                           fields=None,
-                           bloom_columns=None,
-                           storage: "dict | None" = None,
-                           evolve: bool = False) -> FragmentCommitMessage:
-    """Executor side, REAL-Lance-format twin of ``_write_fragment``: one
-    task's batches become one ``data/<uuid>.lance`` v2 file through the
-    stdlib codec. ``fields`` (the live manifest schema, shipped from the
-    driver) aligns appends — column order + arrow-safe casts — before
-    any byte lands; with ``evolve`` the alignment permits new columns
-    after the live schema (every task shares one Spark plan, so all
-    fragments of a commit agree on the evolved shape). The file goes
-    through the storage seam like the parquet twin."""
-    import uuid as _uuid
-
-    import pyarrow as pa
-
-    from . import lance_format as LF
-    from .bloom import BLOOM_STATS_KEY, write_bloom_sidecar
-    from .fs import absolute, store_for
-
-    batches = list(iterator)
-    rows = sum(b.num_rows for b in batches)
-    if rows == 0:
-        return FragmentCommitMessage(file=None, row_count=0)
-    tbl = pa.Table.from_batches(batches)
-    if fields is not None:
-        tbl = (LF.align_evolving(tbl, fields) if evolve
-               else LF.align_to_fields(tbl, fields))
-    fname = f"{_uuid.uuid4()}.lance"
-    stats = LF.arrow_fragment_stats(tbl) or {}
-    store = store_for(path, storage)
-    key = f"{absolute(path)}/{LF.DATA_DIR}/{fname}"
-    with store.writing(key) as local:
-        LF.write_native_file(tbl, local)
-    if bloom_columns:
-        entry = write_bloom_sidecar(store, key, tbl, bloom_columns)
-        if entry is not None:
-            stats[BLOOM_STATS_KEY] = entry
-    return FragmentCommitMessage(file=f"{LF.DATA_DIR}/{fname}",
-                                 row_count=rows, stats=stats or None)
+    file, rows, stats = got
+    return FragmentCommitMessage(file=file, row_count=rows, stats=stats)
 
 
 def _drop_fragments(path: str, messages, storage: "dict | None" = None) -> None:
@@ -1058,13 +1020,9 @@ class LanceDataSourceWriter(DataSourceArrowWriter):
                     self._path, storage_options=self._storage).fields
 
     def write(self, iterator: Iterator["pa.RecordBatch"]) -> FragmentCommitMessage:
-        if self._native:
-            return _write_native_fragment(self._path, iterator,
-                                          self._native_fields,
-                                          self._bloom_cols, self._storage,
-                                          self._evolve)
         return _write_fragment(self._path, iterator, self._bloom_cols,
-                               self._storage)
+                               self._storage, self._native_fields,
+                               self._native, self._evolve)
 
     def commit(self, messages: List[FragmentCommitMessage]) -> None:
         """Runs on the driver: single-winner manifest commit."""
@@ -1178,13 +1136,9 @@ class LanceDataSourceStreamWriter(DataSourceStreamArrowWriter):
                 self._path, storage_options=self._storage).fields
 
     def write(self, iterator: Iterator["pa.RecordBatch"]) -> FragmentCommitMessage:
-        if self._native:
-            return _write_native_fragment(self._path, iterator,
-                                          self._native_fields,
-                                          self._bloom_cols, self._storage,
-                                          self._evolve)
         return _write_fragment(self._path, iterator, self._bloom_cols,
-                               self._storage)
+                               self._storage, self._native_fields,
+                               self._native, self._evolve)
 
     def commit(self, messages: List[FragmentCommitMessage], batchId: int) -> None:
         # works for BOTH backends: the epoch tag rides in the emulated

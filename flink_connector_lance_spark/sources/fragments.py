@@ -109,8 +109,9 @@ class IntegrityError(RuntimeError):
 
 
 def sha256_of(path: str, fs=None) -> str:
-    """Streaming sha256 (1 MiB chunks) of one file, local or through an
-    fsspec filesystem."""
+    """Streaming sha256 (1 MiB chunks) of one file, local or through
+    ``fs`` — any object with ``.open`` (a store of sources/fs.py, an
+    fsspec filesystem)."""
     import hashlib
 
     h = hashlib.sha256()

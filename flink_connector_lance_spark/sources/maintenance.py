@@ -270,7 +270,9 @@ def verify_integrity(spark, path: str, version: int | None = None,
     One hash task per fragment, distributed via ``mapInPandas`` when a
     SparkSession is given (the 100 TB shape: hashing streams each file
     once, executor-side, no bytes reach the driver) or a driver thread
-    pool when ``spark`` is None (small tables, tests). Fragments whose
+    pool when ``spark`` is None (small tables, tests); either way every
+    file streams through the storage seam (``fs.store_for(...).open``),
+    so a local path and an s3:// url share the body. Fragments whose
     stats carry no digest — foreign datasets, pre-digest commits, real
     lance fixtures — are SKIPPED and counted: the check costs nothing
     where the stamp is absent.
@@ -278,11 +280,10 @@ def verify_integrity(spark, path: str, version: int | None = None,
     Returns ``{"checked", "skipped", "mismatched": [{file, expected,
     actual}]}``; raises :class:`IntegrityError` naming the files on any
     mismatch unless ``raise_on_mismatch=False``."""
-    from .fs import is_remote
+    from .fs import absolute, store_for
 
     manifest = FR.read_manifest_compat(path, version, storage_options)
-    remote = is_remote(path)
-    base = str(path).rstrip("/")
+    base = absolute(path)
     entries = []
     skipped = 0
     for f in manifest.fragments:
@@ -290,34 +291,20 @@ def verify_integrity(spark, path: str, version: int | None = None,
         if digest is None:
             skipped += 1
             continue
-        url = (f"{base}/{f.file}" if remote
-               else os.path.join(path, f.file))
-        entries.append((url, digest))
-
-    def _hash_one(url: str) -> str:
-        if remote:
-            from .fs import get_fs
-
-            return FR.sha256_of(url, get_fs(path, storage_options))
-        return FR.sha256_of(url)
+        entries.append((f"{base}/{f.file}", digest))
 
     if spark is not None and entries:
         storage = storage_options
-        is_rem = remote
-        root = path
 
         def check(batches):
             import pandas as pd
 
             from flink_connector_lance_spark.sources import fragments as _FR
+            from flink_connector_lance_spark.sources.fs import store_for as _store_for
 
-            fs = None
-            if is_rem:
-                from flink_connector_lance_spark.sources.fs import get_fs
-
-                fs = get_fs(root, storage)
+            store = _store_for(base, storage)
             for pdf in batches:
-                actual = [_FR.sha256_of(u, fs) for u in pdf["file"]]
+                actual = [_FR.sha256_of(u, store) for u in pdf["file"]]
                 yield pd.DataFrame({"file": pdf["file"],
                                     "expected": pdf["expected"],
                                     "actual": actual})
@@ -339,11 +326,13 @@ def verify_integrity(spark, path: str, version: int | None = None,
     else:
         from concurrent.futures import ThreadPoolExecutor
 
+        store = store_for(base, storage_options)
         mismatched = []
         if entries:
             with ThreadPoolExecutor(max_workers=min(16, len(entries))) as ex:
                 for (url, expected), actual in zip(
-                        entries, ex.map(_hash_one, [u for u, _ in entries])):
+                        entries, ex.map(lambda u: FR.sha256_of(u, store),
+                                        [u for u, _ in entries])):
                     if actual != expected:
                         mismatched.append({"file": url, "expected": expected,
                                            "actual": actual})
@@ -560,22 +549,25 @@ def compact_dataset(
 ) -> FR.Manifest:
     """Merge fragments smaller than ``small_threshold`` (default: half the
     target) into ~``target_rows_per_fragment``-row fragments; commit as a
-    new version. No-op (returns the current manifest) when fewer than two
-    runt fragments exist.
+    new version. A fragment carrying a deletion vector is a candidate at
+    any size — compaction is what materializes its tombstones (until then
+    every scan pays the masking cost), so a lone tombstoned fragment is
+    rewritten alone. No-op (returns the current manifest) when fewer
+    than two runts and no tombstoned fragment exist.
 
-    One body for every location: the fragment-subset scan reads ONLY the
-    runts, funnelled into ceil(total/target) tasks that each write one
-    ~target-sized fragment in place (``writer.write_fragments``); big
-    fragments carry over by name and the driver commits one version under
-    CAS (``_rewrite_commit``). 10^5 micro-batch appends stop costing 10^5
+    One body for every location and both on-disk formats: the
+    fragment-subset scan reads ONLY the candidates, funnelled into
+    ceil(total/target) tasks that each write one ~target-sized fragment
+    in place (``writer.write_fragments``); the other fragments carry
+    over by name and the driver commits one version under CAS
+    (``_rewrite_commit``). 10^5 micro-batch appends stop costing 10^5
     input splits per query after one pass of this."""
     threshold = small_threshold if small_threshold is not None else target_rows_per_fragment // 2
     storage = s3.to_storage_options() if s3 is not None else None
-    if _local_native(path):
-        return _compact_native(spark, path, target_rows_per_fragment, threshold)
     manifest = FR.read_manifest_compat(path, storage_options=storage)
-    small = [f for f in manifest.fragments if f.row_count < threshold]
-    if len(small) < 2:
+    small = [f for f in manifest.fragments
+             if f.row_count < threshold or f.deletion]
+    if len(small) < 2 and not any(f.deletion for f in small):
         return manifest
     small_files = {f.file for f in small}
     # runts merge INTO shared files, not 1:1: coalesce (no shuffle, so
@@ -590,69 +582,6 @@ def compact_dataset(
         meta={"compaction": {"merged": len(small),
                              "base_version": manifest.version}},
         bloom_cols=_bloom_columns(small), max_rows=target_rows_per_fragment)
-
-
-def _local_native(path: str) -> bool:
-    """A REAL Lance binary dataset on a local path: its rewrites still run
-    through the ``_*_native`` codec twins."""
-    from . import lance_format as LF
-    from .fs import is_remote
-
-    return not is_remote(path) and LF.is_native_dataset(path)
-
-
-def _native_bloom_columns(path: str, mf) -> "list[str]":
-    """Columns any live native fragment carries a bloom for — the
-    re-attach set for copy-on-write rewrites (the native twin of the
-    emulated rewrites' _bloom_columns contract: a rewrite must not
-    silently strip point-lookup pruning from the rewritten rows)."""
-    from . import lance_format as LF
-    from .bloom import BLOOM_STATS_KEY
-
-    stats = LF.read_native_stats(path, mf.version)
-    return sorted({c for st in stats.values()
-                   for c in (st.get(BLOOM_STATS_KEY) or {}).get("cols", {})})
-
-
-def _compact_native(spark: SparkSession, path: str, target_rows: int,
-                    threshold: int):
-    """Runt-merge compaction for a REAL Lance binary dataset via the
-    stdlib v2 codec — same plan shape as the emulated path: one
-    fragment-subset scan of the runts (one task per file), executor-side
-    re-encode into ~target-sized ``.lance`` files, ONE overwrite commit
-    keeping the big fragments by name (their bytes never move). Old
-    versions keep reading pre-compaction data (MVCC)."""
-    from . import lance_format as LF
-    from .reader import read_native_files
-    from .writer import produce_native_fragments
-
-    mf = LF.read_native_manifest(path)
-    # rewrite candidates: runts, plus ANY fragment carrying a deletion
-    # vector — compaction is what materializes the tombstones (until
-    # then every scan pays the masking cost)
-    small = [fr for fr in mf.fragments
-             if fr.physical_rows < threshold or fr.deletion]
-    if len(small) < 2 and not any(fr.deletion for fr in small):
-        return mf
-    keep = [fr for fr in mf.fragments if fr not in small]
-    files = [os.path.join(path, LF.DATA_DIR, fr.file) for fr in small]
-    df = read_native_files(spark, mf.fields, files,
-                           deletions=LF.native_deletion_paths(path, mf))
-    if len(small) > 1:
-        # runts merge INTO shared files, not 1:1 — funnel them into
-        # ceil(total/target) tasks so the output hits the target size
-        total = sum(fr.physical_rows for fr in small)
-        df = df.coalesce(max(1, -(-total // target_rows)))
-    merged = produce_native_fragments(df, path, LF.arrow_schema_of(mf.fields),
-                                      target_rows,
-                                      bloom_columns=_native_bloom_columns(path, mf) or None)
-    # carried fragments keep their field mapping AND deletion vector —
-    # dropping either would resurrect deleted rows / break evolved reads
-    pairs = [(fr.file, fr.physical_rows, None, fr.field_ids,
-              fr.column_indices, fr.deletion, fr.fragment_id)
-             for fr in keep] + merged
-    return LF.commit_native(path, mf.fields, pairs, "overwrite",
-                            expected_base_version=mf.version)
 
 
 def delete_rows(
@@ -679,6 +608,9 @@ def delete_rows(
     maps understand, planning-time fragment pruning) bound the search to
     candidate fragments. Each affected fragment is rewritten with the
     negated predicate by executors; the driver commits one new version.
+    One body for every location and both on-disk formats (``_file_scan``
+    then ``_rewrite_commit``): a binary Lance dataset's probe takes the
+    file from the decoder's scan and its survivors re-encode as Lance.
 
     ``predicate``: a Column or SQL-string boolean expression (rows
     matching it are deleted).
@@ -704,8 +636,6 @@ def delete_rows(
                 "format's); the copy-on-write rewrite serves the "
                 "emulated backend")
         return _delete_native_vectors(spark, path, pred, storage)
-    if _local_native(path):
-        return _delete_native(spark, path, pred)
     manifest = FR.read_manifest_compat(path, storage_options=storage)
     if not manifest.fragments:
         raise FileNotFoundError(f"dataset {path} has no fragments")
@@ -729,47 +659,6 @@ def delete_rows(
                          "base_version": manifest.version}},
         bloom_cols=_bloom_columns(
             [f for f in manifest.fragments if f.file in affected]))
-
-
-def _delete_native(spark: SparkSession, path: str, pred):
-    """Copy-on-write DELETE for a REAL Lance binary dataset — same plan
-    shape as the emulated path: one probe scan tags every row with its
-    source fragment (a real column, so it survives any shuffle — no
-    ``input_file_name()`` fragility), only affected fragments rewrite
-    through the v2 codec, untouched fragments carry over byte-identical
-    into one overwrite commit. SQL three-valued logic: NULL-predicate
-    rows survive."""
-    import pyspark.sql.functions as F
-
-    from . import lance_format as LF
-    from .reader import read_native_files
-    from .writer import produce_native_fragments
-
-    path = os.path.abspath(path)
-    mf = LF.read_native_manifest(path)
-    if not mf.fragments:
-        raise FileNotFoundError(f"dataset {path} has no fragments")
-    by_abs = {os.path.join(path, LF.DATA_DIR, fr.file): fr
-              for fr in mf.fragments}
-    dels = LF.native_deletion_paths(path, mf)
-    probe = read_native_files(spark, mf.fields, sorted(by_abs),
-                              file_col="__frag", deletions=dels)
-    affected = {r.f for r in probe.filter(pred)
-                .select(F.col("__frag").alias("f")).distinct().collect()}
-    if not affected:
-        return mf  # nothing matched: no new version
-    keep = [fr for abs_p, fr in by_abs.items() if abs_p not in affected]
-    survivors = (read_native_files(spark, mf.fields, sorted(affected),
-                                   deletions=dels)
-                 .filter(~F.coalesce(pred, F.lit(False))))
-    new = produce_native_fragments(survivors, path,
-                                   LF.arrow_schema_of(mf.fields), 1_000_000,
-                                   bloom_columns=_native_bloom_columns(path, mf) or None)
-    pairs = [(fr.file, fr.physical_rows, None, fr.field_ids,
-              fr.column_indices, fr.deletion, fr.fragment_id)
-             for fr in keep] + new
-    return LF.commit_native(path, mf.fields, pairs, "overwrite",
-                            expected_base_version=mf.version)
 
 
 def _delete_native_vectors(spark: SparkSession, path: str, pred,
@@ -894,15 +783,17 @@ def _file_scan(spark, path: str, manifest: FR.Manifest, s3=None,
     """The rows of ``files`` (root-relative; default every fragment of
     ``manifest``), filtered by ``where``, with ``file_col`` naming each
     row's root-relative fragment file when asked — the one location
-    branch of the rewrites.
+    branch of the rewrites, for both on-disk formats.
 
-    Locally a native parquet scan resolved against the manifest schema
-    (``reader.read_fragment_files``) with ``where`` pushed into it, the
-    file taken from ``input_file_name()`` at the scan — cheaper than the
-    datasource's per-row file column. On an object store the datasource,
-    with ``read.file-column`` when a file subset or ``file_col`` asks for
-    it: its EqualTo/In on the file column prunes partitions, so a
-    fragment subset is a partition-pruned rescan."""
+    Locally the fragment-file scan resolved against the manifest schema
+    (``reader.read_fragment_files``): a Spark parquet scan with ``where``
+    pushed into it and the file taken from ``input_file_name()`` —
+    cheaper than the datasource's per-row file column — or, for a binary
+    Lance manifest, the decoder's one-task-per-file scan, masking
+    deletion vectors. On an object store the datasource, with
+    ``read.file-column`` when a file subset or ``file_col`` asks for it:
+    its EqualTo/In on the file column prunes partitions, so a fragment
+    subset is a partition-pruned rescan."""
     import pyspark.sql.functions as F
 
     from .fs import absolute, is_remote
@@ -921,111 +812,52 @@ def _file_scan(spark, path: str, manifest: FR.Manifest, s3=None,
            else sorted(files))
     # absolute: the JVM resolves a relative path against its own cwd
     root = absolute(path)
-    df = read_fragment_files(spark, manifest,
-                             [os.path.join(root, f) for f in rel])
-    if where is not None:
-        df = df.filter(where)
-    if file_col:
-        # fragment files are data/<name>: the URI's last two segments.
-        # Taken at the scan — input_file_name() is '' once a shuffle has
-        # moved the row off its input split
-        df = df.withColumn(file_col,
-                           F.substring_index(F.input_file_name(), "/", -2))
-    return df
+    return read_fragment_files(spark, manifest,
+                               [os.path.join(root, f) for f in rel],
+                               where=where, file_col=file_col)
 
 
 def _rewrite_commit(path: str, storage, manifest, affected, new_src,
-                    meta: dict, bloom_cols, max_rows: int = 1_000_000):
+                    meta: dict, bloom_cols, max_rows: int = 1_000_000,
+                    fields=None):
     """Shared tail of the copy-on-write rewrites (DELETE / MERGE /
-    compaction / clustering / add_column): tasks write fresh fragments
-    from ``new_src`` in place (``writer.write_fragments``; a task with no
-    rows writes nothing), unaffected fragments carry over by name, and
-    the driver commits ONE version under CAS on ``manifest.version`` — a
-    writer that committed since the rewrite read its manifest makes this
-    raise ``CommitConflict`` instead of being silently dropped. Serves
-    both manifest formats on an object store (the binary chain via
-    commit_native with the engine meta in the table-config slot and
-    per-fragment field mappings preserved)."""
+    compaction / clustering / add_column), for both manifest formats:
+    tasks write fresh fragments from ``new_src`` in place
+    (``writer.write_fragments``; a task with no rows writes nothing),
+    unaffected fragments carry over by name, and the driver commits ONE
+    version under CAS on ``manifest.version`` — a writer that committed
+    since the rewrite read its manifest makes this raise
+    ``CommitConflict`` instead of being silently dropped. A binary Lance
+    manifest takes Lance-encoded fragments aligned to ``fields`` (default:
+    the dataset's own) and commits through ``commit_native``, the engine
+    meta in the table-config slot and the carried fragments' field
+    mappings and deletion vectors preserved."""
+    from .writer import LanceEncoder, _meta_to_config, native_files, write_fragments
+
+    if not manifest.meta.get("native_lance"):
+        keep = [f for f in manifest.fragments if f.file not in affected]
+        new = write_fragments(new_src, path, storage, max_rows, bloom_cols)
+        fragments = [FR.FragmentInfo(i, f.file, f.row_count, f.stats)
+                     for i, f in enumerate(keep + new)]
+        return FR.commit(path, fragments, mode="overwrite", meta=meta,
+                         expected_base_version=manifest.version,
+                         storage_options=storage)
     from . import lance_format as LF
-    from .writer import _meta_to_config, produce_native_fragments, write_fragments
 
-    if manifest.meta.get("native_lance"):
-        nmf = LF.read_native_manifest(path, storage_options=storage)
-        keep = [fr for fr in nmf.fragments
-                if f"{LF.DATA_DIR}/{fr.file}" not in affected]
-        new = produce_native_fragments(
-            new_src, path, LF.arrow_schema_of(nmf.fields), max_rows,
-            bloom_columns=bloom_cols or None, storage_options=storage)
-        pairs = [(fr.file, fr.physical_rows, None, fr.field_ids,
-                  fr.column_indices, fr.deletion, fr.fragment_id)
-                 for fr in keep] + new
-        return LF.commit_native(path, nmf.fields, pairs, "overwrite",
-                                expected_base_version=nmf.version,
-                                config=_meta_to_config(meta),
-                                storage_options=storage)
-    keep = [f for f in manifest.fragments if f.file not in affected]
-    new = write_fragments(new_src, path, storage, max_rows, bloom_cols)
-    fragments = [FR.FragmentInfo(i, f.file, f.row_count, f.stats)
-                 for i, f in enumerate(keep + new)]
-    return FR.commit(path, fragments, mode="overwrite", meta=meta,
-                     expected_base_version=manifest.version,
-                     storage_options=storage)
-
-
-def _merge_native(spark: SparkSession, path: str, updates: DataFrame, key: str,
-                  commit_meta: dict | None = None):
-    """MERGE (upsert) for a REAL Lance binary dataset: semi-join probe
-    finds fragments holding updated keys, survivors (anti-join) and the
-    update rows re-encode together in ONE job, everything lands in one
-    overwrite commit — a reader never sees a delete-without-insert
-    intermediate. Untouched fragments carry over byte-identical."""
-    import pyspark.sql.functions as F
-
-    from . import lance_format as LF
-    from .reader import read_native_files
-    from .writer import produce_native_fragments
-
-    path = os.path.abspath(path)
-    mf = LF.read_native_manifest(path)
-    if not mf.fragments:
-        raise FileNotFoundError(f"dataset {path} has no fragments")
-    want = LF.arrow_schema_of(mf.fields).names
-    missing = [c for c in want if c not in updates.columns]
-    if missing:
-        raise ValueError(f"updates are missing dataset column(s) {missing}")
-    by_abs = {os.path.join(path, LF.DATA_DIR, fr.file): fr
-              for fr in mf.fragments}
-    keys = updates.select(key).distinct()
-    dels = LF.native_deletion_paths(path, mf)
-    probe = read_native_files(spark, mf.fields, sorted(by_abs),
-                              file_col="__frag", deletions=dels)
-    affected = {r.f for r in probe.join(keys, on=key, how="left_semi")
-                .select(F.col("__frag").alias("f")).distinct().collect()}
-    keep = [fr for abs_p, fr in by_abs.items() if abs_p not in affected]
-    # align updates to the dataset's Spark types BEFORE the union —
-    # survivors carry the scan schema, and a type-mismatched union would
-    # silently promote (or fail) instead of enforcing the table contract
-    from ..types import arrow_schema_to_spark
-
-    sschema = arrow_schema_to_spark(LF.arrow_schema_of(mf.fields))
-    new_src = updates.select(
-        *[F.col(c).cast(sschema[c].dataType) for c in want])
-    if affected:
-        survivors = (read_native_files(spark, mf.fields, sorted(affected),
-                                       deletions=dels)
-                     .join(keys, on=key, how="left_anti").select(*want))
-        new_src = survivors.unionByName(new_src)
-    new = produce_native_fragments(new_src, path,
-                                   LF.arrow_schema_of(mf.fields), 1_000_000,
-                                   bloom_columns=_native_bloom_columns(path, mf) or None)
-    from .writer import _meta_to_config
-
+    nmf = LF.read_native_manifest(path, manifest.version, storage)
+    fields = fields or nmf.fields
+    new = write_fragments(new_src, path, storage, max_rows, bloom_cols,
+                          LanceEncoder(fields))
+    # carried fragments keep their field mapping AND deletion vector —
+    # dropping either would resurrect deleted rows / break evolved reads
     pairs = [(fr.file, fr.physical_rows, None, fr.field_ids,
               fr.column_indices, fr.deletion, fr.fragment_id)
-             for fr in keep] + new
-    return LF.commit_native(path, mf.fields, pairs, "overwrite",
-                            expected_base_version=mf.version,
-                            config=_meta_to_config(commit_meta))
+             for fr in nmf.fragments
+             if f"{LF.DATA_DIR}/{fr.file}" not in affected]
+    return LF.commit_native(path, fields, pairs + native_files(new),
+                            "overwrite", expected_base_version=nmf.version,
+                            config=_meta_to_config(meta),
+                            storage_options=storage)
 
 
 def merge_rows(
@@ -1049,7 +881,10 @@ def merge_rows(
 
     At 100 TB the semi/anti joins are ordinary shuffle joins on the key
     (AQE broadcasts when the update set is small) and the rewrite volume
-    is bounded by the affected fragments, not the table."""
+    is bounded by the affected fragments, not the table. One body for
+    every location and both on-disk formats (``_file_scan`` then
+    ``_rewrite_commit``); ``updates`` must carry every dataset column
+    (``ValueError`` otherwise) and are cast to the dataset's types."""
     import pyspark.sql.functions as F
 
     # upsert contract: one row per key — duplicate keys in the update set
@@ -1065,8 +900,6 @@ def merge_rows(
         )
     if FR.HAVE_LANCE:  # native path (exercised via the fake lance in tests)
         return _merge_lance(path, updates, key)
-    if _local_native(path):
-        return _merge_native(spark, path, updates, key, commit_meta)
     storage = s3.to_storage_options() if s3 is not None else None
     manifest = FR.read_manifest_compat(path, storage_options=storage)
     if not manifest.fragments:
@@ -1079,6 +912,9 @@ def merge_rows(
     # (mixed physical parquet types across fragments would break later
     # reads — the dataset schema is the contract, like any MERGE)
     data = probe.drop("__frag")
+    missing = [c for c in data.columns if c not in updates.columns]
+    if missing:
+        raise ValueError(f"updates are missing dataset column(s) {missing}")
     new_src = updates.select(
         *[F.col(c).cast(data.schema[c].dataType) for c in data.columns])
     if affected:
@@ -1237,72 +1073,6 @@ def _last_clustering_files_native(path: str,
     return {fr.file for fr in commit_m.fragments}
 
 
-def _cluster_native(spark: SparkSession, path: str, by: list[str],
-                    target_rows: int, scope: str = "full",
-                    zorder: bool = False):
-    """OPTIMIZE for a native dataset: one range exchange + within-task
-    sorts, re-encoded through the v2 codec, ONE overwrite commit under
-    CAS. The stats sidecar written with the commit records each sorted
-    fragment's disjoint [min,max], so pushed range filters prune at
-    planning time immediately after. scope='tail' re-sorts only the
-    fragments appended since the last clustering pass (keyed on the
-    config-recorded clustering meta); zorder interleaves multi-column
-    bits exactly like the emulated path, with the bounds taken from the
-    native stats sidecar."""
-    from . import lance_format as LF
-    from .reader import read_native_files
-    from .writer import _meta_to_config, produce_native_fragments
-
-    mf = LF.read_native_manifest(path)
-    if not mf.fragments:
-        raise FileNotFoundError(f"dataset {path} has no fragments to cluster")
-    if not by:
-        raise ValueError("cluster_dataset requires at least one column")
-    stats = LF.read_native_stats(path, mf.version)
-    carried: list = []
-    to_sort = list(mf.fragments)
-    if scope == "tail":
-        clustered = _last_clustering_files_native(path) & \
-            {fr.file for fr in mf.fragments}
-        carried = [fr for fr in mf.fragments if fr.file in clustered]
-        to_sort = [fr for fr in mf.fragments if fr.file not in clustered]
-        if not to_sort:
-            return mf  # nothing new since the last clustering pass
-    total = sum(fr.physical_rows for fr in to_sort)
-    n_frags = max(1, -(-total // target_rows))
-    df = read_native_files(
-        spark, mf.fields,
-        [os.path.join(path, LF.DATA_DIR, fr.file) for fr in to_sort],
-        deletions=LF.native_deletion_paths(path, mf))
-    if zorder and len(by) >= 2:
-        mm: dict[str, tuple] = {}
-        for c in by:
-            per = [stats.get(fr.file, {}).get(c) for fr in to_sort]
-            mins = [s["min"] for s in per if s and s.get("min") is not None]
-            maxs = [s["max"] for s in per if s and s.get("max") is not None]
-            if not mins or not maxs:
-                raise ValueError(f"no zone-map stats for z-order column {c!r}")
-            mm[c] = (min(mins), max(maxs))
-        keyed = df.withColumn("__z", _zorder_key(df, by, mm))
-        out = (keyed.repartitionByRange(n_frags, "__z")
-               .sortWithinPartitions("__z").drop("__z"))
-        layout = {"zorder": by}
-    else:
-        out = df.repartitionByRange(n_frags, *by).sortWithinPartitions(*by)
-        layout = {"cluster_by": by}
-    new = produce_native_fragments(out, path, LF.arrow_schema_of(mf.fields),
-                                   target_rows,
-                                   bloom_columns=_native_bloom_columns(path, mf) or None)
-    pairs = [(fr.file, fr.physical_rows, None, fr.field_ids,
-              fr.column_indices, fr.deletion, fr.fragment_id)
-             for fr in carried] + new
-    meta = {"clustering": {**layout, "base_version": mf.version,
-                           "scope": scope}}
-    return LF.commit_native(path, mf.fields, pairs, "overwrite",
-                            expected_base_version=mf.version,
-                            config=_meta_to_config(meta))
-
-
 def cluster_dataset(
     spark: SparkSession,
     path: str,
@@ -1340,12 +1110,13 @@ def cluster_dataset(
     may overlap each other, costing extra kept fragments, not
     correctness). Returns the CURRENT manifest unchanged when the tail
     is empty.
+
+    One body for every location and both on-disk formats (``_file_scan``
+    then ``_rewrite_commit``); only the lookup of the last clustering
+    commit reads each manifest chain its own way.
     """
     if scope not in ("full", "tail"):
         raise ValueError("scope must be 'full' or 'tail'")
-    if _local_native(path):
-        return _cluster_native(spark, path, by, target_rows_per_fragment,
-                               scope=scope, zorder=zorder)
     storage = s3.to_storage_options() if s3 is not None else None
     manifest = FR.read_manifest_compat(path, storage_options=storage)
     if not manifest.fragments:

@@ -62,8 +62,12 @@ def _apply_pushdowns(df: DataFrame, columns, filter, limit, opts: DatasetOptions
 
 
 def read_fragment_files(spark, manifest: "FR.Manifest", files: list[str],
-                        deletion_source: "FR.Manifest | None" = None) -> DataFrame:
-    """Scan explicit fragment files RESOLVED AGAINST the manifest schema.
+                        deletion_source: "FR.Manifest | None" = None,
+                        where=None, file_col: "str | None" = None) -> DataFrame:
+    """Scan explicit fragment files RESOLVED AGAINST the manifest schema,
+    filtered by ``where``, with ``file_col`` naming each row's
+    root-relative fragment file (``data/<name>``: the path's last two
+    segments) when asked.
 
     Every internal scan (reads, maintenance rewrites) must go through
     this: after schema evolution, fragments are heterogeneous, and a raw
@@ -72,15 +76,19 @@ def read_fragment_files(spark, manifest: "FR.Manifest", files: list[str],
     the scan feeds a rewrite). With the recorded schema, fragments
     resolve by name and pre-evolution files null-fill. One manifest read;
     no mergeSchema footer sweep over the file listing at plan time (the
-    O(files) cost that kills planning at 100 TB).
+    O(files) cost that kills planning at 100 TB). ``where`` is pushed
+    into the parquet scan; the file comes from ``input_file_name()``,
+    taken after the filter (a nondeterministic projection below it would
+    stop the pushdown) and at the scan (it is '' once a shuffle has moved
+    the row off its input split).
 
     A native-adapted manifest (FR.read_manifest_compat over a binary
     Lance dataset) routes its ``.lance`` files through the pure decoder
-    — same one-task-per-file shape. Deletion-vector tombstones mask per
-    the fragments of ``deletion_source`` (default: ``manifest``) — a
-    CDC pre-image read of files REMOVED since ``from_version`` must
-    mask with the FROM version's vectors, which the to-version manifest
-    no longer carries."""
+    — same one-task-per-file shape, the file taken from the decoder's
+    own file column. Deletion-vector tombstones mask per the fragments
+    of ``deletion_source`` (default: ``manifest``) — a CDC pre-image read
+    of files REMOVED since ``from_version`` must mask with the FROM
+    version's vectors, which the to-version manifest no longer carries."""
     if manifest.meta.get("native_lance"):
         from . import lance_format as LF
 
@@ -94,19 +102,40 @@ def read_fragment_files(spark, manifest: "FR.Manifest", files: list[str],
                     deletions[f] = LF._deletion_path(root, LF.NativeFragmentInfo(
                         fr.fragment_id, fr.file, fr.row_count,
                         deletion=fr.deletion))
-        return read_native_files(spark, manifest.meta["native_fields"], files,
-                                 deletions=deletions)
-    schema_json = manifest.meta.get("schema")
-    if schema_json:
-        import json
+        if files:
+            df = read_native_files(spark, manifest.meta["native_fields"], files,
+                                   file_col=file_col, deletions=deletions)
+        else:  # an empty table (a DELETE left no rows)
+            from ..types import arrow_schema_to_spark
 
-        from pyspark.sql.types import StructType
+            df = spark.createDataFrame([], arrow_schema_to_spark(
+                LF.arrow_schema_of(manifest.meta["native_fields"])))
+            if file_col:
+                df = df.withColumn(file_col, F.lit(None).cast("string"))
+        if where is not None:
+            df = df.filter(where)
+        if file_col:  # the decoder's file column holds the full path
+            df = df.withColumn(file_col,
+                               F.substring_index(F.col(file_col), "/", -2))
+    else:
+        schema_json = manifest.meta.get("schema")
+        if schema_json:
+            import json
 
-        st = StructType.fromJson(json.loads(schema_json))
-        if not files:  # an empty table (a write or DELETE left no rows)
-            return spark.createDataFrame([], st)
-        return spark.read.schema(st).parquet(*files)
-    return spark.read.parquet(*files)
+            from pyspark.sql.types import StructType
+
+            st = StructType.fromJson(json.loads(schema_json))
+            df = (spark.read.schema(st).parquet(*files) if files
+                  # an empty table (a write or DELETE left no rows)
+                  else spark.createDataFrame([], st))
+        else:
+            df = spark.read.parquet(*files)
+        if where is not None:
+            df = df.filter(where)
+        if file_col:
+            df = df.withColumn(file_col,
+                               F.substring_index(F.input_file_name(), "/", -2))
+    return df
 
 
 def _read_local(spark, path, columns, filter, limit, version, opts) -> DataFrame:
@@ -171,8 +200,6 @@ def read_native_files(spark, fields, files: "list[str]",
     the driver never reads a deletion file. ``pos_col`` appends each
     row's PHYSICAL offset within its file (assigned before the deletion
     mask — the handle a deletion-vector DELETE tombstones by)."""
-    import pandas as pd
-
     from ..types import arrow_schema_to_spark, spark_type_to_arrow
     from . import lance_format as LF
 
@@ -209,7 +236,8 @@ def read_native_files(spark, fields, files: "list[str]",
             for f in spark_schema if f.name not in (file_col, pos_col)
         ])
         for batch in iterator:
-            for fpath in batch.column("file").to_pylist():
+            for i in batch.column("id").to_pylist():
+                fpath = files[i]
                 ffields, fn_rows = _LF.read_file_descriptor(fpath,
                                                             storage_options)
                 avail = {f.name for f in ffields if f.parent == -1}
@@ -235,9 +263,9 @@ def read_native_files(spark, fields, files: "list[str]",
                         file_col, pa.array([fpath] * tbl.num_rows, pa.string()))
                 yield from tbl.to_batches()
 
-    seed = spark.createDataFrame(pd.DataFrame({"file": files})).repartition(
-        max(len(files), 1), "file"
-    )
+    # partition i holds the one id i: one task per file, in list order,
+    # with no shuffle
+    seed = spark.range(0, len(files), 1, max(len(files), 1))
     return seed.mapInArrow(scan, schema=spark_schema)
 
 

@@ -62,7 +62,6 @@ from pyspark.sql import functions as F
 
 from . import fragments as FR
 from .maintenance import _file_scan
-from .reader import read_dataset
 from .writer import write_dataset
 
 ROLLUPS_DIR = "_rollups"
@@ -215,14 +214,15 @@ def _partial_state(df: DataFrame, group_cols: "list[str]", spec) -> DataFrame:
     return df.groupBy(*group_cols).agg(*_partial_exprs(spec))
 
 
-def _read_state(spark: SparkSession, rp: str, s3) -> DataFrame:
-    from .fs import is_remote
+def _read_state(spark: SparkSession, rp: str, manifest: FR.Manifest,
+                s3) -> DataFrame:
+    """The partial state at ``manifest``: the rewrites' fragment scan
+    (``maintenance._file_scan``, one body for local and s3) over the
+    state dataset — the only scan of a refresh that is not of the source
+    table."""
+    from . import maintenance
 
-    if not is_remote(rp):
-        return read_dataset(spark, rp)
-    from .maintenance import _remote_reader
-
-    return _remote_reader(spark, rp, s3)
+    return maintenance._file_scan(spark, rp, manifest, s3)
 
 
 def _commit_state(state: DataFrame, rp: str, group_cols, spec,
@@ -343,7 +343,7 @@ def refresh_rollup(spark: SparkSession, path: str, name: str,
         _file_scan(spark, path, cur, s3, files=[f.file for f in added]),
         pre_transform)
     merged = (
-        _read_state(spark, rp, s3)
+        _read_state(spark, rp, rm, s3)
         .unionByName(_partial_state(delta, group_cols, spec))
         .groupBy(*group_cols)
         .agg(*_merge_exprs(spec))
@@ -361,10 +361,11 @@ def read_rollup(spark: SparkSession, path: str, name: str,
     reads straight from the partial state (they are their own finals)."""
     rp = rollup_path(path, name)
     storage = s3.to_storage_options() if s3 is not None else None
-    info = FR.read_manifest(rp, None, storage).meta.get(_META_KEY)
+    rm = FR.read_manifest(rp, None, storage)
+    info = rm.meta.get(_META_KEY)
     if not info:
         raise ValueError(f"{rp} is not a rollup (no {_META_KEY!r} commit meta)")
-    df = _read_state(spark, rp, s3)
+    df = _read_state(spark, rp, rm, s3)
     cols = [F.col(c) for c in info["group_cols"]]
     for a in info["spec"]:
         out = a["out"]

@@ -229,17 +229,17 @@ def add_column(spark, path: str, name: str, expr, s3=None) -> FR.Manifest:
     stale values from, and the name is cleared from the dropped set.
 
     One body for a local path and an s3:// url (pass
-    ``s3=S3Options(...)``): the fragment scan reads the current version,
-    every task writes its widened fragments in place
-    (``writer.write_fragments`` / ``produce_native_fragments`` — the
-    executor-direct shape of the DELETE/MERGE rewrites), and the driver
-    commits ONE overwrite under CAS; the full rewrite clears the
-    dropped-name resurrection guard. A local binary (native Lance)
-    dataset goes through its codec twin."""
-    import pyarrow as pa
-
-    from ..types import spark_schema_to_arrow
-    from . import lance_format as LF
+    ``s3=S3Options(...)``) and for both on-disk formats: the fragment
+    scan reads the current version (``maintenance._file_scan``), every
+    task writes its widened fragments in place (``writer.write_fragments``
+    — the executor-direct shape of the DELETE/MERGE rewrites), and the
+    driver commits ONE overwrite under CAS (``_rewrite_commit``); the
+    full rewrite clears the dropped-name resurrection guard. On a binary
+    Lance dataset the existing columns keep their recorded types and the
+    new one takes its Spark-inferred type. (Lance's own add_columns
+    appends column-only files instead — O(new column); that needs
+    multi-file fragments, outside the one-file-per-fragment surface the
+    stdlib codec supports.)"""
     from .fs import is_remote
     from .maintenance import _file_scan, _rewrite_commit
 
@@ -254,44 +254,29 @@ def add_column(spark, path: str, name: str, expr, s3=None) -> FR.Manifest:
         return _native_manifest(path)
     storage = s3.to_storage_options() if s3 is not None else None
     col = F.expr(expr) if isinstance(expr, str) else expr
-    if LF.is_native_dataset(path, storage):
-        if not is_remote(path):
-            return _add_column_native(spark, path, name, expr)
-        from .maintenance import _remote_reader
-        from .writer import produce_native_fragments
-
-        mf = LF.read_native_manifest(path, storage_options=storage)
-        if not mf.fragments:
-            raise FileNotFoundError(f"dataset {path} has no fragments")
-        top_names = [f.name for f in mf.fields if f.parent == -1]
-        if name in top_names:
-            raise ValueError(f"column {name!r} already exists; "
-                             f"table schema is {top_names}")
-        out = _remote_reader(spark, path, s3).withColumn(name, col)
-        new_field = spark_schema_to_arrow(out.schema).field(name)
-        schema = pa.schema(list(LF.arrow_schema_of(mf.fields)) + [new_field])
-        widened = LF.widen_fields(mf.fields, [new_field])
-        new = produce_native_fragments(out, path, schema, 1_000_000,
-                                       storage_options=storage)
-        LF.commit_native(path, widened, new, "overwrite",
-                         expected_base_version=mf.version,
-                         config={_DROPPED_CFG: None},
-                         storage_options=storage)
-        return FR.read_manifest_compat(path, storage_options=storage)
-    manifest = FR.read_manifest(path, None, storage)
-    current = dataset_schema(path, manifest=manifest, storage_options=storage)
-    if name in current.names:
+    manifest = FR.read_manifest_compat(path, storage_options=storage)
+    scan = _file_scan(spark, path, manifest, s3)
+    if name in scan.columns:
         raise ValueError(f"column {name!r} already exists; "
-                         f"table schema is {current.names}")
-    out = _file_scan(spark, path, manifest, s3).withColumn(name, col)
+                         f"table schema is {scan.columns}")
+    out = scan.withColumn(name, col)
     # the rewrite replaces EVERY fragment, so no stale bytes survive for
     # ANY previously dropped column — clear the whole guard, not just the
     # re-added name
+    meta = {"dropped_columns": [],
+            "add_column": {"name": name, "base_version": manifest.version}}
+    fields = None
+    if manifest.meta.get("native_lance"):
+        from ..types import spark_schema_to_arrow
+        from . import lance_format as LF
+
+        fields = LF.widen_fields(manifest.meta["native_fields"],
+                                 [spark_schema_to_arrow(out.schema).field(name)])
+    else:
+        meta["schema"] = out.schema.json()
     return _rewrite_commit(
         path, storage, manifest, {f.file for f in manifest.fragments}, out,
-        meta={"schema": out.schema.json(), "dropped_columns": [],
-              "add_column": {"name": name, "base_version": manifest.version}},
-        bloom_cols=[])
+        meta=meta, bloom_cols=[], fields=fields)
 
 
 # --- native (stdlib codec) twins --------------------------------------------
@@ -359,42 +344,3 @@ def _drop_columns_native(path: str, cols: list[str],
                      config={_DROPPED_CFG: json.dumps(guard)},
                      storage_options=storage_options)
     return FR.read_manifest_compat(path, storage_options=storage_options)
-
-
-def _add_column_native(spark, path: str, name: str, expr):
-    """Computed-column backfill for a native binary dataset: copy-on-write
-    rewrite of every fragment through the v2 codec (existing columns keep
-    their recorded arrow types; the new column takes its Spark-inferred
-    type), ONE overwrite commit under CAS. The full rewrite leaves no old
-    fragment to resurrect stale values from, so the dropped-name guard
-    clears — same contract as the emulated rewrite. (lance's own
-    add_columns appends column-only files instead — O(new column); that
-    needs multi-DataFile fragments, outside the one-file-per-fragment
-    surface this codec supports.)"""
-    import pyarrow as pa
-
-    from ..types import spark_schema_to_arrow
-    from . import lance_format as LF
-    from .reader import read_native_files
-    from .writer import produce_native_fragments
-
-    mf = LF.read_native_manifest(path)
-    if not mf.fragments:
-        raise FileNotFoundError(f"dataset {path} has no fragments")
-    top_names = [f.name for f in mf.fields if f.parent == -1]
-    if name in top_names:
-        raise ValueError(f"column {name!r} already exists; "
-                         f"table schema is {top_names}")
-    col = F.expr(expr) if isinstance(expr, str) else expr
-    files = [os.path.join(path, LF.DATA_DIR, fr.file) for fr in mf.fragments]
-    out = (read_native_files(spark, mf.fields, files,
-                             deletions=LF.native_deletion_paths(path, mf))
-           .withColumn(name, col))
-    new_field = spark_schema_to_arrow(out.schema).field(name)
-    schema = pa.schema(list(LF.arrow_schema_of(mf.fields)) + [new_field])
-    widened = LF.widen_fields(mf.fields, [new_field])
-    new = produce_native_fragments(out, path, schema, 1_000_000)
-    LF.commit_native(path, widened, new, "overwrite",
-                     expected_base_version=mf.version,
-                     config={_DROPPED_CFG: None})
-    return FR.read_manifest_compat(path)

@@ -4,20 +4,30 @@ single-winner commit.
 The reference writes fragments inside its sink tasks and commits one
 version per flush (ref LanceSink.java:133-199). Here every write and
 every copy-on-write rewrite has that shape, for a local directory and an
-s3:// warehouse alike (SURVEY.md §3.2 Spark equivalent):
+s3:// warehouse alike, and for both on-disk formats (SURVEY.md §3.2
+Spark equivalent):
 
 1. ``write_fragments``: one ``mapInArrow`` stage whose tasks stream their
-   partition into ``data/<uuid>.parquet`` through the storage seam
+   partition into ``data/`` files through the storage seam
    (sources/fs.py ``store.writing`` — in place on a local store, a
    worker-local scratch file PUT to the key on an object store), rolling
    to a new file at ``write.max-rows-per-file``
-   (ref config/LanceOptions.java:112-116), so worker memory stays bounded
-   by one row group. Each task returns only the file, its rows, its zone
-   map with the sha256 digest and its bloom entry — the data bytes never
-   touch the driver;
+   (ref config/LanceOptions.java:112-116). Each task returns only the
+   file, its rows, its zone map with the sha256 digest and its bloom
+   entry — the data bytes never touch the driver;
 2. the driver commits ONE new manifest version (``append`` |
    ``overwrite`` — ref LanceSink.java:163-190) through the seam's
-   ``create_exclusive`` (O_EXCL locally, a conditional PUT on s3).
+   ``create_exclusive`` (O_EXCL locally, a conditional PUT on s3): an
+   emulated ``N.manifest.json`` (``fragments.commit``) or a binary Lance
+   ``N.manifest`` (``lance_format.commit_native``).
+
+One writer, two encoders: ``write_fragment`` is the one per-file body
+(the ``format("lance")`` writer's tasks call it too), and its only
+variable is the encoder. ``None`` streams parquet ``frag-<hex>.parquet``
+files one row group at a time; a ``LanceEncoder`` encodes the file's
+rows, aligned to the dataset's field list, as one Lance v2
+``<uuid>.lance`` file through the stdlib codec (sources/lance_format.py,
+imported only by Lance tasks).
 
 A fragment lands before any manifest names it, so a crashed or retried
 task leaves only unreferenced files — never a torn version; vacuum
@@ -29,6 +39,9 @@ ref LanceSink.java:123-127 — losing MVCC history; we keep old versions
 readable)."""
 
 from __future__ import annotations
+
+import itertools
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
@@ -129,16 +142,34 @@ def write_dataset(
 ROW_GROUP_BYTES = 128 << 20
 
 
-def write_parquet_fragment(store, key: str, batches,
-                           bloom_columns: "list[str] | None" = None
-                           ) -> "tuple[int, dict] | None":
-    """Task side: stream ``batches`` into one parquet fragment at ``key``
-    through the storage seam, buffering at most one row group. Returns
-    ``(rows, stats)`` — the footer's zone map, the file's sha256 and, for
-    ``bloom_columns``, the entry of the bloom sidecar written beside it —
-    or None, writing nothing, when ``batches`` holds no rows."""
-    import itertools
+@dataclass(frozen=True)
+class LanceEncoder:
+    """The Lance v2 encoder of ``write_fragment``. ``fields`` is the
+    dataset's field list the rows align to (column order plus Arrow-safe
+    casts, ``lance_format.align_to_fields``; None keeps the rows' own
+    shape); ``evolve`` lets new columns ride after it
+    (``align_evolving``). ``structural`` and ``compression`` are the
+    codec's page layout and value compression."""
 
+    fields: "list | None" = None
+    evolve: bool = False
+    structural: str = "2.0"
+    compression: str = "none"
+
+
+def write_fragment(store, root: str, batches, bloom_columns=None,
+                   encoder: "LanceEncoder | None" = None
+                   ) -> "tuple[str, int, dict] | None":
+    """Task side: write ``batches`` as one fragment file under
+    ``<root>/data/`` through the storage seam. Returns ``(file, rows,
+    stats)`` — the root-relative file, and the zone map, the file's
+    sha256 and, for ``bloom_columns``, the entry of the bloom sidecar
+    written beside it — or None, writing nothing, when ``batches`` holds
+    no rows.
+
+    Without an ``encoder`` the file is parquet, streamed one row group at
+    a time; with a ``LanceEncoder`` it is one Lance v2 file, so its rows
+    are held together (callers bound them with ``max_rows``)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -148,48 +179,68 @@ def write_parquet_fragment(store, key: str, batches,
     first = next(it, None)
     if first is None:
         return None
-    rows = 0
-    kept: list = []  # the bloom columns of every row written
-    with store.writing(key) as local:
-        with pq.ParquetWriter(local, first.schema) as pw:
-            buf, size = [], 0
-            for b in itertools.chain((first,), it):
-                buf.append(b)
-                size += b.nbytes
-                rows += b.num_rows
-                if bloom_columns:
-                    kept.append(b.select([c for c in bloom_columns
-                                          if c in b.schema.names]))
-                if size >= ROW_GROUP_BYTES:
+    if encoder is None:
+        file = f"{FR.DATA_DIR}/{FR.new_fragment_name()}"
+        rows = 0
+        kept: list = []  # the bloom columns of every row written
+        with store.writing(f"{root}/{file}") as local:
+            with pq.ParquetWriter(local, first.schema) as pw:
+                buf, size = [], 0
+                for b in itertools.chain((first,), it):
+                    buf.append(b)
+                    size += b.nbytes
+                    rows += b.num_rows
+                    if bloom_columns:
+                        kept.append(b.select([c for c in bloom_columns
+                                              if c in b.schema.names]))
+                    if size >= ROW_GROUP_BYTES:
+                        tbl = pa.Table.from_batches(buf)
+                        pw.write_table(tbl, row_group_size=tbl.num_rows)
+                        buf, size = [], 0
+                if buf:
                     tbl = pa.Table.from_batches(buf)
                     pw.write_table(tbl, row_group_size=tbl.num_rows)
-                    buf, size = [], 0
-            if buf:
-                tbl = pa.Table.from_batches(buf)
-                pw.write_table(tbl, row_group_size=tbl.num_rows)
-        stats = FR.parquet_fragment_stats(local) or {}
-        stats[FR.DIGEST_STATS_KEY] = FR.sha256_of(local)
+            stats = FR.parquet_fragment_stats(local) or {}
+            stats[FR.DIGEST_STATS_KEY] = FR.sha256_of(local)
+        bloom_rows = pa.Table.from_batches(kept) if bloom_columns else None
+    else:
+        import uuid
+
+        from . import lance_format as LF
+
+        file = f"{LF.DATA_DIR}/{uuid.uuid4()}.lance"
+        tbl = pa.Table.from_batches(itertools.chain((first,), it))
+        if encoder.fields is not None:
+            tbl = (LF.align_evolving(tbl, encoder.fields) if encoder.evolve
+                   else LF.align_to_fields(tbl, encoder.fields))
+        with store.writing(f"{root}/{file}") as local:
+            LF.write_native_file(tbl, local, structural=encoder.structural,
+                                 compression=encoder.compression)
+            stats = LF.arrow_fragment_stats(tbl) or {}
+            stats[FR.DIGEST_STATS_KEY] = FR.sha256_of(local)
+        rows, bloom_rows = tbl.num_rows, tbl
     if bloom_columns:
-        entry = write_bloom_sidecar(store, key, pa.Table.from_batches(kept),
+        entry = write_bloom_sidecar(store, f"{root}/{file}", bloom_rows,
                                     bloom_columns)
         if entry is not None:
             stats[BLOOM_STATS_KEY] = entry
-    return rows, stats
+    return file, rows, stats
 
 
 def write_fragments(df: DataFrame, path: str, storage: "dict | None",
                     max_rows: int,
-                    bloom_columns: "list[str] | None" = None
+                    bloom_columns: "list[str] | None" = None,
+                    encoder: "LanceEncoder | None" = None
                     ) -> "list[FR.FragmentInfo]":
-    """The one fragment producer of the emulated format: a ``mapInArrow``
-    stage whose every task writes its partition into ``data/<uuid>.parquet``
-    files of at most ``max_rows`` rows (``write_parquet_fragment``), and
-    emits one ``(file, rows, stats)`` row per file. NOTHING is committed —
-    the caller owns the manifest. A task with no rows writes no file.
-    Returns the fragments ordered by (partition, file) so fragment ids
-    stay deterministic regardless of task completion order. Arrow-native
-    end to end — no pandas round trip, full type fidelity for
-    timestamps/arrays/binary."""
+    """The one fragment producer: a ``mapInArrow`` stage whose every task
+    writes its partition into ``data/`` files of at most ``max_rows`` rows
+    (``write_fragment`` with ``encoder``: parquet by default, Lance v2
+    with a ``LanceEncoder``) and emits one ``(file, rows, stats)`` row
+    per file. NOTHING is committed — the caller owns the manifest. A task
+    with no rows writes no file. Returns the fragments ordered by
+    (partition, file) so fragment ids stay deterministic regardless of
+    task completion order. Arrow-native end to end — no pandas round
+    trip, full type fidelity for timestamps/arrays/binary."""
     import json
 
     from pyspark.sql.types import (IntegerType, LongType, StringType,
@@ -207,10 +258,8 @@ def write_fragments(df: DataFrame, path: str, storage: "dict | None",
         import pyarrow as pa
         from pyspark import TaskContext
 
-        from flink_connector_lance_spark.sources import fragments as _FR
         from flink_connector_lance_spark.sources.fs import store_for
-        from flink_connector_lance_spark.sources.writer import (
-            write_parquet_fragment)
+        from flink_connector_lance_spark.sources.writer import write_fragment
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx else 0
@@ -233,14 +282,12 @@ def write_fragments(df: DataFrame, path: str, storage: "dict | None",
 
         seq = 0
         while True:
-            name = _FR.new_fragment_name()
-            got = write_parquet_fragment(
-                store, f"{root}/{_FR.DATA_DIR}/{name}", take(), bloom_cols)
+            got = write_fragment(store, root, take(), bloom_cols, encoder)
             if got is None:
                 return
-            rows, stats = got
+            file, rows, stats = got
             yield pa.RecordBatch.from_pydict(
-                {"pid": [pid], "seq": [seq], "file": [name], "rows": [rows],
+                {"pid": [pid], "seq": [seq], "file": [file], "rows": [rows],
                  "stats": [_json.dumps(stats)]},
                 schema=pa.schema([("pid", pa.int64()), ("seq", pa.int32()),
                                   ("file", pa.string()), ("rows", pa.int64()),
@@ -254,8 +301,7 @@ def write_fragments(df: DataFrame, path: str, storage: "dict | None",
     ])
     rows = df.mapInArrow(produce, out_type).collect()
     rows.sort(key=lambda r: (r.pid, r.seq))
-    return [FR.FragmentInfo(i, f"{FR.DATA_DIR}/{r.file}", r.rows,
-                            json.loads(r.stats) or None)
+    return [FR.FragmentInfo(i, r.file, r.rows, json.loads(r.stats) or None)
             for i, r in enumerate(rows)]
 
 
@@ -312,13 +358,17 @@ def write_native_pure(df: DataFrame, path: str, mode: "str | WriteMode" = WriteM
                       commit_meta: dict | None = None,
                       expected_base_version: "int | None" = None):
     """Distributed REAL-Lance-format write WITHOUT the lance package:
-    every task encodes its partition into one ``data/<uuid>.lance`` v2
-    file through the stdlib codec (sources/lance_format.py — the same
-    bytes lance 0.24 writes, byte-identity pinned against the
-    reference's fixtures in tests/test_lance_native_write.py), then the
-    driver commits ONE binary manifest version over the collected
-    (file, rows) pairs — the same two-phase shape as the emulated sink
-    (ref LanceSink.java:133-199 buffers + commits per subtask instead).
+    ``write_fragments`` with a ``LanceEncoder`` — every task encodes its
+    partition into ``data/<uuid>.lance`` v2 files of at most
+    ``write.max-rows-per-file`` rows through the stdlib codec
+    (sources/lance_format.py — the same bytes lance 0.24 writes,
+    byte-identity pinned against the reference's fixtures in
+    tests/test_lance_native_write.py), then the driver commits ONE binary
+    manifest version over the collected (file, rows, stats) entries —
+    the same two-phase shape as the emulated write (ref
+    LanceSink.java:133-199 buffers + commits per subtask instead).
+    ``native_layout`` and ``native_compression`` are the encoder's page
+    layout and value compression.
 
     A failed/retried task leaves an unreferenced ``.lance`` file that no
     manifest points at — garbage, never a correctness hazard. On an
@@ -327,8 +377,6 @@ def write_native_pure(df: DataFrame, path: str, mode: "str | WriteMode" = WriteM
     with a conditional PUT — real Lance datasets written executor-direct
     onto S3, the reference's own deployment story. Returns the committed
     ``NativeManifest``."""
-    import pyarrow as pa
-
     from ..types import spark_schema_to_arrow
     from . import lance_format as LF
 
@@ -337,7 +385,7 @@ def write_native_pure(df: DataFrame, path: str, mode: "str | WriteMode" = WriteM
     if mode not in (WriteMode.APPEND, WriteMode.OVERWRITE):
         raise ValueError(f"unsupported mode {mode} for native-format write")
     storage = opts.s3.to_storage_options() if opts.s3 else None
-    widened_fields = None
+    widened = False
     if mode is WriteMode.APPEND and LF.native_manifest_versions(path, storage):
         # append-time contract: reorder the batch to the live manifest's
         # column order here (one driver-side select) and let each task
@@ -356,32 +404,23 @@ def write_native_pure(df: DataFrame, path: str, mode: "str | WriteMode" = WriteM
                               opts.schema_evolution,
                               dropped=native_dropped_columns(path, storage))
         extras = [c for c in df.columns if c not in set(base.names)]
+        fields = live.fields
         if extras:
-            import pyarrow as pa
-
             inc = spark_schema_to_arrow(df.schema)
-            extra_fields = [inc.field(c) for c in extras]
-            schema = pa.schema(list(base) + extra_fields)
-            widened_fields = LF.widen_fields(live.fields, extra_fields)
-        else:
-            schema = base
+            fields = LF.widen_fields(live.fields, [inc.field(c) for c in extras])
+            widened = True
     else:
-        schema = spark_schema_to_arrow(df.schema)
-    # fail on unsupported types BEFORE launching the job (the task-side
-    # encoder would raise the same error 200 times otherwise)
-    LF.fields_of_arrow_schema(schema)
+        # unsupported types fail here, BEFORE the job launches (the
+        # task-side encoder would raise the same error 200 times otherwise)
+        fields = LF.fields_of_arrow_schema(spark_schema_to_arrow(df.schema))
     if opts.sort_columns:
         if opts.cluster_on_write:
             df = df.repartitionByRange(*opts.sort_columns)
         df = df.sortWithinPartitions(*opts.sort_columns)
-    new_files = produce_native_fragments(df, path, schema,
-                                         opts.write_max_rows_per_file,
-                                         bloom_columns=opts.bloom_columns,
-                                         storage_options=storage,
-                                         structural=opts.native_layout,
-                                         compression=opts.native_compression)
-    fields = (widened_fields if widened_fields is not None
-              else LF.fields_of_arrow_schema(schema))
+    new = write_fragments(df, path, storage, opts.write_max_rows_per_file,
+                          opts.bloom_columns,
+                          LanceEncoder(fields, structural=opts.native_layout,
+                                       compression=opts.native_compression))
     # commit metadata rides in the manifest's public table-config slot
     # (Manifest.config, one spark.flc.meta.<key> entry per key, JSON
     # values) — a real lance reader carries the entries verbatim
@@ -393,10 +432,10 @@ def write_native_pure(df: DataFrame, path: str, mode: "str | WriteMode" = WriteM
         config.setdefault(f"{META_CONFIG_PREFIX}dropped_columns", None)
     # append on a fresh directory bootstraps version 1 (commit_native
     # treats an empty version chain as the zero state)
-    return LF.commit_native(path, fields, new_files, mode.value,
+    return LF.commit_native(path, fields, native_files(new), mode.value,
                             config=config,
                             expected_base_version=expected_base_version,
-                            allow_widen=widened_fields is not None,
+                            allow_widen=widened,
                             storage_options=storage)
 
 
@@ -416,74 +455,8 @@ def _meta_to_config(commit_meta: dict | None) -> "dict | None":
             for k, v in commit_meta.items()}
 
 
-def produce_native_fragments(df: DataFrame, path: str, schema,
-                             max_rows: int,
-                             bloom_columns: "list[str] | None" = None,
-                             storage_options: dict | None = None,
-                             structural: str = "2.0",
-                             compression: str = "none",
-                             ) -> "list[tuple[str, int]]":
-    """Executor fan-out of the native write: every task encodes its
-    partition into ``data/<uuid>.lance`` v2 files (sliced at ``max_rows``
-    — each file stays one single-page-per-column encode, the shape the
-    decoder and lance 0.24 expect) through the storage seam (in place
-    locally, PUT from the task on s3) and reports ``(file_name, rows,
-    stats)`` back. NOTHING is committed — callers (write_native_pure,
-    native compaction) decide the fragment list; uncommitted files are
-    invisible garbage."""
-    from .fs import absolute
-
-    root = absolute(path)
-
-    def produce(iterator):
-        import json as _json
-        import uuid as _uuid
-
-        import pyarrow as _pa
-
-        from flink_connector_lance_spark.sources import fragments as _FR
-        from flink_connector_lance_spark.sources import lance_format as _LF
-        from flink_connector_lance_spark.sources.bloom import (
-            BLOOM_STATS_KEY, write_bloom_sidecar)
-        from flink_connector_lance_spark.sources.fs import store_for
-
-        batches = list(iterator)
-        if not batches:
-            return
-        tbl = _pa.Table.from_batches(batches).cast(schema)
-        store = store_for(root, storage_options)
-        out_files, out_rows, out_stats = [], [], []
-        for start in range(0, tbl.num_rows, max_rows):
-            piece = tbl.slice(start, max_rows)
-            fname = f"{_uuid.uuid4()}.lance"
-            key = f"{root}/{_LF.DATA_DIR}/{fname}"
-            with store.writing(key) as local:
-                _LF.write_native_file(piece, local, structural=structural,
-                                      compression=compression)
-                digest = _FR.sha256_of(local)
-            out_files.append(fname)
-            out_rows.append(piece.num_rows)
-            # zone map for the commit's stats sidecar: planning-time
-            # fragment pruning on native scans (same contract as the
-            # parquet footer stats)
-            st = _LF.arrow_fragment_stats(piece) or {}
-            st[_FR.DIGEST_STATS_KEY] = digest
-            if bloom_columns:
-                # point-lookup bloom, built from the rows already in
-                # memory (no re-read); the manifest entry rides in the
-                # same stats sidecar the zone maps use
-                entry = write_bloom_sidecar(store, key, piece, bloom_columns)
-                if entry is not None:
-                    st[BLOOM_STATS_KEY] = entry
-            out_stats.append(_json.dumps(st))
-        yield _pa.RecordBatch.from_pydict(
-            {"file": out_files, "rows": out_rows, "stats": out_stats},
-            schema=_pa.schema([("file", _pa.string()), ("rows", _pa.int64()),
-                               ("stats", _pa.string())]))
-
-    import json
-
-    metas = df.mapInArrow(produce,
-                          schema="file string, rows long, stats string").collect()
-    return [(r.file, r.rows, json.loads(r.stats) if r.stats else None)
-            for r in metas]
+def native_files(fragments: "list[FR.FragmentInfo]") -> "list[tuple]":
+    """``write_fragments`` output as ``commit_native``'s ``(file, rows,
+    stats)`` entries (binary manifests name files relative to ``data/``)."""
+    return [(f.file.split("/", 1)[1], f.row_count, f.stats)
+            for f in fragments]

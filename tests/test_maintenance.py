@@ -4,6 +4,7 @@ emulated fragment backend."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from flink_connector_lance_spark.options import DatasetOptions
 from flink_connector_lance_spark.sources.fragments import read_manifest
@@ -398,3 +399,79 @@ def test_verify_integrity_native_backend_and_absent_digests(spark, tmp_path):
     _flip_byte(os.path.join(path2, raw["fragments"][0]["file"]))
     rep = verify_integrity(None, path2)  # no digest -> cannot check, skips
     assert rep["checked"] == 0 and rep["skipped"] == len(raw["fragments"])
+
+
+def test_native_datasource_write_stamps_digests(spark, tmp_path):
+    """``format("lance")`` with ``write.native-format=true`` writes its
+    fragments through the shared task-side writer, so each carries a
+    digest: verify_integrity checks every fragment (none skipped) and a
+    flipped byte is loud."""
+    import os
+
+    from flink_connector_lance_spark.sources import fragments as FR
+    from flink_connector_lance_spark.sources.datasource import (
+        register_lance_datasource)
+    from flink_connector_lance_spark.sources.maintenance import (
+        IntegrityError, verify_integrity)
+
+    register_lance_datasource(spark)
+    path = str(tmp_path / "nds")
+    (_ds(spark, 0, 60).repartition(2).write.format("lance")
+     .option("write.native-format", "true").mode("overwrite").save(path))
+    _ds(spark, 60, 90).coalesce(1).write.format("lance").mode("append").save(path)
+    rep = verify_integrity(spark, path)
+    assert rep["skipped"] == 0 and rep["checked"] == 3
+    assert rep["mismatched"] == []
+    m = FR.read_manifest_compat(path)
+    _flip_byte(os.path.join(path, m.fragments[0].file), offset=200)
+    with pytest.raises(IntegrityError, match="sha256"):
+        verify_integrity(None, path)
+
+
+@pytest.fixture()
+def fake_s3(spark, monkeypatch, tmp_path):
+    """``import fsspec`` resolves to the fake (tests/fixtures/fsspec.py)
+    on the driver and in Spark's Python workers; yields the local root
+    backing s3://."""
+    import os
+    import sys
+
+    fixtures = os.path.join(os.path.dirname(__file__), "fixtures")
+    monkeypatch.syspath_prepend(fixtures)
+    sys.modules.pop("fsspec", None)
+    spark.sparkContext.addPyFile(os.path.join(fixtures, "fsspec.py"))
+    root = str(tmp_path / "fake-s3")
+    os.makedirs(os.path.join(root, "bucket"))
+    yield root
+    sys.modules.pop("fsspec", None)
+
+
+@pytest.mark.parametrize("fmt", ["emulated", "native"])
+def test_verify_integrity_on_s3(spark, fake_s3, fmt):
+    """On an object store verify_integrity hashes through the same store
+    as locally, in the tasks and on the driver: green on untouched data,
+    loud after one flipped byte in the backing object."""
+    import os
+
+    from flink_connector_lance_spark.options import S3Options
+    from flink_connector_lance_spark.sources import fragments as FR
+    from flink_connector_lance_spark.sources.maintenance import (
+        IntegrityError, verify_integrity)
+    from flink_connector_lance_spark.sources.writer import write_native_pure
+
+    url = f"s3://bucket/{fmt}"
+    s3 = S3Options(endpoint=f"fake://{fake_s3}")
+    storage = s3.to_storage_options()
+    opts = DatasetOptions(path=url, s3=s3)
+    write = write_native_pure if fmt == "native" else write_dataset
+    write(_ds(spark, 0, 40).repartition(2), url, "overwrite", opts)
+    n = len(FR.read_manifest_compat(url, storage_options=storage).fragments)
+    for session in (spark, None):
+        rep = verify_integrity(session, url, storage_options=storage)
+        assert rep == {"checked": n, "skipped": 0, "mismatched": []}
+    m = FR.read_manifest_compat(url, storage_options=storage)
+    _flip_byte(os.path.join(fake_s3, "bucket", fmt, m.fragments[0].file),
+               offset=200)
+    for session in (spark, None):
+        with pytest.raises(IntegrityError, match="sha256"):
+            verify_integrity(session, url, storage_options=storage)

@@ -12,7 +12,11 @@ tests/fixtures/fsspec.py) alike.
 - compaction merges N runts totalling T ≤ target rows into one
   fragment, on both locations;
 - the same append/delete/compact sequence gives the same fragments'
-  stats keys, digests and bloom columns on both locations.
+  stats keys, digests and bloom columns on both locations, for the
+  emulated (parquet) and the binary Lance format alike;
+- a deletion vector makes a fragment a compaction candidate at any
+  size, on s3 too; a MERGE whose updates lack a dataset column refuses
+  with ``ValueError`` in both formats.
 """
 
 from __future__ import annotations
@@ -144,13 +148,13 @@ def test_vacuum_keeps_inflight_native_fragment(spark, tmp_path):
     writer.write_native_pure(_rows(spark, 100).coalesce(1), path, "overwrite", opts)
     writer.write_native_pure(_rows(spark, 100, 100).coalesce(1), path, "append", opts)
     mf = LF.read_native_manifest(path)
-    new = writer.produce_native_fragments(
-        _rows(spark, 40, 5000).coalesce(1), path, LF.arrow_schema_of(mf.fields),
-        1000)
+    new = writer.write_fragments(
+        _rows(spark, 40, 5000).coalesce(1), path, None, 1000,
+        encoder=writer.LanceEncoder(mf.fields))
     assert len(new) == 1
     vacuum_dataset(path, keep_versions=1)
-    assert os.path.exists(os.path.join(path, LF.DATA_DIR, new[0][0]))
-    LF.commit_native(path, mf.fields, new, "append",
+    assert os.path.exists(os.path.join(path, new[0].file))
+    LF.commit_native(path, mf.fields, writer.native_files(new), "append",
                      expected_base_version=mf.version)
     assert read_dataset(spark, path).count() == 240
 
@@ -205,26 +209,60 @@ def _fingerprint(m: FR.Manifest) -> set:
             for f in m.fragments}
 
 
-def test_local_and_s3_write_the_same_fragments(spark, tmp_path, fake_s3):
+def _s3(fake_s3) -> S3Options:
+    os.makedirs(os.path.join(fake_s3, "bucket"), exist_ok=True)
+    return S3Options(endpoint=f"fake://{fake_s3}")
+
+
+@pytest.mark.parametrize("fmt", ["emulated", "native"])
+def test_local_and_s3_write_the_same_fragments(spark, tmp_path, fake_s3, fmt):
     """The same DataFrame appended to, deleted from and compacted on a
-    local and an s3 dataset: equal row counts, equal stats keys, a
-    digest on every fragment, equal bloom columns."""
-    os.makedirs(os.path.join(fake_s3, "bucket"))
-    s3 = S3Options(endpoint=f"fake://{fake_s3}")
+    local and an s3 dataset, in either on-disk format: equal row counts,
+    equal stats keys, a digest on every fragment, equal bloom columns."""
+    s3 = _s3(fake_s3)
+    create = writer.write_native_pure if fmt == "native" else writer.write_dataset
     out = {}
     for path, s in ((str(tmp_path / "ds"), None), ("s3://bucket/ds", s3)):
         opts = DatasetOptions(path=path, bloom_columns=["id", "g"],
                               write_max_rows_per_file=300, s3=s)
-        writer.write_dataset(_rows(spark, 1000).repartition(2, "id"), path,
-                             "overwrite", opts)
+        create(_rows(spark, 1000).repartition(2, "id"), path, "overwrite", opts)
         writer.write_dataset(_rows(spark, 200, 1000).coalesce(1), path,
                              "append", opts)
         delete_rows(spark, path, "id % 10 = 3", s3=s)
         compact_dataset(spark, path, target_rows_per_fragment=600, s3=s)
-        out[path] = FR.read_manifest(
+        out[path] = FR.read_manifest_compat(
             path, storage_options=s.to_storage_options() if s else None)
     local, remote = out.values()
     assert local.row_count == remote.row_count == 1080
+    assert bool(local.meta.get("native_lance")) is (fmt == "native")
     assert all(FR.DIGEST_STATS_KEY in f.stats
                for f in local.fragments + remote.fragments)
     assert _fingerprint(local) == _fingerprint(remote)
+
+
+def test_s3_native_compaction_materializes_tombstones(spark, fake_s3):
+    """A fragment carrying a deletion vector is a compaction candidate at
+    any size: on s3 the lone tombstoned fragment is rewritten without its
+    deleted rows, as locally."""
+    s3 = _s3(fake_s3)
+    path, storage = "s3://bucket/dv", s3.to_storage_options()
+    opts = DatasetOptions(path=path, s3=s3)
+    writer.write_native_pure(_rows(spark, 500).coalesce(1), path, "overwrite", opts)
+    writer.write_native_pure(_rows(spark, 500, 500).coalesce(1), path, "append", opts)
+    delete_rows(spark, path, "id < 20", s3=s3, use_deletion_vectors=True)
+    before = FR.read_manifest_compat(path, storage_options=storage)
+    assert [bool(f.deletion) for f in before.fragments] == [True, False]
+    compact_dataset(spark, path, small_threshold=100, s3=s3)
+    after = FR.read_manifest_compat(path, storage_options=storage)
+    assert after.version == before.version + 1
+    assert not any(f.deletion for f in after.fragments)
+    assert after.row_count == before.row_count == 980
+
+
+@pytest.mark.parametrize("fmt", ["emulated", "native"])
+def test_merge_rejects_updates_missing_columns(spark, tmp_path, fmt):
+    path = str(tmp_path / "ds")
+    create = writer.write_native_pure if fmt == "native" else writer.write_dataset
+    create(_rows(spark, 100), path, "overwrite", DatasetOptions(path=path))
+    with pytest.raises(ValueError, match=r"missing dataset column\(s\) \['g'\]"):
+        merge_rows(spark, path, _rows(spark, 5).select("id"), "id")

@@ -6,7 +6,13 @@ writes a 30,000-row seeded lineitem dataset in 5,000-row fragments, runs
 one untimed warm-up append/delete/compact, then one round of
 ``ingest_scan``'s storage ops — append, compact, append, delete,
 compact, append, compact (2,000-row appends, 500-key deletes, compaction
-to 20,000-row fragments) — each under its own job group. Writes:
+to 20,000-row fragments) — each under its own job group. With
+``--format native`` the dataset is created by ``writer.write_native_pure``
+instead, so the same sequence runs on a binary Lance dataset (``.lance``
+fragments, binary manifests); its frames carry ``l_shipdate`` as a
+session-zone timestamp, the type a binary dataset reads it back as (an
+append of the TIMESTAMP_NTZ frame would be refused as a type change).
+Writes:
 
 - ``<out>/jobs_<tag>.txt``: per op the job, stage and task counts, CPU
   seconds of the driver plus the JVM tree (Spark's Python workers
@@ -18,6 +24,7 @@ to 20,000-row fragments) — each under its own job group. Writes:
 Usage, from the repository root:
 
     python tools/write_path_jobs.py --tag before|after [--out plans/write_path]
+    python tools/write_path_jobs.py --format native --tag before|after --out plans/native_write
 """
 
 from __future__ import annotations
@@ -38,6 +45,7 @@ def main() -> None:
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("--tag", required=True)
     p.add_argument("--out", default=os.path.join(ROOT, "plans", "write_path"))
+    p.add_argument("--format", choices=("emulated", "native"), default="emulated")
     args = p.parse_args()
     os.environ["PYTHONPATH"] = ROOT  # Spark's Python workers import the package
 
@@ -68,24 +76,31 @@ def main() -> None:
         def scrub(text: str) -> str:
             text = text.replace(ROOT + os.sep, "").replace(tmp, "<tmp>")
             text = re.sub(r"frag-[0-9a-f]+", "frag-<uuid>", text)
+            text = re.sub(r"[0-9a-f]{8}-[0-9a-f-]{27}\.lance", "<uuid>.lance", text)
             text = re.sub(r"_(staging|delete)-[0-9a-f]+", r"_\1-<uuid>", text)
             return re.sub(r"(#|plan_id=|\[codegen id : )\d+", r"\1N", text)
+
+        def frame(df):
+            if args.format == "native":
+                return df.withColumn("l_shipdate", F.col("l_shipdate").cast("timestamp"))
+            return df
 
         rng = np.random.default_rng(1)
         ipath = os.path.join(tmp, "lineitem")
         data_dir = os.path.join(ipath, fragments.DATA_DIR)
         gen = os.path.join(tmp, "lineitem-gen.parquet")
         pq.write_table(data.lineitem(rng, 1, 30_000), gen, row_group_size=10_000)
-        writer.write_dataset(spark.read.schema(data.LINEITEM_SCHEMA).parquet(gen), ipath,
-                             "overwrite",
-                             DatasetOptions(path=ipath, write_max_rows_per_file=5_000))
+        create = (writer.write_native_pure if args.format == "native"
+                  else writer.write_dataset)
+        create(frame(spark.read.schema(data.LINEITEM_SCHEMA).parquet(gen)), ipath, "overwrite",
+               DatasetOptions(path=ipath, write_max_rows_per_file=5_000))
         next_key = 30_001
 
         def append():
             nonlocal next_key
             batch = data.lineitem(rng, next_key, 2_000)
             next_key += 2_000
-            writer.write_dataset(spark.createDataFrame(batch, schema=data.LINEITEM_SCHEMA),
+            writer.write_dataset(frame(spark.createDataFrame(batch, schema=data.LINEITEM_SCHEMA)),
                                  ipath, "append")
 
         def delete():
@@ -133,7 +148,7 @@ def main() -> None:
                     if any(e.jobs().contains(j) for j in job_ids):
                         plans.append(scrub(e.physicalPlanDescription()))
         lines.append("live fragments after the round: "
-                     f"{len(fragments.read_manifest(ipath).fragments)}")
+                     f"{len(fragments.read_manifest_compat(ipath).fragments)}")
     finally:
         stop_spark(spark)
         shutil.rmtree(tmp, ignore_errors=True)
