@@ -163,9 +163,10 @@ def store_relation(df, idx_dir: str, name: str, s3=None,
 def load_relation(spark, idx_dir: str, name: str, s3=None):
     """The relation ``store_relation`` persisted."""
     if fs.is_remote(idx_dir):
-        from .sources.maintenance import _remote_reader
+        from .sources.reader import read_dataset
 
-        return _remote_reader(spark, os.path.join(idx_dir, name), s3)
+        key = os.path.join(idx_dir, name)
+        return read_dataset(spark, key, options=DatasetOptions(path=key, s3=s3))
     return read_parquet_memo(spark, os.path.join(idx_dir, name + ".parquet"))
 
 
@@ -621,8 +622,8 @@ def search_dataset(
     refine (pq.pq_search, composing IVF cell pruning when the coarse
     index coexists); IVF only → exact search in probed cells; no index →
     brute force. s3:// datasets route identically (``options.s3``
-    credentials); an index-less remote dataset serves the exact
-    distributed scan through the remote pushdown reader."""
+    credentials); an index-less dataset serves the exact distributed
+    scan through ``read_dataset``, on either location."""
     from .hnsw import hnsw_search
     from .operators.knn import knn
     from .pq import pq_search
@@ -676,11 +677,6 @@ def search_dataset(
                              ef=ef, options=options, tiebreak_cols=tiebreak_cols,
                              round_digits=round_digits, filter=filter,
                              _meta=meta)
-    if fs.is_remote(path):
-        from .sources.maintenance import _remote_reader
-
-        base = _remote_reader(spark, path, s3)
-    else:
-        base = read_dataset(spark, path)
+    base = read_dataset(spark, path, options=DatasetOptions(path=path, s3=s3))
     return knn(base, column, query, k=k, metric=metric,
                filter=filter, tiebreak_cols=tiebreak_cols, round_digits=round_digits)

@@ -74,6 +74,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from . import fragments as FR
+from .reader import arrow_target, deletion_file
 
 if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
@@ -354,11 +355,10 @@ def _manifest_for_scan(path: str, version: "int | None",
     """Manifest for read planning: the emulated JSON chain, or — for a
     REAL Lance dataset (binary ``N.manifest``, e.g. the reference's
     committed fixtures) — the stdlib decoder adapted into the same shape
-    (FR.read_manifest_compat). Native fragments carry no zone maps
-    (``stats`` None → planning-time pruning disabled, conservative) and
-    their ``.lance`` data files route through the pure decoder in
-    ``_read_one``; parquet row-group pruning is replaced by the
-    decoder's buffer-level column pruning."""
+    (FR.read_manifest_compat). Native fragments without a stats sidecar
+    carry no zone maps (``stats`` None → planning-time pruning disabled,
+    conservative); every fragment file, ``.lance`` or parquet, is read by
+    ``reader.read_file``."""
     return FR.read_manifest_compat(path, version,
                                    storage_options=storage_options)
 
@@ -374,15 +374,13 @@ def _storage_opts(options: dict) -> dict:
 
 class LanceDataSourceReader(DataSourceReader):
     def __init__(self, options: dict, schema: "StructType | None" = None):
-        from .fs import is_remote
-
         self._path = _norm_path(options.get("path"))
         if not self._path:
             raise ValueError("lance datasource requires a 'path' option")
-        # S3 read path (sources/fs.py): manifest via fsspec at planning,
-        # per-fragment fsspec opens inside the Python workers at read —
-        # the credentials ride in the (picklable) storage-options map
-        self._remote = is_remote(self._path)
+        # the storage seam (sources/fs.py) resolves the location: the
+        # manifest at planning and every fragment at read open through
+        # store_for(path, storage) — on s3 with the credentials of this
+        # (picklable) storage-options map, locally ignoring it
         self._storage = _storage_opts(options)
         v = options.get("version")
         self._version = int(v) if v is not None else None
@@ -421,7 +419,7 @@ class LanceDataSourceReader(DataSourceReader):
         self._verify = str(
             options.get("read.verify-integrity", "false")).lower() == "true"
         self._file_filters: List[Filter] = []
-        # the planned Spark schema (picklable): executors align each
+        # the planned schema as Arrow (picklable): executors align each
         # fragment's batches to it by name, null-filling columns an older
         # (pre-evolution) fragment doesn't carry. The synthetic file
         # column is OURS to append — strip it from the data alignment
@@ -430,7 +428,8 @@ class LanceDataSourceReader(DataSourceReader):
                 and self._file_col in schema.names):
             schema = StructType(
                 [f for f in schema.fields if f.name != self._file_col])
-        self._schema = schema
+        self._target = (arrow_target(schema) if schema is not None
+                        else None)
         # typed Filter dataclasses are picklable; converted to pyarrow
         # expressions lazily on the executor (expressions don't need to
         # survive the driver->executor hop)
@@ -503,18 +502,8 @@ class LanceDataSourceReader(DataSourceReader):
             f
             for f in fragments
             if all(_fragment_may_match(f.stats, f.row_count, p) for p in self._pushed)
-            and _bloom_may_match(self._path, f, self._pushed,
-                                 self._storage if self._remote else None)
+            and _bloom_may_match(self._path, f, self._pushed, self._storage)
         ]
-        def _del_path(f) -> "str | None":
-            if not getattr(f, "deletion", None):
-                return None
-            from . import lance_format as LF
-
-            rel = f.file[len(LF.DATA_DIR) + 1:] if f.file.startswith(
-                LF.DATA_DIR + "/") else f.file
-            return LF._deletion_path(self._path, LF.NativeFragmentInfo(
-                f.fragment_id, rel, f.row_count, deletion=f.deletion))
 
         def _digest(f) -> "str | None":
             return (f.stats or {}).get(FR.DIGEST_STATS_KEY)
@@ -523,7 +512,7 @@ class LanceDataSourceReader(DataSourceReader):
             return [
                 FragmentPartition(f.fragment_id,
                                   os.path.join(self._path, f.file),
-                                  f.row_count, deletions=(_del_path(f),),
+                                  f.row_count, deletions=(deletion_file(self._path, f),),
                                   digests=((_digest(f),)
                                            if self._verify else ()))
                 for f in kept
@@ -549,7 +538,7 @@ class LanceDataSourceReader(DataSourceReader):
                 os.path.join(self._path, p[0].file),
                 sum(f.row_count for f in p),
                 packed_files=tuple(os.path.join(self._path, f.file) for f in p[1:]),
-                deletions=tuple(_del_path(f) for f in p),
+                deletions=tuple(deletion_file(self._path, f) for f in p),
                 digests=(tuple(_digest(f) for f in p)
                          if self._verify else ()),
             )
@@ -559,287 +548,72 @@ class LanceDataSourceReader(DataSourceReader):
     def read(self, partition: "FragmentPartition | None") -> Iterator["pa.RecordBatch"]:
         if partition is None:  # every fragment was pruned
             return
-        n_files = 1 + len(partition.packed_files)
-        dels = partition.deletions or (None,) * n_files
-        digs = getattr(partition, "digests", ()) or (None,) * n_files
-        if any(digs):
-            # read.verify-integrity: one streaming hash pass per file
-            # BEFORE decoding — a flipped byte in engine-written data
-            # fails the task loudly instead of decoding silently
-            if self._remote:
-                from .fs import get_fs
+        import pyarrow as pa
 
-                fs = get_fs(self._path, self._storage)
-            else:
-                fs = None
-            for file, expected in zip(
-                    (partition.file, *partition.packed_files), digs):
-                if expected is None:
-                    continue  # no write-time stamp (foreign file): skip
-                actual = FR.sha256_of(file, fs)
-                if actual != expected:
-                    raise FR.IntegrityError(
-                        f"fragment {file} fails its write-time sha256 "
-                        f"digest (expected {expected[:16]}..., got "
-                        f"{actual[:16]}...) — the bytes changed since "
-                        "the engine wrote them")
-        for file, del_path in zip((partition.file, *partition.packed_files),
-                                  dels):
-            if self._file_col is None:
-                yield from self._read_one(file, del_path)
+        from .fs import store_for
+        from .reader import read_file
+
+        files = (partition.file, *partition.packed_files)
+        dels = partition.deletions or (None,) * len(files)
+        store = store_for(self._path, self._storage)
+        # read.verify-integrity: one streaming hash pass per file BEFORE
+        # decoding — a flipped byte in engine-written data fails the
+        # task loudly instead of decoding silently; a file without a
+        # write-time stamp (foreign file) skips
+        for file, expected in zip(files, partition.digests or ()):
+            if expected is None:
                 continue
-            import pyarrow as pa
-
+            actual = FR.sha256_of(file, store)
+            if actual != expected:
+                raise FR.IntegrityError(
+                    f"fragment {file} fails its write-time sha256 "
+                    f"digest (expected {expected[:16]}..., got "
+                    f"{actual[:16]}...) — the bytes changed since "
+                    "the engine wrote them")
+        for file, del_path in zip(files, dels):
+            if self._file_col is None:
+                yield from read_file(store, file, self._target, self._pushed,
+                                     del_path, self._batch_size)
+                continue
             rel = self._rel_file(file)
-            if self._schema is not None and not self._schema.fields:
-                # projection touched ONLY the file column (e.g. a
-                # groupBy('__frag').count() probe): no data column to
-                # decode — emit the attribution column alone, sized by
-                # the pushed-filter row count
-                n = self._count_one(file, del_path)
+            if not self._target and not self._pushed:
+                # the schema is the file column alone (Spark hands this
+                # reader the full schema otherwise, and no data column
+                # can then carry a pushed filter): no data column to
+                # decode — emit the attribution column, sized from
+                # metadata
+                n = self._count_one(store, file, del_path)
                 yield pa.RecordBatch.from_arrays(
                     [pa.array([rel] * n, pa.string())], names=[self._file_col])
                 continue
-            for batch in self._read_one(file, del_path):
-                yield pa.RecordBatch.from_arrays(
-                    list(batch.columns)
-                    + [pa.array([rel] * batch.num_rows, pa.string())],
-                    names=list(batch.schema.names) + [self._file_col])
+            for batch in read_file(store, file, self._target, self._pushed,
+                                   del_path, self._batch_size):
+                yield batch.append_column(
+                    self._file_col, pa.array([rel] * batch.num_rows, pa.string()))
 
     def _rel_file(self, file: str) -> str:
         base = str(self._path).rstrip("/")
         f = str(file)
         return f[len(base) + 1:] if f.startswith(base + "/") else f
 
-    def _count_one(self, file: str, del_path: "str | None" = None) -> int:
-        """Pushed-filter row count of one fragment, decoding as little as
-        possible: metadata-only when no filter is pushed, else only the
-        FILTER's columns are read. Filters referencing a column this
-        (pre-evolution) fragment predates resolve by null semantics
-        instead of raising — an absent column is all-null, so IsNull
-        passes every row and every other pushed shape (comparisons, In,
-        Not(EqualTo), IsNotNull) passes none."""
-        import pyarrow.dataset as pads
+    def _count_one(self, store, file: str, del_path: "str | None" = None) -> int:
+        """Live row count of one fragment from metadata: the parquet
+        footer's rows, or the Lance descriptor's minus tombstones."""
+        with store.open(file, "rb") as fh:
+            if file.endswith(".lance"):
+                from . import lance_format as LF
 
-        attrs = sorted({n for f in self._pushed
-                        for n in (_filter_attrs(f) or ())})
-        if file.endswith(".lance"):
+                n = LF.file_descriptor(fh, file)[1]
+            else:
+                import pyarrow.parquet as papq
+
+                n = papq.ParquetFile(fh).metadata.num_rows
+        if del_path is not None:
             from . import lance_format as LF
 
-            storage = self._storage if self._remote else None
-            del_offsets = (LF.read_deletion_offsets_at(del_path, storage)
-                           if del_path is not None else [])
-            n_rows = None
-            if self._pushed:
-                ffields, n_rows = LF.read_file_descriptor(file, storage)
-                avail = {f.name for f in ffields if f.parent == -1}
-                present_filters, expr = [], None
-                for f in self._pushed:
-                    a = _filter_attrs(f) or ()
-                    if set(a) <= avail:
-                        present_filters.append(f)
-                        continue
-                    if not isinstance(f, IsNull):
-                        return 0  # null semantics on the absent column
-                for f in present_filters:
-                    e = _filter_to_arrow(f)
-                    expr = e if expr is None else (expr & e)
-                if expr is not None:
-                    cols = sorted({n for f in present_filters
-                                   for n in _filter_attrs(f)})
-                    return LF.apply_deletion_mask(
-                        LF.read_native_file(file, columns=cols,
-                                            storage_options=storage),
-                        del_offsets).filter(expr).num_rows
-                return n_rows - len(del_offsets)
-            return LF.read_file_descriptor(file, storage)[1] - len(del_offsets)
-        expr = None
-        for f in self._pushed:
-            e = _filter_to_arrow(f)
-            expr = e if expr is None else (expr & e)
-        if self._remote:
-            import pyarrow.parquet as papq
-
-            from .fs import get_fs
-
-            with get_fs(file, self._storage).open(file, "rb") as fobj:
-                pf = papq.ParquetFile(fobj)
-                if expr is None:
-                    return pf.metadata.num_rows
-                # project to the filter's columns — a count probe must
-                # not pull every column of a wide fragment over the wire
-                cols = [c for c in attrs if c in pf.schema_arrow.names]
-                if len(cols) < len(attrs):
-                    # pre-evolution fragment: same null semantics as above
-                    missing_ok = all(
-                        isinstance(f, IsNull)
-                        for f in self._pushed
-                        if not set(_filter_attrs(f) or ()) <= set(pf.schema_arrow.names))
-                    if not missing_ok:
-                        return 0
-                    expr = None
-                    for f in self._pushed:
-                        if set(_filter_attrs(f) or ()) <= set(pf.schema_arrow.names):
-                            e = _filter_to_arrow(f)
-                            expr = e if expr is None else (expr & e)
-                    if expr is None:
-                        return pf.metadata.num_rows
-                return pf.read(columns=cols).filter(expr).num_rows
-        d = pads.dataset(file, format="parquet")
-        return d.count_rows(filter=expr)
-
-    def _read_one(self, file: str,
-                  del_path: "str | None" = None) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-        import pyarrow.dataset as pads
-
-        expr = None
-        for f in self._pushed:
-            e = _filter_to_arrow(f)
-            expr = e if expr is None else (expr & e)
-        if file.endswith(".lance"):
-            # REAL Lance fragment — local or s3:// (the stdlib decoder
-            # seeks through an fsspec stream with the threaded creds)
-            yield from self._read_one_native(file, expr, del_path)
-            return
-        if self._remote:
-            yield from self._read_one_remote(file, expr)
-            return
-        dset = pads.dataset(file, format="parquet")
-
-        target = None
-        if self._schema is not None:
-            from ..types import spark_schema_to_arrow
-
-            t = spark_schema_to_arrow(self._schema)
-            if t != dset.schema:  # pre-evolution fragment: align by name
-                target = t
-        if target is None:
-            yield from dset.scanner(filter=expr, batch_size=self._batch_size).to_batches()
-            return
-
-        # a pushed filter may reference a column this fragment predates;
-        # then the scanner can't evaluate it — align first, filter after
-        # (null-filled columns make the expression well-defined). Not and
-        # any future wrapper shapes unwrap via _filter_attrs; a filter
-        # whose columns can't be determined conservatively goes to the
-        # post-alignment side.
-        file_cols = set(dset.schema.names)
-        attrs = [_filter_attrs(f) for f in self._pushed]
-        push_to_scanner = (
-            expr is not None
-            and all(a is not None for a in attrs)
-            and {n for a in attrs for n in a} <= file_cols
-        )
-        scanner = dset.scanner(filter=expr if push_to_scanner else None,
-                               batch_size=self._batch_size)
-        for batch in scanner.to_batches():
-            aligned = _align_batch(batch, target)
-            if expr is not None and not push_to_scanner:
-                tbl = pa.Table.from_batches([aligned]).filter(expr)
-                yield from tbl.to_batches()
-            else:
-                yield aligned
-
-    def _read_one_native(self, file: str, expr,
-                         del_path: "str | None" = None
-                         ) -> Iterator["pa.RecordBatch"]:
-        """One REAL ``.lance`` v2 data file through the stdlib decoder
-        (sources/lance_format.py) — same per-fragment task shape as the
-        parquet route. The decode is cast to the planned Spark schema's
-        Arrow types (e.g. timestamp[ms] -> µs for Spark's Arrow bridge)
-        and pushed filters evaluate over the decoded table (Arrow
-        compute — the decoder's pruning is per-column, not per-row)."""
-        import pyarrow as pa
-
-        from . import lance_format as LF
-
-        if self._schema is not None:
-            from ..types import spark_type_to_arrow
-
-            # align by name against the file's own descriptor: decode
-            # only the planned columns PRESENT in the file, null-fill
-            # the ones a pre-evolution file predates, never request a
-            # dropped one. Per-TYPE conversion (metadata-blind): a
-            # declared vector dimension must NOT re-materialize
-            # FixedSizeList here — Spark's Arrow bridge only ingests
-            # plain lists, so FSL columns flatten to list at the batch
-            # boundary (the dimension stays recorded in the schema
-            # metadata and the manifest)
-            storage = self._storage if self._remote else None
-            target = pa.schema([
-                pa.field(f.name, spark_type_to_arrow(f.dataType))
-                for f in self._schema
-            ])
-            ffields, fn_rows = LF.read_file_descriptor(file, storage)
-            avail = {f.name for f in ffields if f.parent == -1}
-            present = [n for n in target.names if n in avail]
-            if present:
-                tbl = LF.align_decoded_table(
-                    LF.read_native_file(file, columns=present,
-                                        storage_options=storage), target)
-            else:
-                tbl = pa.Table.from_arrays(
-                    [pa.nulls(fn_rows, f.type) for f in target], schema=target)
-        else:
-            tbl = LF.read_native_file(
-                file, storage_options=self._storage if self._remote else None)
-        if del_path is not None:
-            # deletion-vector tombstones mask BEFORE the pushed filter
-            # (offsets are physical row positions in the decoded file)
-            tbl = LF.apply_deletion_mask(
-                tbl, LF.read_deletion_offsets_at(
-                    del_path, self._storage if self._remote else None))
-        if expr is not None:
-            tbl = tbl.filter(expr)
-        yield from tbl.to_batches(max_chunksize=self._batch_size)
-
-    def _read_one_remote(self, file: str, expr) -> Iterator["pa.RecordBatch"]:
-        """Executor-side S3 fragment read: the file opens through fsspec
-        with the threaded credentials (no JVM hadoop-aws involved — the
-        data plane of this source is Python/Arrow already). Before any
-        row bytes stream, the footer's per-row-group min/max/null-count
-        stats are tested against the pushed filters (the same
-        conservative zone-map predicate as fragment pruning,
-        _row_group_may_match) and only surviving row groups are read,
-        projected to the read schema's columns — so a pushed point
-        filter costs O(matching row groups), not O(file). Pushed
-        filters still re-apply exactly post-alignment per batch."""
-        import pyarrow as pa
-        import pyarrow.parquet as papq
-
-        from .fs import get_fs
-
-        fs = get_fs(file, self._storage)
-        target = None
-        if self._schema is not None:
-            from ..types import spark_schema_to_arrow
-
-            target = spark_schema_to_arrow(self._schema)
-        with fs.open(file, "rb") as fobj:
-            pf = papq.ParquetFile(fobj)
-            columns = None
-            if target is not None:
-                # post-alignment filters only ever reference read-schema
-                # columns, so projecting the wire read to them is exact
-                in_file = set(pf.schema_arrow.names)
-                columns = [n for n in target.names if n in in_file]
-            groups = list(range(pf.metadata.num_row_groups))
-            if self._pushed:
-                groups = [i for i in groups
-                          if _row_group_may_match(pf.metadata.row_group(i),
-                                                  self._pushed)]
-            if not groups:
-                return
-            for batch in pf.iter_batches(batch_size=self._batch_size,
-                                         row_groups=groups, columns=columns):
-                if target is not None and batch.schema != target:
-                    batch = _align_batch(batch, target)
-                if expr is not None:
-                    tbl = pa.Table.from_batches([batch]).filter(expr)
-                    yield from tbl.to_batches()
-                else:
-                    yield batch
+            with store.open(del_path, "rb") as fh:
+                n -= len(LF.deletion_offsets(fh.read(), del_path))
+        return n
 
 
 def _write_fragment(path: str, iterator: Iterator["pa.RecordBatch"],
@@ -960,8 +734,6 @@ def _layout_options_requested(options: dict) -> bool:
 
 class LanceDataSourceWriter(DataSourceArrowWriter):
     def __init__(self, options: dict, overwrite: bool):
-        from .fs import is_remote
-
         self._path = _norm_path(options.get("path"))
         if not self._path:
             raise ValueError("lance datasource requires a 'path' option")
@@ -971,7 +743,7 @@ class LanceDataSourceWriter(DataSourceArrowWriter):
         # manifest commit — the spark-idiomatic spelling of the
         # reference's sink (ref LanceSink.java:133-199) without its
         # single-writer serialization
-        self._storage = _storage_opts(options) if is_remote(self._path) else None
+        self._storage = _storage_opts(options)
         self._mode = "overwrite" if overwrite else "append"
         self._evolve = _parse_evolve_option(options)
         if _layout_options_requested(options):
@@ -1106,8 +878,6 @@ class LanceDataSourceStreamWriter(DataSourceStreamArrowWriter):
     EPOCH_KEY = "stream_epoch"
 
     def __init__(self, options: dict):
-        from .fs import is_remote
-
         self._path = _norm_path(options.get("path"))
         if not self._path:
             raise ValueError("lance datasource requires a 'path' option")
@@ -1115,7 +885,7 @@ class LanceDataSourceStreamWriter(DataSourceStreamArrowWriter):
         # write fragments through the storage seam, the driver's
         # epoch-tagged commit is one manifest create — redelivery dedup
         # unchanged (the epoch rides inside the atomic manifest write)
-        self._storage = _storage_opts(options) if is_remote(self._path) else None
+        self._storage = _storage_opts(options)
         self._evolve = _parse_evolve_option(options)
         if _layout_options_requested(options):
             raise ValueError(
@@ -1245,9 +1015,11 @@ class LanceDataSourceStreamReader(DataSourceStreamReader):
         self._path = _norm_path(options.get("path"))
         if not self._path:
             raise ValueError("lance datasource requires a 'path' option")
+        self._storage = _storage_opts(options)
         self._batch_size = int(options.get("read.batch-size", DEFAULT_BATCH_SIZE))
         self._start = int(options.get("stream.start-version", -1))
-        self._schema = schema  # align pre-evolution fragments (see read)
+        # align pre-evolution fragments (see read)
+        self._target = arrow_target(schema) if schema is not None else None
         cap = options.get("stream.max-fragments-per-batch")
         self._max_frags = int(cap) if cap is not None else None
         if self._max_frags is not None and self._max_frags <= 0:
@@ -1277,7 +1049,8 @@ class LanceDataSourceStreamReader(DataSourceStreamReader):
         cached = self._files_cache.get(version)
         if cached is None:
             try:
-                cached = {f.file for f in FR.read_manifest_compat(self._path, version).fragments}
+                cached = {f.file for f in FR.read_manifest_compat(
+                    self._path, version, self._storage).fragments}
             except FileNotFoundError:
                 if strict:
                     raise
@@ -1286,7 +1059,7 @@ class LanceDataSourceStreamReader(DataSourceStreamReader):
         return cached
 
     def latestOffset(self) -> dict:
-        v = FR.latest_version(self._path)
+        v = FR.latest_version(self._path, self._storage)
         latest = self._start if v is None else max(v, self._start)
         if self._max_frags is None or not self._primed or latest <= self._cursor:
             return {"version": latest}
@@ -1324,40 +1097,23 @@ class LanceDataSourceStreamReader(DataSourceStreamReader):
         if ev <= sv:
             return []
         known = self._files_at(sv)
-        m = FR.read_manifest_compat(self._path, ev)
+        m = FR.read_manifest_compat(self._path, ev, self._storage)
         return [
-            FragmentPartition(f.fragment_id, os.path.join(self._path, f.file), f.row_count)
+            FragmentPartition(f.fragment_id, os.path.join(self._path, f.file),
+                              f.row_count,
+                              deletions=(deletion_file(self._path, f),))
             for f in m.fragments
             if f.file not in known
         ]
 
     def read(self, partition: FragmentPartition) -> Iterator["pa.RecordBatch"]:
-        if partition.file.endswith(".lance"):
-            # native fragment appended to a binary dataset: decode via
-            # the stdlib codec, cast to the planned schema's arrow types
-            from . import lance_format as LF
+        from .fs import store_for
+        from .reader import read_file
 
-            tbl = LF.read_native_file(partition.file)
-            if self._schema is not None:
-                from ..types import spark_schema_to_arrow
-
-                t = spark_schema_to_arrow(self._schema)
-                if t != tbl.schema:
-                    tbl = tbl.cast(t)
-            yield from tbl.to_batches(max_chunksize=self._batch_size)
-            return
-        import pyarrow.dataset as pads
-
-        dset = pads.dataset(partition.file, format="parquet")
-        target = None
-        if self._schema is not None:
-            from ..types import spark_schema_to_arrow
-
-            t = spark_schema_to_arrow(self._schema)
-            if t != dset.schema:  # pre-evolution fragment: align by name
-                target = t
-        for batch in dset.scanner(batch_size=self._batch_size).to_batches():
-            yield batch if target is None else _align_batch(batch, target)
+        yield from read_file(store_for(self._path, self._storage),
+                             partition.file, self._target,
+                             deletion=partition.deletions[0],
+                             batch_size=self._batch_size)
 
     def commit(self, end: dict) -> None:
         # offsets live in Spark's checkpoint offset log; the source keeps
@@ -1387,41 +1143,32 @@ class LanceDataSource(DataSource):
         return StructType(list(base.fields) + [StructField(fc, StringType())])
 
     def _data_schema(self) -> StructType:
-        import pyarrow.parquet as pq
+        """The dataset's columns, every one declared nullable, as Spark's
+        parquet source and ``read_dataset`` declare them: fragments that
+        predate an evolved column null-fill it, so a recorded NOT NULL
+        would let Catalyst fold ``IS NULL`` on it to an empty scan."""
+        from pyspark.sql.types import StructField
 
-        from ..types import arrow_schema_to_spark
+        from .schema_evolution import dataset_schema
 
         path = _norm_path(self.options.get("path"))
         if not path:
             raise ValueError("lance datasource requires a 'path' option")
         v = self.options.get("version")
+        v = int(v) if v is not None else None
         storage = _storage_opts(dict(self.options))
         try:
-            manifest = FR.read_manifest(path, int(v) if v is not None else None,
-                                        storage_options=storage)
+            recorded = dataset_schema(path, v, storage)
         except FR.LanceUnavailableError:
             # REAL Lance dataset: schema straight from the binary
-            # manifest (local, or s3:// through fsspec)
+            # manifest (local, or s3:// through the storage seam)
+            from ..types import arrow_schema_to_spark
             from . import lance_format as LF
 
-            mf = LF.read_native_manifest(path, int(v) if v is not None else None,
-                                         storage)
-            return arrow_schema_to_spark(LF.arrow_schema_of(mf.fields))
-        # schema evolution: the manifest's recorded schema is authoritative
-        # (pre-evolution fragments lack the newer columns)
-        sj = manifest.meta.get("schema")
-        if sj:
-            import json
-
-            return StructType.fromJson(json.loads(sj))
-        if not manifest.fragments:
-            raise FileNotFoundError(f"dataset {path} (v{manifest.version}) has no fragments")
-        # schema from the first fragment's footer: metadata-only read
-        from .fs import store_for
-
-        first = os.path.join(path, manifest.fragments[0].file)
-        with store_for(path, storage).open(first, "rb") as fobj:
-            return arrow_schema_to_spark(pq.read_schema(fobj))
+            recorded = arrow_schema_to_spark(LF.arrow_schema_of(
+                LF.read_native_manifest(path, v, storage).fields))
+        return StructType([StructField(f.name, f.dataType, True, f.metadata)
+                           for f in recorded])
 
     def reader(self, schema: StructType) -> LanceDataSourceReader:
         return LanceDataSourceReader(dict(self.options), schema)

@@ -36,10 +36,13 @@ through ``store.writing(key)``, and the driver commits one
 The index plane (index.py, pq.py, hnsw.py) keeps one layout under
 ``_indexes/<column>/<kind>/`` on both stores: its metas, centroid and
 codebook tables and per-cell HNSW files are written through ``writing``
-and read through ``open``, by the driver or by the search tasks. Remote
-scans go through the Python DataSource, whose workers open fragments
-through ``get_fs`` with the same credentials. Without fsspec installed,
-every remote call degrades to the same clear ``RemoteUnavailableError``.
+and read through ``open``, by the driver or by the search tasks. The
+read half of the data plane runs over it too: every Python-side fragment
+read (the datasource's scan, the streaming source, the Lance decoder
+scan) is ``reader.read_file``, which opens the fragment through
+``store.open`` inside the task, with the same credentials. Without
+fsspec installed, every remote call degrades to the same clear
+``RemoteUnavailableError``.
 """
 
 from __future__ import annotations

@@ -479,24 +479,29 @@ def read_file_descriptor(path: str, storage_options: dict | None = None
     per-task alignment probe of a mixed-schema dataset calls this once
     per fragment)."""
     with _open_binary(path, storage_options) as fh:
-        fh.seek(0, os.SEEK_END)
-        fsize = fh.tell()
-        if fsize < FOOTER_LEN:
-            raise ValueError(f"{path}: too small to be a lance data file")
-        fh.seek(fsize - FOOTER_LEN)
-        footer = fh.read(FOOTER_LEN)
-        if footer[-4:] != MAGIC:
-            raise ValueError(
-                f"{path}: missing {MAGIC!r} magic — not a lance data file")
-        (_cms, _cmos, gbos, num_global, _ncols, _maj, _min) = \
-            struct.unpack_from("<QQQIIHH", footer, 0)
-        if num_global < 1:
-            raise NotImplementedError(
-                "lance file without a FileDescriptor buffer")
-        fh.seek(gbos)
-        gpos, gsize = struct.unpack("<QQ", fh.read(16))
-        fh.seek(gpos)
-        fd = _pb_fields(fh.read(gsize))
+        return file_descriptor(fh, path)
+
+
+def file_descriptor(fh, path: str) -> "tuple[list[NativeField], int]":
+    """``read_file_descriptor`` over an already open binary stream."""
+    fh.seek(0, os.SEEK_END)
+    fsize = fh.tell()
+    if fsize < FOOTER_LEN:
+        raise ValueError(f"{path}: too small to be a lance data file")
+    fh.seek(fsize - FOOTER_LEN)
+    footer = fh.read(FOOTER_LEN)
+    if footer[-4:] != MAGIC:
+        raise ValueError(
+            f"{path}: missing {MAGIC!r} magic — not a lance data file")
+    (_cms, _cmos, gbos, num_global, _ncols, _maj, _min) = \
+        struct.unpack_from("<QQQIIHH", footer, 0)
+    if num_global < 1:
+        raise NotImplementedError(
+            "lance file without a FileDescriptor buffer")
+    fh.seek(gbos)
+    gpos, gsize = struct.unpack("<QQ", fh.read(16))
+    fh.seek(gpos)
+    fd = _pb_fields(fh.read(gsize))
     fields = _parse_fields(_pb_fields(_one(fd, 1, b"")))
     return fields, _one(fd, 2, 0)
 
@@ -1821,60 +1826,65 @@ def read_native_file(path: str, columns: list[str] | None = None,
     buffers are then fetched by independent seeks, and only the SELECTED
     columns' buffers are ever requested — a 2-column projection of a
     wide fragment reads 2 columns' bytes plus O(metadata)."""
+    with _open_binary(path, storage_options) as fh:
+        return decode_native_file(fh, path, columns)
+
+
+def decode_native_file(fh, path: str, columns: list[str] | None = None):
+    """``read_native_file`` over an already open binary stream."""
     import pyarrow as pa
 
-    with _open_binary(path, storage_options) as fh:
-        fh.seek(0, os.SEEK_END)
-        fsize = fh.tell()
-        if fsize < FOOTER_LEN:
-            raise ValueError(f"{path}: too small to be a lance data file")
-        fh.seek(fsize - FOOTER_LEN)
-        footer = fh.read(FOOTER_LEN)
-        if footer[-4:] != MAGIC:
-            raise ValueError(
-                f"{path}: missing {MAGIC!r} magic — not a lance data file")
-        (cms, cmos, gbos, num_global, num_cols, _maj, _min) = \
-            struct.unpack_from("<QQQIIHH", footer, 0)
-        fh.seek(cms)
-        meta = fh.read(fsize - cms)  # metadata tail: small, contiguous
+    fh.seek(0, os.SEEK_END)
+    fsize = fh.tell()
+    if fsize < FOOTER_LEN:
+        raise ValueError(f"{path}: too small to be a lance data file")
+    fh.seek(fsize - FOOTER_LEN)
+    footer = fh.read(FOOTER_LEN)
+    if footer[-4:] != MAGIC:
+        raise ValueError(
+            f"{path}: missing {MAGIC!r} magic — not a lance data file")
+    (cms, cmos, gbos, num_global, num_cols, _maj, _min) = \
+        struct.unpack_from("<QQQIIHH", footer, 0)
+    fh.seek(cms)
+    meta = fh.read(fsize - cms)  # metadata tail: small, contiguous
 
-        def fetch(pos: int, n: int) -> bytes:
-            fh.seek(pos)
-            data = fh.read(n)
-            if len(data) != n:
-                raise ValueError(f"{path}: truncated read at {pos}+{n}")
-            return data
+    def fetch(pos: int, n: int) -> bytes:
+        fh.seek(pos)
+        data = fh.read(n)
+        if len(data) != n:
+            raise ValueError(f"{path}: truncated read at {pos}+{n}")
+        return data
 
-        if num_global < 1:
-            raise NotImplementedError(
-                "lance file without a FileDescriptor buffer")
-        gpos, gsize = struct.unpack_from("<QQ", meta, gbos - cms)
-        fd = _pb_fields(fetch(gpos, gsize))
-        fields = _parse_fields(_pb_fields(_one(fd, 1, b"")))
-        if len(fields) != num_cols:
-            raise NotImplementedError(
-                f"{path}: {num_cols} structural columns vs {len(fields)} "
-                "schema fields — packed/struct layouts unsupported")
-        col_of_field = _structural_order(fields)
-        pages_by_col = []
-        for c in range(num_cols):
-            pos, size = struct.unpack_from("<QQ", meta, (cmos - cms) + 16 * c)
-            pages_by_col.append(_pages_from_cm(meta[pos - cms: pos - cms + size]))
+    if num_global < 1:
+        raise NotImplementedError(
+            "lance file without a FileDescriptor buffer")
+    gpos, gsize = struct.unpack_from("<QQ", meta, gbos - cms)
+    fd = _pb_fields(fetch(gpos, gsize))
+    fields = _parse_fields(_pb_fields(_one(fd, 1, b"")))
+    if len(fields) != num_cols:
+        raise NotImplementedError(
+            f"{path}: {num_cols} structural columns vs {len(fields)} "
+            "schema fields — packed/struct layouts unsupported")
+    col_of_field = _structural_order(fields)
+    pages_by_col = []
+    for c in range(num_cols):
+        pos, size = struct.unpack_from("<QQ", meta, (cmos - cms) + 16 * c)
+        pages_by_col.append(_pages_from_cm(meta[pos - cms: pos - cms + size]))
 
-        top = [(i, f) for i, f in enumerate(fields) if f.parent == -1]
-        if columns is not None:
-            by_name = {f.name: (i, f) for i, f in top}
-            missing = [c for c in columns if c not in by_name]
-            if missing:
-                raise KeyError(f"columns not in dataset schema: {missing}")
-            top = [by_name[c] for c in columns]
+    top = [(i, f) for i, f in enumerate(fields) if f.parent == -1]
+    if columns is not None:
+        by_name = {f.name: (i, f) for i, f in top}
+        missing = [c for c in columns if c not in by_name]
+        if missing:
+            raise KeyError(f"columns not in dataset schema: {missing}")
+        top = [by_name[c] for c in columns]
 
-        arrays = []
-        names = []
-        for i, f in top:
-            vals = _decode_column(fetch, fields, i, pages_by_col, col_of_field)
-            arrays.append(pa.array(vals, type=arrow_type_for(fields, i)))
-            names.append(f.name)
+    arrays = []
+    names = []
+    for i, f in top:
+        vals = _decode_column(fetch, fields, i, pages_by_col, col_of_field)
+        arrays.append(pa.array(vals, type=arrow_type_for(fields, i)))
+        names.append(f.name)
     return pa.table(dict(zip(names, arrays))) if names else pa.table({})
 
 
@@ -3297,10 +3307,14 @@ def read_deletion_offsets_at(path: str,
     """Deleted LOCAL row offsets from one deletion file: an Arrow IPC
     file (first column = int32 offsets) or a portable-format roaring
     bitmap (``.bin`` — what lance writes for dense deletes)."""
+    with _open_binary(path, storage_options) as fh:
+        return deletion_offsets(fh.read(), path)
+
+
+def deletion_offsets(blob: bytes, path: str) -> list[int]:
+    """``read_deletion_offsets_at`` over the deletion file's bytes."""
     import pyarrow as pa
 
-    with _open_binary(path, storage_options) as fh:
-        blob = fh.read()
     if str(path).endswith(".bin"):
         return _roaring_deserialize(blob)
     tbl = pa.ipc.open_file(pa.BufferReader(blob)).read_all()

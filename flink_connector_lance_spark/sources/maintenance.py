@@ -762,59 +762,23 @@ def _delete_native_vectors(spark: SparkSession, path: str, pred,
     return FR.read_manifest_compat(base, storage_options=storage)
 
 
-def _remote_reader(spark, path: str, s3, file_col: "str | None" = None):
-    """A format('lance') reader over an s3:// dataset with the
-    credentials threaded as reader options; ``file_col`` appends the
-    per-row RELATIVE fragment file (the remote-capable twin of
-    ``input_file_name()``, which Python data sources cannot provide)."""
-    from .datasource import register_lance_datasource
-
-    register_lance_datasource(spark)
-    r = spark.read.format("lance")
-    if s3 is not None:
-        r = r.options(**s3.to_option_map())
-    if file_col is not None:
-        r = r.option("read.file-column", file_col)
-    return r.load(path)
-
-
 def _file_scan(spark, path: str, manifest: FR.Manifest, s3=None,
                files=None, file_col: "str | None" = None, where=None):
     """The rows of ``files`` (root-relative; default every fragment of
-    ``manifest``), filtered by ``where``, with ``file_col`` naming each
-    row's root-relative fragment file when asked — the one location
-    branch of the rewrites, for both on-disk formats.
-
-    Locally the fragment-file scan resolved against the manifest schema
-    (``reader.read_fragment_files``): a Spark parquet scan with ``where``
-    pushed into it and the file taken from ``input_file_name()`` —
-    cheaper than the datasource's per-row file column — or, for a binary
-    Lance manifest, the decoder's one-task-per-file scan, masking
-    deletion vectors. On an object store the datasource, with
-    ``read.file-column`` when a file subset or ``file_col`` asks for it:
-    its EqualTo/In on the file column prunes partitions, so a fragment
-    subset is a partition-pruned rescan."""
-    import pyspark.sql.functions as F
-
-    from .fs import absolute, is_remote
+    ``manifest``) at ``manifest``'s version, filtered by ``where``, with
+    ``file_col`` naming each row's root-relative fragment file when asked
+    — the scan of every rewrite, for both locations and both on-disk
+    formats (``reader.read_fragment_files`` holds the location branch)."""
+    from .fs import absolute
     from .reader import read_fragment_files
 
-    if is_remote(path):
-        attributed = files is not None or file_col is not None
-        df = _remote_reader(spark, path, s3, file_col="__frag" if attributed else None)
-        if files is not None:
-            df = df.filter(F.col("__frag").isin(*sorted(files)))
-        if where is not None:
-            df = df.filter(where)
-        return (df.withColumnRenamed("__frag", file_col) if file_col
-                else df.drop("__frag"))
     rel = ([f.file for f in manifest.fragments] if files is None
            else sorted(files))
     # absolute: the JVM resolves a relative path against its own cwd
     root = absolute(path)
     return read_fragment_files(spark, manifest,
                                [os.path.join(root, f) for f in rel],
-                               where=where, file_col=file_col)
+                               where=where, file_col=file_col, s3=s3)
 
 
 def _rewrite_commit(path: str, storage, manifest, affected, new_src,

@@ -1,9 +1,25 @@
 """Dataset reader — the engine's analog of the reference scan surface
 (ref LanceSource.java:147-283, LanceInputFormat.java:100-198).
 
-``read_dataset(spark, path, ...)`` returns a DataFrame with the
-reference's pushdown surface applied: column pruning (§2.2), filter
-forwarding (§2.3), limit (§2.4), version pinning (MVCC read).
+``read_dataset(spark, path, ...)`` is the one read entry. It returns a
+DataFrame with the reference's pushdown surface applied: column pruning
+(§2.2), filter forwarding (§2.3), limit (§2.4), version pinning (MVCC
+read). It reads the manifest once (an s3:// path takes its credentials
+from ``options.s3``) and hands the fragment files to
+``read_fragment_files``, which holds the only read-side location branch:
+
+- a local parquet-fragment dataset takes Spark's JVM parquet scan;
+- a binary Lance dataset, local or s3, takes the decoder scan
+  (``read_native_files``: one task per file, columns pruned inside the
+  decoder);
+- a parquet-fragment dataset on s3 takes the ``format("lance")``
+  datasource, because Spark has no s3 filesystem here.
+
+Every Python-side fragment read (the datasource's scan and count, the
+streaming source, the decoder scan) goes through one per-file reader,
+``read_file(store, file, target, ...)``: it opens the file through the
+storage seam's ``store.open`` (sources/fs.py), and the decoder, parquet
+or Lance, is its only variable.
 
 Execution model — deliberately NOT the reference's:
 
@@ -23,11 +39,16 @@ Execution model — deliberately NOT the reference's:
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING, Iterator
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..options import DatasetOptions
 from . import fragments as FR
+
+if TYPE_CHECKING:  # pragma: no cover
+    import pyarrow as pa
 
 
 def read_dataset(
@@ -42,7 +63,19 @@ def read_dataset(
     opts = options or DatasetOptions(path=path)
     if FR.HAVE_LANCE:  # native path (exercised via the fake lance in tests)
         return _read_lance(spark, path, columns, filter, limit, version, opts)
-    return _read_local(spark, path, columns, filter, limit, version, opts)
+    manifest = FR.read_manifest_compat(
+        path, version, opts.s3.to_storage_options() if opts.s3 else None)
+    files = FR.fragment_paths(path, manifest)
+    if not files and "schema" not in manifest.meta:
+        raise FileNotFoundError(f"dataset {path} (v{manifest.version}) has no fragments")
+    # the decoder prunes columns itself; a filter may reference columns
+    # outside the projection, so then it decodes everything and the
+    # projection applies after the filter
+    cols = columns or opts.read_columns or None
+    filtered = filter is not None or bool(opts.read_filter)
+    df = read_fragment_files(spark, manifest, files,
+                             columns=None if filtered else cols, s3=opts.s3)
+    return _apply_pushdowns(df, columns, filter, limit, opts)
 
 
 def _apply_pushdowns(df: DataFrame, columns, filter, limit, opts: DatasetOptions) -> DataFrame:
@@ -63,53 +96,58 @@ def _apply_pushdowns(df: DataFrame, columns, filter, limit, opts: DatasetOptions
 
 def read_fragment_files(spark, manifest: "FR.Manifest", files: list[str],
                         deletion_source: "FR.Manifest | None" = None,
-                        where=None, file_col: "str | None" = None) -> DataFrame:
-    """Scan explicit fragment files RESOLVED AGAINST the manifest schema,
-    filtered by ``where``, with ``file_col`` naming each row's
-    root-relative fragment file (``data/<name>``: the path's last two
-    segments) when asked.
+                        where=None, file_col: "str | None" = None,
+                        columns: "list[str] | None" = None,
+                        s3=None) -> DataFrame:
+    """Scan explicit fragment files (absolute paths or s3 urls) RESOLVED
+    AGAINST the manifest schema, filtered by ``where``, with ``file_col``
+    naming each row's root-relative fragment file (``data/<name>``) when
+    asked. ``s3`` (an ``options.S3Options``) carries the credentials of
+    an s3:// dataset. The only read-side location branch:
 
-    Every internal scan (reads, maintenance rewrites) must go through
-    this: after schema evolution, fragments are heterogeneous, and a raw
-    ``spark.read.parquet(files)`` samples ONE file's schema — silently
-    dropping the newer columns from every other fragment (data loss if
-    the scan feeds a rewrite). With the recorded schema, fragments
-    resolve by name and pre-evolution files null-fill. One manifest read;
-    no mergeSchema footer sweep over the file listing at plan time (the
-    O(files) cost that kills planning at 100 TB). ``where`` is pushed
-    into the parquet scan; the file comes from ``input_file_name()``,
-    taken after the filter (a nondeterministic projection below it would
-    stop the pushdown) and at the scan (it is '' once a shuffle has moved
-    the row off its input split).
+    - a local parquet-fragment manifest takes Spark's JVM parquet scan
+      under the recorded schema: after schema evolution fragments are
+      heterogeneous, and a raw ``spark.read.parquet(files)`` samples ONE
+      file's schema — silently dropping the newer columns from every
+      other fragment. With the recorded schema, fragments resolve by
+      name and pre-evolution files null-fill, with no mergeSchema footer
+      sweep at plan time. ``where`` is pushed into the parquet scan; the
+      file comes from ``input_file_name()``, taken after the filter (a
+      nondeterministic projection below it would stop the pushdown) and
+      at the scan (it is '' once a shuffle has moved the row off its
+      input split);
+    - a binary Lance manifest (FR.read_manifest_compat), local or s3,
+      takes the decoder scan (``read_native_files``), ``columns`` pruned
+      inside the decoder and the file taken from the decoder's own file
+      column. Deletion-vector tombstones mask per the fragments of
+      ``deletion_source`` (default: ``manifest``) — a CDC pre-image read
+      of files REMOVED since ``from_version`` must mask with the FROM
+      version's vectors, which the to-version manifest no longer
+      carries;
+    - a parquet-fragment manifest on s3 takes the ``format("lance")``
+      datasource pinned to ``manifest.version``: a file subset becomes
+      ``read.file-column`` plus an ``isin`` on it, which prunes
+      partitions at planning time."""
+    from .fs import is_remote
 
-    A native-adapted manifest (FR.read_manifest_compat over a binary
-    Lance dataset) routes its ``.lance`` files through the pure decoder
-    — same one-task-per-file shape, the file taken from the decoder's
-    own file column. Deletion-vector tombstones mask per the fragments
-    of ``deletion_source`` (default: ``manifest``) — a CDC pre-image read
-    of files REMOVED since ``from_version`` must mask with the FROM
-    version's vectors, which the to-version manifest no longer carries."""
     if manifest.meta.get("native_lance"):
         from . import lance_format as LF
 
-        deletions = {}
-        for fr in (deletion_source or manifest).fragments:
-            if not fr.deletion:
-                continue
-            for f in files:
-                if f.endswith("/" + fr.file):
-                    root = f[: -len("/" + fr.file)]
-                    deletions[f] = LF._deletion_path(root, LF.NativeFragmentInfo(
-                        fr.fragment_id, fr.file, fr.row_count,
-                        deletion=fr.deletion))
+        deletions = {f: deletion_file(f[: -len(fr.file) - 1], fr)
+                     for fr in (deletion_source or manifest).fragments
+                     if fr.deletion
+                     for f in files if f.endswith("/" + fr.file)}
         if files:
             df = read_native_files(spark, manifest.meta["native_fields"], files,
-                                   file_col=file_col, deletions=deletions)
+                                   columns, file_col=file_col,
+                                   deletions=deletions,
+                                   storage_options=(s3.to_storage_options()
+                                                    if s3 is not None else None))
         else:  # an empty table (a DELETE left no rows)
             from ..types import arrow_schema_to_spark
 
             df = spark.createDataFrame([], arrow_schema_to_spark(
-                LF.arrow_schema_of(manifest.meta["native_fields"])))
+                LF.arrow_schema_of(manifest.meta["native_fields"], columns)))
             if file_col:
                 df = df.withColumn(file_col, F.lit(None).cast("string"))
         if where is not None:
@@ -117,69 +155,136 @@ def read_fragment_files(spark, manifest: "FR.Manifest", files: list[str],
         if file_col:  # the decoder's file column holds the full path
             df = df.withColumn(file_col,
                                F.substring_index(F.col(file_col), "/", -2))
-    else:
-        schema_json = manifest.meta.get("schema")
-        if schema_json:
-            import json
+        return df
+    if files and is_remote(files[0]):
+        from .datasource import register_lance_datasource
 
-            from pyspark.sql.types import StructType
-
-            st = StructType.fromJson(json.loads(schema_json))
-            df = (spark.read.schema(st).parquet(*files) if files
-                  # an empty table (a write or DELETE left no rows)
-                  else spark.createDataFrame([], st))
-        else:
-            df = spark.read.parquet(*files)
+        register_lance_datasource(spark)
+        first = next(fr.file for fr in manifest.fragments
+                     if files[0].endswith("/" + fr.file))
+        root = files[0][: -len(first) - 1]
+        rel = sorted(f[len(root) + 1:] for f in files)
+        subset = rel != sorted(fr.file for fr in manifest.fragments)
+        r = (spark.read.format("lance")
+             .option("version", str(manifest.version)))
+        if s3 is not None:
+            r = r.options(**s3.to_option_map())
+        if subset or file_col:
+            r = r.option("read.file-column", "__frag")
+        df = r.load(root)
+        if subset:
+            df = df.filter(F.col("__frag").isin(*rel))
         if where is not None:
             df = df.filter(where)
-        if file_col:
-            df = df.withColumn(file_col,
-                               F.substring_index(F.input_file_name(), "/", -2))
+        return (df.withColumnRenamed("__frag", file_col) if file_col
+                else df.drop("__frag"))
+    schema_json = manifest.meta.get("schema")
+    if schema_json:
+        import json
+
+        from pyspark.sql.types import StructType
+
+        st = StructType.fromJson(json.loads(schema_json))
+        df = (spark.read.schema(st).parquet(*files) if files
+              # an empty table (a write or DELETE left no rows)
+              else spark.createDataFrame([], st))
+    else:
+        df = spark.read.parquet(*files)
+    if where is not None:
+        df = df.filter(where)
+    if file_col:
+        df = df.withColumn(file_col,
+                           F.substring_index(F.input_file_name(), "/", -2))
     return df
 
 
-def _read_local(spark, path, columns, filter, limit, version, opts) -> DataFrame:
-    try:
-        manifest = FR.read_manifest(path, version)
-    except FR.LanceUnavailableError:
-        # binary N.manifest (a real Lance dataset, e.g. the reference's
-        # committed fixtures) and no native lib: the pure-Python v2
-        # decoder (sources/lance_format.py) serves the read instead
-        return _read_native_pure(spark, path, columns, filter, limit, version, opts)
-    files = FR.fragment_paths(path, manifest)
-    if not files and "schema" not in manifest.meta:
-        raise FileNotFoundError(f"dataset {path} (v{manifest.version}) has no fragments")
-    df = read_fragment_files(spark, manifest, files)
-    return _apply_pushdowns(df, columns, filter, limit, opts)
-
-
-def _read_native_pure(spark, path, columns, filter, limit, version, opts) -> DataFrame:
-    """Native Lance v2 dataset WITHOUT the lance package: same execution
-    model as ``_read_lance`` (one fragment file == one mapInArrow task;
-    driver touches only the manifest), but each task decodes its
-    fragment with the stdlib-only reader in sources/lance_format.py.
-    Column pruning happens inside the decoder (unselected columns'
-    buffers are never read); filters/limits apply engine-side on the
-    decoded batches, mirroring the reference's post-scan filter chain
-    (ref LanceSource.java:156-170 degrades to one subtask there — here
-    fragments stay parallel)."""
+def deletion_file(root: str, f: "FR.FragmentInfo") -> "str | None":
+    """The deletion-vector file of fragment ``f`` of the dataset at
+    ``root``, None when it has none."""
+    if not f.deletion:
+        return None
     from . import lance_format as LF
 
-    mf = LF.read_native_manifest(path, version)
-    cols = columns or opts.read_columns or None
-    if cols is not None and (filter is not None or opts.read_filter):
-        # the filter may reference columns outside the projection (the
-        # parquet route scans full-schema and selects AFTER filtering) —
-        # decode everything and let _apply_pushdowns project post-filter
-        decode_cols, select_cols = None, cols
-    else:
-        decode_cols, select_cols = cols, None
-    files = [f"{str(path).rstrip('/')}/{LF.DATA_DIR}/{fr.file}" for fr in mf.fragments]
-    if not files:
-        raise FileNotFoundError(f"dataset {path} (v{mf.version}) has no fragments")
-    df = read_native_files(spark, mf.fields, files, decode_cols,
-                           deletions=LF.native_deletion_paths(path, mf))
-    return _apply_pushdowns(df, select_cols, filter, limit, opts)
+    return LF._deletion_path(root, f)  # keyed by fragment id + descriptor
+
+
+def arrow_target(schema) -> "pa.Schema":
+    """The Arrow schema a Python read hands Spark for a Spark schema.
+    Per type, blind to field metadata: a declared vector dimension does
+    NOT re-materialize FixedSizeList, because Spark's Arrow bridge only
+    ingests plain lists (the dimension stays recorded in the schema
+    metadata and the manifest)."""
+    import pyarrow as pa
+
+    from ..types import spark_type_to_arrow
+
+    return pa.schema([pa.field(f.name, spark_type_to_arrow(f.dataType))
+                      for f in schema])
+
+
+def read_file(store, file: str, target: "pa.Schema", pushed=(),
+              deletion: "str | None" = None,
+              batch_size: int = 10_000) -> "Iterator[pa.RecordBatch]":
+    """The rows of one fragment file, as Arrow batches aligned BY NAME to
+    ``target``: columns a (pre-evolution) file predates null-fill,
+    columns it carries beyond ``target`` (dropped ones) are never read,
+    types cast. The file opens through ``store.open``, local or s3; the
+    decoder is the only variable:
+
+    - parquet: the footer's per-row-group stats are tested against
+      ``pushed`` (typed datasource filters — the conservative zone-map
+      predicate, ``_row_group_may_match``) and only the surviving row
+      groups are read, projected to the target columns the file holds:
+      a point filter costs O(matching row groups), not O(file);
+    - Lance (``.lance``): the stdlib decoder reads only the target
+      columns' buffers, then ``deletion`` (the fragment's deletion-vector
+      file) masks tombstoned rows by physical offset.
+
+    ``pushed`` then filters every aligned batch exactly, so a filter on
+    a column the file predates sees nulls: IS NULL passes every row and
+    every other pushed shape passes none. ``batch_size`` bounds the rows
+    of a batch (the default is Spark's own Arrow batch size)."""
+    import pyarrow as pa
+
+    from .datasource import _align_batch, _filter_to_arrow, _row_group_may_match
+
+    expr = None
+    for f in pushed:
+        e = _filter_to_arrow(f)
+        expr = e if expr is None else (expr & e)
+    with store.open(file, "rb") as fh:
+        if file.endswith(".lance"):
+            from . import lance_format as LF
+
+            fields, n_rows = LF.file_descriptor(fh, file)
+            have = {f.name for f in fields if f.parent == -1}
+            present = [n for n in target.names if n in have]
+            # no target column in the file: only its row count matters
+            tbl = (LF.decode_native_file(fh, file, present) if present
+                   else pa.table({"": pa.nulls(n_rows)}))
+            if deletion is not None:
+                with store.open(deletion, "rb") as dh:
+                    tbl = LF.apply_deletion_mask(
+                        tbl, LF.deletion_offsets(dh.read(), deletion))
+            batches = tbl.to_batches(max_chunksize=batch_size)
+        else:
+            import pyarrow.parquet as papq
+
+            pf = papq.ParquetFile(fh)
+            have = set(pf.schema_arrow.names)
+            groups = [i for i in range(pf.metadata.num_row_groups)
+                      if _row_group_may_match(pf.metadata.row_group(i), pushed)]
+            batches = (pf.iter_batches(
+                batch_size=batch_size, row_groups=groups,
+                columns=[n for n in target.names if n in have])
+                if groups else ())
+        for batch in batches:
+            if batch.schema != target:
+                batch = _align_batch(batch, target)
+            if expr is None:
+                yield batch
+            else:
+                yield from pa.Table.from_batches([batch]).filter(expr).to_batches()
 
 
 def read_native_files(spark, fields, files: "list[str]",
@@ -188,80 +293,63 @@ def read_native_files(spark, fields, files: "list[str]",
                       deletions: "dict[str, str] | None" = None,
                       pos_col: "str | None" = None,
                       storage_options: "dict | None" = None) -> DataFrame:
-    """Fragment-subset scan of native v2 files (full absolute paths) —
-    the core of ``_read_native_pure``, exposed for maintenance rewrites
-    that touch only SOME fragments (compaction of runts, copy-on-write
-    DELETE/MERGE). One file == one mapInArrow task; pruning stays inside
-    the decoder. ``file_col`` appends the source file path to every row
-    (the native twin of ``input_file_name()`` — the affected-fragment
+    """Fragment-subset scan of native v2 files (full absolute paths or s3
+    urls) — the decoder scan of ``read_fragment_files``, exposed for the
+    maintenance passes that need physical offsets. One file == one
+    mapInArrow task, each file read by ``read_file`` with the decoder's
+    column pruning. ``file_col`` appends the source file path to every
+    row (the native twin of ``input_file_name()`` — the affected-fragment
     probe the copy-on-write rewrites key on). ``deletions`` maps data
     file -> deletion-vector file (lance_format.native_deletion_paths):
     each task masks its own fragment's tombstones right after decode —
     the driver never reads a deletion file. ``pos_col`` appends each
     row's PHYSICAL offset within its file (assigned before the deletion
     mask — the handle a deletion-vector DELETE tombstones by)."""
-    from ..types import arrow_schema_to_spark, spark_type_to_arrow
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from ..types import arrow_schema_to_spark
     from . import lance_format as LF
 
-    arrow_schema = LF.arrow_schema_of(fields, columns)
-    spark_schema = arrow_schema_to_spark(arrow_schema)
-    extra_fields = []
-    if pos_col is not None:
-        from pyspark.sql.types import LongType, StructField
-
-        extra_fields.append(StructField(pos_col, LongType()))
-    if file_col is not None:
-        from pyspark.sql.types import StringType, StructField
-
-        extra_fields.append(StructField(file_col, StringType()))
-    if extra_fields:
-        from pyspark.sql.types import StructType
-
-        spark_schema = StructType(list(spark_schema.fields) + extra_fields)
+    spark_schema = arrow_schema_to_spark(LF.arrow_schema_of(fields, columns))
+    # alignment is by NAME against each file's own descriptor, so a
+    # mixed-schema fragment set (metadata drop_columns, evolving appends)
+    # reads uniformly: predating files null-fill, dropped columns are
+    # never requested
+    target = arrow_target(spark_schema)
+    extra = ([StructField(pos_col, LongType())] if pos_col else []) + (
+        [StructField(file_col, StringType())] if file_col else [])
+    spark_schema = StructType(list(spark_schema.fields) + extra)
     deletions = dict(deletions or {})
 
     def scan(iterator):
         import pyarrow as pa
 
         from flink_connector_lance_spark.sources import lance_format as _LF
+        from flink_connector_lance_spark.sources.fs import store_for
+        from flink_connector_lance_spark.sources.reader import read_file
 
-        # Spark's Arrow bridge expects µs timestamps etc. — align each
-        # decoded file to the exact types the declared schema implies.
-        # Alignment is by NAME against the file's own descriptor, so a
-        # mixed-schema fragment set (metadata drop_columns, evolving
-        # appends) reads uniformly: predating files null-fill, dropped
-        # columns are never requested.
-        target = pa.schema([
-            pa.field(f.name, spark_type_to_arrow(f.dataType))
-            for f in spark_schema if f.name not in (file_col, pos_col)
-        ])
         for batch in iterator:
             for i in batch.column("id").to_pylist():
                 fpath = files[i]
-                ffields, fn_rows = _LF.read_file_descriptor(fpath,
-                                                            storage_options)
-                avail = {f.name for f in ffields if f.parent == -1}
-                present = [n for n in target.names if n in avail]
-                if present:
-                    tbl = _LF.align_decoded_table(
-                        _LF.read_native_file(fpath, columns=present,
-                                             storage_options=storage_options),
-                        target)
-                else:
-                    tbl = pa.Table.from_arrays(
-                        [pa.nulls(fn_rows, f.type) for f in target],
-                        schema=target)
-                if pos_col is not None:  # physical offsets: BEFORE the mask
+                store = store_for(fpath, storage_options)
+                if pos_col is None:
+                    out = read_file(store, fpath, target,
+                                    deletion=deletions.get(fpath))
+                else:  # physical offsets: taken BEFORE the deletion mask
+                    tbl = pa.Table.from_batches(
+                        list(read_file(store, fpath, target)), target)
                     tbl = tbl.append_column(
                         pos_col, pa.array(range(tbl.num_rows), pa.int64()))
-                if fpath in deletions:
-                    tbl = _LF.apply_deletion_mask(
-                        tbl, _LF.read_deletion_offsets_at(deletions[fpath],
-                                                          storage_options))
-                if file_col is not None:
-                    tbl = tbl.append_column(
-                        file_col, pa.array([fpath] * tbl.num_rows, pa.string()))
-                yield from tbl.to_batches()
+                    if fpath in deletions:
+                        tbl = _LF.apply_deletion_mask(
+                            tbl, _LF.read_deletion_offsets_at(
+                                deletions[fpath], storage_options))
+                    out = tbl.to_batches()
+                for b in out:
+                    if file_col is not None:
+                        b = b.append_column(
+                            file_col, pa.array([fpath] * b.num_rows, pa.string()))
+                    yield b
 
     # partition i holds the one id i: one task per file, in list order,
     # with no shuffle
@@ -312,9 +400,4 @@ def count_rows(path: str, version: int | None = None) -> int:
         import lance
 
         return lance.dataset(path, version=version).count_rows()
-    try:
-        return FR.read_manifest(path, version).row_count
-    except FR.LanceUnavailableError:
-        from . import lance_format as LF
-
-        return LF.native_count_rows(path, version)
+    return FR.read_manifest_compat(path, version).row_count

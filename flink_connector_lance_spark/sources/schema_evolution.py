@@ -34,7 +34,7 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from . import fragments as FR
 
@@ -159,8 +159,14 @@ def align_check_for_commit(path: str, incoming: StructType,
             f"(new columns: {added or 'none'}, missing columns: {missing or 'none'}); "
             "set write.schema-evolution=true to evolve"
         )
-    evolved = StructType(list(current.fields) + [inc[n] for n in added])
+    evolved = StructType(list(current.fields) + [nullable(inc[n]) for n in added])
     return {"schema": evolved.json()}
+
+
+def nullable(f: StructField) -> StructField:
+    """``f`` declared nullable: an added column reads as null in every
+    fragment that predates it, whatever the batch that added it said."""
+    return StructField(f.name, f.dataType, True, f.metadata)
 
 
 def drop_columns(path: str, cols: list[str],

@@ -110,14 +110,19 @@ def write_dataset(
     # append-time schema contract: align the batch to the table schema
     # (reorder / refuse / evolve per write.schema-evolution) BEFORE any
     # fragment is produced, so fragment files never carry a surprise shape
+    schema = df.schema
     if mode is WriteMode.APPEND and FR.latest_version(path, storage) is not None:
-        from .schema_evolution import align_for_append, dataset_schema
+        from pyspark.sql.types import StructType
+
+        from .schema_evolution import align_for_append, dataset_schema, nullable
 
         m = FR.read_manifest(path, storage_options=storage)
-        df = align_for_append(df, dataset_schema(path, manifest=m,
-                                                 storage_options=storage),
-                              opts.schema_evolution,
+        current = dataset_schema(path, manifest=m, storage_options=storage)
+        df = align_for_append(df, current, opts.schema_evolution,
                               dropped=list(m.meta.get("dropped_columns", [])))
+        # an evolving append's new columns are null in every older fragment
+        schema = StructType([f if f.name in current.names else nullable(f)
+                             for f in df.schema])
     new_fragments = write_fragments(df, path, storage,
                                     opts.write_max_rows_per_file,
                                     opts.bloom_columns)
@@ -125,7 +130,7 @@ def write_dataset(
     # maintenance commits inherit it (FR.commit), so it is the
     # authoritative table schema until the next evolving write
     meta = dict(commit_meta or {})
-    meta.setdefault("schema", df.schema.json())
+    meta.setdefault("schema", schema.json())
     if mode is WriteMode.OVERWRITE:
         # a full overwrite replaces EVERY fragment, so no stale bytes
         # survive: clear the column-resurrection guard (maintenance

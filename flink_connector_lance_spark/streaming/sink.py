@@ -185,7 +185,7 @@ def commit_epoch_dedup_append(batch_df: DataFrame, epoch_id: int, path: str,
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from ..sources.fs import is_remote
+    from ..sources.reader import read_dataset
 
     storage = s3.to_storage_options() if s3 is not None else None
     if epoch_committed(path, epoch_id, storage):
@@ -194,14 +194,8 @@ def commit_epoch_dedup_append(batch_df: DataFrame, epoch_id: int, path: str,
     b = (batch_df.withColumn("__rn", F.row_number().over(w))
          .filter(F.col("__rn") == 1).drop("__rn"))
     if FR.is_dataset(path, storage):
-        if is_remote(path):
-            from ..sources.maintenance import _remote_reader
-
-            existing = _remote_reader(b.sparkSession, path, s3).select(key)
-        else:
-            from ..sources.reader import read_dataset
-
-            existing = read_dataset(path=path, spark=b.sparkSession).select(key)
+        existing = read_dataset(b.sparkSession, path, columns=[key],
+                                options=DatasetOptions(path=path, s3=s3))
         b = b.join(existing, on=key, how="left_anti")
     manifest = write_dataset(b, path, mode=WriteMode.APPEND,
                              options=DatasetOptions(path=path, s3=s3),

@@ -50,8 +50,10 @@ def arrow_type_to_spark(t: pa.DataType) -> st.DataType:
         return st.DateType()
     if pa.types.is_timestamp(t):
         # Spark timestamps are µs-precision; s/ms/µs/ns all map here
-        # (ns truncates — ref RowDataConverter.java:215-235 precision hops)
-        return st.TimestampType()
+        # (ns truncates — ref RowDataConverter.java:215-235 precision
+        # hops). Parquet's isAdjustedToUTC decides the type: an instant
+        # (tz-aware) is TIMESTAMP, a wall-clock (tz-naive) TIMESTAMP_NTZ
+        return st.TimestampType() if t.tz else st.TimestampNTZType()
     if pa.types.is_fixed_size_list(t):
         # the vector type (ref LanceTypeConverter.java:162-170)
         return st.ArrayType(arrow_type_to_spark(t.value_type))
@@ -104,7 +106,9 @@ def spark_type_to_arrow(t: st.DataType) -> pa.DataType:
     if isinstance(t, st.DateType):
         return pa.date32()
     if isinstance(t, st.TimestampType):
-        return pa.timestamp("us")
+        # an instant: tz-aware µs, the Arrow type Spark's bridge reads
+        # as TIMESTAMP
+        return pa.timestamp("us", tz="UTC")
     if isinstance(t, st.TimestampNTZType):
         # tz-naive µs: the Arrow type Spark's bridge reads as TIMESTAMP_NTZ
         return pa.timestamp("us")

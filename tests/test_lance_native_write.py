@@ -1065,3 +1065,39 @@ def test_write_native_pure_miniblock_layout(spark, tmp_path):
     # survivors and untouched mini-block fragments read uniformly
     delete_rows(spark, path, "id < 100")
     assert spark.read.format("lance").load(path).count() == 600
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp_ntz", "timestamp"])
+def test_native_timestamp_type_survives_append_of_its_own_frame(
+        spark, tmp_path, ts_type):
+    """A binary Lance dataset takes an append of the very frame that
+    created it: a TIMESTAMP_NTZ column is stored tz-naive and reads back
+    as TIMESTAMP_NTZ, a TIMESTAMP column is stored tz-aware and reads
+    back as TIMESTAMP (Parquet's isAdjustedToUTC rule), so the append's
+    schema check sees the same types on both sides."""
+    from flink_connector_lance_spark.sources.datasource import (
+        register_lance_datasource,
+    )
+    from flink_connector_lance_spark.sources.reader import read_dataset
+    from flink_connector_lance_spark.sources.writer import (
+        write_dataset,
+        write_native_pure,
+    )
+
+    path = str(tmp_path / "ts")
+    df = spark.createDataFrame(
+        [(i, datetime.datetime(2024, 1, 1) + datetime.timedelta(hours=7 * i))
+         for i in range(6)], f"id long, ts {ts_type}")
+    write_native_pure(df.coalesce(1), path, mode="overwrite")
+    first = read_dataset(spark, path)
+    assert dict(first.dtypes)["ts"] == ts_type
+    assert sorted(first.collect()) == sorted(df.collect())
+
+    write_dataset(df, path, "append")
+    again = read_dataset(spark, path)
+    assert dict(again.dtypes)["ts"] == ts_type
+    assert sorted(again.collect()) == sorted(df.collect() * 2)
+    register_lance_datasource(spark)
+    fmt = spark.read.format("lance").load(path)
+    assert dict(fmt.dtypes)["ts"] == ts_type
+    assert sorted(fmt.collect()) == sorted(again.collect())

@@ -117,7 +117,10 @@ class TestTypeBridge:
             (pa.float32(), st.FloatType()), (pa.float64(), st.DoubleType()),
             (pa.string(), st.StringType()), (pa.bool_(), st.BooleanType()),
             (pa.binary(), st.BinaryType()), (pa.date32(), st.DateType()),
-            (pa.timestamp("ns"), st.TimestampType()),
+            # Parquet's isAdjustedToUTC: an instant is TIMESTAMP, a
+            # wall-clock TIMESTAMP_NTZ
+            (pa.timestamp("ns", tz="UTC"), st.TimestampType()),
+            (pa.timestamp("ns"), st.TimestampNTZType()),
             (pa.list_(pa.float32()), st.ArrayType(st.FloatType())),
             (pa.list_(pa.float32(), 8), st.ArrayType(st.FloatType())),
         ]

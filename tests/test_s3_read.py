@@ -243,28 +243,32 @@ def test_fsspec_without_s3fs_degrades_clearly(monkeypatch):
         get_fs("s3://bucket/x")
 
 
-def test_remote_read_prunes_row_groups_and_projects(fake_s3, spark, monkeypatch):
-    """A pushed point filter on a remote fragment reads only the row
-    groups whose footer stats may match, projected to the read schema's
-    columns — O(matching groups) wire cost, not O(file)."""
+@pytest.mark.parametrize("where", ["local", "s3"])
+def test_read_file_prunes_row_groups_and_projects(fake_s3, spark, monkeypatch,
+                                                  where):
+    """A pushed point filter on a parquet fragment reads only the row
+    groups whose footer stats may match, projected to the target's
+    columns — O(matching groups) wire cost, not O(file) — through the one
+    per-file reader, on the local store and on an object store alike."""
     import pyarrow as pa
-    import pyarrow.dataset as pads
     import pyarrow.parquet as papq
     from pyspark.sql.datasource import EqualTo
-    from pyspark.sql.types import LongType, StructField, StructType
 
-    from flink_connector_lance_spark.sources.datasource import LanceDataSourceReader
+    from flink_connector_lance_spark.sources.fs import store_for
+    from flink_connector_lance_spark.sources.reader import read_file
 
     local = os.path.join(fake_s3, "bucket", "rg.parquet")
     os.makedirs(os.path.dirname(local), exist_ok=True)
     papq.write_table(
         pa.table({"id": list(range(100)), "g": [i % 4 for i in range(100)]}),
         local, row_group_size=10)
-    url = "s3://bucket/rg.parquet"
-    r = LanceDataSourceReader(
-        {"path": "s3://bucket/x", "s3-endpoint": f"fake://{fake_s3}"},
-        schema=StructType([StructField("id", LongType())]))
-    r._pushed = [EqualTo(("id",), 55)]
+    if where == "s3":
+        file = "s3://bucket/rg.parquet"
+        store = store_for(file, S3Options(
+            endpoint=f"fake://{fake_s3}").to_storage_options())
+    else:
+        file, store = local, store_for(local)
+    target = pa.schema([("id", pa.int64())])
 
     seen = []
     orig = papq.ParquetFile.iter_batches
@@ -274,15 +278,132 @@ def test_remote_read_prunes_row_groups_and_projects(fake_s3, spark, monkeypatch)
         return orig(self, *a, **kw)
 
     monkeypatch.setattr(papq.ParquetFile, "iter_batches", spy)
-    batches = list(r._read_one_remote(url, pads.field("id") == 55))
+    batches = list(read_file(store, file, target, [EqualTo(("id",), 55)]))
     assert sum(b.num_rows for b in batches) == 1
+    assert all(b.schema == target for b in batches)
     assert seen == [([5], ["id"])], seen  # 10 groups of 10: only group 5 read
 
     # filter outside every group's range: footer-only read, zero batches
     seen.clear()
-    r._pushed = [EqualTo(("id",), 10_000)]
-    assert list(r._read_one_remote(url, pads.field("id") == 10_000)) == []
+    assert list(read_file(store, file, target,
+                          [EqualTo(("id",), 10_000)])) == []
     assert seen == []
+
+
+def _both_formats_dataset(spark, local, fmt):
+    """v1: 40 rows (id, g) in 2 fragments; v2: an evolving append of 10
+    rows that adds tag = concat('T', id) (NOT NULL in the batch); native
+    v3: a deletion-vector DELETE of id % 10 = 3. Returns the versions."""
+    from flink_connector_lance_spark.options import DatasetOptions
+    from flink_connector_lance_spark.sources.maintenance import delete_rows
+    from flink_connector_lance_spark.sources.writer import write_native_pure
+
+    write = write_native_pure if fmt == "native" else write_dataset
+    base = spark.range(40).selectExpr("id", "id % 4 AS g")
+    v1 = write(base.repartition(2), local, mode="overwrite").version
+    added = spark.range(40, 50).selectExpr("id", "id % 4 AS g",
+                                           "concat('T', id) AS tag")
+    v2 = write(added.coalesce(1), local, mode="append",
+               options=DatasetOptions(path=local, schema_evolution=True)).version
+    if fmt == "native":
+        delete_rows(spark, local, "id % 10 = 3", use_deletion_vectors=True)
+    return v1, v2
+
+
+@pytest.mark.parametrize("fmt", ["emulated", "native"])
+def test_read_dataset_local_and_s3_agree(fake_s3, spark, fmt):
+    """One read entry for both locations: the same dataset read through
+    ``read_dataset`` from its local path and from s3 returns the same
+    rows — latest and pinned versions, columns + filter, pre-evolution
+    null-fill, deletion-vector masking — and the file-attributed scan of
+    the rewrites counts the same rows per fragment."""
+    from flink_connector_lance_spark.options import DatasetOptions
+    from flink_connector_lance_spark.sources.maintenance import _file_scan
+    from flink_connector_lance_spark.sources.reader import read_dataset
+
+    local = os.path.join(fake_s3, "bucket", "wh", "parity")
+    url = "s3://bucket/wh/parity"
+    s3 = S3Options(endpoint=f"fake://{fake_s3}")
+    v1, v2 = _both_formats_dataset(spark, local, fmt)
+
+    def both(**kw):
+        a = read_dataset(spark, local, **kw)
+        b = read_dataset(spark, url, options=DatasetOptions(path=url, s3=s3), **kw)
+        assert a.columns == b.columns
+        got = sorted(a.collect()), sorted(b.collect())
+        assert got[0] == got[1]
+        return got[0]
+
+    deleted = {3, 13, 23, 33, 43} if fmt == "native" else set()
+    live = [i for i in range(50) if i not in deleted]
+    rows = both()
+    assert [r.id for r in rows] == live
+    pre_evolution = [i for i in live if i < 40]
+    assert [r.id for r in rows if r.tag is None] == pre_evolution
+    assert [r.id for r in both(columns=["id"], filter="g = 1 AND id < 20")] \
+        == [i for i in range(1, 20, 4) if i not in deleted]
+    assert len(both(filter="tag IS NULL", columns=["g"])) == len(pre_evolution)
+    assert len(both(version=v1)) == 40
+    assert {r.tag for r in both(version=v2) if r.tag} == {
+        f"T{i}" for i in range(40, 50)}
+
+    m = FR.read_manifest_compat(local)
+    per_local = sorted(tuple(r) for r in _file_scan(
+        spark, local, m, file_col="__frag").groupBy("__frag").count().collect())
+    per_s3 = sorted(tuple(r) for r in _file_scan(
+        spark, url, m, s3, file_col="__frag").groupBy("__frag").count().collect())
+    assert per_local == per_s3 and sum(c for _, c in per_local) == len(live)
+
+
+@pytest.mark.parametrize("where", ["local", "s3"])
+def test_datasource_is_null_on_evolved_column(fake_s3, spark, where):
+    """``IS NULL`` on a column an evolving append added counts the
+    pre-evolution rows: the datasource declares data columns nullable
+    (the append recorded the added column NOT NULL from its batch), so
+    Catalyst cannot fold the predicate to an empty scan."""
+    from flink_connector_lance_spark.options import DatasetOptions
+    from flink_connector_lance_spark.sources.reader import read_dataset
+
+    local = os.path.join(fake_s3, "bucket", "wh", "evolved")
+    write_dataset(spark.range(20).selectExpr("id", "id % 4 AS g").repartition(2),
+                  local, mode="overwrite")
+    write_dataset(spark.range(20, 30).selectExpr("id", "id % 4 AS g",
+                                                 "concat('T', id) AS tag"),
+                  local, mode="append",
+                  options=DatasetOptions(path=local, schema_evolution=True))
+    register_lance_datasource(spark)
+    s3 = S3Options(endpoint=f"fake://{fake_s3}")
+    path = local if where == "local" else "s3://bucket/wh/evolved"
+
+    def rd():
+        r = spark.read.format("lance")
+        if where == "s3":
+            r = r.options(**s3.to_option_map())
+        return r
+
+    assert rd().load(path).filter("tag IS NULL").count() == 20
+    probe = (rd().option("read.file-column", "__frag").load(path)
+             .filter("tag IS NULL").groupBy("__frag").count().collect())
+    assert sum(r["count"] for r in probe) == 20
+    opts = DatasetOptions(path=path, s3=s3 if where == "s3" else None)
+    assert read_dataset(spark, path, filter="tag IS NULL",
+                        options=opts).count() == 20
+
+
+def test_s3_file_scan_reads_the_given_manifest(fake_s3, spark):
+    """A rewrite's scan on s3 reads the manifest it was given, not the
+    version that is latest when the scan plans."""
+    from flink_connector_lance_spark.sources.maintenance import _file_scan
+
+    url = _make_remote_table(spark, fake_s3, table="pinned", n=80)
+    s3 = S3Options(endpoint=f"fake://{fake_s3}")
+    storage = s3.to_storage_options()
+    m = FR.read_manifest(url, storage_options=storage)
+    local = os.path.join(fake_s3, "bucket", "wh", "db1", "pinned")
+    write_dataset(spark.range(80, 100).selectExpr("id", "id % 4 AS g"),
+                  local, mode="append")
+    assert FR.read_manifest(url, storage_options=storage).row_count == 100
+    assert _file_scan(spark, url, m, s3).count() == m.row_count == 80
 
 
 def test_s3_write_is_executor_direct(fake_s3, spark):

@@ -9,10 +9,7 @@ compact, append, compact (2,000-row appends, 500-key deletes, compaction
 to 20,000-row fragments) — each under its own job group. With
 ``--format native`` the dataset is created by ``writer.write_native_pure``
 instead, so the same sequence runs on a binary Lance dataset (``.lance``
-fragments, binary manifests); its frames carry ``l_shipdate`` as a
-session-zone timestamp, the type a binary dataset reads it back as (an
-append of the TIMESTAMP_NTZ frame would be refused as a type change).
-Writes:
+fragments, binary manifests). Writes:
 
 - ``<out>/jobs_<tag>.txt``: per op the job, stage and task counts, CPU
   seconds of the driver plus the JVM tree (Spark's Python workers
@@ -80,11 +77,6 @@ def main() -> None:
             text = re.sub(r"_(staging|delete)-[0-9a-f]+", r"_\1-<uuid>", text)
             return re.sub(r"(#|plan_id=|\[codegen id : )\d+", r"\1N", text)
 
-        def frame(df):
-            if args.format == "native":
-                return df.withColumn("l_shipdate", F.col("l_shipdate").cast("timestamp"))
-            return df
-
         rng = np.random.default_rng(1)
         ipath = os.path.join(tmp, "lineitem")
         data_dir = os.path.join(ipath, fragments.DATA_DIR)
@@ -92,7 +84,7 @@ def main() -> None:
         pq.write_table(data.lineitem(rng, 1, 30_000), gen, row_group_size=10_000)
         create = (writer.write_native_pure if args.format == "native"
                   else writer.write_dataset)
-        create(frame(spark.read.schema(data.LINEITEM_SCHEMA).parquet(gen)), ipath, "overwrite",
+        create(spark.read.schema(data.LINEITEM_SCHEMA).parquet(gen), ipath, "overwrite",
                DatasetOptions(path=ipath, write_max_rows_per_file=5_000))
         next_key = 30_001
 
@@ -100,7 +92,7 @@ def main() -> None:
             nonlocal next_key
             batch = data.lineitem(rng, next_key, 2_000)
             next_key += 2_000
-            writer.write_dataset(frame(spark.createDataFrame(batch, schema=data.LINEITEM_SCHEMA)),
+            writer.write_dataset(spark.createDataFrame(batch, schema=data.LINEITEM_SCHEMA),
                                  ipath, "append")
 
         def delete():
